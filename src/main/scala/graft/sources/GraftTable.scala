@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Versioned parquet table with an atomic manifest commit — the
   * transaction-log idiom of a lakehouse table format (Delta/Iceberg have
@@ -843,14 +844,6 @@ object GraftTable {
   final case class RangeBand(col: String, lo: Long, hi: Long) extends Band
   final case class NullBand(col: String, isNull: Boolean) extends Band
 
-  /** Largest per-file row count recorded in a just-computed stats
-    * pass — computeStats counts every row of every written file, so
-    * this is exactly the quantity buildBloomSidecar's own counting job
-    * would re-derive over the same dir (r22: passed through to skip
-    * that job on stats+bloom commits). */
-  private def maxRowsOf(st: Option[TableStats]): Option[Long] =
-    st.flatMap(_.files.map(_.rows).maxOption)
-
   final case class TableStats(cols: Seq[String], files: Seq[FileStats]) {
     /** One-line encoding for the stats= commit header:
       * `c1,c2;f|rows|min1|max1|min2|max2|null1|null2;...` — file names
@@ -959,13 +952,173 @@ object GraftTable {
     }
   }
 
-  /** Compute per-file (rows, min/max) stats over a just-written data
-    * dir. `statsCols` maps column name → long-valued Column (the
-    * ordinal encoding above). One grouped pass over the written files —
-    * at write time the files are hot, and this replaces the
-    * per-READ listing+footer pass with a once-per-commit cost, exactly
-    * the trade the transaction-log formats make. */
-  private def computeStats(spark: SparkSession, dataPath: String,
+  /** One file of a just-written data dir, as the commit's index step
+    * sees it: `uri` is the dir-relative name in the URI-encoded form
+    * Spark's scans report (`input_file_name`, `inputFiles` — a space in
+    * a partition value reads %20), and `footer` its parquet footer. */
+  private[graft] final case class WrittenFile(uri: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata) {
+    def rows: Long = footer.getBlocks.asScala.map(_.getRowCount).sum
+  }
+
+  /** Strips everything up to and including `/<data dir name>/` from a
+    * scan-reported file URI, leaving the dir-relative name. Non-greedy,
+    * so it anchors at the FIRST such segment — the stats scan, the
+    * Bloom build and the footer listing share it and so name every
+    * file identically. */
+  private def relPrefix(dataPath: String): scala.util.matching.Regex =
+    ("^.*?/" + java.util.regex.Pattern.quote(new Path(dataPath).getName) +
+      "/").r
+
+  /** A URI-encoded relative name back to the RAW on-disk form every
+    * consumer of the stats line works in (canonPath matching against
+    * the index listing, band-read path reconstruction, the meta-agg
+    * coverage gate). %XX only — URLDecoder's form-decoding would
+    * additionally turn a literal '+' (legal in a URI path, left as-is
+    * by the encoder) into a space. */
+  private def uriDecode(str: String): String =
+    try java.net.URLDecoder.decode(str.replace("+", "%2B"),
+      java.nio.charset.StandardCharsets.UTF_8)
+    catch { case _: IllegalArgumentException => str }
+
+  /** The leaf data files of a just-written dir with their footers — the
+    * ONE listing a commit's index step makes. The walk follows Spark's
+    * own file-index rule (`_`-prefixed names are hidden unless they
+    * hold `=`, as a partition dir does; `.`-prefixed and `._COPYING_`
+    * names always are), so it yields exactly the set a parquet scan of
+    * the dir reads. Footers are fetched on the driver through the
+    * `mapPar` pool: metadata only, no data pages, no Spark job. */
+  private[graft] def writtenFiles(spark: SparkSession,
+      dataPath: String): Seq[WrittenFile] = {
+    val fs = fsOf(spark, dataPath)
+    val conf = spark.sessionState.newHadoopConf()
+    val rel = relPrefix(dataPath)
+    def hidden(n: String): Boolean =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+    def leaves(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    mapPar(leaves(fs.makeQualified(new Path(dataPath)))) { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try WrittenFile(rel.replaceFirstIn(st.getPath.toUri.toString, ""),
+        r.getFooter)
+      finally r.close()
+    }
+  }
+
+  /** Per-file stats read from the written files' FOOTERS instead of a
+    * scan: rows, and per declared column the min/max and null count of
+    * every row group, folded per file. Valid only where the footer's
+    * raw value IS the ordinal — `id` on a signed INT32/INT64 integral
+    * column, `days` on an INT32 DATE, `us` on an INT64
+    * TIMESTAMP(MICROS, UTC) — so the result is byte-identical to
+    * `computeStats` over the same files. None (the caller scans) when
+    * any declared column of any file falls outside that: a partition
+    * column (no footer stats), INT96 or non-UTC timestamps, decimals, a
+    * date under `us`, a legacy-rebased datetime file, or a row group
+    * whose footer lacks a null count or min/max. */
+  private[graft] def footerStats(files: Seq[WrittenFile],
+      schema: org.apache.spark.sql.types.StructType,
+      statsEnc: Seq[(String, String)]): Option[TableStats] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    import org.apache.spark.sql.types._
+    def signedInt(lt: LogicalTypeAnnotation): Boolean = lt match {
+      case null => true
+      case i: IntLogicalTypeAnnotation => i.isSigned
+      case _ => false
+    }
+    def exact(enc: String, dt: DataType,
+        pt: org.apache.parquet.schema.PrimitiveType): Boolean =
+      (enc, dt, pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
+        case ("id", ByteType | ShortType | IntegerType, INT32, lt) => signedInt(lt)
+        case ("id", LongType, INT64, lt) => signedInt(lt)
+        case ("days", DateType, INT32, _: DateLogicalTypeAnnotation) => true
+        case ("us", TimestampType, INT64, t: TimestampLogicalTypeAnnotation) =>
+          t.isAdjustedToUTC && t.getUnit == TimeUnit.MICROS
+        case _ => false
+      }
+    // (min, max, nulls) of one column over one file, None when inexact
+    def column(f: WrittenFile, c: String, enc: String): Option[(Long, Long, Long)] = {
+      val meta = f.footer.getFileMetaData
+      val pt = meta.getSchema.getFields.asScala.find(_.getName == c)
+        .filter(_.isPrimitive).map(_.asPrimitiveType)
+      val ok = pt.exists(p => schema.fields.exists(sf =>
+          sf.name == c && exact(enc, sf.dataType, p))) &&
+        (enc == "id" ||
+          !meta.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime"))
+      if (!ok) None
+      else f.footer.getBlocks.asScala.foldLeft(
+          Option((Long.MaxValue, Long.MinValue, 0L))) {
+        case (None, _) => None
+        case (Some((lo, hi, nulls)), b) =>
+          b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c)))
+            .map(_.getStatistics)
+            .filter(s => s != null && s.isNumNullsSet)
+            .flatMap { s =>
+              if (s.hasNonNullValue)
+                Some((lo.min(s.genericGetMin.asInstanceOf[Number].longValue),
+                  hi.max(s.genericGetMax.asInstanceOf[Number].longValue),
+                  nulls + s.getNumNulls))
+              // no non-null value: exact only for an all-null group
+              else if (s.getNumNulls == b.getRowCount)
+                Some((lo, hi, nulls + s.getNumNulls))
+              else None
+            }
+      }
+    }
+    val perFile = files.map { f =>
+      val cols = statsEnc.map { case (c, enc) => column(f, c, enc) }
+      if (cols.exists(_.isEmpty)) None
+      else Some(FileStats(uriDecode(f.uri), f.rows, cols.map(_.get._1),
+        cols.map(_.get._2), cols.map(_.get._3)))
+    }
+    if (perFile.exists(_.isEmpty)) None
+    else Some(TableStats(statsEnc.map(_._1), perFile.flatten.sortBy(_.file)))
+  }
+
+  /** The INDEX STEP every index-bearing commit door runs on the data
+    * dir it just wrote, before publishing: one listing with footers
+    * (`writtenFiles`), then the stats entries — from the footers where
+    * every declared column is a registry encoding with an exact footer
+    * map (`footerStats`), else the `computeStats` scan for the whole
+    * commit (lambda `statsCols` always scan) — then the Bloom sidecar,
+    * its `m` sized from the footer row counts and its rows read under
+    * `schema`, the schema the commit wrote. `statsCols` is the
+    * EFFECTIVE set (`StatsEnc.validateAndMerge`'s result) and
+    * `partitionBy` the layout's partition columns. Returns (stats,
+    * bloom= header value). */
+  private def indexWrittenDir(spark: SparkSession, dataPath: String,
+      schema: org.apache.spark.sql.types.StructType, partitionBy: Seq[String],
+      statsCols: StatsCols, statsEnc: Seq[(String, String)],
+      bloomCols: Seq[String]): (Option[TableStats], Option[String]) =
+    if (statsCols.isEmpty && bloomCols.isEmpty) (None, None)
+    else {
+      val files = writtenFiles(spark, dataPath)
+      val stats =
+        if (statsCols.isEmpty) None
+        else (if (statsCols.map(_._1) == statsEnc.map(_._1))
+            footerStats(files, schema, statsEnc) else None)
+          .orElse(Some(computeStats(spark, dataPath, statsCols)))
+      val bloom =
+        if (bloomCols.isEmpty) None
+        else Some(bloomHeader(buildBloomSidecar(spark, dataPath,
+          org.apache.spark.sql.types.StructType(schema.fields
+            .filterNot(f => partitionBy.contains(f.name))
+            .map(_.copy(nullable = true))),
+          bloomCols, files.map(_.uri), files.map(_.rows).maxOption.getOrElse(0L))))
+      (stats, bloom)
+    }
+
+  /** Per-file (rows, min/max, nulls) stats by SCANNING a just-written
+    * data dir — the index step's fallback where footers cannot give
+    * the ordinal exactly (`footerStats`). `statsCols` maps column
+    * name → long-valued Column (the ordinal encoding above): one
+    * schema-inference job, then one grouped pass over the files. */
+  private[graft] def computeStats(spark: SparkSession, dataPath: String,
       statsCols: StatsCols): TableStats = {
     import org.apache.spark.sql.functions._
     val df = spark.read.parquet(dataPath)
@@ -986,27 +1139,16 @@ object GraftTable {
     // partition subdir, so basenames collide (merging distinct files
     // into one bogus stats row) and lose the subdir a reader needs to
     // rebuild the path. The relative path survives both.
-    val dataName = new Path(dataPath).getName
+    val rel = relPrefix(dataPath)
     val rows = df
-      .groupBy(regexp_replace(input_file_name(),
-        "^.*?/" + java.util.regex.Pattern.quote(dataName) + "/", "")
+      .groupBy(regexp_replace(input_file_name(), rel.regex, "")
         .as("__file"))
       .agg(count(lit(1)).as("__rows"), aggs: _*)
       .orderBy("__file")
       .collect() // one small row per FILE — never data
-    // input_file_name() serves the URL-ENCODED path (a space in a
-    // partition value reads %20) while every consumer of the recorded
-    // names — canonPath matching against the index listing, band-read
-    // path reconstruction, the meta-agg coverage gate — works in RAW
-    // on-disk names: record the DECODED form, or a special-character
-    // partition dir's bands would silently match no planned file.
-    // %XX only — URLDecoder's form-decoding would additionally turn a
-    // literal '+' (legal in a URI path, left as-is by the encoder)
-    // into a space.
-    def dec(str: String): String =
-      try java.net.URLDecoder.decode(str.replace("+", "%2B"),
-        java.nio.charset.StandardCharsets.UTF_8)
-      catch { case _: IllegalArgumentException => str }
+    // input_file_name() serves the URL-ENCODED path; record the DECODED
+    // form (`uriDecode`), or a special-character partition dir's bands
+    // would silently match no planned file
     val covered = rows.toSeq.map { r =>
         // a file whose stat column is entirely null has NO range: min/
         // max aggregate to null, and a naive getAs would unbox that to
@@ -1020,7 +1162,7 @@ object GraftTable {
           if (r.isNullAt(i)) empty else r.getLong(i)
         }
         val rows = r.getAs[Long]("__rows")
-        FileStats(dec(r.getAs[String]("__file")), rows,
+        FileStats(uriDecode(r.getAs[String]("__file")), rows,
           statsCols.map(c => longOr(s"__min_${c._1}", Long.MaxValue)),
           statsCols.map(c => longOr(s"__max_${c._1}", Long.MinValue)),
           statsCols.map(c => rows - r.getAs[Long](s"__cnt_${c._1}")))
@@ -1037,9 +1179,7 @@ object GraftTable {
     // now record.
     val seen = covered.map(_.file).toSet
     val empties = df.inputFiles.toSeq
-      .map(_.replaceFirst(
-        "^.*?/" + java.util.regex.Pattern.quote(dataName) + "/", ""))
-      .map(dec)
+      .map(u => uriDecode(rel.replaceFirstIn(u, "")))
       .filterNot(seen)
       .map(f => FileStats(f, 0L,
         statsCols.map(_ => Long.MaxValue),
@@ -1950,20 +2090,11 @@ object GraftTable {
     val w = effDf.write.mode("errorifexists")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(s"$dir/$data")
-    val st =
-      if (effStatsCols.isEmpty) None
-      else Some(computeStats(spark, s"$dir/$data", effStatsCols))
     // the Bloom sidecar is written INTO the data dir (underscore prefix
     // keeps it invisible to every parquet scan) so it travels with the
-    // files it describes — through clones, retention, and data= renames;
-    // built and written EXECUTOR-side (buildBloomSidecar), one section
-    // per indexed column; m sized from the stats just computed over the
-    // same dir when available (one counting job saved per commit)
-    val effBloom = (bloomCol.toSeq ++ bloomCols).distinct
-    val bl =
-      if (effBloom.isEmpty) None
-      else Some(bloomHeader(buildBloomSidecar(spark, s"$dir/$data", effBloom,
-        knownMaxRowsPerFile = maxRowsOf(st))))
+    // files it describes — through clones, retention, and data= renames
+    val (st, bl) = indexWrittenDir(spark, s"$dir/$data", effDf.schema,
+      partitionBy, effStatsCols, statsEnc, (bloomCol.toSeq ++ bloomCols).distinct)
     commit(fs, dir, v, metadata, retain, prefix, dataDir = Some(data),
       stats = st, schema = Some(schemaEncode(df.schema)),
       partBy =
@@ -3447,17 +3578,11 @@ object GraftTable {
     val added = s"$prefix${cur0.map(_._1 + 1).getOrElse(0)}_" +
       java.util.UUID.randomUUID().toString.take(8)
     df.write.mode("errorifexists").parquet(s"$dir/$added")
-    val newStats =
-      if (effStats.isEmpty) None
-      else Some(computeStats(spark, s"$dir/$added", effStats))
     // the appended dir gets its OWN sidecar (sized to its own files —
     // each sidecar self-describes m/k per section, so chain dirs may
     // differ); staged once, reused verbatim on a lost race
-    val newBloom =
-      if (effBloom.isEmpty) None
-      else Some(bloomHeader(
-        buildBloomSidecar(spark, s"$dir/$added", effBloom,
-          knownMaxRowsPerFile = maxRowsOf(newStats))))
+    val (newStats, newBloom) = indexWrittenDir(spark, s"$dir/$added",
+      df.schema, Nil, effStats, statsEnc, effBloom)
     retryOnConflict(maxAttempts) { attempt =>
       // the staged dir is reused VERBATIM across attempts (an append
       // reads no snapshot, so there is nothing to re-execute) — only
@@ -3648,7 +3773,8 @@ object GraftTable {
         // snapshot would silently commit an index-less version onto a
         // freshly indexed chain
         val (newStats, statsEncDecl, newBloom) =
-          dsv2IndexExtension(spark, dir, effStaged, cur.map(_._2))
+          dsv2IndexExtension(spark, dir, effStaged, schema, partBy,
+            cur.map(_._2))
         // a bucket-declared target validates the STAGED rows against
         // the invariant before any version mints (append: old files
         // were validated at their own commits; overwrite: the staged
@@ -3733,7 +3859,9 @@ object GraftTable {
     * always reflected. Returns (staged dir's stats, statenc declaration
     * to carry, staged dir's bloom header). */
   private def dsv2IndexExtension(spark: SparkSession,
-      dir: String, staged: String, curHeaders: Option[Map[String, String]])
+      dir: String, staged: String,
+      schema: org.apache.spark.sql.types.StructType, partBy: Seq[String],
+      curHeaders: Option[Map[String, String]])
       : (Option[TableStats], Seq[(String, String)], Option[String]) =
     curHeaders match {
       case Some(h) =>
@@ -3742,15 +3870,10 @@ object GraftTable {
           if (!h.contains("stats")) Nil
           else StatsEnc.validateAndMerge(spark, Nil, encDecl)
         val effBloom = h.get("bloom").map(bloomColsOf).getOrElse(Nil)
-        val stagedStats =
-          if (effStats.isEmpty) None
-          else Some(computeStats(spark, s"$dir/$staged", effStats))
-        (stagedStats,
-          if (effStats.isEmpty) Nil else encDecl,
-          if (effBloom.isEmpty) None
-          else Some(bloomHeader(
-            buildBloomSidecar(spark, s"$dir/$staged", effBloom,
-              knownMaxRowsPerFile = maxRowsOf(stagedStats)))))
+        val (stagedStats, stagedBloom) = indexWrittenDir(spark,
+          s"$dir/$staged", schema, partBy, effStats,
+          if (effStats.isEmpty) Nil else encDecl, effBloom)
+        (stagedStats, if (effStats.isEmpty) Nil else encDecl, stagedBloom)
       case None => (None, Nil, None)
     }
 
@@ -4075,7 +4198,7 @@ object GraftTable {
         // streamed versions stay band/Bloom-skippable (same
         // self-described, per-attempt derivation as the batch door)
         val (newStats, statsEncDecl, newBloom) =
-          dsv2IndexExtension(spark, dir, staged, cur.map(_._2))
+          dsv2IndexExtension(spark, dir, staged, schema, Nil, cur.map(_._2))
         val carried = carriedConstraints(cur)
         if (carried.nonEmpty)
           enforceConstraints(stagedDf, carried, "append",
@@ -4823,68 +4946,76 @@ object GraftTable {
     }
   }
 
+  /** Spark's string order — unsigned UTF-8 bytes, what a sort over a
+    * string column yields. The sidecar's file lines keep this order. */
+  private val sparkStringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+  }
+
   /** Distributed Bloom build with an EXECUTOR-SIDE sidecar write: ONE
-    * pass over the just-written files per indexed column — per row, k
-    * probe positions from `xxhash64(col, seed)`; per (file, word) a
-    * `bit_or` of the shifted bits; per file a sorted sparse word list —
-    * and the sidecar streams out of the final single task directly.
-    * The DRIVER never materializes a word row: at 10⁴ files × m=2²⁴
-    * the former collect() held gigabytes of filter words in driver
-    * memory for the initial load; here the driver handles only the
-    * file-NAME list (for the all-null-file entries) and the returned
-    * per-column (col, m, k) metadata that goes into the bloom= header.
+    * Spark job over the just-written files. Each map task reads the
+    * indexed columns under `readSchema` (the schema the commit wrote,
+    * so no inference job runs) and ORs every non-null value's k probe
+    * positions — `pmod(xxhash64(col, seed), m)` for seeds 1..k — into
+    * a per-(column, file) bit array, emitted as sparse (word, bits)
+    * pairs whenever the scan moves to the next file. ONE sidecar task
+    * receives those partial arrays sorted by (column, file), ORs
+    * together the partials of a file split across several map tasks,
+    * and walks the full `files` list (the index step's listing) in
+    * Spark's string order per column, so an all-null or zero-row file
+    * keeps its empty line. The driver handles only file NAMES and the
+    * returned per-column (col, m, k) metadata for the bloom= header;
+    * filter words never reach it.
     *
-    * Multi-column: one pass and one sidecar SECTION per column (see
+    * Multi-column: one sidecar SECTION per column (see
     * `TableBloom.decodeAll`), so a table can serve point lookups on
-    * several keys. `m` is sized per column from the LARGEST file's row
-    * count at ~12 bits/key (k=4 → ~0.6% false positives) — one skewed
-    * file would otherwise saturate toward opening everything. Nulls
-    * probe nothing; an all-null file gets an empty filter every probe
-    * correctly skips. */
+    * several keys. `m` is sized per column from `maxRowsPerFile`, the
+    * LARGEST file's footer row count, at ~12 bits/key (k=4 → ~0.6%
+    * false positives) — one skewed file would otherwise saturate toward
+    * opening everything. Nulls probe nothing; an all-null file gets an
+    * empty filter every probe correctly skips. */
   private def buildBloomSidecar(spark: SparkSession, dataPath: String,
-      bloomCols: Seq[String], bitsPerKey: Int = 12, k: Int = 4,
-      knownMaxRowsPerFile: Option[Long] = None)
-      : Seq[(String, Int, Int)] = {
+      readSchema: org.apache.spark.sql.types.StructType,
+      bloomCols: Seq[String], files: Seq[String], maxRowsPerFile: Long,
+      bitsPerKey: Int = 12, k: Int = 4): Seq[(String, Int, Int)] = {
     import org.apache.spark.sql.functions._
     require(bloomCols.nonEmpty)
-    val df = spark.read.parquet(dataPath)
-    val dataName = new Path(dataPath).getName
-    val relFile = regexp_replace(input_file_name(),
-      "^.*?/" + java.util.regex.Pattern.quote(dataName) + "/", "")
-    // one cheap column-pruned counting pass, shared by every column —
-    // SKIPPED when the caller just computed stats over the same dir
-    // (computeStats counts every row of every file, the identical
-    // quantity; m only SIZES the filter and is recorded per section in
-    // the sidecar, so the probe path is indifferent to where the count
-    // came from). One Spark job saved per stats+bloom commit (r22).
-    val rowsPerFile = math.max(1L, knownMaxRowsPerFile.getOrElse(
-      df.groupBy(relFile.as("__f")).count()
-        .agg(max(col("count"))).collect()(0).getLong(0))) // 1 row
-    val m = math.min(1L << 24,
-      math.max(1024L, ((rowsPerFile * bitsPerKey + 63) / 64) * 64)).toInt
-    // complete file list — NAMES only (a file with no non-null value
-    // still gets its correctly-empty entry), never filter words
-    val relPattern = ("^.*?/" +
-      java.util.regex.Pattern.quote(dataName) + "/").r
-    val allFiles = df.inputFiles.toSeq
-      .map(u => relPattern.replaceFirstIn(u, "")).sorted
-    import spark.implicits._
-    val filesDf = allFiles.toDF("__file")
-    // per (column, file): the sorted sparse (word, bits) list — built
-    // distributed, UNIONED across columns, never collected
-    val perCol = bloomCols.zipWithIndex.map { case (c, ci) =>
-      val words = df.select(relFile.as("__file"), col(c).as("__x"))
-        .where(col("__x").isNotNull)
-        .select(col("__file"), explode(array((1 to k).map(s =>
-          pmod(xxhash64(col("__x"), lit(s)), lit(m.toLong))): _*)).as("__p"))
-        .groupBy(col("__file"), (col("__p") / 64).cast("int").as("__w"))
-        .agg(expr("bit_or(shiftleft(1L, cast(__p % 64 as int)))").as("__bits"))
-        .groupBy(col("__file"))
-        .agg(sort_array(collect_list(struct(col("__w"), col("__bits"))))
-          .as("__ws"))
-      filesDf.join(words, Seq("__file"), "left")
-        .select(lit(ci).as("__ci"), col("__file"), col("__ws"))
-    }.reduce(_ unionByName _)
+    val m = math.min(1L << 24, math.max(1024L,
+      ((math.max(1L, maxRowsPerFile) * bitsPerKey + 63) / 64) * 64)).toInt
+    val (nCols, words) = (bloomCols.size, m / 64)
+    // per row: the file's relative name, then k probe positions per
+    // column (null where the value is null — it probes nothing)
+    val probes = spark.read.schema(readSchema).parquet(dataPath)
+      .select(regexp_replace(input_file_name(), relPrefix(dataPath).regex, "")
+        +: bloomCols.flatMap(c => (1 to k).map(s =>
+          when(col(c).isNotNull,
+            pmod(xxhash64(col(c), lit(s)), lit(m.toLong))))): _*)
+    val partials = probes.rdd.mapPartitions { it =>
+      val out = collection.mutable.ArrayBuffer
+        .empty[((Int, String), (Array[Int], Array[Long]))]
+      val bits = Array.fill(nCols)(new Array[Long](words))
+      var file: String = null
+      def flush(): Unit = if (file != null) for (ci <- 0 until nCols) {
+        val ws = bits(ci).indices.filter(bits(ci)(_) != 0L).toArray
+        if (ws.nonEmpty) {
+          out += (((ci, file), (ws, ws.map(bits(ci)(_)))))
+          java.util.Arrays.fill(bits(ci), 0L)
+        }
+      }
+      it.foreach { r =>
+        val f = r.getString(0)
+        if (f != file) { flush(); file = f }
+        for (ci <- 0 until nCols; base = 1 + ci * k if !r.isNullAt(base);
+             s <- 0 until k) {
+          val p = r.getLong(base + s)
+          bits(ci)((p >>> 6).toInt) |= 1L << (p & 63)
+        }
+      }
+      flush()
+      out.iterator
+    }
     // qualify the target on the DRIVER (the task needs no default-FS
     // context), ship the conf the standard serializable way
     val sidecar = new Path(s"$dataPath/$bloomSidecarName")
@@ -4894,11 +5025,17 @@ object GraftTable {
     val confSer =
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val colsEnc = bloomCols.map(urlEnc)
-    val (mL, kL) = (m, k)
-    // ONE writing task, rows streaming through in section order — the
-    // sidecar is written where the words live, not where the driver is
-    perCol.repartition(1).sortWithinPartitions(col("__ci"), col("__file"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+    val sortedFiles = files.sorted(sparkStringOrder)
+    implicit val keyOrder: Ordering[(Int, String)] =
+      Ordering.Tuple2(Ordering.Int, sparkStringOrder)
+    // ONE writing task, partials streaming through in section order —
+    // the sidecar is written where the words live, not where the
+    // driver is. An RDD shuffle into one partition always runs that
+    // task, even when no file holds a non-null value.
+    partials
+      .repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(1))
+      .foreachPartition { it =>
+        val in = it.buffered
         val fs = target.getFileSystem(confSer.conf)
         // ATOMIC publish: stream into an attempt-unique temp, then
         // rename into place. The former `fs.create(target, true)` wrote
@@ -4916,22 +5053,22 @@ object GraftTable {
         val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
           out, java.nio.charset.StandardCharsets.UTF_8), 1 << 20)
         try {
-          var curCi = -1
-          it.foreach { r =>
-            val ci = r.getAs[Int]("__ci")
-            if (ci != curCi) {
-              w.write(s"${colsEnc(ci)}|$mL|$kL\n"); curCi = ci
+          for (ci <- colsEnc.indices) {
+            w.write(s"${colsEnc(ci)}|$m|$k\n")
+            sortedFiles.foreach { f =>
+              val bits = new Array[Long](words)
+              while (in.hasNext && in.head._1 == ((ci, f))) {
+                val (ws, bs) = in.next()._2
+                for (i <- ws.indices) bits(ws(i)) |= bs(i)
+              }
+              w.write(urlEnc(f))
+              w.write('|')
+              bits.foreach(l => w.write(f"$l%016x"))
+              w.write('\n')
             }
-            val bits = new Array[Long](mL / 64)
-            val ws = r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("__ws")
-            if (ws != null) ws.foreach { wr =>
-              bits(wr.getAs[Int](0)) = wr.getAs[Long](1)
-            }
-            w.write(urlEnc(r.getAs[String]("__file")))
-            w.write('|')
-            bits.foreach(l => w.write(f"$l%016x"))
-            w.write('\n')
           }
+          require(!in.hasNext, s"bloom build: scanned file " +
+            s"${in.head._1._2} is not in the dir's listing")
         } finally w.close()
         replaceAtomic(fs, tmp, target)
       }
@@ -4945,7 +5082,7 @@ object GraftTable {
     // negative), so it must be impossible to commit one.
     auditBloomSidecar(
       target.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      target, bloomCols, m, k, allFiles.toSet)
+      target, bloomCols, m, k, files.toSet)
     bloomCols.map(c => (c, m, k))
   }
 
@@ -5333,9 +5470,8 @@ object GraftTable {
     // spanning stats: the head's entries carry over UNREAD (their files
     // are untouched — that is the whole point); the folded dir's are
     // computed fresh and re-keyed table-relative
-    val freshStats =
-      if (effStats.isEmpty) None
-      else Some(computeStats(spark, s"$dir/$tDir", effStats))
+    val (freshStats, bl) = indexWrittenDir(spark, s"$dir/$tDir",
+      folded.schema, Nil, effStats, statsEnc, effBloom)
     val mergedStats = freshStats.map { fresh =>
       val mine = fresh.files.map(f => f.copy(file = s"$tDir/${f.file}"))
       val prev = TableStats.decode(h.getOrElse("stats", sys.error(
@@ -5349,13 +5485,6 @@ object GraftTable {
       val headEntries = prev.files.filter(_.file.startsWith(s"$head/"))
       TableStats(fresh.cols, headEntries ++ mine)
     }
-    val bl =
-      if (effBloom.isEmpty) None
-      else Some(bloomHeader(buildBloomSidecar(spark, s"$dir/$tDir",
-        effBloom,
-        // freshStats covers EXACTLY the folded dir (pre-re-keying),
-        // the same files the sidecar describes
-        knownMaxRowsPerFile = maxRowsOf(freshStats))))
     commit(fs, dir, v, metadata, prefix = prefix,
       dataDir = Some(s"$head,$tDir"), stats = mergedStats,
       schema = h.get("schema"), prevTs = prevTsOf(Some((c, h))),
