@@ -1,10 +1,22 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Verify.jsonQuote
 
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The 13 BASELINE.md headline keys: the stdout line's `queries` and
+    * `spread` maps, and the set `Sf1Spike` times at sf1. */
+  val headlineKeys: Seq[String] = Seq("agg_group_pricing", "topk_orders",
+    "join_multiway_star", "win_latest_dedup", "stream_tumbling_1h",
+    "agg_count_distinct", "fn_json_pack", "agg_rollup", "vec_cosine_topk",
+    "vec_knn_join", "text_wordcount_topk", "text_lang_stats",
+    "text_exact_dedup")
+
+  /** The one SparkSession every entry point (Bench, Verify, PlanDump,
+    * Sf1Spike, QueryTrace, ConfAB) runs under: the benched
+    * configuration, `local[SPARK_GRAFT_CPUS]` (default 4) with as many
+    * shuffle partitions. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -34,20 +46,62 @@ object Bench {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm up codegen/scheduler/FS cache so the first timed query does
-    // not absorb session start cost, and touch EVERY table once — the
-    // alphabetically-first queries otherwise pay each table's cold read.
-    // Guarded per table (round-9 lesson: one broken loader in warm-up
-    // crashed the whole bench, rc=1 with zero timings — a single-table
-    // failure must cost one table's warmth, not the round's bench).
+    spark
+  }
+
+  /** Reads every source table under `sfDir` once, so the first timed
+    * query does not pay a table's cold read. Guarded per table (round-9
+    * lesson: one broken loader in warm-up crashed the whole bench, rc=1
+    * with zero timings — a single-table failure must cost one table's
+    * warmth, not the round's bench). */
+  def warmTables(spark: SparkSession, sfDir: String): Unit =
     T.tables.foreach { name =>
       try {
         if (name == "events") T.events(spark, sfDir).count()
         else spark.read.parquet(s"$sfDir/$name.parquet").count()
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up of $name failed: ${e.getMessage}")
+        System.err.println(s"[warm-up] $name failed: ${e.getMessage}")
       }
     }
+
+  /** Runs tools/calibrate.py: DuckDB times the headline keys' oracle SQL
+    * on the parquet under `dataDir` and reports the ratio against
+    * `sparkTotal`. Returns its one-line JSON, or "null" when python3,
+    * duckdb or the script is missing, fails or times out. */
+  private[graft] def calibrate(dataDir: String, sqlFile: String,
+      sparkTotal: Double, timeoutS: Long): String = try {
+    val sqls = headlineKeys.flatMap(k => SparkEntry.oracleSql.get(k).map(k -> _))
+    val sqlJson = sqls.map { case (k, q) => s"${jsonQuote(k)}:${jsonQuote(q)}" }
+      .mkString("{", ",", "}")
+    Files.createDirectories(Paths.get(sqlFile).getParent)
+    Files.writeString(Paths.get(sqlFile), sqlJson)
+    val script = Paths.get("tools/calibrate.py")
+    if (!Files.exists(script)) "null" else {
+      val pb = new ProcessBuilder("python3", script.toString, dataDir,
+        sqlFile, sparkTotal.toString)
+      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+      val proc = pb.start()
+      // stdout is one short JSON line (< pipe buffer), so waitFor
+      // cannot deadlock on an unread stream.
+      val done = proc.waitFor(timeoutS, java.util.concurrent.TimeUnit.SECONDS)
+      if (!done) { proc.destroyForcibly(); "null" }
+      else {
+        val out = new String(proc.getInputStream.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8).trim
+        if (proc.exitValue == 0 && out.startsWith("{") && out.endsWith("}"))
+          out
+        else "null"
+      }
+    }
+  } catch { case _: Throwable => "null" }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
+    // Warm up codegen/scheduler/FS cache so the first timed query does
+    // not absorb session start cost, and touch EVERY table once — the
+    // alphabetically-first queries otherwise pay each table's cold read.
+    warmTables(spark, sfDir)
     spark.range(100).groupBy((org.apache.spark.sql.functions.col("id") % 5)
       .as("k")).count().count()
     // First use of broadcast exchange, window exec, and the parquet write
@@ -156,19 +210,9 @@ object Bench {
     // keeping it a few hundred bytes so the driver's tail capture can never
     // clip the line head (r1/r2 both lost the full-map line to truncation
     // and recorded parsed=null).
-    val headlineKeys = Seq("agg_group_pricing", "topk_orders",
-      "join_multiway_star", "win_latest_dedup", "stream_tumbling_1h",
-      "agg_count_distinct", "fn_json_pack", "agg_rollup", "vec_cosine_topk",
-      "vec_knn_join", "text_wordcount_topk", "text_lang_stats",
-      "text_exact_dedup")
     val headline = okResults.filter(kv => headlineKeys.contains(kv._1))
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val errJson = errors.map { case (k, v) => s"${jq(k)}:${jq(v)}" }
+    val errJson = errors
+      .map { case (k, v) => s"${jsonQuote(k)}:${jsonQuote(v)}" }
       .mkString("{", ",", "}")
     val headlineTotal = r(headline.map(kv => med(kv._2)).sum)
     // Same-boot DuckDB calibration (round-10 verdict item 1): BASELINE.md
@@ -180,31 +224,8 @@ object Bench {
     // text the correctness gate checks. Failure of the helper (no
     // python3/duckdb outside the driver machine) degrades to null, never
     // breaks the bench.
-    val calibration: String = try {
-      val sqls = headlineKeys.flatMap(k => SparkEntry.oracleSql.get(k).map(k -> _))
-      val sqlJson = sqls.map { case (k, q) => s"${jq(k)}:${jq(q)}" }
-        .mkString("{", ",", "}")
-      Files.createDirectories(Paths.get("target"))
-      Files.writeString(Paths.get("target/calib_sql.json"), sqlJson)
-      val script = Paths.get("tools/calibrate.py")
-      if (!Files.exists(script)) "null" else {
-        val pb = new ProcessBuilder("python3", script.toString, sfDir,
-          "target/calib_sql.json", headlineTotal.toString)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val proc = pb.start()
-        // stdout is one short JSON line (< pipe buffer), so waitFor
-        // cannot deadlock on an unread stream.
-        val done = proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) { proc.destroyForcibly(); "null" }
-        else {
-          val out = new String(proc.getInputStream.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim
-          if (proc.exitValue == 0 && out.startsWith("{") && out.endsWith("}"))
-            out
-          else "null"
-        }
-      }
-    } catch { case _: Throwable => "null" }
+    val calibration =
+      calibrate(sfDir, "target/calib_sql.json", headlineTotal, timeoutS = 180)
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"warmup":$warmups,"stat":"median","protocol":"interleaved","failed":${errors.size},"warmup_failed":${warmupErrors.size},"errors":$errJson,"calibration":$calibration,"queries":${toJson(results)},"spread":${toSpreadJson(results)},"sf":"$sfDir"}"""
     try {
@@ -216,7 +237,7 @@ object Bench {
     // target/bench.json.
     // stdout carries the failed-key COUNT and names (bounded); the full
     // error messages live in target/bench.json's errors map.
-    val failedKeys = errors.keys.toSeq.sorted.take(20).map(jq)
+    val failedKeys = errors.keys.toSeq.sorted.take(20).map(jsonQuote)
       .mkString("[", ",", "]")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"warmup":$warmups,"stat":"median","protocol":"interleaved","n_queries":${results.size},"failed":${errors.size},"failed_keys":$failedKeys,"queries":${toJson(headline)},"spread":${toSpreadJson(headline)},"headline_total":$headlineTotal,"calibration":$calibration,"full":"target/bench.json","sf":"$sfDir"}"""

@@ -1,32 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch (r21): same-JVM interleaved A/B of one SQLConf value across
-  * suite keys. Runs A,B,A,B,... per key (conf restored after each), so
-  * ambient drift hits both arms equally; prints per-key medians. */
+/** Same-JVM interleaved A/B of one SQLConf value across suite keys.
+  * Runs A,B,A,B,... per key (conf restored after each), so ambient
+  * drift hits both arms equally; prints per-key medians. */
 object ConfAB {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ConfAB <conf> <valueB> <key> [key...]")
     val confKey = args(0); val valueB = args(1); val keys = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .appName("conf-ab").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     val valueA = spark.conf.get(confKey)
-    T.tables.foreach { name =>
-      try {
-        if (name == "events") T.events(spark, sfDir).count()
-        else spark.read.parquet(s"$sfDir/$name.parquet").count()
-      } catch { case _: Throwable => () }
-    }
+    Bench.warmTables(spark, sfDir)
     def run(key: String, v: String): Double = {
       spark.conf.set(confKey, v)
       try {

@@ -1,23 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: formatted physical plans for headline queries —
   * the `.explain("formatted")` evidence behind PERF.md's claims. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the SQL DML/MERGE rewrite rules only bind at session build —
-      // without them the round-16 UPDATE/maintenance keys cannot plan
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     val keys = Seq("scan_filter_pushdown", "join_multiway_star",
       "agg_group_pricing", "topk_orders", "win_latest_dedup",
       "stream_tumbling_1h", "text_minhash_dedup", "vec_ivf_topk",
@@ -138,7 +128,7 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode).take(6000))
       sb.append("\n```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     spark.stop()
   }
 }

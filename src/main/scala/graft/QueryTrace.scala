@@ -1,42 +1,28 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 
-/** Scratch (r21): per-job decomposition of one suite key under the
-  * bench config — job durations, inter-job gaps, task counts — plus a
-  * median wall over 5 warm runs, so floor claims are measured. */
+/** Per-job decomposition of one suite key under the bench config — job
+  * durations, inter-job gaps, task counts — plus a median wall over 5
+  * warm runs, per-phase times, a hot-frame sample, and the final
+  * adaptive plan the traced run executed. */
 object QueryTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val key = args.headOption.getOrElse("topk_orders")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k, v)
-        case _ => ()
-      } })
-    val spark = builder.appName("query-trace").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    T.tables.foreach { name =>
-      try {
-        if (name == "events") T.events(spark, sfDir).count()
-        else spark.read.parquet(s"$sfDir/$name.parquet").count()
-      } catch { case _: Throwable => () }
-    }
-    def once(): Double = {
+    val spark = Bench.session()
+    Bench.warmTables(spark, sfDir)
+    // runs the plan `df.count()` runs, keeping its QueryExecution so the
+    // final (post-AQE) form of what executed can be printed
+    def run(): (Double, QueryExecution) = {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      SparkEntry.queries(key)(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
+      val counted = SparkEntry.queries(key)(spark, sfDir).groupBy().count()
+      counted.collect()
+      ((System.nanoTime() - t0) / 1e9, counted.queryExecution)
     }
+    def once(): Double = run()._1
     def phases(): String = {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
@@ -94,8 +80,7 @@ object QueryTrace {
         ends.synchronized { ends(je.jobId) = je.time }
     }
     spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    val tracedWall = { once() }
+    val (tracedWall, tracedQe) = run()
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(300)
     println(f"=== $key traced wall $tracedWall%.3f s; 5-run walls ${walls.map(w => f"$w%.3f").mkString(",")} ===")
@@ -110,6 +95,8 @@ object QueryTrace {
     }
     if (prevEnd > 0)
       println(f"jobs span ${(prevEnd - firstStart) / 1000.0}%6.3fs of $tracedWall%.3fs wall")
+    println("=== final adaptive plan of the traced run ===")
+    println(tracedQe.executedPlan.toString.take(12000))
     spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import Verify.jsonQuote
 
 /** sf1 headline spike (VERDICT r18 "Next round" item 8): materialize a
   * 10×-amplified copy of the sf0.1 tables under target/sf1 (driver
@@ -15,10 +16,9 @@ import java.nio.file.{Files, Paths}
   *
   * Amplification = crossJoin with a 10-replica index, every JOIN KEY
   * shifted `k*10+rep` so per-key fanout and group sizes are preserved
-  * exactly (no cross-replica joins, no artificial skew) — the
-  * ScalingProbe technique, materialized to parquet so DuckDB reads the
-  * identical files. Non-joined dims (region, nation, part, supplier)
-  * copy verbatim.
+  * exactly (no cross-replica joins, no artificial skew), materialized
+  * to parquet so DuckDB reads the identical files. Non-joined dims
+  * (region, nation, part, supplier) copy verbatim.
   */
 object Sf1Spike {
   private val N = 10
@@ -26,16 +26,7 @@ object Sf1Spike {
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = "target/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .appName("sf1-spike").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     def amp(df: DataFrame, keys: Seq[String]): DataFrame = {
       val rep = spark.range(N).toDF("rep_idx")
@@ -69,21 +60,7 @@ object Sf1Spike {
       }
     }
 
-    // warm every table once (same rationale as Bench)
-    T.tables.foreach { name =>
-      try {
-        if (name == "events") T.events(spark, outDir).count()
-        else spark.read.parquet(s"$outDir/$name.parquet").count()
-      } catch { case e: Throwable =>
-        System.err.println(s"[sf1] warm-up of $name failed: ${e.getMessage}")
-      }
-    }
-
-    val headlineKeys = Seq("agg_group_pricing", "topk_orders",
-      "join_multiway_star", "win_latest_dedup", "stream_tumbling_1h",
-      "agg_count_distinct", "fn_json_pack", "agg_rollup", "vec_cosine_topk",
-      "vec_knn_join", "text_wordcount_topk", "text_lang_stats",
-      "text_exact_dedup")
+    Bench.warmTables(spark, outDir)
 
     def runOnce(k: String): Double = {
       val t0 = System.nanoTime()
@@ -95,36 +72,16 @@ object Sf1Spike {
     }
     def r(d: Double): Double = math.round(d * 1000.0) / 1000.0
 
-    val results = headlineKeys.map { k =>
+    val results = Bench.headlineKeys.map { k =>
       runOnce(k) // warm
       k -> r(med(Seq.fill(3)(runOnce(k))))
     }
     val total = r(results.map(_._2).sum)
 
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val calibration: String = try {
-      val sqls = headlineKeys.flatMap(k => SparkEntry.oracleSql.get(k).map(k -> _))
-      val sqlJson = sqls.map { case (k, q) => s"${jq(k)}:${jq(q)}" }
-        .mkString("{", ",", "}")
-      Files.writeString(Paths.get("target/sf1_calib_sql.json"), sqlJson)
-      val pb = new ProcessBuilder("python3", "tools/calibrate.py", outDir,
-        "target/sf1_calib_sql.json", total.toString)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
-      val done = proc.waitFor(600, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) { proc.destroyForcibly(); "null" }
-      else {
-        val out = new String(proc.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        if (proc.exitValue == 0 && out.startsWith("{")) out else "null"
-      }
-    } catch { case _: Throwable => "null" }
+    val calibration =
+      Bench.calibrate(outDir, "target/sf1_calib_sql.json", total, timeoutS = 600)
 
-    val qJson = results.map { case (k, v) => s"${jq(k)}:$v" }
+    val qJson = results.map { case (k, v) => s"${jsonQuote(k)}:$v" }
       .mkString("{", ",", "}")
     val json = s"""{"metric":"sf1_headline","value":$total,"unit":"sec","queries":$qJson,"calibration":$calibration,"sf":"$outDir"}"""
     Files.writeString(Paths.get("target/sf1_spike.json"), json)

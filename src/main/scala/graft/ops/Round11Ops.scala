@@ -333,8 +333,7 @@ object Round11Ops {
   )
 
   /** The composed corpus-build plan over any `documents`-shaped frame
-    * (doc_id, source, text) — factored out so ScalingProbe can drive it
-    * over a 10×-amplified corpus. */
+    * (doc_id, source, text). */
   private[graft] def corpusPipeline(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = documents

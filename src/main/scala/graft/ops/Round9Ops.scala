@@ -114,7 +114,7 @@ object Round9Ops {
     * unexercised).
     */
   private[graft] def kmeansTrain(e0: DataFrame, maxIters: Int = 25,
-      tol: Double = 1e-4, minIters: Int = 0, dim: Int = 64)
+      tol: Double = 1e-4, dim: Int = 64)
       : (Seq[(Int, Seq[Double], Long)], Seq[Double], Int) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val s = e0.sparkSession
@@ -180,9 +180,7 @@ object Round9Ops {
       val relImproved = inertias.size < 2 ||
         inertias(inertias.size - 2) - inertia.doubleValue >
           tol * inertias(inertias.size - 2)
-      // minIters pins the work shape for scaling probes (ScalingProbe
-      // times a fixed-iteration run at 1× and 10×)
-      stable = it + 1 >= minIters && (cs == prevCs || !relImproved)
+      stable = cs == prevCs || !relImproved
       prevCs = cs
       it += 1
     }
@@ -359,11 +357,12 @@ object Round9Ops {
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     // Loop partitioner: the session's shuffle parallelism, DELIBERATELY
     // not data-sized. The graphComponents-style data-derived sizing was
-    // built and MEASURED in r22 (graft.R22PrAB, rows asserted identical
-    // first): 1.10× SLOWER at sf0.1 (4 partitions) and 1.22× at sf1 —
-    // the fixpoint's wall is the 8 sequential per-round job barriers,
-    // not per-task scheduling, so shrinking the partitioner only adds
-    // the |lineitem| sizing count and removes parallelism. Rejected.
+    // built and MEASURED in r22 (OPTIMIZATION_r22.md §8, rows asserted
+    // identical first): 1.10× SLOWER at sf0.1 (4 partitions) and 1.22×
+    // at sf1 — the fixpoint's wall is the 8 sequential per-round job
+    // barriers, not per-task scheduling, so shrinking the partitioner
+    // only adds the |lineitem| sizing count and removes parallelism.
+    // Rejected.
     val part = new org.apache.spark.HashPartitioner(
       s.conf.get("spark.sql.shuffle.partitions").toInt)
     // adjacency lists: partitioned once, reused by every iteration's

@@ -21,8 +21,7 @@ object Round9cOps {
   import T._
 
   /** Pointer-jumping list rank over the per-customer order chains of
-    * `orders` — factored so ScalingProbe can run it on an amplified
-    * frame. Returns (node, o_custkey, ptr=null, d=depth). The loop runs
+    * `orders`. Returns (node, o_custkey, ptr=null, d=depth). The loop runs
     * on a cloned small-parallelism session with per-round
     * localCheckpoint; round count is ceil(log2(maxChain)), known up
     * front from one max-chain agg (no per-round convergence actions). */

@@ -930,15 +930,14 @@ object GraftTable {
     * for scoped DVs), so binding that schema skips the 1-task
     * schema-inference Spark job every dv read otherwise pays (round-21
     * — the pdv sidecars got the same treatment). Falls back to plain
-    * inference when the head records no schema, carries colmap
-    * indirection (physical names differ), or a key column is missing
-    * from the declared schema — inference is always correct, just one
-    * job slower. */
+    * inference when the head records no schema or a key column is
+    * missing from the declared schema — inference is always correct,
+    * just one job slower. A dv= head never carries colmap= (`commit`
+    * refuses the pair), so the declared names are the sidecar's. */
   private def readDvSidecar(spark: SparkSession, path: String,
       declared: Option[org.apache.spark.sql.types.StructType],
-      keyCols: Seq[String], scoped: Boolean,
-      colmapped: Boolean): DataFrame = {
-    val typed = declared.filter(_ => !colmapped).flatMap { st =>
+      keyCols: Seq[String], scoped: Boolean): DataFrame = {
+    val typed = declared.flatMap { st =>
       val fields = keyCols.map(k => st.fields.find(_.name == k))
       if (fields.exists(_.isEmpty)) None
       else Some(org.apache.spark.sql.types.StructType(
@@ -1449,6 +1448,12 @@ object GraftTable {
     require(colmap.isEmpty || schema.nonEmpty,
       "colmap= maps the schema= header's names and cannot be committed " +
         "without one")
+    // key tombstones name LOGICAL columns while colmap'd files carry
+    // physical names: every dv= door refuses a colmap= head and the
+    // rename/drop gate refuses a dv= head, so no version carries both
+    require(dv.isEmpty || colmap.isEmpty,
+      "a commit cannot carry both dv= and colmap= — key tombstones name " +
+        "logical columns the colmap'd files do not carry")
     // bucketfn DESCRIBES the partby dir layout (bucketCol = bucket(n,
     // keyCol)) — a bucket declaration without the layout is a promise
     // the planner would act on with nothing behind it
@@ -1929,7 +1934,7 @@ object GraftTable {
           }).withColumn("__gdir", lit(dirBasename(dd)))
         }.reduce(_ unionByName _)
         val dvDf = readDvSidecar(spark, s"$dir/$dvDir", declared, keyCols,
-            scoped = true, colmapped = colmap.isDefined)
+            scoped = true)
           .withColumnRenamed("__dir", "__gdir")
         val hint = dvBroadcastHint &&
           dvFooterRows(spark, fs, dir, dvDir) <= dvBroadcastMaxKeys(spark)
@@ -1948,7 +1953,7 @@ object GraftTable {
         val keyCols = keys.split(",").toSeq
         val dataDf = conform(readDirs(dataDirs.map(d => s"$dir/$d")))
         val dvDf = readDvSidecar(spark, s"$dir/$dvDir", declared, keyCols,
-          scoped = false, colmapped = colmap.isDefined)
+          scoped = false)
         val hint = dvBroadcastHint &&
           dvFooterRows(spark, fs, dir, dvDir) <= dvBroadcastMaxKeys(spark)
         dataDf.join(
@@ -2302,13 +2307,11 @@ object GraftTable {
         val basenamesDf = dataDirsFrom(hdrs, cur, prefix)
           .map(dirBasename).toDF("__dir")
         val prev = readDvSidecar(spark, s"$dir/${spec.split(";", 3)(0)}",
-          declaredSchemaOf(hdrs), keyCols, scoped = true,
-          colmapped = hdrs.contains("colmap"))
+          declaredSchemaOf(hdrs), keyCols, scoped = true)
         (prev.unionByName(fresh.crossJoin(basenamesDf)).distinct(), true)
       case Some(spec) =>
         val prev = readDvSidecar(spark, s"$dir/${spec.split(";", 2)(0)}",
-          declaredSchemaOf(hdrs), keyCols, scoped = false,
-          colmapped = hdrs.contains("colmap"))
+          declaredSchemaOf(hdrs), keyCols, scoped = false)
         (prev.unionByName(fresh).distinct(), false)
       case None => (fresh, false)
     }
@@ -3259,8 +3262,7 @@ object GraftTable {
     val prevTombs: Option[DataFrame] = hdrs.get("dv").map { spec =>
       val parts = spec.split(";", -1)
       val dvd = readDvSidecar(spark, s"$dir/${parts(0)}",
-        declaredSchemaOf(hdrs), keyCols, scoped = parts.length == 3,
-        colmapped = hdrs.contains("colmap"))
+        declaredSchemaOf(hdrs), keyCols, scoped = parts.length == 3)
       if (parts.length == 3) dvd
       // an unscoped DV kills its keys everywhere — the scoped
       // equivalent is the key set crossed with every current dir
@@ -4364,8 +4366,7 @@ object GraftTable {
               val prevTombs: Option[DataFrame] = hdrs.get("dv").map { sp =>
                 val parts = sp.split(";", -1)
                 val dvd = readDvSidecar(spark, s"$dir/${parts(0)}",
-                  declared, keyCols, scoped = parts.length == 3,
-                  colmapped = hdrs.contains("colmap"))
+                  declared, keyCols, scoped = parts.length == 3)
                 if (parts.length == 3) dvd
                 else dvd.crossJoin(basenamesDf)
               }
@@ -5647,16 +5648,14 @@ object GraftTable {
       require(fs.exists(new Path(s"$dir/$upd")),
         s"version $v's data has been garbage-collected (retention)")
       val curTombs = readDvSidecar(spark, s"$dir/${dvParts(0)}",
-        declaredSchemaOf(hdrs), keyCols, scoped = dvParts.length == 3,
-        colmapped = hdrs.contains("colmap"))
+        declaredSchemaOf(hdrs), keyCols, scoped = dvParts.length == 3)
       val prevHdrs = parseCommit(commitContent(fs, dir, v - 1))._1
       val prevDirs = dataDirsFrom(prevHdrs, v - 1, prefix)
       import spark.implicits._
       val prevTombs = prevHdrs.get("dv").map { spec =>
         val parts = spec.split(";", -1)
         val dvd = readDvSidecar(spark, s"$dir/${parts(0)}",
-          declaredSchemaOf(prevHdrs), keyCols, scoped = parts.length == 3,
-          colmapped = prevHdrs.contains("colmap"))
+          declaredSchemaOf(prevHdrs), keyCols, scoped = parts.length == 3)
         if (parts.length == 3) dvd
         else dvd.crossJoin(prevDirs.map(dirBasename).toDF("__dir"))
       }

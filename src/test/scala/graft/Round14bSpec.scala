@@ -270,6 +270,14 @@ class Round14bSpec extends SparkSpec {
         dv = Some("dvdir;k"), bloom = Some("k|1024|4"))
     }
     assert(e3.getMessage.contains("bloom"), e3.getMessage)
+    // key tombstones name logical columns, colmap'd files physical ones:
+    // no door mints the pair, and commit() refuses it outright
+    val e3b = intercept[IllegalArgumentException] {
+      GraftTable.commit(fs, dir, 1, "dv+colmap", dataDir = Some("v0"),
+        schema = Some("k2:bigint,s:string"), colmap = Some("k2:k"),
+        dv = Some("dvdir;k2"))
+    }
+    assert(e3b.getMessage.contains("dv= and colmap="), e3b.getMessage)
     // round trip: a file whose indexed column is all null gets an
     // EMPTY filter — decode preserves it and every probe skips it
     val (dir3, fs3) = fresh("g14b_bloomnull")
