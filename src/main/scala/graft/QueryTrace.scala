@@ -46,9 +46,11 @@ object QueryTrace {
       val hot = collection.mutable.Map[String, Int]().withDefaultValue(0)
       @volatile var sampling = true
       val sampler = new Thread(() => {
+        val self = Thread.currentThread()
         while (sampling) {
           Thread.getAllStackTraces.forEach { (t, st) =>
-            if (st.nonEmpty && t.getState == Thread.State.RUNNABLE) {
+            if ((t ne self) && st.nonEmpty &&
+                t.getState == Thread.State.RUNNABLE) {
               val frame = st.find(f =>
                 f.getClassName.startsWith("org.apache.spark") ||
                 f.getClassName.startsWith("graft") ||
@@ -84,17 +86,22 @@ object QueryTrace {
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(300)
     println(f"=== $key traced wall $tracedWall%.3f s; 5-run walls ${walls.map(w => f"$w%.3f").mkString(",")} ===")
-    var prevEnd = 0L
-    var firstStart = 0L
-    jobs.foreach { case (id, start, desc) =>
-      if (firstStart == 0) firstStart = start
+    // jobs may overlap (broadcasts run beside the main job), so the
+    // driver gap is the wall minus the UNION of the job intervals
+    val byStart = jobs.toSeq.sortBy(_._2)
+    val intervals = byStart.map { case (id, start, desc) =>
       val end = ends.getOrElse(id, start)
-      val gap = if (prevEnd == 0) 0L else start - prevEnd
-      println(f"job $id%4d dur ${(end - start) / 1000.0}%6.3fs gap ${gap / 1000.0}%6.3fs  $desc")
-      prevEnd = end
+      println(f"job $id%4d start +${(start - byStart.head._2) / 1000.0}%6.3fs " +
+        f"dur ${(end - start) / 1000.0}%6.3fs  $desc")
+      (start, end)
     }
-    if (prevEnd > 0)
-      println(f"jobs span ${(prevEnd - firstStart) / 1000.0}%6.3fs of $tracedWall%.3fs wall")
+    val (busy, _) = intervals.foldLeft((0L, Long.MinValue)) {
+      case ((tot, reach), (a, b)) =>
+        (tot + math.max(0L, b - math.max(a, reach)), math.max(reach, b))
+    }
+    if (intervals.nonEmpty)
+      println(f"jobs cover ${busy / 1000.0}%6.3fs of $tracedWall%.3fs wall; " +
+        f"driver gap ${tracedWall - busy / 1000.0}%6.3fs")
     println("=== final adaptive plan of the traced run ===")
     println(tracedQe.executedPlan.toString.take(12000))
     spark.stop()

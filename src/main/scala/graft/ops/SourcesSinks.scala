@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
 /** SURVEY.md §2.1 sinks/sources beyond plain scans: the INSERT OVERWRITE
   * PARTITION(dt) idiom (day-partitioned parquet, the reference's lake
   * layout), a JSON-lines round trip (ODS raw-ingest idiom), and a CSV
-  * report sink (t2=N). Writes land under target/tmp inside the repo.
+  * report sink (t2=N). Writes land under target/tmp in the working
+  * directory.
   *
   * At 100 TB the partitioned write is the scale-critical piece: one
   * directory per dt keeps reads partition-pruned, and the write shuffles
@@ -19,7 +20,7 @@ object SourcesSinks {
   import T._
 
   private def tmp(d: String, name: String): String =
-    s"/root/repo/target/tmp/${name}_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+    s"target/tmp/${name}_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sink_parquet_partitioned" -> ((s, d) => {

@@ -283,31 +283,11 @@ private[graft] class GraftSparkTable(spark: SparkSession, val dir: String,
     * row is a deleted key, so the driver cost is O(tombstones) —
     * bounded by the `dvServedByAntiJoin` gate on the ordinary read
     * path (write-door plans that bypass the rule keep this collect;
-    * purge/compaction clears it). */
+    * purge/compaction clears it). Shared across statements through
+    * `GraftDvInfo.load`'s memo. */
   private[graft] lazy val dv: Option[GraftDvInfo] =
-    headers.get("dv").map { spec =>
-      GraftDvInfo.driverCollects.incrementAndGet()
-      val parts = spec.split(";", -1)
-      val (dvDir, keyCols) = (parts(0), parts(1).split(",").toSeq)
-      val dvDf = spark.read.parquet(s"$dir/$dvDir")
-      val convs = keyCols.map(c => CatalystTypeConverters
-        .createToCatalystConverter(dvDf.schema(c).dataType))
-      def key(r: org.apache.spark.sql.Row): Seq[Any] =
-        keyCols.indices.map(i => GraftDvInfo.normKey(convs(i)(r.get(i))))
-      if (parts.length == 3) {
-        val rows = dvDf
-          .select((keyCols :+ "__dir").map(org.apache.spark.sql.functions.col): _*)
-          .collect()
-        GraftDvInfo(keyCols, perDir = Some(
-          rows.groupBy(_.getAs[String]("__dir"))
-            .map { case (d, rs) => d -> rs.map(key(_): Seq[Any]).toSet }),
-          global = Set.empty)
-      } else {
-        val keys = dvDf.select(keyCols.head, keyCols.tail: _*).collect()
-          .map(key(_): Seq[Any]).toSet
-        GraftDvInfo(keyCols, perDir = None, global = keys)
-      }
-    }
+    headers.get("dv").map(
+      GraftDvInfo.load(spark, fs, dir, _, GraftTable.declaredSchemaOf(headers)))
 
   /** Row count answered from the stats= line for the KEPT file set —
     * what `estimateStatistics` serves. None without stats (or under a
@@ -1264,6 +1244,72 @@ private[graft] object GraftDvInfo {
     * fallback spec pins that its tier never increments this. */
   private[graft] val driverCollects =
     new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Observability hook: how many loads `load`'s memo served. */
+  private[graft] val memoHits = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Loaded deletion vectors by qualified DV dir (plus the declared key
+    * types the rows were read under). A committed DV dir is immutable —
+    * every DV commit writes a fresh `dv<v>_<uuid>` dir and vacuum
+    * deletes one whole — so the per-statement tables of one version
+    * share one load. LRU in access order, holding at most
+    * `spark.graft.dv.broadcastMaxKeys` tombstones in total: the amount
+    * one probe-path read may already hold on the driver. A larger DV
+    * (loaded only by write-door plans that bypass the anti-join rule)
+    * is never kept. */
+  private val memo =
+    new java.util.LinkedHashMap[String, (GraftDvInfo, Long)](16, 0.75f, true)
+  private var memoWeight = 0L
+
+  /** The DV of a `dv=` header `spec` (`<dir>;<keys>[;scoped]`) under
+    * table dir `dir`, read through the typed sidecar reader (no
+    * schema-inference job when the head declares a schema). */
+  def load(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      dir: String, spec: String, declared: Option[StructType]): GraftDvInfo = {
+    val parts = spec.split(";", -1)
+    val (dvDir, keyCols) = (parts(0), parts(1).split(",").toSeq)
+    val scoped = parts.length == 3
+    val memoKey = (fs.makeQualified(new Path(s"$dir/$dvDir")).toString +:
+      keyCols.map(c => declared.flatMap(_.find(_.name == c))
+        .fold("?")(_.dataType.catalogString))).mkString("|")
+    memo.synchronized(Option(memo.get(memoKey))) match {
+      case Some((info, _)) => memoHits.incrementAndGet(); info
+      case None =>
+        driverCollects.incrementAndGet()
+        val dvDf = GraftTable.readDvSidecar(spark, s"$dir/$dvDir", declared,
+          keyCols, scoped)
+        val convs = keyCols.map(c => CatalystTypeConverters
+          .createToCatalystConverter(dvDf.schema(c).dataType))
+        def key(r: org.apache.spark.sql.Row): Seq[Any] =
+          keyCols.indices.map(i => normKey(convs(i)(r.get(i))))
+        val (info, n) = if (scoped) {
+          val rows = dvDf
+            .select((keyCols :+ "__dir").map(org.apache.spark.sql.functions.col): _*)
+            .collect()
+          (GraftDvInfo(keyCols, perDir = Some(
+            rows.groupBy(_.getAs[String]("__dir"))
+              .map { case (d, rs) => d -> rs.map(key(_): Seq[Any]).toSet }),
+            global = Set.empty), rows.length)
+        } else {
+          val rows = dvDf.select(keyCols.head, keyCols.tail: _*).collect()
+          (GraftDvInfo(keyCols, perDir = None,
+            global = rows.map(key(_): Seq[Any]).toSet), rows.length)
+        }
+        // an empty DV still takes a slot, so the entry count is bounded too
+        val weight = math.max(1L, n.toLong)
+        val cap = GraftTable.dvBroadcastMaxKeys(spark)
+        if (weight <= cap) memo.synchronized {
+          memoWeight += weight -
+            Option(memo.put(memoKey, (info, weight))).fold(0L)(_._2)
+          val eldest = memo.values.iterator
+          while (memoWeight > cap) {
+            memoWeight -= eldest.next()._2
+            eldest.remove()
+          }
+        }
+        info
+    }
+  }
 
   /** Chain-dir basename of a planned file = its parent dir's name
     * (scoped-dv layouts are flat by construction — `commitUpdate`

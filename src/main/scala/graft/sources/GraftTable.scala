@@ -611,7 +611,7 @@ object GraftTable {
     * the one decode `readVersion` and the MoR update engine share for
     * conformance reads (so the two can never diverge on what the
     * header means). */
-  private def declaredSchemaOf(hdrs: Map[String, String])
+  private[graft] def declaredSchemaOf(hdrs: Map[String, String])
       : Option[org.apache.spark.sql.types.StructType] =
     hdrs.get("schema").map(enc =>
       org.apache.spark.sql.types.StructType(schemaDecode(enc).map {
@@ -934,7 +934,7 @@ object GraftTable {
     * missing from the declared schema — inference is always correct,
     * just one job slower. A dv= head never carries colmap= (`commit`
     * refuses the pair), so the declared names are the sidecar's. */
-  private def readDvSidecar(spark: SparkSession, path: String,
+  private[graft] def readDvSidecar(spark: SparkSession, path: String,
       declared: Option[org.apache.spark.sql.types.StructType],
       keyCols: Seq[String], scoped: Boolean): DataFrame = {
     val typed = declared.flatMap { st =>
@@ -4882,8 +4882,15 @@ object GraftTable {
       }
     def encoded: String =
       s"${urlEnc(col)}|$m|$k\n" + files.map { case (f, bits) =>
-        s"${urlEnc(f)}|${bits.map(l => f"$l%016x").mkString}"
+        s"${urlEnc(f)}|${bits.map(hexWord).mkString}"
       }.mkString("\n")
+  }
+
+  /** A sidecar's 64-bit filter word: 16 lowercase hex digits,
+    * zero-padded — the form `TableBloom.decodeAll` parses back. */
+  private[graft] def hexWord(l: Long): String = {
+    val h = java.lang.Long.toHexString(l)
+    if (h.length == 16) h else "0" * (16 - h.length) + h
   }
 
   private[graft] object TableBloom {
@@ -4986,17 +4993,21 @@ object GraftTable {
     val m = math.min(1L << 24, math.max(1024L,
       ((math.max(1L, maxRowsPerFile) * bitsPerKey + 63) / 64) * 64)).toInt
     val (nCols, words) = (bloomCols.size, m / 64)
-    // per row: the file's relative name, then k probe positions per
-    // column (null where the value is null — it probes nothing)
+    // per row: the file's raw scan name, then k hashes per column (null
+    // where the value is null — it probes nothing). `m` stays out of
+    // the projection: the generated class is then the same for every
+    // commit of a schema and stays in the codegen cache.
     val probes = spark.read.schema(readSchema).parquet(dataPath)
-      .select(regexp_replace(input_file_name(), relPrefix(dataPath).regex, "")
-        +: bloomCols.flatMap(c => (1 to k).map(s =>
-          when(col(c).isNotNull,
-            pmod(xxhash64(col(c), lit(s)), lit(m.toLong))))): _*)
-    val partials = probes.rdd.mapPartitions { it =>
+      .select(input_file_name() +: bloomCols.flatMap(c => (1 to k).map(s =>
+        when(col(c).isNotNull, xxhash64(col(c), lit(s))))): _*)
+    val rel = relPrefix(dataPath).pattern
+    val partials = probes.queryExecution.toRdd.mapPartitions { it =>
       val out = collection.mutable.ArrayBuffer
         .empty[((Int, String), (Array[Int], Array[Long]))]
       val bits = Array.fill(nCols)(new Array[Long](words))
+      // a task's rows arrive file by file: the relative name is derived
+      // once per file, when the raw name changes
+      var raw: org.apache.spark.unsafe.types.UTF8String = null
       var file: String = null
       def flush(): Unit = if (file != null) for (ci <- 0 until nCols) {
         val ws = bits(ci).indices.filter(bits(ci)(_) != 0L).toArray
@@ -5006,12 +5017,26 @@ object GraftTable {
         }
       }
       it.foreach { r =>
-        val f = r.getString(0)
-        if (f != file) { flush(); file = f }
-        for (ci <- 0 until nCols; base = 1 + ci * k if !r.isNullAt(base);
-             s <- 0 until k) {
-          val p = r.getLong(base + s)
-          bits(ci)((p >>> 6).toInt) |= 1L << (p & 63)
+        val f = r.getUTF8String(0)
+        if (!f.equals(raw)) {
+          flush()
+          raw = f.clone() // the row's buffer is reused
+          file = rel.matcher(raw.toString).replaceAll("")
+        }
+        var ci = 0
+        while (ci < nCols) {
+          val base = 1 + ci * k
+          if (!r.isNullAt(base)) {
+            val b = bits(ci)
+            var s = 0
+            while (s < k) {
+              val h = r.getLong(base + s)
+              val p = ((h % m) + m) % m // pmod, as `bloomPositions`
+              b((p >>> 6).toInt) |= 1L << (p & 63)
+              s += 1
+            }
+          }
+          ci += 1
         }
       }
       flush()
@@ -5064,7 +5089,7 @@ object GraftTable {
               }
               w.write(urlEnc(f))
               w.write('|')
-              bits.foreach(l => w.write(f"$l%016x"))
+              bits.foreach(l => w.write(hexWord(l)))
               w.write('\n')
             }
           }

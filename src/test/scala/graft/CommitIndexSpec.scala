@@ -225,6 +225,29 @@ class CommitIndexSpec extends SparkSpec {
     assert(lines.length == 8 && lines.count(_.split('|')(1).forall(_ == '0')) == 4)
   }
 
+  test("bloom: sidecars of different m built in one session both equal " +
+      "the oracle") {
+    // the probe projection leaves m out, so the second build reuses the
+    // first one's generated class: the modulus must still be its own
+    val small = freshDir("bloom_m1")
+    GraftTable.commitNextIsolated(spark, small,
+      filesOf(keyed, (0L until 300L).map(keyedRow)), "small",
+      bloomCols = Seq("id", "name"))
+    val large = freshDir("bloom_m2")
+    GraftTable.commitNextIsolated(spark, large,
+      filesOf(keyed, (0L until 3000L).map(keyedRow), (3000L until 3100L)
+        .map(keyedRow)), "large", bloomCols = Seq("id", "name"))
+    val fs = GraftTable.fsOf(spark, small)
+    assert(GraftTable.headersOf(fs, small, 0)("bloom") ==
+      "id|3648|4;name|3648|4")
+    assert(GraftTable.headersOf(fs, large, 0)("bloom") ==
+      "id|36032|4;name|36032|4")
+    Seq(small, large).foreach { dir =>
+      val (data, got) = sidecarOf(dir, 0)
+      assert(got == oracleSidecar(data, keyed, Seq("id", "name")), dir)
+    }
+  }
+
   test("bloom: a file split across several read tasks merges its " +
       "partial arrays to the oracle's bits") {
     val dir = freshDir("bloomsplit")
