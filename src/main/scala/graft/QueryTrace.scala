@@ -8,6 +8,20 @@ import org.apache.spark.sql.execution.QueryExecution
   * warm runs, per-phase times, a hot-frame sample, and the final
   * adaptive plan the traced run executed. */
 object QueryTrace {
+  /** Frames a thread reports RUNNABLE in while it only waits for work —
+    * selector polls, socket accepts, the reference handler, a park caught
+    * mid-transition — and that would otherwise lead the hot-frame
+    * histogram. */
+  private val idleWaits = Set(
+    "io.netty.channel.epoll.Native.epollWait0",
+    "io.netty.channel.epoll.Native.epollWait",
+    "io.netty.channel.epoll.Native.epollBusyWait0",
+    "sun.nio.ch.EPoll.wait",
+    "sun.nio.ch.Net.accept",
+    "sun.nio.ch.Net.poll",
+    "java.lang.ref.Reference.waitForReferencePendingList",
+    "jdk.internal.misc.Unsafe.park")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val key = args.headOption.getOrElse("topk_orders")
@@ -50,7 +64,8 @@ object QueryTrace {
         while (sampling) {
           Thread.getAllStackTraces.forEach { (t, st) =>
             if ((t ne self) && st.nonEmpty &&
-                t.getState == Thread.State.RUNNABLE) {
+                t.getState == Thread.State.RUNNABLE &&
+                !idleWaits(st.head.getClassName + "." + st.head.getMethodName)) {
               val frame = st.find(f =>
                 f.getClassName.startsWith("org.apache.spark") ||
                 f.getClassName.startsWith("graft") ||

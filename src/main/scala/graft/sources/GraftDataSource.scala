@@ -1492,9 +1492,12 @@ private[graft] class GraftFileIndex(spark: SparkSession, roots: Seq[Path],
   * declared-constraint enforcement over the staged rows (one read of
   * the just-written files — they are hot); a refused write deletes the
   * staging dir and mints nothing, so the failed job is invisible to
-  * readers. Appends onto stats=/bloom=-indexed chains refuse (the DSv2
-  * door cannot re-declare index ordinals — extend those chains through
-  * `commitAppend` with statsCols/bloomCol). */
+  * readers. Both halves gate through `GraftTable.gateStaged` and publish
+  * through `GraftTable.publishStaged`, the steps every staged append
+  * shares: a registry-declared (statenc=) or Bloom index re-derives on
+  * the staged dir, while a lambda-ordinal stats line refuses (the DSv2
+  * door cannot re-declare code — extend those chains through
+  * `commitAppend` with statsCols). */
 private[graft] class GraftWriteBuilder(spark: SparkSession,
     table: GraftSparkTable,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -1511,14 +1514,13 @@ private[graft] class GraftWriteBuilder(spark: SparkSession,
   override def build(): org.apache.spark.sql.connector.write.Write = {
     // fail BEFORE any distributed job, like every API write path
     // (streaming epochs additionally re-gate per commit — the chain's
-    // headers can change between epochs). A partitionBy target passes
-    // its recorded columns as the staged shape: the manifest half
-    // re-stages the flat job's output to exactly that shape
-    // (commitStagedDsv2's relayout), so the pre-job gate agrees with
-    // the per-attempt one by construction.
-    GraftTable.dsv2WriteGate(spark, table.dir, info.schema(),
-      append = !overwrite,
-      stagedPartBy = GraftTable.declaredPartBy(spark, table.dir))
+    // headers can change between epochs). A partitionBy target's staged
+    // shape is its recorded columns: the manifest half re-stages the
+    // flat job's output to exactly that shape (commitStagedDsv2's
+    // relayout), so the pre-job gate agrees with the per-attempt one by
+    // construction.
+    GraftTable.gateHead(spark, table.dir, info.schema(),
+      GraftTable.dsv2Door(append = !overwrite))
     val doOverwrite = overwrite
     new org.apache.spark.sql.connector.write.Write {
       override def toBatch
@@ -1679,11 +1681,8 @@ private[graft] class GraftUpsertWriteBuilder(spark: SparkSession,
     // fail BEFORE any distributed job, like every write door (the
     // epoch commits re-run the same gate per attempt — the chain's
     // headers can change between epochs)
-    GraftTable.upsertWriteGate(spark, table.dir, info.schema(), keys,
-      GraftTable.currentVersion(GraftTable.fsOf(spark, table.dir),
-          table.dir)
-        .map(v => (v, GraftTable.headersOf(
-          GraftTable.fsOf(spark, table.dir), table.dir, v))))
+    GraftTable.gateHead(spark, table.dir, info.schema(),
+      GraftTable.upsertDoor(keys))
     new org.apache.spark.sql.connector.write.Write {
       override def toBatch
           : org.apache.spark.sql.connector.write.BatchWrite =

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Versioned parquet table with an atomic manifest commit — the
@@ -619,6 +620,22 @@ object GraftTable {
           n, org.apache.spark.sql.types.DataType.fromDDL(t))
       }))
 
+  /** Parquet `paths` read under `schema` when one is known — no
+    * schema-inference job — else with the schema inferred. `basePath`
+    * anchors partition discovery, so partitionBy layouts keep their
+    * partition columns. */
+  private[graft] def readParquet(spark: SparkSession,
+      schema: Option[StructType], paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val r = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    schema.fold(r)(r.schema).parquet(paths: _*)
+  }
+
+  /** The schema a version's data files can be read under: its declared
+    * schema= unless colmap= renames the physical columns. */
+  private def filesSchemaOf(hdrs: Map[String, String]): Option[StructType] =
+    if (hdrs.contains("colmap")) None else declaredSchemaOf(hdrs)
+
   /** WRITE-TIME schema compatibility gate: compare the next commit's
     * schema against the current version's recorded schema= header BY
     * NAME (column order and nullability are not schema identity here —
@@ -945,10 +962,7 @@ object GraftTable {
           (if (scoped) Seq(org.apache.spark.sql.types.StructField("__dir",
             org.apache.spark.sql.types.StringType)) else Nil)))
     }
-    typed match {
-      case Some(st) => spark.read.schema(st).parquet(path)
-      case None => spark.read.parquet(path)
-    }
+    readParquet(spark, typed, Seq(path))
   }
 
   /** One file of a just-written data dir, as the commit's index step
@@ -1260,20 +1274,19 @@ object GraftTable {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           readVersion(spark, dir, v, prefix).schema)
-      else if (hdrs.contains("append") || hdrs.contains("statrel"))
-        // append chains are FLAT by construction (the gate refuses
-        // partitionBy predecessors), so no basePath is needed — and the
-        // table dir would not even be an ancestor when the chain starts
-        // from a shallow clone's ../src reference
-        spark.read.parquet(hit: _*)
       else
-        // basePath pins partition discovery to the DATA DIR: without
-        // it, leaf files under p=.../ would each anchor their own base
-        // and the partition columns would silently vanish from the
-        // schema (diverging from the empty-set branch, which serves
-        // readVersion's full schema)
-        spark.read.option("basePath", s"$dir/${dataDirs.head}")
-          .parquet(hit: _*)
+        // append chains are FLAT by construction (the gate refuses
+        // index-bearing partitionBy predecessors), so no basePath is
+        // needed — and the table dir would not even be an ancestor when
+        // the chain starts from a shallow clone's ../src reference.
+        // Otherwise basePath pins partition discovery to the DATA DIR:
+        // without it, leaf files under p=.../ would each anchor their
+        // own base and the partition columns would silently vanish
+        // from the schema (diverging from the empty-set branch, which
+        // serves readVersion's full schema)
+        readParquet(spark, filesSchemaOf(hdrs), hit,
+          if (hdrs.contains("append") || hdrs.contains("statrel")) None
+          else Some(s"$dir/${dataDirs.head}"))
     (df, hit, st.files.size)
   }
 
@@ -1902,10 +1915,7 @@ object GraftTable {
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
         } else {
-          val base = conform(declared match {
-            case Some(st) => spark.read.schema(st).parquet(live: _*)
-            case None => spark.read.parquet(live: _*)
-          })
+          val base = conform(readParquet(spark, declared, live))
           val qualifiedSidecar =
             fs.makeQualified(new Path(sidecarPath)).toString
           val fileName =
@@ -1928,10 +1938,8 @@ object GraftTable {
         val parts = spec.split(";", 3)
         val (dvDir, keyCols) = (parts(0), parts(1).split(",").toSeq)
         val withDir = dataDirs.map { dd =>
-          (declared match {
-            case Some(st) => spark.read.schema(st).parquet(s"$dir/$dd")
-            case None => spark.read.parquet(s"$dir/$dd")
-          }).withColumn("__gdir", lit(dirBasename(dd)))
+          readParquet(spark, declared, Seq(s"$dir/$dd"))
+            .withColumn("__gdir", lit(dirBasename(dd)))
         }.reduce(_ unionByName _)
         val dvDf = readDvSidecar(spark, s"$dir/$dvDir", declared, keyCols,
             scoped = true)
@@ -2418,10 +2426,7 @@ object GraftTable {
     val freshOpt: Option[DataFrame] =
       if (scanTargets.isEmpty) None // every file fully dead: no new match
       else {
-        val base = declared match {
-          case Some(st) => spark.read.schema(st).parquet(scanTargets: _*)
-          case None => spark.read.parquet(scanTargets: _*)
-        }
+        val base = readParquet(spark, declared, scanTargets)
         Some(base.filter(predicate).select(
           element_at(fsplit(col("_metadata.file_path"), "/"), -1).as("__file"),
           col("_metadata.row_index").as("__pos")))
@@ -2640,10 +2645,7 @@ object GraftTable {
             "schema= header to type the empty read"))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      } else declared match {
-        case Some(st) => spark.read.schema(st).parquet(liveFiles: _*)
-        case None => spark.read.parquet(liveFiles: _*)
-      }
+      } else readParquet(spark, declared, liveFiles)
     import org.apache.spark.sql.graft.GraftSqlBridge
     val live = (prevSidecar, liveFiles.isEmpty) match {
       case (Some(pd), false) =>
@@ -3240,10 +3242,8 @@ object GraftTable {
     // same conformance rule as readVersion's multi-dir reads.
     val declared = declaredSchemaOf(hdrs)
     val withDir = dataDirs.map { dd =>
-      (declared match {
-        case Some(st) => spark.read.schema(st).parquet(s"$dir/$dd")
-        case None => spark.read.parquet(s"$dir/$dd")
-      }).withColumn("__gdir", lit(dirBasename(dd)))
+      readParquet(spark, declared, Seq(s"$dir/$dd"))
+        .withColumn("__gdir", lit(dirBasename(dd)))
     }.reduce(_ unionByName _)
     val outCols = withDir.columns.filterNot(_ == "__gdir").toSeq
     val keyCols = keyColsOpt.getOrElse(outCols)
@@ -3462,117 +3462,16 @@ object GraftTable {
       statsCols: StatsCols = Nil, bloomCol: Option[String] = None,
       bloomCols: Seq[String] = Nil,
       statsEnc: Seq[(String, String)] = Nil): Int = {
-    val effBloom = (bloomCol.toSeq ++ bloomCols).distinct
-    val effStats: StatsCols =
-      StatsEnc.validateAndMerge(spark, statsCols, statsEnc)
-    val fs = fsOf(spark, dir)
-    // pre-flight gate against the CURRENT version so a refused append
-    // writes NOTHING — every contract violation below fails before the
-    // distributed write, like schemaGate everywhere else; re-checked
-    // per attempt in case the winner evolved
-    def gate(cur: Option[(Int, Map[String, String])]): Unit =
-      cur.foreach { case (_, h) =>
-        require(!h.contains("dv"),
-          "cannot append onto a version carrying a deletion vector — " +
-            "purgeDeleteVector first")
-        require(!h.contains("pdv"),
-          "cannot append onto a version carrying a positional deletion " +
-            "vector — purgePositionalDv first")
-        require(!h.contains("partby"),
-          s"cannot append onto a partitionBy layout (${h("partby")}): a " +
-            "flat appended dir beside a partitioned one makes the union " +
-            "unreadable — commit a full version instead")
-        require(!h.contains("pmap"),
-          "this table is partition-mapped — append by replacing (or " +
-            "adding) partitions through replacePartitionsWithRetry (a " +
-            "plain append would drop the value→dir map)")
-        require(!h.contains("colmap"),
-          "cannot append onto a renamed/dropped-column head: the new " +
-            "dir's physical names would differ from the chain's — " +
-            "rewrite via commitNextIsolated (normalizing the names) " +
-            "first")
-        val prevStatCols = h.get("stats")
-          .map(_.split(";", 2)(0).split(",").toSeq.map(urlDec))
-        (prevStatCols, effStats.map(_._1)) match {
-          case (None, mine) if mine.nonEmpty =>
-            throw new IllegalArgumentException(
-              "append with statsCols requires the current version to " +
-                "carry stats (partial statistics would under-count " +
-                "every stats-served read)")
-          case (Some(theirs), mine) if mine.isEmpty =>
-            throw new IllegalArgumentException(
-              s"appending WITHOUT statsCols onto a stats-bearing table " +
-                s"would silently drop the skipping index for the whole " +
-                s"chain — pass statsCols on $theirs to extend it (or " +
-                "rewrite via commitNextIsolated to drop stats " +
-                "deliberately)")
-          case (Some(theirs), mine) if mine.nonEmpty && theirs != mine =>
-            throw new IllegalArgumentException(
-              s"append statsCols $mine must match the table's recorded " +
-                s"stat columns $theirs")
-          case _ => ()
-        }
-        // ENCODING continuity: the chain's one stats line must stay one
-        // ordinal domain end-to-end — a registry-declared (statenc)
-        // column must be re-declared with the SAME encoding, and a
-        // column the predecessor recorded WITHOUT an encoding name
-        // cannot gain one (its existing entries' encoding is
-        // unverifiable; a mixed line would mis-prune DSv2 band reads)
-        val prevEnc = h.get("statenc").map(StatsEnc.decode(_).toMap)
-          .getOrElse(Map.empty[String, String])
-        val mineEnc = statsEnc.toMap
-        (prevEnc.keySet ++ mineEnc.keySet).foreach { c =>
-          if (h.contains("stats"))
-            require(prevEnc.get(c) == mineEnc.get(c),
-              s"append stats encoding for '$c' must match the chain's " +
-                s"recorded statenc (${prevEnc.get(c)} vs " +
-                s"${mineEnc.get(c)}) — one stats line, one ordinal " +
-                "domain; rewrite via compactChain to re-encode")
-        }
-        // same contract for the Bloom index: a chain is probed dir by
-        // dir, so every dir must carry sidecar sections on the SAME
-        // column SET — a bloom-less append would silently blind the
-        // point lookups
-        (h.get("bloom").map(b => bloomColsOf(b).toSet),
-            effBloom.toSet) match {
-          case (None, mine) if mine.nonEmpty =>
-            throw new IllegalArgumentException(
-              "append with bloomCol requires the current version to " +
-                "carry a Bloom index (a partially indexed chain would " +
-                "under-serve every point lookup)")
-          case (Some(theirs), mine) if mine.isEmpty =>
-            throw new IllegalArgumentException(
-              s"appending WITHOUT bloomCol onto a Bloom-indexed table " +
-                s"would silently drop the point-lookup index for the " +
-                s"whole chain — pass bloomCol on $theirs to extend it " +
-                "(or rewrite via commitNextIsolated)")
-          case (Some(theirs), mine) if mine.nonEmpty && theirs != mine =>
-            throw new IllegalArgumentException(
-              s"append bloomCol $mine must match the table's indexed " +
-                s"columns $theirs")
-          case _ => ()
-        }
-        schemaGate(h.get("schema"), df.schema, allowEvolution = false,
-          context = "append")
-      }
-    // declared constraints enforce on the NEW rows (the chain's old
-    // rows were validated by their own commits); `unique:` additionally
-    // checks the new keys against the CURRENT snapshot — re-run per OCC
-    // attempt, since a racing append may have landed clashing keys
-    def enforceOn(cur: Option[(Int, Map[String, String])]): Seq[String] =
-      carriedConstraints(cur) match {
-        case Nil => Nil
-        case specs =>
-          enforceConstraints(df, specs, "append",
-            existing =
-              if (specs.exists(_.startsWith("unique:")))
-                cur.map { case (c, _) => readVersion(spark, dir, c, prefix) }
-              else None)
-          specs
-      }
-    val cur0 = currentHeaders(fs, dir)
-    gate(cur0)
-    var constraintsCarried = enforceOn(cur0)
+    val door = StagedDoor("append", markCreate = true,
+      index = DeclaredIndex(StatsEnc.validateAndMerge(spark, statsCols,
+        statsEnc), statsEnc, (bloomCol.toSeq ++ bloomCols).distinct))
+    // pre-flight gate and constraints against the CURRENT version so a
+    // refused append writes NOTHING; the publish step re-runs both on
+    // every attempt after a lost race. Constraints enforce on the NEW
+    // rows (the chain's old rows were validated by their own commits).
+    val cur0 = currentHeaders(fsOf(spark, dir), dir)
+    gateStaged(cur0, df.schema, door)
+    enforceCarried(spark, dir, df, cur0, "append", prefix)
     // stage ONCE: the dir name carries the version seen at stage time;
     // on a lost race the same dir is re-referenced under the winner's
     // successor number (dirVersion still parses it for vacuum/GC — and
@@ -3580,41 +3479,14 @@ object GraftTable {
     val added = s"$prefix${cur0.map(_._1 + 1).getOrElse(0)}_" +
       java.util.UUID.randomUUID().toString.take(8)
     df.write.mode("errorifexists").parquet(s"$dir/$added")
-    // the appended dir gets its OWN sidecar (sized to its own files —
-    // each sidecar self-describes m/k per section, so chain dirs may
-    // differ); staged once, reused verbatim on a lost race
-    val (newStats, newBloom) = indexWrittenDir(spark, s"$dir/$added",
-      df.schema, Nil, effStats, statsEnc, effBloom)
-    retryOnConflict(maxAttempts) { attempt =>
-      // the staged dir is reused VERBATIM across attempts (an append
-      // reads no snapshot, so there is nothing to re-execute) — only
-      // the gate, constraints and manifest math re-run on the new head
-      val cur = if (attempt == 1) cur0 else currentHeaders(fs, dir)
-      if (attempt > 1) { gate(cur); constraintsCarried = enforceOn(cur) }
-      val prevDirs = cur.map { case (c, h) => dataDirsFrom(h, c, prefix) }
-        .getOrElse(Seq.empty)
-      val v = cur.map(_._1 + 1).getOrElse(0)
-      val mergedStats = newStats.map(mergeAppendStats(_, added, cur, prefix))
-      commit(fs, dir, v, metadata, retain, prefix,
-        dataDir = Some((prevDirs :+ added).mkString(",")),
-        stats = mergedStats, appendDir = Some(added),
-        schema = Some(schemaEncode(df.schema)), prevTs = prevTsOf(cur),
-        bloom = newBloom,
-        constraintsHdr =
-          if (constraintsCarried.isEmpty) None
-          else Some(constraintsEncode(constraintsCarried)),
-        statenc =
-          if (statsEnc.isEmpty || mergedStats.isEmpty) None
-          else Some(StatsEnc.encode(statsEnc)))
-      v
-    }
+    publishStaged(spark, dir, added, df.schema, door, metadata, maxAttempts,
+      retain, prefix, pregated = Some(cur0)).get
   }
 
   /** Merged stats line for an append commit, table-relative keys: the
     * new dir's files prefixed with their dir; the predecessor's entries
     * re-keyed by ITS dir unless it was an append version (already
-    * table-relative). Shared by the API append and the DSv2 staged
-    * append so the re-keying rule cannot diverge. */
+    * table-relative). */
   private def mergeAppendStats(ns: TableStats, added: String,
       cur: Option[(Int, Map[String, String])], prefix: String)
       : TableStats = {
@@ -3648,107 +3520,359 @@ object GraftTable {
     commitAppendWithRetry(spark, dir, df, metadata, maxAttempts = 1,
       retain, prefix, statsCols, bloomCol, bloomCols, statsEnc)
 
-  /** The DSv2 write door's PRE-JOB gate (see `GraftWriteBuilder`):
-    * everything that can refuse must refuse before the distributed
-    * write runs. Appends demand the same chain invariants as
-    * `commitAppendWithRetry` — plus index-bearing chains refuse
-    * outright, because SQL/DataFrame writers cannot re-declare the
-    * stats/Bloom ordinals (code, not headers). */
-  private[graft] def dsv2WriteGate(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      append: Boolean, stagedPartBy: Seq[String] = Nil): Unit = {
-    val fs = fsOf(spark, dir)
-    currentHeaders(fs, dir).foreach { case (_, h) =>
-      schemaGate(h.get("schema"), schema, allowEvolution = false,
-        context = if (append) "append" else "commit")
-      require(!h.contains("pmap"),
-        "this table is partition-mapped — write through " +
-          "replacePartitionsWithRetry (a plain DSv2 write would drop " +
-          "the value→dir map)")
-      // a partitionBy layout is PRESERVED: the write door re-stages the
-      // flat parquet job's output partitionBy-shaped from the RECORDED
-      // columns and carries the partby header (`commitStagedDsv2`'s
-      // relayout), so both modes serve it. Only a shape MISMATCH
-      // refuses — a racing writer re-laying out the table between the
-      // relayout and this attempt's gate — because the already-staged
-      // dirs no longer match the head's layout.
-      val declaredPartBy =
-        h.get("partby").map(_.split(",").toSeq).getOrElse(Nil)
-      require(declaredPartBy == stagedPartBy,
-        s"this table's partitionBy layout ($declaredPartBy) changed " +
-          s"after the write staged its dirs ($stagedPartBy) — re-run " +
-          "the write against the new layout")
-      // a BUCKET-declared layout is served by both DSv2 modes: the
-      // staged rows are validated against the bucket invariant before
-      // any version mints (commitStagedDsv2), and the declaration
-      // carries — so the planner's key-group alignment stays truthful
-      // through DSv2 ingest too
-      // a statenc-declared stats line and a bloom= line are
-      // SELF-DESCRIBED by the manifest (registry encoding names /
-      // col|m|k sections), so BOTH DSv2 modes re-derive them
-      // (`commitStagedDsv2`): an append extends the chain's index, an
-      // overwrite re-indexes its replacement snapshot — the index is
-      // never silently stripped. Only a stats line whose columns are
-      // not fully registry-declared refuses: its lambda ordinals are
-      // code a DataFrame writer cannot re-derive, and a mixed line
-      // would mis-prune band reads.
-      if (!statencCovers(h))
-        throw new IndexRedeclarationRequired(
-          "a DSv2 write cannot re-derive this table's stats index: its " +
-            s"stat columns ${h.get("stats").map(TableStats.decode(_).cols)
-              .getOrElse(Nil)} are not fully registry-declared " +
-            s"(statenc covers ${h.get("statenc")
-              .map(StatsEnc.decode(_).map(_._1)).getOrElse(Nil)}) — " +
-            "write through the API with the original statsCols, or " +
-            "re-commit the chain with statsEnc registry encodings")
-      if (append) {
-        require(!h.contains("dv"),
-          "cannot append onto a version carrying a deletion vector — " +
-            "purgeDeleteVector first")
+  /** Where a staged write's per-file index comes from. */
+  private[graft] sealed trait StagedIndex
+  /** The caller declares it (the API append: statsCols may be lambdas,
+    * code the manifest cannot carry); the gate checks the declaration
+    * continues the chain's index exactly, and the staged dir is indexed
+    * once. */
+  private[graft] final case class DeclaredIndex(stats: StatsCols,
+      enc: Seq[(String, String)], bloom: Seq[String]) extends StagedIndex
+  /** The head SELF-DESCRIBES it (registry statenc= names, bloom=
+    * col|m|k sections) and each attempt re-derives it from the headers
+    * that attempt's gate passed — so an OCC winner that attached or
+    * dropped the chain's index mid-race is reflected (the DSv2 and
+    * streaming doors: a DataFrame writer declares no index). A stats
+    * line not fully registry-declared refuses: its lambda ordinals are
+    * code, and a mixed line would mis-prune band reads. */
+  private[graft] case object HeaderIndex extends StagedIndex
+  /** No per-file index may ride the write: the streaming upsert's
+    * merge-on-read tombstones invalidate per-file statistics. */
+  private[graft] case object NoIndex extends StagedIndex
+
+  /** A staged-write door as the shared gate and publish step see it:
+    * its name in refusals; whether it appends (else the staged dir
+    * replaces the snapshot); whether it re-lays out its staged rows
+    * to the head's partitionBy shape (else it stages flat and refuses
+    * partitioned heads); whether even a table's first version carries
+    * the append= marker; and, for the upsert, its keys. */
+  private[graft] final case class StagedDoor(name: String,
+      index: StagedIndex = HeaderIndex, append: Boolean = true,
+      relayout: Boolean = false, markCreate: Boolean = false,
+      upsertKeys: Option[Seq[String]] = None)
+
+  private[graft] def dsv2Door(append: Boolean): StagedDoor =
+    StagedDoor(if (append) "DSv2 append" else "DSv2 overwrite",
+      append = append, relayout = true)
+  private val epochDoor = StagedDoor("streaming append")
+  private[graft] def upsertDoor(keys: Seq[String]): StagedDoor =
+    StagedDoor("streaming upsert", NoIndex, upsertKeys = Some(keys))
+
+  /** The current version's recorded partitionBy columns (empty for flat
+    * tables). */
+  private def partByOf(h: Map[String, String]): Seq[String] =
+    h.get("partby").map(_.split(",").toSeq).getOrElse(Nil)
+
+  /** Whether a version's stats= line is FULLY described by its statenc=
+    * registry declaration (same columns, same order) — the shared
+    * predicate of every self-described re-indexing door (DSv2 and
+    * streaming appends, SQL MERGE re-index, SQL OPTIMIZE/maintain). One
+    * implementation so the doors can never diverge on what "covered"
+    * means: a lambda-ordinal stats line refuses everywhere, a
+    * registry-declared one re-derives everywhere. */
+  private[graft] def statencCovers(h: Map[String, String]): Boolean =
+    h.get("stats").forall(st => TableStats.decode(st).cols ==
+      h.get("statenc").map(StatsEnc.decode(_).map(_._1)).getOrElse(Nil))
+
+  /** The ONE refusal gate of every staged-write door — the API append,
+    * the DSv2 batch append and overwrite, the streaming append and
+    * upsert. It runs before anything stages and again on every OCC
+    * attempt against that attempt's head `cur`, so the doors cannot
+    * drift apart on what a chain admits; only the index check is
+    * door-specific (`door.index`). `stagedPartBy` is the shape a
+    * relayout door staged (the head's own shape before the job). */
+  private[graft] def gateStaged(cur: Option[(Int, Map[String, String])],
+      schema: StructType, door: StagedDoor,
+      stagedPartBy: Seq[String] = Nil): Unit = {
+    val what = door.name
+    door.upsertKeys.foreach { keys =>
+      require(keys.nonEmpty, "streaming upsert needs upsertKeys")
+      require(keys.forall(c => !c.contains(",") && !c.contains(";")),
+        s"key column names must not contain the dv= header delimiters: $keys")
+      keys.foreach(k => require(schema.fieldNames.contains(k),
+        s"upsert key '$k' is not a column of the stream (${
+          schema.fieldNames.toSeq})"))
+    }
+    cur.foreach { case (_, h) =>
+      if (door.append) {
+        // an upsert folds onto a key DV of its own keys; every other
+        // append would have the tombstones subtract from its marker
+        // dir's "added" set
+        (door.upsertKeys, h.get("dv")) match {
+          case (Some(keys), Some(spec)) =>
+            val prevKeys = spec.split(";", -1)(1).split(",").toSeq
+            require(prevKeys == keys,
+              s"the current version's deletion vector is keyed by " +
+                s"$prevKeys but this upsert keys by $keys")
+          case (None, Some(_)) => throw new IllegalArgumentException(
+            s"$what refused — the current version carries a deletion " +
+              "vector; purgeDeleteVector first")
+          case _ => ()
+        }
         require(!h.contains("pdv"),
-          "cannot append onto a version carrying a positional deletion " +
-            "vector — purgePositionalDv first")
+          s"$what refused — the current version carries a positional " +
+            "deletion vector; purgePositionalDv first")
         require(!h.contains("colmap"),
-          "cannot append onto a renamed/dropped-column head through " +
-            "the DSv2 door — overwrite (which normalizes the physical " +
-            "names) or rewrite via commitNextIsolated first")
-        // a partitioned APPEND composes with everything EXCEPT a
-        // band/Bloom index: the point-probe and band readers open hit
-        // files directly and a multi-dir partitioned chain has no
-        // single basePath to re-anchor the partition columns under —
-        // serving it would silently drop those columns from pruned
-        // reads. Loud refusal until the chain compacts back to one dir.
-        require(!h.contains("partby") ||
-            !(h.contains("stats") || h.contains("bloom")),
-          "cannot append onto an index-bearing partitionBy chain " +
-            "through the DSv2 door (band/Bloom reads cannot re-anchor " +
-            "partition columns across chain dirs) — OPTIMIZE the chain " +
-            "to one dir first, or extend it through the API")
+          s"$what refused — the head is a renamed/dropped-column head: a " +
+            "new dir's physical names would differ from the chain's; " +
+            "rewrite via commitNextIsolated or a DSv2 overwrite (both " +
+            "normalize the names) first")
       }
+      require(!h.contains("pmap"),
+        s"$what refused — this table is partition-mapped; write through " +
+          "replacePartitionsWithRetry (a plain write would drop the " +
+          "value→dir map)")
+      val headPartBy = partByOf(h)
+      // a relayout door preserves the head's partitionBy layout; only a
+      // racing writer re-laying out the table after the staging refuses
+      if (door.relayout)
+        require(headPartBy == stagedPartBy,
+          s"this table's partitionBy layout ($headPartBy) changed " +
+            s"after the write staged its dirs ($stagedPartBy) — re-run " +
+            "the write against the new layout")
+      else
+        require(headPartBy.isEmpty,
+          s"$what refused — the table has a partitionBy layout " +
+            s"(${h("partby")}) and this door stages flat: a flat dir " +
+            "beside a partitioned one makes the union unreadable; commit " +
+            "a full version, or write through the DSv2 batch door (which " +
+            "re-lays out)")
+      // the point-probe and band readers open hit files directly, and a
+      // multi-dir partitioned chain has no single basePath to re-anchor
+      // the partition columns under
+      if (door.append && headPartBy.nonEmpty)
+        require(!(h.contains("stats") || h.contains("bloom")),
+          s"$what refused — cannot append onto an index-bearing " +
+            "partitionBy chain (band/Bloom reads cannot re-anchor " +
+            "partition columns across chain dirs); OPTIMIZE the chain " +
+            "to one dir first")
+      door.index match {
+        case DeclaredIndex(stats, enc, bloom) =>
+          declaredIndexGate(h, stats.map(_._1), enc, bloom)
+        case HeaderIndex =>
+          if (!statencCovers(h))
+            throw new IndexRedeclarationRequired(
+              s"a $what cannot re-derive this table's stats index: its " +
+                s"stat columns ${h.get("stats").map(TableStats.decode(_)
+                  .cols).getOrElse(Nil)} are not fully registry-declared " +
+                s"(statenc covers ${h.get("statenc")
+                  .map(StatsEnc.decode(_).map(_._1)).getOrElse(Nil)}) — " +
+                "write through the API with the original statsCols, or " +
+                "re-commit the chain with statsEnc registry encodings")
+        case NoIndex =>
+          if (h.contains("stats") || h.contains("bloom"))
+            throw new IndexRedeclarationRequired(
+              s"a $what cannot carry the table's skipping index (its " +
+                "merge-on-read tombstones invalidate the per-file " +
+                "statistics) — drop the index deliberately, stream, then " +
+                "re-index with OPTIMIZE")
+      }
+      schemaGate(h.get("schema"), schema, allowEvolution = false,
+        context = if (door.append) "append" else "commit")
+    }
+  }
+
+  /** `gateStaged` against the current head, for the DSv2 write builders'
+    * pre-job check: a relayout door's staged shape is the head's own. */
+  private[graft] def gateHead(spark: SparkSession, dir: String,
+      schema: StructType, door: StagedDoor): Unit = {
+    val cur = currentHeaders(fsOf(spark, dir), dir)
+    gateStaged(cur, schema, door, cur.map(c => partByOf(c._2)).getOrElse(Nil))
+  }
+
+  /** A caller-declared index must continue the chain's: the same stat
+    * columns, the same encodings, the same Bloom column set — a chain's
+    * one stats line stays one ordinal domain, and a chain is probed dir
+    * by dir, so every dir must carry sidecar sections on the same
+    * columns. */
+  private def declaredIndexGate(h: Map[String, String], mine: Seq[String],
+      mineEnc: Seq[(String, String)], bloom: Seq[String]): Unit = {
+    // the same three refusals for both indexes: declaring one onto an
+    // unindexed chain (partial indexes under-serve every pruned read),
+    // silently dropping the chain's, or naming other columns
+    def continues(param: String, index: String, cols: String,
+        theirs: Option[Seq[String]], mine: Seq[String], same: Boolean)
+        : Unit = (theirs, mine.isEmpty) match {
+      case (None, false) => throw new IllegalArgumentException(
+        s"append with $param requires the current version to carry " +
+          s"$index (a partially indexed chain would under-serve every " +
+          "read it prunes)")
+      case (Some(t), true) => throw new IllegalArgumentException(
+        s"appending WITHOUT $param onto a table with $index would " +
+          s"silently drop it for the whole chain — pass $param on $t to " +
+          "extend it (or rewrite via commitNextIsolated to drop it " +
+          "deliberately)")
+      case (Some(t), false) if !same => throw new IllegalArgumentException(
+        s"append $param $mine must match the table's recorded $cols $t")
+      case _ => ()
+    }
+    val theirStats = h.get("stats")
+      .map(_.split(";", 2)(0).split(",").toSeq.map(urlDec))
+    continues("statsCols", "stats (its skipping index)", "stat columns",
+      theirStats, mine, theirStats.contains(mine))
+    // a registry-declared (statenc) column must be re-declared with the
+    // SAME encoding, and a column the predecessor recorded WITHOUT an
+    // encoding name cannot gain one (its existing entries' encoding is
+    // unverifiable; a mixed line would mis-prune DSv2 band reads)
+    val prevEnc = h.get("statenc").map(StatsEnc.decode(_).toMap)
+      .getOrElse(Map.empty[String, String])
+    val encMap = mineEnc.toMap
+    if (h.contains("stats"))
+      (prevEnc.keySet ++ encMap.keySet).foreach { c =>
+        require(prevEnc.get(c) == encMap.get(c),
+          s"append stats encoding for '$c' must match the chain's " +
+            s"recorded statenc (${prevEnc.get(c)} vs " +
+            s"${encMap.get(c)}) — one stats line, one ordinal " +
+            "domain; rewrite via compactChain to re-encode")
+      }
+    val theirBloom = h.get("bloom").map(bloomColsOf)
+    continues("bloomCol", "a Bloom index", "indexed columns", theirBloom,
+      bloom, theirBloom.exists(_.toSet == bloom.toSet))
+  }
+
+  /** Enforce the head's declared constraints on the rows a write adds
+    * (notnull/check over `rows`; for an append, `unique:` also checks
+    * the new keys against the head's snapshot — re-run per OCC attempt,
+    * since a racing append may have landed clashing keys). Returns the
+    * constraints the new version carries. */
+  private def enforceCarried(spark: SparkSession, dir: String,
+      rows: DataFrame, cur: Option[(Int, Map[String, String])],
+      context: String, prefix: String): Seq[String] = {
+    val carried = carriedConstraints(cur)
+    enforceConstraints(rows, carried, context,
+      existing =
+        if (context == "append" && carried.exists(_.startsWith("unique:")))
+          cur.map { case (c, _) => readVersion(spark, dir, c, prefix) }
+        else None)
+    carried
+  }
+
+  /** Delete a staged dir that no published version references — the
+    * cleanup of a refused or failed write. A failure AFTER the manifest
+    * publish (in retention GC, say) keeps the dir: the version reads
+    * it. */
+  private def dropUnpublished(fs: FileSystem, dir: String, staged: String,
+      prefix: String): Unit =
+    if (!scala.util.Try(currentHeaders(fs, dir).exists { case (c, h) =>
+        dataDirsFrom(h, c, prefix).contains(staged) }).getOrElse(true))
+      try fs.delete(new Path(s"$dir/$staged"), true)
+      catch { case _: java.io.IOException => () }
+
+  /** The ONE publish step of every door whose rows are already staged
+    * in `$dir/$staged`: the API append (`commitAppendWithRetry`), the
+    * DSv2 batch write (`commitStagedDsv2`) and the streaming append
+    * (`commitEpochStaged`). It owns how such a version is encoded:
+    * data= is the predecessor's dirs plus the staged one (an overwrite:
+    * the staged one alone), append= marks the staged dir, the staged
+    * dir's stats merge table-relative onto the predecessor's line, and
+    * statenc=, bloom=, constraints= and bucketfn= carry.
+    *
+    * Each OCC attempt re-gates against its own head (`gateStaged`),
+    * validates a declared bucket transform and enforces the carried
+    * constraints over the staged rows — read under `schema`, the
+    * write's own, so no schema-inference job runs — reuses the staged
+    * dir's index or re-derives it when the declaration changed, and
+    * publishes. The staged files are never re-written: a lost race
+    * re-references them under the next number. `pregated` is a head
+    * the caller already gated and enforced against before staging;
+    * attempt 1 publishes onto it directly. After a lost race
+    * `replayed` may end the loop with None (a streaming epoch's twin
+    * won); `beforePublish` runs right before each manifest write. A
+    * refused or exhausted publish drops the staged dir. */
+  private def publishStaged(spark: SparkSession, dir: String,
+      staged: String, schema: StructType, door: StagedDoor,
+      metadata: String, maxAttempts: Int = 10, retain: Int = Int.MaxValue,
+      prefix: String = "v", partBy: Seq[String] = Nil,
+      pregated: Option[Option[(Int, Map[String, String])]] = None,
+      replayed: () => Boolean = () => false,
+      beforePublish: () => Unit = () => ()): Option[Int] = {
+    val fs = fsOf(spark, dir)
+    lazy val rows = spark.read.schema(schema).parquet(s"$dir/$staged")
+    // the staged dir gets its OWN index, sized to its own files (each
+    // sidecar self-describes m/k per section, so chain dirs may differ);
+    // it depends only on those files and the declared columns, so it is
+    // kept across attempts while the declaration holds
+    val indexed = collection.mutable.Map[(Seq[String], Seq[(String, String)],
+      Seq[String]), (Option[TableStats], Option[String])]()
+    try retryOnConflict[Option[Int]](maxAttempts,
+        onConflict = (_, _) => if (replayed()) Some(None) else None) {
+      attempt =>
+        val cur = pregated.filter(_ => attempt == 1)
+          .getOrElse(currentHeaders(fs, dir))
+        val carried =
+          if (pregated.isDefined && attempt == 1) carriedConstraints(cur)
+          else {
+            gateStaged(cur, schema, door, partBy)
+            cur.flatMap(c => bucketFnOf(c._2)).foreach {
+              case (n, keyCol, bCol) =>
+                validateBucketInvariant(rows, n, keyCol, bCol)
+            }
+            enforceCarried(spark, dir, rows, cur,
+              if (door.append) "append" else "commit", prefix)
+          }
+        val (statsCols, enc, bloom) = (door.index, cur) match {
+          case (DeclaredIndex(s, e, b), _) => (s, e, b)
+          case (_, Some((_, h))) =>
+            val e = if (h.contains("stats"))
+              h.get("statenc").map(StatsEnc.decode).getOrElse(Nil) else Nil
+            (StatsEnc.validateAndMerge(spark, Nil, e), e,
+              h.get("bloom").map(bloomColsOf).getOrElse(Nil))
+          case _ => (Nil, Nil, Nil)
+        }
+        val (newStats, newBloom) = indexed.getOrElseUpdate(
+          (statsCols.map(_._1), enc, bloom), indexWrittenDir(spark,
+            s"$dir/$staged", schema, partBy, statsCols, enc, bloom))
+        val v = cur.map(_._1 + 1).getOrElse(0)
+        val prevDirs = if (!door.append) Nil
+          else cur.map { case (c, h) => dataDirsFrom(h, c, prefix) }
+            .getOrElse(Nil)
+        beforePublish()
+        commit(fs, dir, v, metadata, retain, prefix,
+          dataDir = Some((prevDirs :+ staged).mkString(",")),
+          appendDir =
+            if (door.append && (cur.isDefined || door.markCreate)) Some(staged)
+            else None,
+          schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur),
+          partBy = if (partBy.isEmpty) None else Some(partBy.mkString(",")),
+          // an overwrite's stats are the staged dir's own, dir-relative
+          // (it IS the new version)
+          stats =
+            if (!door.append) newStats
+            else newStats.map(mergeAppendStats(_, staged, cur, prefix)),
+          bloom = newBloom,
+          statenc =
+            if (enc.isEmpty || newStats.isEmpty) None
+            else Some(StatsEnc.encode(enc)),
+          constraintsHdr =
+            if (carried.isEmpty) None else Some(constraintsEncode(carried)),
+          bucketFnHdr = cur.flatMap(_._2.get("bucketfn")))
+        Some(v)
+    } catch {
+      case e: Throwable =>
+        dropUnpublished(fs, dir, staged, prefix)
+        throw e
     }
   }
 
   /** The DSv2 write door's MANIFEST half: after the inner parquet job
-    * committed its files into `$dir/$staged`, enforce the declared
-    * constraints over the staged rows and publish the version — an
-    * append commit (chain re-reference + append= marker; a lost OCC
-    * race re-publishes the SAME staged dir under the next number,
-    * never re-writes) or a full overwrite. A refusal deletes the
-    * staging dir: the failed write is invisible to readers. */
+    * committed its files into `$dir/$staged`, publish them through
+    * `publishStaged` — an append commit (a lost OCC race re-publishes
+    * the SAME staged dir under the next number, never re-writes) or a
+    * full overwrite. A refusal deletes the staging dir: the failed
+    * write is invisible to readers. */
   private[graft] def commitStagedDsv2(spark: SparkSession, dir: String,
-      staged: String, schema: org.apache.spark.sql.types.StructType,
+      staged: String, schema: StructType,
       append: Boolean, maxAttempts: Int = 10): Unit = {
     val fs = fsOf(spark, dir)
     // PARTITION RELAYOUT: a partitionBy target re-stages the flat
     // parquet job's output partitionBy-shaped from the RECORDED columns
     // — the commit then carries the partby header and readers keep
-    // their partition pruning (the round-16 refusal becomes the
-    // capability). One extra distributed pass over the NEW rows only,
-    // never the table; the flat dir is dropped the moment the shaped
-    // one lands. The shaped name stays version-prefixed so a failed
-    // commit's leftover is ordinary vacuum-reclaimable staging.
-    val partBy = currentHeaders(fs, dir)
-      .flatMap(_._2.get("partby")).map(_.split(",").toSeq).getOrElse(Nil)
+    // their partition pruning. One extra distributed pass over the NEW
+    // rows only, never the table; the flat dir is dropped the moment
+    // the shaped one lands. The shaped name stays version-prefixed so a
+    // failed commit's leftover is ordinary vacuum-reclaimable staging.
+    val partBy = currentHeaders(fs, dir).map(c => partByOf(c._2))
+      .getOrElse(Nil)
     val effStaged =
       if (partBy.isEmpty) staged
       else {
@@ -3760,124 +3884,11 @@ object GraftTable {
         catch { case _: java.io.IOException => () }
         shaped
       }
-    try {
-      val stagedDf = spark.read.parquet(s"$dir/$effStaged")
-      retryOnConflict(maxAttempts) { _ =>
-        val cur = currentHeaders(fs, dir)
-        // re-gate per attempt: the race winner may have evolved the
-        // schema, declared constraints, or attached an index — or
-        // re-laid out the partition shape, which refuses (the staged
-        // dirs no longer match)
-        dsv2WriteGate(spark, dir, schema, append, stagedPartBy = partBy)
-        // per-ATTEMPT index derivation, from the SAME headers the gate
-        // just passed: an OCC winner that attached (or dropped) the
-        // chain's index mid-race must be reflected — a pre-loop
-        // snapshot would silently commit an index-less version onto a
-        // freshly indexed chain
-        val (newStats, statsEncDecl, newBloom) =
-          dsv2IndexExtension(spark, dir, effStaged, schema, partBy,
-            cur.map(_._2))
-        // a bucket-declared target validates the STAGED rows against
-        // the invariant before any version mints (append: old files
-        // were validated at their own commits; overwrite: the staged
-        // rows ARE the new snapshot) — re-read per attempt like the
-        // index, in case the race winner declared bucketing mid-race
-        cur.map(_._2).flatMap(bucketFnOf).foreach {
-          case (n, keyCol, bCol) =>
-            validateBucketInvariant(stagedDf, n, keyCol, bCol)
-        }
-        val carried = carriedConstraints(cur)
-        if (carried.nonEmpty)
-          enforceConstraints(stagedDf, carried,
-            if (append) "append" else "commit",
-            existing =
-              if (append && carried.exists(_.startsWith("unique:")))
-                cur.map { case (v, _) => readVersion(spark, dir, v) }
-              else None)
-        val v = cur.map(_._1 + 1).getOrElse(0)
-        val prevDirs = cur.map { case (c, h) => dataDirsFrom(h, c, "v") }
-          .getOrElse(Seq.empty)
-        commit(fs, dir, v, if (append) "dsv2 append" else "dsv2 overwrite",
-          prefix = "v",
-          dataDir = Some(
-            (if (append) prevDirs :+ effStaged else Seq(effStaged))
-              .mkString(",")),
-          appendDir = if (append && cur.isDefined) Some(effStaged) else None,
-          schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur),
-          partBy =
-            if (partBy.isEmpty) None else Some(partBy.mkString(",")),
-          // append: the chain's merged line; overwrite: the staged
-          // dir's own entries (dir-relative — it IS the new version)
-          stats =
-            if (append) newStats.map(mergeAppendStats(_, effStaged, cur, "v"))
-            else newStats,
-          bloom = newBloom,
-          statenc =
-            if (statsEncDecl.isEmpty || newStats.isEmpty) None
-            else Some(StatsEnc.encode(statsEncDecl)),
-          constraintsHdr =
-            if (carried.isEmpty) None else Some(constraintsEncode(carried)),
-          bucketFnHdr = cur.flatMap(_._2.get("bucketfn")))
-      }
-    } catch {
-      case e: Throwable =>
-        // a refused or exhausted write must not leave the staged files
-        // where a reader could mistake them for data (they are outside
-        // every manifest, but vacuum hygiene beats waiting for it)
-        try fs.delete(new Path(s"$dir/$staged"), true)
-        catch { case _: java.io.IOException => () }
-        try fs.delete(new Path(s"$dir/$effStaged"), true)
-        catch { case _: java.io.IOException => () }
-        throw e
-    }
+    publishStaged(spark, dir, effStaged, schema, dsv2Door(append),
+      if (append) "dsv2 append" else "dsv2 overwrite", maxAttempts,
+      partBy = partBy)
+    ()
   }
-
-  /** The current version's recorded partitionBy columns (empty for flat
-    * tables and empty dirs) — the shape the DSv2 write door's relayout
-    * stages toward. */
-  private[graft] def declaredPartBy(spark: SparkSession,
-      dir: String): Seq[String] =
-    currentHeaders(fsOf(spark, dir), dir)
-      .flatMap(_._2.get("partby")).map(_.split(",").toSeq).getOrElse(Nil)
-
-  /** Whether a version's stats= line is FULLY described by its statenc=
-    * registry declaration (same columns, same order) — the shared
-    * predicate of every self-described re-indexing door (DSv2 append
-    * gate, SQL MERGE re-index, SQL OPTIMIZE/maintain). One
-    * implementation so the doors can never diverge on what "covered"
-    * means: a lambda-ordinal stats line refuses everywhere, a
-    * registry-declared one re-derives everywhere. */
-  private[graft] def statencCovers(h: Map[String, String]): Boolean =
-    h.get("stats").forall(st => TableStats.decode(st).cols ==
-      h.get("statenc").map(StatsEnc.decode(_).map(_._1)).getOrElse(Nil))
-
-  /** SELF-DESCRIBED index derivation for a staged DSv2/streaming
-    * write: a predecessor whose stats line is fully statenc-declared
-    * re-derives its ordinals from the REGISTRY (manifest names, not
-    * caller code) and the staged dir gets its own stats entries; a
-    * bloom= predecessor gets a fresh sidecar built on the staged dir
-    * for the same column set. Called PER OCC ATTEMPT with the headers
-    * that attempt's gate passed, so a mid-race index attach/drop is
-    * always reflected. Returns (staged dir's stats, statenc declaration
-    * to carry, staged dir's bloom header). */
-  private def dsv2IndexExtension(spark: SparkSession,
-      dir: String, staged: String,
-      schema: org.apache.spark.sql.types.StructType, partBy: Seq[String],
-      curHeaders: Option[Map[String, String]])
-      : (Option[TableStats], Seq[(String, String)], Option[String]) =
-    curHeaders match {
-      case Some(h) =>
-        val encDecl = h.get("statenc").map(StatsEnc.decode).getOrElse(Nil)
-        val effStats: StatsCols =
-          if (!h.contains("stats")) Nil
-          else StatsEnc.validateAndMerge(spark, Nil, encDecl)
-        val effBloom = h.get("bloom").map(bloomColsOf).getOrElse(Nil)
-        val (stagedStats, stagedBloom) = indexWrittenDir(spark,
-          s"$dir/$staged", schema, partBy, effStats,
-          if (effStats.isEmpty) Nil else encDecl, effBloom)
-        (stagedStats, if (effStats.isEmpty) Nil else encDecl, stagedBloom)
-      case None => (None, Nil, None)
-    }
 
   /** Parsed pmap= header: (partition column, value → entry dir). */
   private[graft] def pmapDecode(s: String): (String, Map[String, String]) = {
@@ -4060,13 +4071,7 @@ object GraftTable {
     // O(versions × stats-bytes) per batch). Interleaved NON-epoch
     // commits (manual maintenance on the same table) are walked past;
     // out-of-order manual epoch use is outside the contract.
-    val newestEpoch = versions(fs, dir).sorted(Ordering[Int].reverse)
-      .iterator
-      .map(v => meta(fs, dir, v))
-      .filter(_.startsWith("epoch="))
-      .flatMap(_.stripPrefix("epoch=").toLongOption)
-      .nextOption()
-    if (newestEpoch.exists(epochId <= _)) None
+    if (newestEpochFor(fs, dir, None).exists(epochId <= _)) None
     else {
       val v = commitNextIsolated(spark, dir, df, s"epoch=$epochId", retain,
         prefix, statsCols = statsCols)
@@ -4082,20 +4087,6 @@ object GraftTable {
     }
   }
 
-  /** The STREAMING write door's manifest half: publish an
-    * already-staged epoch dir as the next version, idempotently keyed
-    * by `epochId` — `commitEpoch`'s replay detection applied to the
-    * DSv2 path, where the distributed parquet write has ALREADY
-    * happened (executor-side, through the epoch writer factory) by the
-    * time the engine calls the sink's commit. A detected replay deletes
-    * the freshly-staged duplicate dir and mints nothing (the previous
-    * run's version already holds these rows); an empty epoch (no data
-    * files staged) likewise publishes nothing — an empty dir in the
-    * data= union would break every reader. Append semantics: the new
-    * version re-references the current chain plus the staged dir (CDC
-    * fast path, streaming READS of the sink table, versionDelta all
-    * apply), v0 is the create. Same per-attempt re-gating as
-    * `commitStagedDsv2` under OCC races. */
   /** Stable 8-hex tag of a streaming queryId — embedded in epoch
     * staging-dir names (`ep<epoch>_<tag>-<run>`) so `vacuum` can tell
     * an IN-FLIGHT epoch (staged ahead of its own query's committed
@@ -4127,13 +4118,14 @@ object GraftTable {
 
   /** Newest committed streaming epoch of `queryId` — the (query, epoch)
     * replay-identity probe shared by the append and upsert streaming
-    * doors (Delta's (txnAppId, version) rule). The walk stops at THIS
-    * query's newest epoch commit; other writers' interleaved commits
-    * are walked past. Legacy bare `epoch=N` metadata (the foreachBatch
-    * streamingSink door) never matches a query-tagged probe and vice
-    * versa — independent idempotence namespaces. */
+    * doors (Delta's (txnAppId, version) rule) and, with None, the
+    * foreachBatch `commitEpoch` door's bare `epoch=N` metadata. The
+    * walk stops at THIS query's newest epoch commit; other writers'
+    * interleaved commits are walked past. Bare and query-tagged
+    * metadata never match each other's probe — independent
+    * idempotence namespaces. */
   private def newestEpochFor(fs: FileSystem, dir: String,
-      queryId: String): Option[Long] =
+      queryId: Option[String]): Option[Long] =
     versions(fs, dir).sorted(Ordering[Int].reverse).iterator
       .map(v => meta(fs, dir, v))
       .filter(_.startsWith("epoch="))
@@ -4142,27 +4134,37 @@ object GraftTable {
         (parts(0).toLongOption,
           if (parts.length == 2) Some(parts(1)) else None)
       }
-      .collectFirst { case (Some(e), Some(q)) if q == queryId => e }
+      .collectFirst { case (Some(e), q) if q == queryId => e }
 
-  private[graft] def commitEpochStaged(spark: SparkSession, dir: String,
-      epochId: Long, staged: String,
-      schema: org.apache.spark.sql.types.StructType,
-      queryId: String, maxAttempts: Int = 10,
-      expectedFiles: Seq[String] = Nil): Option[Int] = {
+  /** The shared prologue of both streaming write doors (append and
+    * upsert): the queryId check; the (query, epoch) replay probe — a
+    * replayed epoch deletes its freshly-staged duplicate dir and mints
+    * nothing (the previous run's version already holds these rows); the
+    * empty-epoch audit (no data files staged: publish nothing — an
+    * empty dir in the data= union would break every reader); and the
+    * `expectedFiles` audit. `publish` then runs the door's OCC loop
+    * with two hooks: `replayed`, for its `onConflict` (the race winner
+    * could be this very epoch's twin from a concurrently restarted run:
+    * drop the staged dir and stop), and `stillStaged`, the re-verify
+    * right before the manifest write. A failure drops the staged dir. */
+  private def publishEpoch(spark: SparkSession, dir: String, epochId: Long,
+      staged: String, queryId: String, expectedFiles: Seq[String])
+      (publish: (() => Boolean, () => Unit) => Option[Int]): Option[Int] = {
     val fs = fsOf(spark, dir)
     val stagedPath = new Path(s"$dir/$staged")
     require(!queryId.contains("\n") && queryId.nonEmpty,
       s"queryId must be a non-empty single-line token (got '$queryId')")
+    def dropStaged(): Unit =
+      try fs.delete(stagedPath, true)
+      catch { case _: java.io.IOException => () }
     // Replay detection is keyed by (QUERY, epoch), never the bare epoch
     // — batch ids restart from 0 for every distinct query (a fresh
     // checkpoint, a second pipeline into the same sink), and a
     // bare-epoch probe would silently discard a new query's entire
     // early history as "replays" of the old one. See `newestEpochFor`.
-    def newestEpoch: Option[Long] = newestEpochFor(fs, dir, queryId)
-    def dropStaged(): Unit =
-      try fs.delete(stagedPath, true)
-      catch { case _: java.io.IOException => () }
-    if (newestEpoch.exists(epochId <= _)) { dropStaged(); return None }
+    def replayed(): Boolean =
+      newestEpochFor(fs, dir, Some(queryId)).exists(epochId <= _)
+    if (replayed()) { dropStaged(); return None }
     val hasData = fs.exists(stagedPath) && fs.listStatus(stagedPath)
       .exists { st =>
         val n = st.getPath.getName
@@ -4178,68 +4180,44 @@ object GraftTable {
         s"epoch $epochId staged file missing before publish: $f — " +
           "failing the epoch so the engine can retry it")
     }
-    try {
-      val stagedDf = spark.read.parquet(s"$dir/$staged")
-      retryOnConflict[Option[Int]](maxAttempts, onConflict = (_, _) =>
-        // the race winner could be this very epoch's twin from a
-        // concurrently-restarted run — re-probe before re-gating
-        if (newestEpoch.exists(epochId <= _)) { dropStaged(); Some(None) }
-        else None
-      ) { _ =>
-        val cur = currentHeaders(fs, dir)
-        // streaming epochs stage FLAT (one parquet file per task, no
-        // relayout pass inside an epoch's latency budget) — a
-        // partitionBy sink refuses with its own message rather than
-        // surfacing the gate's shape-mismatch wording
-        cur.foreach { case (_, h) => require(!h.contains("partby"),
-          "streaming appends cannot target a partitionBy layout — " +
-            "epochs stage flat; sink to a flat table (or fold through " +
-            "GraftTable.streamingSink, which writes through the API)") }
-        dsv2WriteGate(spark, dir, schema, append = true)
-        // a statenc/bloom-indexed sink chain extends per epoch — the
-        // streamed versions stay band/Bloom-skippable (same
-        // self-described, per-attempt derivation as the batch door)
-        val (newStats, statsEncDecl, newBloom) =
-          dsv2IndexExtension(spark, dir, staged, schema, Nil, cur.map(_._2))
-        val carried = carriedConstraints(cur)
-        if (carried.nonEmpty)
-          enforceConstraints(stagedDf, carried, "append",
-            existing =
-              if (carried.exists(_.startsWith("unique:")))
-                cur.map { case (v, _) => readVersion(spark, dir, v) }
-              else None)
-        val v = cur.map(_._1 + 1).getOrElse(0)
-        val prevDirs = cur.map { case (c, h) => dataDirsFrom(h, c, "v") }
-          .getOrElse(Seq.empty)
-        // re-verify the staged dir right before publish: a concurrent
-        // vacuum racing a LONG-stalled commit (>10-min grace) could
-        // have reclaimed it as an orphan, and committing a dangling
-        // data= reference would poison every subsequent read
-        require(fs.exists(stagedPath),
-          s"staged epoch dir $staged vanished before publish " +
-            "(concurrent vacuum?) — failing the epoch for engine retry")
-        commit(fs, dir, v, s"epoch=$epochId;query=$queryId",
-          prefix = "v",
-          dataDir = Some((prevDirs :+ staged).mkString(",")),
-          appendDir = if (cur.isDefined) Some(staged) else None,
-          schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur),
-          stats = newStats.map(mergeAppendStats(_, staged, cur, "v")),
-          bloom = newBloom,
-          statenc =
-            if (statsEncDecl.isEmpty || newStats.isEmpty) None
-            else Some(StatsEnc.encode(statsEncDecl)),
-          constraintsHdr =
-            if (carried.isEmpty) None else Some(constraintsEncode(carried)))
-        Some(v)
-      }
-    } catch {
+    // re-verify the staged dir right before publish: a concurrent
+    // vacuum racing a LONG-stalled commit (>10-min grace) could have
+    // reclaimed it as an orphan, and committing a dangling data=
+    // reference would poison every subsequent read
+    def stillStaged(): Unit =
+      require(fs.exists(stagedPath),
+        s"staged epoch dir $staged vanished before publish " +
+          "(concurrent vacuum?) — failing the epoch for engine retry")
+    try publish(() => replayed() && { dropStaged(); true }, () => stillStaged())
+    catch {
       case e: Throwable =>
-        // a refused or exhausted publish must not leave staged files
-        // where a reader could mistake them for data
-        dropStaged()
+        dropUnpublished(fs, dir, staged, "v")
         throw e
     }
   }
+
+  /** The STREAMING write door's manifest half: publish an
+    * already-staged epoch dir as the next version, idempotently keyed
+    * by (queryId, epochId) — `commitEpoch`'s replay detection applied
+    * to the DSv2 path, where the distributed parquet write has ALREADY
+    * happened (executor-side, through the epoch writer factory) by the
+    * time the engine calls the sink's commit. Append semantics through
+    * `publishStaged`: the new version re-references the current chain
+    * plus the staged dir (CDC fast path, streaming READS of the sink
+    * table, versionDelta all apply), v0 is the create; a statenc/bloom
+    * indexed sink chain extends per epoch. Epochs stage FLAT (no
+    * relayout pass inside an epoch's latency budget), so a partitionBy
+    * sink refuses. */
+  private[graft] def commitEpochStaged(spark: SparkSession, dir: String,
+      epochId: Long, staged: String, schema: StructType,
+      queryId: String, maxAttempts: Int = 10,
+      expectedFiles: Seq[String] = Nil): Option[Int] =
+    publishEpoch(spark, dir, epochId, staged, queryId, expectedFiles) {
+      (replayed, stillStaged) =>
+        publishStaged(spark, dir, staged, schema, epochDoor,
+          s"epoch=$epochId;query=$queryId", maxAttempts,
+          replayed = replayed, beforePublish = stillStaged)
+    }
 
   /** The UPSERT half of the streaming write door (OutputMode.Update →
     * `SupportsStreamingUpdateAsAppend`): each epoch's staged rows are
@@ -4256,95 +4234,27 @@ object GraftTable {
     * shape is what survives a 10⁵-epoch sink; `purgeDeleteVector` /
     * OPTIMIZE fold the accumulated chain back when wanted. Exactly-once
     * across restarts via the same (queryId, epoch) identity as the
-    * append door. Refusals mirror the MoR update engine: partitionBy,
-    * pmap and index-bearing heads refuse loudly (indexes cannot ride a
-    * dv); a predecessor DV must be keyed by the SAME upsert keys. */
-  /** The upsert door's shared refusal gate — run once by the write
-    * builder BEFORE any distributed job (fail-early, like every write
-    * door) and re-run per commit attempt with that attempt's headers
-    * (the chain can change between epochs). */
-  private[graft] def upsertWriteGate(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType, keyCols: Seq[String],
-      curOpt: Option[(Int, Map[String, String])]): Unit = {
-    require(keyCols.nonEmpty, "streaming upsert needs upsertKeys")
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"upsert key '$k' is not a column of the stream (${
-        schema.fieldNames.toSeq})"))
-    curOpt.foreach { case (_, h) =>
-      schemaGate(h.get("schema"), schema, allowEvolution = false,
-        context = "append")
-      require(!h.contains("partby"),
-        "streaming upsert cannot target a partitionBy layout — " +
-          "a flat replacement dir beside a partitioned one makes " +
-          "the union unreadable")
-      require(!h.contains("pmap"),
-        "this table is partition-mapped — upsert through " +
-          "replacePartitionsWithRetry")
-      require(!h.contains("colmap"),
-        "a streaming upsert cannot target a renamed/dropped-column " +
-          "head — rewrite via commitNextIsolated first")
-      if (h.contains("stats") || h.contains("bloom"))
-        throw new IndexRedeclarationRequired(
-          "a streaming upsert cannot carry the table's skipping " +
-            "index (its merge-on-read tombstones invalidate the " +
-            "per-file statistics) — drop the index deliberately, " +
-            "stream, then re-index with OPTIMIZE")
-      h.get("dv").foreach { spec =>
-        val prevKeys = spec.split(";", -1)(1).split(",").toSeq
-        require(prevKeys == keyCols,
-          s"the current version's deletion vector is keyed by " +
-            s"$prevKeys but this upsert keys by $keyCols")
-      }
-    }
-  }
-
+    * append door (`publishEpoch`). Refusals (`gateStaged`'s upsert
+    * door) mirror the MoR update engine: partitionBy, pmap and
+    * index-bearing heads refuse loudly (indexes cannot ride a dv); a
+    * predecessor DV must be keyed by the SAME upsert keys. */
   private[graft] def commitEpochUpsert(spark: SparkSession, dir: String,
-      epochId: Long, staged: String,
-      schema: org.apache.spark.sql.types.StructType,
+      epochId: Long, staged: String, schema: StructType,
       queryId: String, keyCols: Seq[String], maxAttempts: Int = 10,
       expectedFiles: Seq[String] = Nil): Option[Int] = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val fs = fsOf(spark, dir)
-    val stagedPath = new Path(s"$dir/$staged")
-    require(keyCols.nonEmpty, "streaming upsert needs upsertKeys")
-    require(keyCols.forall(c => !c.contains(",") && !c.contains(";")),
-      s"key column names must not contain the dv= header delimiters: $keyCols")
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"upsert key '$k' is not a column of the stream (${
-        schema.fieldNames.toSeq})"))
-    def dropStaged(): Unit =
-      try fs.delete(stagedPath, true)
-      catch { case _: java.io.IOException => () }
-    if (newestEpochFor(fs, dir, queryId).exists(epochId <= _)) {
-      dropStaged(); return None
-    }
-    val hasData = fs.exists(stagedPath) && fs.listStatus(stagedPath)
-      .exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    if (!hasData) { dropStaged(); return None }
-    expectedFiles.foreach { f =>
-      require(fs.exists(new Path(f)),
-        s"epoch $epochId staged file missing before publish: $f — " +
-          "failing the epoch so the engine can retry it")
-    }
-    try {
+    publishEpoch(spark, dir, epochId, staged, queryId, expectedFiles) {
+      (replayed, stillStaged) =>
       retryOnConflict[Option[Int]](maxAttempts, onConflict = (_, _) =>
-        // replay probe, as in the append door: the race winner could be
-        // this epoch's twin from a concurrently-restarted run
-        if (newestEpochFor(fs, dir, queryId).exists(epochId <= _)) {
-          dropStaged(); Some(None)
-        } else None
+        if (replayed()) Some(None) else None
       ) { _ =>
         val cur = currentHeaders(fs, dir)
         // re-gated per attempt; the write builder runs the same gate
-        // BEFORE the first distributed job (upsertWriteGate)
-        upsertWriteGate(spark, dir, schema, keyCols, cur)
+        // BEFORE the first distributed job (`gateHead`)
+        gateStaged(cur, schema, upsertDoor(keyCols))
         val v = cur.map(_._1 + 1).getOrElse(0)
-        require(fs.exists(stagedPath),
-          s"staged epoch dir $staged vanished before publish " +
-            "(concurrent vacuum?) — failing the epoch for engine retry")
+        stillStaged()
         val batch = spark.read.schema(schema).parquet(s"$dir/$staged")
         cur match {
             case None =>
@@ -4358,10 +4268,8 @@ object GraftTable {
               val basenamesDf = dataDirs.map(dirBasename).toDF("__dir")
               val declared = declaredSchemaOf(hdrs)
               val withDir = dataDirs.map { dd =>
-                (declared match {
-                  case Some(st) => spark.read.schema(st).parquet(s"$dir/$dd")
-                  case None => spark.read.parquet(s"$dir/$dd")
-                }).withColumn("__gdir", lit(dirBasename(dd)))
+                readParquet(spark, declared, Seq(s"$dir/$dd"))
+                  .withColumn("__gdir", lit(dirBasename(dd)))
               }.reduce(_ unionByName _)
               val prevTombs: Option[DataFrame] = hdrs.get("dv").map { sp =>
                 val parts = sp.split(";", -1)
@@ -4427,10 +4335,6 @@ object GraftTable {
           }
         Some(v)
       }
-    } catch {
-      case e: Throwable =>
-        dropStaged()
-        throw e
     }
   }
 
@@ -5164,7 +5068,7 @@ object GraftTable {
   def readBloomEq(spark: SparkSession, dir: String, v: Int, col: String,
       value: Any, prefix: String = "v"): (DataFrame, Seq[String], Int) = {
     val fs = fsOf(spark, dir)
-    val (perDir, dataDirs) = perDirBlooms(fs, dir, v, prefix)
+    val (perDir, hdrs) = perDirBlooms(fs, dir, v, prefix)
     val sections = perDir.map { case (dd, tbs) =>
       (dd, tbs.find(_.col == col).getOrElse(sys.error(
         s"chain dir $dd carries Bloom sections on " +
@@ -5180,19 +5084,16 @@ object GraftTable {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           readVersion(spark, dir, v, prefix).schema)
-      else if (dataDirs.size == 1)
-        // anchor partition discovery to the one dir (partitionBy
+      else
+        // one dir: anchor partition discovery to it (partitionBy
         // layouts need the ancestor basePath to keep their partition
         // columns); works for `../src/…` clone references too — the
-        // anchor shares the files' own prefix
-        spark.read.option("basePath", s"$dir/${dataDirs.head}")
-          .parquet(hit: _*)
-      else
-        // append chains are FLAT by construction (the append gate
-        // refuses partitionBy predecessors), so no basePath is needed —
-        // and none would be an ancestor of a cloned chain's re-pointed
-        // `../src/…` dirs
-        spark.read.parquet(hit: _*)
+        // anchor shares the files' own prefix. Append chains are FLAT
+        // by construction (the gate refuses index-bearing partitionBy
+        // predecessors), so no basePath is needed — and none would be
+        // an ancestor of a cloned chain's re-pointed `../src/…` dirs
+        readParquet(spark, filesSchemaOf(hdrs), hit,
+          if (perDir.size == 1) Some(s"$dir/${perDir.head._1}") else None)
     (df, hit, total)
   }
 
@@ -5204,7 +5105,7 @@ object GraftTable {
     * Shared by the probe (`readBloomEq`) and the audit (`bloomTable`)
     * so their resolution can never diverge. */
   private[graft] def perDirBlooms(fs: FileSystem, dir: String, v: Int,
-      prefix: String): (Seq[(String, Seq[TableBloom])], Seq[String]) = {
+      prefix: String): (Seq[(String, Seq[TableBloom])], Map[String, String]) = {
     require(fs.exists(new Path(s"$dir/manifest/commit_$v")),
       s"version $v was never committed under $dir")
     val hdrs = parseCommit(commitContent(fs, dir, v))._1
@@ -5217,7 +5118,7 @@ object GraftTable {
       (dd, TableBloom.decodeAll(
         readSmallFile(fs, new Path(s"$dir/$dd/$bloomSidecarName"))))
     }
-    (perDir, dataDirs)
+    (perDir, hdrs)
   }
 
   /** The Bloom index as a RELATION — one row per indexed file (chain

@@ -65,4 +65,45 @@ class CommitJobsSpec extends SparkSpec {
     assert((isolated._1, append._1, update._1) == ((4, 2, 2)),
       "job counts per door moved")
   }
+
+  test("a DSv2 append, a streaming append epoch, a band read and a Bloom " +
+      "read run no schema-inference job") {
+    val dir = freshDir("doors")
+    GraftTable.commitNextIsolated(spark, dir,
+      rows(0, 20000).repartitionByRange(8, col("key")), "base",
+      statsEnc = idxEnc, bloomCol = Some("cust"))
+    val dsv2 = JobRecorder.record(spark) {
+      rows(20000, 500).coalesce(1).write.format("graft").mode("append")
+        .save(dir)
+    }._1
+    val epoch = JobRecorder.record(spark) {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      import spark.implicits._
+      val mem = MemoryStream[(Long, Long, Long, Int)]
+      val q = mem.toDF().toDF("key", "cust", "amt", "day")
+        .writeStream.format("graft").option("path", dir)
+        .option("checkpointLocation", freshDir("doors_ckpt")).start()
+      try {
+        mem.addData((20500L until 21000L).map(k =>
+          (k, k * 7919 % 5003, k % 1000, (k % 365).toInt)): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }._1
+    val fs = GraftTable.fsOf(spark, dir)
+    assert(GraftTable.versions(fs, dir) == Seq(0, 1, 2))
+    val band = JobRecorder.record(spark) {
+      GraftTable.readStatsBand(spark, dir, 2, "key", 100L, 200L)._1.count()
+    }._1
+    val bloom = JobRecorder.record(spark) {
+      GraftTable.readBloomEq(spark, dir, 2, "cust", 42L)._1.count()
+    }._1
+    val inferring = Seq("dsv2" -> dsv2, "epoch" -> epoch, "band" -> band,
+      "bloom" -> bloom).filter(_._2.exists(_.schemaInference))
+    assert(inferring.isEmpty, s"schema-inference jobs ran: $inferring")
+    // DSv2 and the epoch: write, Bloom build; each read: the count's
+    // scan and its final aggregate
+    assert((dsv2.size, epoch.size, band.size, bloom.size) == ((2, 2, 2, 2)),
+      s"job counts moved: dsv2 $dsv2, epoch $epoch, band $band, bloom $bloom")
+  }
 }

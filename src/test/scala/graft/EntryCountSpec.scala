@@ -73,6 +73,23 @@ class EntryCountSpec extends AnyFunSuite {
       s"SparkSession.builder() call sites: $builders")
   }
 
+  test("the append-version encoding is written at exactly one site in src/main") {
+    // every door publishing a staged dir onto a chain goes through
+    // GraftTable.publishStaged; a new door copying the encoding (the
+    // append= marker, the table-relative stats merge) shows here
+    def sites(needle: String): Seq[String] = mainSources.flatMap {
+      case (path, src) => Seq.fill(src.split(java.util.regex.Pattern.quote(
+        needle), -1).length - 1)(path)
+    }
+    val table = "graft/sources/GraftTable.scala"
+    assert(sites("appendDir =") == Seq(table),
+      s"appendDir = sites: ${sites("appendDir =")}")
+    assert(sites("mergeAppendStats(") == Seq(table, table) &&
+      sites("def mergeAppendStats(") == Seq(table),
+      s"mergeAppendStats( sites (the definition and one call): " +
+        s"${sites("mergeAppendStats(")}")
+  }
+
   test("every oracle key has a query implementation") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without implementations: $orphans")

@@ -11,10 +11,12 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 object JobRecorder {
   final case class Job(id: Int, stages: Int, tasks: Int,
       rdds: Seq[String], inSql: Boolean) {
-    /** The one-task footer-merge job `spark.read.parquet` runs to infer
-      * a schema: a parallelized file list, outside any SQL execution. */
-    def schemaInference: Boolean =
-      !inSql && rdds.contains("ParallelCollectionRDD")
+    /** The footer-merge job `spark.read.parquet` runs to infer a schema:
+      * one stage mapping a parallelized file list — outside any SQL
+      * execution, or nested in one when a write's commit reads back what
+      * it wrote. */
+    def schemaInference: Boolean = stages == 1 &&
+      rdds.sorted == Seq("MapPartitionsRDD", "ParallelCollectionRDD")
   }
 
   private val marker = "graft-job-recorder-drain"
