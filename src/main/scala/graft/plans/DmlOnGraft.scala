@@ -162,6 +162,20 @@ object GraftDml {
     hdrs.contains("stats") || hdrs.contains("bloom") ||
       hdrs.contains("partby") || hdrs.contains("colmap")
 
+  /** Whether a SQL UPDATE/DELETE takes the POSITIONAL arm: always on a
+    * pdv head (a key-tombstone commit there refuses — one version cannot
+    * merge two DV regimes), and on any other head when `modeKey` opts
+    * the session in AND the positional door's gate admits the head — a
+    * session-wide opt-in must keep routing dv=, pmap and pre-schema
+    * heads to the arm that works instead of turning their working
+    * statements into errors. */
+  private[plans] def positionalArm(spark: SparkSession,
+      hdrs: Map[String, String], modeKey: String,
+      door: GraftTable.MorDoor): Boolean =
+    hdrs.contains("pdv") ||
+      (spark.conf.getOption(modeKey).contains("positional") &&
+        GraftTable.morAdmits(hdrs, door))
+
   /** The COPY-ON-WRITE arm shared by SQL UPDATE and DELETE: read the
     * pinned snapshot, apply `transform`, commit as the next version
     * with the partition layout preserved and the skipping index
@@ -259,18 +273,8 @@ case class GraftUpdateCommand(update: UpdateTable, dir: String)
           }
         }: _*)
       }
-    } else if (hdrs.contains("pdv") ||
-        (spark.conf.getOption("spark.graft.update.mode")
-          .contains("positional") &&
-          !hdrs.contains("dv") && !hdrs.contains("pmap") &&
-          hdrs.contains("schema")))
-      // the conf opt-in is gated on regime compatibility: a dv= (key-
-      // tombstone) or pmap head cannot take a positional commit
-      // (commitPositionalUpdate refuses), so a session-wide
-      // mode=positional must keep routing those heads to the arm that
-      // works instead of turning their working UPDATEs into errors
-      // (round-20 advice); same for a legacy pre-schema head —
-      // commitPositionalUpdate requires schema= (round-21 advice)
+    } else if (GraftDml.positionalArm(spark, hdrs, "spark.graft.update.mode",
+        GraftTable.positionalUpdateDoor))
       // POSITIONAL arm (VERDICT r19 item 4): continuing a pdv chain —
       // tombstone matched positions, stage replacement rows, keep every
       // untouched file unrewritten (a key-tombstone update on a pdv
@@ -311,16 +315,8 @@ case class GraftDeleteCommand(delete: DeleteFromTable, dir: String)
       GraftDml.cowRewrite(spark, dir, cur, hdrs,
         "DELETE (SQL, copy-on-write)")(
         _.where(!coalesce(cond, lit(false))))
-    else if (hdrs.contains("pdv") ||
-        (spark.conf.getOption("spark.graft.delete.mode")
-          .contains("positional") &&
-          !hdrs.contains("dv") && !hdrs.contains("pmap") &&
-          hdrs.contains("schema")))
-      // conf opt-in gated on regime compatibility, like the UPDATE
-      // door: dv=/pmap heads keep their working arm instead of hitting
-      // commitPositionalDelete's refusal (round-20 advice); pre-schema
-      // heads likewise keep theirs — commitPositionalDelete requires
-      // schema= (round-21 advice)
+    else if (GraftDml.positionalArm(spark, hdrs, "spark.graft.delete.mode",
+        GraftTable.positionalDeleteDoor))
       // POSITIONAL arm: continuing a pdv chain (a key-tombstone commit
       // on a pdv head refuses — one version cannot merge two DV
       // regimes), or opted in via spark.graft.delete.mode=positional.

@@ -458,7 +458,10 @@ private[graft] class GraftSparkTable(spark: SparkSession, val dir: String,
     }
   }
 
-  override def name(): String = s"graft.`$dir`@v$snapshotVersion"
+  /** A name Spark's identifier parser accepts (its write-resolution
+    * errors parse it back); scan descriptions add the version. */
+  override def name(): String = s"graft.`${dir.replace("`", "``")}`"
+  private[graft] def versionedName: String = s"${name()}@v$snapshotVersion"
   override def schema(): StructType = fullSchema
   override def partitioning(): Array[Transform] =
     partCols.map(Expressions.identity).toArray
@@ -870,7 +873,7 @@ private[graft] class GraftMetaAggScan(table: GraftSparkTable,
       }
     }
   override def description(): String =
-    s"GraftMetaAggScan ${table.name()} " +
+    s"GraftMetaAggScan ${table.versionedName} " +
       s"[metadata-only: ${schema.fieldNames.mkString(", ")}]"
   override def getMetaData(): Map[String, String] = Map(
     "GraftMetaAgg" -> "true",
@@ -1214,7 +1217,7 @@ private[graft] class GraftScan(inner: ParquetScan, out: StructType,
   }
 
   override def description(): String =
-    s"GraftScan ${table.name()} " + inner.description()
+    s"GraftScan ${table.versionedName} " + inner.description()
 
   override def getMetaData(): Map[String, String] =
     inner.getMetaData() ++ Map(
@@ -1884,11 +1887,7 @@ private[graft] class GraftMicroBatchStream(spark: SparkSession,
             "cdcSubscribeTyped, or restart from " +
             s"startingVersion=${v + 1}"))
       dirs.flatMap { dd =>
-        fs.listStatus(new Path(s"${table.dir}/$dd")).toSeq
-          .filter { st =>
-            val n = st.getPath.getName
-            st.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
+        GraftTable.dataFilesIn(fs, new Path(s"${table.dir}/$dd"))
           .map { st =>
             new org.apache.spark.sql.execution.datasources.PartitionedFile(
               org.apache.spark.sql.catalyst.InternalRow.empty,

@@ -1742,17 +1742,8 @@ object GraftTable {
     val key = fs.makeQualified(new Path(s"$dir/$dvDir")).toString
     dvRowsCache.computeIfAbsent(key, _ => {
       val conf = spark.sessionState.newHadoopConf()
-      fs.listStatus(new Path(s"$dir/$dvDir"))
-        .filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        .map { st =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
+      dataFilesIn(fs, new Path(s"$dir/$dvDir"))
+        .map(footerRowCount(_, conf)).sum
     })
   }
 
@@ -1772,6 +1763,15 @@ object GraftTable {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
   }
+
+  /** The files directly under `p` that a flat parquet scan of `p`
+    * reads: hidden (`_`/`.`-prefixed) names and subdirs excluded. */
+  private[graft] def dataFilesIn(fs: FileSystem,
+      p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
 
   /** Bounded-parallel map for driver-side metadata passes (round-22,
     * VERDICT r21 item 5): the skip-reconciliation footer reads ran one
@@ -1882,50 +1882,13 @@ object GraftTable {
           d.withColumn(n, org.apache.spark.sql.functions.lit(null).cast(t))
         }
     hdrs.get("pdv") match {
-      case Some(pdvDir) =>
-        // POSITIONAL deletion vector: per-file row-position sidecars,
-        // merged IN the scan by a static probe expression — no join
-        // node (key- or position-), no shuffle, no driver collect. Two
-        // tiers: (1) files the sidecar's _skips manifest marks fully
-        // deleted never enter the file list (never opened, never
-        // split); (2) every other file's rows flow through a
-        // codegen'd `NOT graft_pos_deleted(file, _metadata.row_index)`
-        // filter whose per-file position set loads lazily on whichever
-        // executor scans the file. This is the Iceberg-v2/Delta-DV
-        // read shape: MoR cost is one sorted-array probe per row, not
-        // an anti-join.
-        import org.apache.spark.sql.functions.{col, element_at, not, split => fsplit}
-        val sidecarPath = s"$dir/$pdvDir"
-        val skips = pdvSkips(fs, sidecarPath)
-        val files = dataDirs.flatMap { dd =>
-          fs.listStatus(new Path(s"$dir/$dd"))
-            .filter { st =>
-              val n = st.getPath.getName
-              st.isFile && !n.startsWith("_") && !n.startsWith(".")
-            }.map(_.getPath)
-        }
-        val live = files.filterNot(p => skips.contains(p.getName))
-          .map(_.toString)
-        if (live.isEmpty) {
-          // everything tombstoned: an empty frame under the declared
-          // schema (pdv commits always record schema=)
-          val st = declared.getOrElse(sys.error(
-            s"version $v of $dir is fully deleted and records no " +
-              "schema= header to type the empty read"))
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-        } else {
-          val base = conform(readParquet(spark, declared, live))
-          val qualifiedSidecar =
-            fs.makeQualified(new Path(sidecarPath)).toString
-          val fileName =
-            element_at(fsplit(col("_metadata.file_path"), "/"), -1)
-          import org.apache.spark.sql.graft.GraftSqlBridge
-          base.where(not(GraftSqlBridge.column(graft.expr.PosDvProbe(
-            GraftSqlBridge.expression(fileName),
-            GraftSqlBridge.expression(col("_metadata.row_index")),
-            qualifiedSidecar))))
-        }
+      // POSITIONAL deletion vector: per-file row-position sidecars,
+      // merged IN the scan — the Iceberg-v2/Delta-DV read shape, where
+      // the merge-on-read cost is one sorted-array probe per row, not an
+      // anti-join. `conform` is a no-op here: the read binds schema=
+      case Some(_) =>
+        pdvLiveRows(spark, fs, dir, v, pdvHead(fs, dir, v, hdrs, prefix),
+          declared)
       case None => hdrs.get("dv") match {
       case Some(spec) if spec.endsWith(";scoped") =>
         // DIR-SCOPED tombstones (MoR UPDATE): each (key, __dir) pair
@@ -2227,6 +2190,105 @@ object GraftTable {
     nv
   }
 
+  // ---- merge-on-read commits ------------------------------------------------
+
+  /** A merge-on-read commit door as the shared head gate sees it: its
+    * name in refusals, its tombstone regime (positional pdv= sidecars,
+    * else key dv= tombstones), and whether it admits a partitionBy head
+    * — only the key delete does: its tombstones name columns, not files,
+    * and it stages no flat dir beside the partitioned one. */
+  private[graft] final case class MorDoor(name: String, positional: Boolean,
+      partBy: Boolean = false)
+
+  private val keyDeleteDoor =
+    MorDoor("merge-on-read delete", positional = false, partBy = true)
+  private val keyUpdateDoor = MorDoor("merge-on-read update", positional = false)
+  private[graft] val positionalDeleteDoor =
+    MorDoor("positional delete", positional = true)
+  private[graft] val positionalUpdateDoor =
+    MorDoor("positional update", positional = true)
+
+  /** Why `door` cannot extend head `h`, or None when it can — one list
+    * for the four doors, so they cannot drift apart on what a head
+    * admits. */
+  private def morRefusal(h: Map[String, String],
+      door: MorDoor): Option[IllegalArgumentException] = {
+    def refuse(why: String) =
+      Some(new IllegalArgumentException(s"${door.name} refused — $why"))
+    if (h.contains("pmap")) refuse(
+      "this table is partition-mapped; replace its partitions through " +
+        "replacePartitionsWithRetry (a merge-on-read commit would drop the " +
+        "value→dir map)")
+    else if (h.contains("colmap")) refuse(
+      "the head is a renamed/dropped-column head (tombstones and " +
+        "replacement rows would name logical columns the files don't " +
+        "carry); SQL DELETE/UPDATE rewrite copy-on-write, or rewrite via " +
+        "commitNextIsolated first")
+    else if (h.contains("partby") && !door.partBy) refuse(
+      s"the table has a partitionBy layout (${h("partby")}): explicit-file " +
+        "reads cannot rebind its dir-name columns, and a flat replacement " +
+        "dir beside a partitioned one makes the union unreadable; SQL " +
+        "DELETE/UPDATE rewrite copy-on-write")
+    else if (h.contains(if (door.positional) "dv" else "pdv")) {
+      val (regime, purge) =
+        if (door.positional) ("KEY tombstones (dv=)", "purgeDeleteVector")
+        else ("a POSITIONAL deletion vector (pdv=)", "purgePositionalDv")
+      refuse(s"the current version carries $regime; $purge first: one " +
+        "version cannot merge two deletion-vector regimes")
+    } else if (door.positional && !h.contains("schema")) refuse(
+      "the head predates schema= headers; re-commit once through any " +
+        "write path to record the schema first")
+    else if (h.contains("stats") || h.contains("bloom"))
+      Some(new IndexRedeclarationRequired(
+        s"a ${door.name} cannot carry this table's skipping index (its " +
+          "tombstones invalidate the per-file statistics); SQL " +
+          "DELETE/UPDATE rewrite copy-on-write and re-index, or drop the " +
+          "index deliberately via commitNextIsolated first"))
+    else None
+  }
+
+  /** Whether `door` may extend head `h`: the SQL DML doors ask before
+    * routing a head to the positional arm. */
+  private[graft] def morAdmits(h: Map[String, String], door: MorDoor): Boolean =
+    morRefusal(h, door).isEmpty
+
+  /** The ONE head gate of the merge-on-read doors: resolve the head, run
+    * the caller's `expectVersion` pin, then refuse what `morRefusal`
+    * names. The pin runs first: a caller whose arm decision was made on
+    * an older head must see ConcurrentModificationException — the
+    * retryable conflict — not a layout refusal computed from headers it
+    * never read (a racer attaching an index mid-flight would otherwise
+    * surface as IndexRedeclarationRequired and defeat the SQL doors'
+    * retry). */
+  private def gateMor(fs: FileSystem, dir: String, door: MorDoor,
+      expectVersion: Option[Int]): (Int, Map[String, String]) = {
+    val (cur, h) = currentHeaders(fs, dir).getOrElse(
+      sys.error(s"no committed version under $dir for a ${door.name}"))
+    expectVersion.foreach(ev =>
+      if (ev != cur) throw new java.util.ConcurrentModificationException(
+        s"the ${door.name} resolved its snapshot at version $ev of $dir " +
+          s"but the head is now $cur — re-read and retry"))
+    morRefusal(h, door).foreach(e => throw e)
+    (cur, h)
+  }
+
+  /** Key tombstones union across versions, so a key-regime write must
+    * name dv=-safe key columns and share the head's recorded key
+    * identity — refused here, not as a union schema error deep inside
+    * the write. */
+  private def requireDvKeys(h: Map[String, String], keys: Seq[String],
+      what: String): Unit = {
+    require(keys.forall(c => !c.contains(",") && !c.contains(";")),
+      s"key column names must not contain the dv= header delimiters: $keys")
+    h.get("dv").foreach { spec =>
+      val prevKeys = spec.split(";", -1)(1).split(",").toSeq
+      require(prevKeys == keys,
+        s"the current version's deletion vector is keyed by $prevKeys " +
+          s"but this $what keys by $keys — purgeDeleteVector first, or " +
+          "write through the door whose keys match the recorded ones")
+    }
+  }
+
   /** MERGE-ON-READ delete: commit a new version that shares the current
     * version's data dir UNCHANGED and carries a DELETION VECTOR — the
     * distinct `keyCols` of `tombstones` written as a small parquet dir,
@@ -2248,60 +2310,16 @@ object GraftTable {
       tombstones: DataFrame, keyCols: Seq[String], metadata: String = "",
       prefix: String = "v", expectVersion: Option[Int] = None): Int = {
     require(keyCols.nonEmpty, "deletion vector needs at least one key column")
-    require(keyCols.forall(c => !c.contains(",") && !c.contains(";")),
-      s"key column names must not contain the dv= header delimiters: $keyCols")
     val fs = fsOf(spark, dir)
-    val cur = currentVersion(fs, dir).getOrElse(
-      sys.error(s"no committed version under $dir to delete from"))
-    // OCC pin for callers whose tombstones were computed on a specific
-    // snapshot (the SQL DELETE door): a commit that interleaved between
-    // their read and this call would make the tombstone set stale —
-    // refuse like every lost race instead of applying old-snapshot
-    // tombstones to the new head
-    expectVersion.foreach(ev =>
-      if (ev != cur) throw new java.util.ConcurrentModificationException(
-        s"delete computed its tombstones on version $ev of $dir but the " +
-          s"head is now $cur — re-read and retry"))
-    val hdrs = parseCommit(commitContent(fs, dir, cur))._1
-    require(!hdrs.contains("pmap"),
-      "this table is partition-mapped — delete by replacing its " +
-        "partitions through replacePartitionsWithRetry (a MoR delete " +
-        "would drop the value→dir map)")
-    require(!hdrs.contains("colmap"),
-      "a merge-on-read delete cannot target a renamed/dropped-column " +
-        "head (tombstone keys would name logical columns the files " +
-        "don't carry) — SQL DELETE rewrites copy-on-write, or rewrite " +
-        "via commitNextIsolated first")
-    // the index refusal lives HERE (not only in the SQL door), so the
-    // gate and the commit read the SAME headers and no door — present
-    // or future — can strip a just-attached skipping index silently:
-    // this commit carries no stats=/bloom= forward by design (a dv
-    // invalidates per-file row counts)
-    if (hdrs.contains("stats") || hdrs.contains("bloom"))
-      throw new IndexRedeclarationRequired(
-        "a merge-on-read delete cannot carry this table's skipping " +
-          "index (the deletion vector invalidates the per-file " +
-          "statistics) — delete through the copy-on-write door " +
-          "(deleteRowsIndexed / SQL DELETE re-indexes automatically), " +
-          "or drop the index deliberately via commitNextIsolated first")
+    // pinned for callers whose tombstones were computed on a specific
+    // snapshot (the SQL DELETE door): old-snapshot tombstones must never
+    // apply to a newer head
+    val (cur, hdrs) = gateMor(fs, dir, keyDeleteDoor, expectVersion)
+    requireDvKeys(hdrs, keyCols, "delete")
     // resolve through the ONE sanctioned multi-dir accessor (not a raw
     // header read): round-trips byte-identically today, and keeps this
     // path correct if the data= encoding ever changes
     val data = dataDirsFrom(hdrs, cur, prefix).mkString(",")
-    // a predecessor DV must share this delete's key identity (the
-    // tombstone sets union) — refuse pointedly instead of surfacing a
-    // union schema error from deep inside the write
-    require(!hdrs.contains("pdv"),
-      "the current version carries a POSITIONAL deletion vector — " +
-        "continue through commitPositionalDelete, or purgePositionalDv " +
-        "first: one version cannot merge two deletion-vector regimes")
-    hdrs.get("dv").foreach { spec =>
-      val prevKeys = spec.split(";", -1)(1).split(",").toSeq
-      require(prevKeys == keyCols,
-        s"the current version's deletion vector is keyed by $prevKeys " +
-          s"but this delete keys by $keyCols — purgeDeleteVector first, " +
-          "or delete through the door whose keys match the recorded ones")
-    }
     val v = cur + 1
     val dvDir = s"dv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
     import org.apache.spark.sql.functions.col
@@ -2341,6 +2359,154 @@ object GraftTable {
     v
   }
 
+  /** The positional sidecar layout: a `__pos` data column under one
+    * `__file=<data file basename>` partition dir per data file. */
+  private val pdvSchema = StructType(Seq(
+    org.apache.spark.sql.types.StructField("__pos",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("__file",
+      org.apache.spark.sql.types.StringType)))
+
+  /** The file half of a row's positional identity: the basename of its
+    * `_metadata.file_path` (part-file names carry a write-job UUID, so
+    * basenames never collide across data dirs). */
+  private def pdvFileName: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, element_at, split}
+    element_at(split(col("_metadata.file_path"), "/"), -1)
+  }
+
+  /** A sidecar's (__file, __pos) rows, read under the fixed layout
+    * (schema inference would be a 1-task job per commit) — or None for
+    * a sidecar minted by a matched-nothing commit: it has no __file=
+    * dir, and parquet cannot read a dir without data files. */
+  private def readPdv(spark: SparkSession, fs: FileSystem,
+      path: String): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    if (!fs.listStatus(new Path(path))
+        .exists(_.getPath.getName.startsWith("__file="))) None
+    else Some(spark.read.schema(pdvSchema).parquet(path)
+      .select(col("__file"), col("__pos")))
+  }
+
+  /** A version as the positional doors and the pdv read see it: its data
+    * dirs, their data files (listed once), its sidecar if any, and that
+    * sidecar's `_skips`. */
+  private final case class PdvHead(dataDirs: Seq[String],
+      files: Seq[org.apache.hadoop.fs.FileStatus], sidecar: Option[String],
+      skips: Set[String]) {
+    /** The data files `_skips` does not mark fully deleted. */
+    def live: Seq[Path] = files.map(_.getPath).filterNot(p => skips(p.getName))
+  }
+
+  private def pdvHead(fs: FileSystem, dir: String, v: Int,
+      hdrs: Map[String, String], prefix: String): PdvHead = {
+    val dataDirs = dataDirsFrom(hdrs, v, prefix)
+    val sidecar = hdrs.get("pdv")
+    PdvHead(dataDirs, dataDirs.flatMap(d => dataFilesIn(fs, new Path(s"$dir/$d"))),
+      sidecar, sidecar.fold(Set.empty[String])(pd => pdvSkips(fs, s"$dir/$pd")))
+  }
+
+  /** The live rows of a positional head, with NO join in the plan. Two
+    * tiers: (1) files the sidecar's `_skips` marks fully deleted never
+    * enter the file list (never opened, never split); (2) every other
+    * file's rows flow through a codegen'd
+    * `NOT graft_pos_deleted(file, _metadata.row_index)` filter whose
+    * per-file position set loads lazily on whichever executor scans the
+    * file — no shuffle, no driver collect. A head whose every file is
+    * dead reads as an empty frame under its declared schema. */
+  private def pdvLiveRows(spark: SparkSession, fs: FileSystem, dir: String,
+      v: Int, head: PdvHead, declared: Option[StructType]): DataFrame = {
+    val live = head.live.map(_.toString)
+    if (live.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        declared.getOrElse(sys.error(s"version $v of $dir is fully deleted " +
+          "and records no schema= header to type the empty read")))
+    else {
+      val base = readParquet(spark, declared, live)
+      head.sidecar.fold(base) { pd =>
+        import org.apache.spark.sql.functions.{col, not}
+        import org.apache.spark.sql.graft.GraftSqlBridge
+        base.where(not(GraftSqlBridge.column(graft.expr.PosDvProbe(
+          GraftSqlBridge.expression(pdvFileName),
+          GraftSqlBridge.expression(col("_metadata.row_index")),
+          fs.makeQualified(new Path(s"$dir/$pd")).toString))))
+      }
+    }
+  }
+
+  /** The ONE positional sidecar step: write version `v`'s cumulative
+    * sidecar — the head's (__file, __pos) rows plus `fresh` —
+    * partitioned by file, reconcile `_skips` and write it. Returns the
+    * sidecar dir. The write is DISTRIBUTED; only the reconciliation
+    * touches the driver, and that is footer metadata of touched files.
+    *
+    * `freshCounts` carries the one difference between the doors. The
+    * update passes a tally of `fresh` per file, run after the sidecar
+    * write; its fresh rows are LIVE positions only (the probe dropped
+    * every tombstoned one), so the union is disjoint and takes no
+    * distinct() — whose shuffle would be the write's only one. The
+    * delete passes None: its raw-file scan
+    * may re-match tombstoned rows, so the union is de-duplicated; and
+    * its predicate may be non-deterministic, so the counts come from
+    * the sidecar AS WRITTEN — a second evaluation could disagree with
+    * it and mark a file dead that still holds live rows.
+    *
+    * Reconciliation is DELTA-restricted: a file can only go newly dead
+    * if this commit grew its tombstone count, so only those files are
+    * checked against their footer row counts, through the bounded
+    * `mapPar` pool; prior `_skips` carry forward verbatim (files are
+    * immutable). A file's previous count is the footer row count of the
+    * previous sidecar's `__file=` partition (sidecar rows are distinct
+    * by construction) — no aggregation over every tombstone ever
+    * written. */
+  private def writePdv(spark: SparkSession, fs: FileSystem, dir: String,
+      v: Int, head: PdvHead, fresh: Option[DataFrame],
+      freshCounts: Option[() => Map[String, Long]]): String = {
+    import org.apache.spark.sql.functions.col
+    def dedupe(df: DataFrame) = if (freshCounts.isEmpty) df.distinct() else df
+    val full = (head.sidecar.flatMap(pd => readPdv(spark, fs, s"$dir/$pd")),
+        fresh) match {
+      case (Some(prev), Some(f)) => dedupe(prev.unionByName(f))
+      case (Some(prev), None) => prev // already distinct by construction
+      case (None, Some(f)) => dedupe(f)
+      case (None, None) => sys.error(s"version ${v - 1} of $dir has no " +
+        "live file and no sidecar — nothing to delete from")
+    }
+    val pdvDir = s"pdv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    full.write.partitionBy("__file").mode("errorifexists")
+      .parquet(s"$dir/$pdvDir")
+    val counts = freshCounts.fold(
+      readPdv(spark, fs, s"$dir/$pdvDir").fold(Map.empty[String, Long])(
+        _.groupBy(col("__file")).count().collect()
+          .map(r => (r.getString(0), r.getLong(1))).toMap))(_())
+    val conf = spark.sessionState.newHadoopConf()
+    def prevCount(file: String): Long = head.sidecar.fold(0L) { pd =>
+      val p = new Path(s"$dir/$pd/__file=$file")
+      if (!fs.exists(p)) 0L
+      else dataFilesIn(fs, p).map(footerRowCount(_, conf)).sum
+    }
+    val touched = head.files.filter { st =>
+      val n = st.getPath.getName
+      counts.contains(n) && !head.skips(n)
+    }
+    val newlyDead = mapPar(touched) { st =>
+      val n = st.getPath.getName
+      val before = prevCount(n)
+      val after = if (freshCounts.isEmpty) counts(n) else before + counts(n)
+      if (after != before && after == footerRowCount(st, conf)) Some(n)
+      else None
+    }.flatten
+    val skips = (head.skips ++ newlyDead).toSeq.sorted
+    if (skips.nonEmpty) {
+      val out = fs.create(new Path(s"$dir/$pdvDir/_skips"), true)
+      try out.write(skips.mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    pdvDir
+  }
+
   /** POSITIONAL merge-on-read delete (the Iceberg-v2 / Delta-DV sidecar
     * shape, VERDICT r18 "Next round" item 3): commit a new version that
     * shares the current data dirs UNCHANGED and carries a PER-FILE
@@ -2362,176 +2528,34 @@ object GraftTable {
     * the previous sidecar in, so each version's sidecar is self-contained
     * and time travel sees exactly its deletes. Stats/bloom cannot ride
     * (positions invalidate per-file counts — same rule as dv=). The
-    * sidecar write is DISTRIBUTED (a partitioned parquet write of the
-    * position frame); only the per-file skip reconciliation touches the
-    * driver, and that is O(files) footer metadata — manifest-scale, the
-    * dvFooterRows class of work, never row data. */
+    * sidecar write and `_skips` reconciliation are `writePdv`'s. */
   def commitPositionalDelete(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column, metadata: String = "",
       prefix: String = "v", expectVersion: Option[Int] = None): Int = {
-    import org.apache.spark.sql.functions.{col, element_at, split => fsplit}
+    import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, dir)
-    val cur = currentVersion(fs, dir).getOrElse(
-      sys.error(s"no committed version under $dir to delete from"))
-    expectVersion.foreach(ev =>
-      if (ev != cur) throw new java.util.ConcurrentModificationException(
-        s"delete computed its positions on version $ev of $dir but the " +
-          s"head is now $cur — re-read and retry"))
-    val hdrs = parseCommit(commitContent(fs, dir, cur))._1
-    require(!hdrs.contains("pmap"),
-      "this table is partition-mapped — delete by replacing its " +
-        "partitions through replacePartitionsWithRetry")
-    require(!hdrs.contains("colmap"),
-      "a positional delete cannot target a renamed/dropped-column head " +
-        "— rewrite via commitNextIsolated (normalizing the names) first")
-    require(!hdrs.contains("partby"),
-      "a positional delete reads explicit files, which cannot rebind a " +
-        "partitionBy layout's dir-name columns — delete copy-on-write " +
-        "(SQL DELETE) or through the key-tombstone door instead")
-    require(!hdrs.contains("dv"),
-      "the current version carries KEY tombstones (dv=) — continue " +
-        "through commitDeleteVector, or purgeDeleteVector first: one " +
-        "version cannot merge two deletion-vector regimes")
-    require(hdrs.contains("schema"),
-      s"version $cur of $dir predates schema= headers — re-commit once " +
-        "through any write path to record the schema, then delete")
-    if (hdrs.contains("stats") || hdrs.contains("bloom"))
-      throw new IndexRedeclarationRequired(
-        "a positional delete cannot carry this table's skipping index " +
-          "(the sidecar invalidates the per-file statistics) — delete " +
-          "through the copy-on-write door, or drop the index " +
-          "deliberately via commitNextIsolated first")
-    val dataDirs = dataDirsFrom(hdrs, cur, prefix)
-    val declared = declaredSchemaOf(hdrs)
+    val (cur, hdrs) = gateMor(fs, dir, positionalDeleteDoor, expectVersion)
+    val head = pdvHead(fs, dir, cur, hdrs, prefix)
     // files the previous sidecar's _skips manifest marks FULLY deleted
     // never enter the predicate scan (round-21): every one of their
     // positions is already in the cumulative sidecar, so re-matching
     // them can only produce duplicates `distinct()` removes — reading
     // them is pure wasted I/O. Partially-tombstoned files still scan
     // raw (a re-matched dead row re-tombstones idempotently).
-    val prevSkipSet = hdrs.get("pdv")
-      .map(pd => pdvSkips(fs, s"$dir/$pd")).getOrElse(Set.empty[String])
-    val scanTargets: Seq[String] =
-      if (prevSkipSet.isEmpty) dataDirs.map(d => s"$dir/$d")
-      else dataDirs.flatMap { dd =>
-        fs.listStatus(new Path(s"$dir/$dd"))
-          .filter { st =>
-            val n = st.getPath.getName
-            st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-              !prevSkipSet.contains(n)
-          }.map(_.getPath.toString)
-      }
+    val scanTargets =
+      if (head.skips.isEmpty) head.dataDirs.map(d => s"$dir/$d")
+      else head.live.map(_.toString)
     // explicit declared-schema read: add-column predecessors' files
     // null-fill the missing columns, so the predicate may reference them
-    val freshOpt: Option[DataFrame] =
+    val fresh =
       if (scanTargets.isEmpty) None // every file fully dead: no new match
-      else {
-        val base = readParquet(spark, declared, scanTargets)
-        Some(base.filter(predicate).select(
-          element_at(fsplit(col("_metadata.file_path"), "/"), -1).as("__file"),
-          col("_metadata.row_index").as("__pos")))
-      }
-    val prevOpt: Option[DataFrame] = hdrs.get("pdv") match {
-      // cumulative: the previous sidecar's (file, pos) pairs union in
-      // (partition-column read recovers __file as a string). A sidecar
-      // minted by a matched-nothing delete has no __file= dirs at all —
-      // parquet cannot infer its schema, so guard on the layout
-      case Some(prevDir) if fs.listStatus(new Path(s"$dir/$prevDir"))
-          .exists(_.getPath.getName.startsWith("__file=")) =>
-        // explicit schema: the sidecar layout is fixed (__pos data
-        // column, __file partition dir) — schema inference is a 1-task
-        // Spark job per commit, pure overhead
-        Some(spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__pos",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("__file",
-              org.apache.spark.sql.types.StringType))))
-          .parquet(s"$dir/$prevDir")
-          .select(col("__file"), col("__pos")))
-      case _ => None
-    }
-    val full = (prevOpt, freshOpt) match {
-      case (Some(prev), Some(fresh)) => prev.unionByName(fresh).distinct()
-      case (Some(prev), None) => prev // already distinct by construction
-      case (None, Some(fresh)) => fresh.distinct()
-      case (None, None) => sys.error(
-        s"version $cur of $dir has no live file and no sidecar — " +
-          "nothing to delete from")
-    }
+      else Some(readParquet(spark, declaredSchemaOf(hdrs), scanTargets)
+        .filter(predicate)
+        .select(pdvFileName.as("__file"), col("_metadata.row_index").as("__pos")))
     val v = cur + 1
-    val pdvDir = s"pdv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
-    full.write.partitionBy("__file").mode("errorifexists")
-      .parquet(s"$dir/$pdvDir")
-    // skip reconciliation inputs FROM THE WRITTEN SIDECAR, never from a
-    // second evaluation of `full`: with a non-deterministic predicate
-    // (rand()-sampled deletes) a re-run of the frame can disagree with
-    // what was written, marking a file fully deleted while the sidecar
-    // holds fewer positions — the read path would then drop live rows.
-    // Reading back what was actually committed is exact by construction.
-    // One bounded read of tombstones only; a matched-nothing sidecar has
-    // no __file= dirs (parquet cannot infer its schema), so guard first.
-    val deadCounts: Map[String, Long] =
-      if (!fs.listStatus(new Path(s"$dir/$pdvDir"))
-          .exists(_.getPath.getName.startsWith("__file="))) Map.empty
-      // explicit schema (fixed sidecar layout): skips the 1-task schema
-      // inference job every delete commit otherwise pays (round-21)
-      else spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__pos",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__file",
-            org.apache.spark.sql.types.StringType))))
-        .parquet(s"$dir/$pdvDir")
-        .select(col("__file").cast("string").as("__file"))
-        .groupBy(col("__file")).count().collect()
-        .map(r => (r.getString(0), r.getLong(1))).toMap
-    // DELTA-restricted reconciliation (round-20 advice): a file can only
-    // become NEWLY fully-dead if this commit grew its tombstone count,
-    // so footer-check only files whose cumulative count moved vs the
-    // previous sidecar; prior _skips carry forward verbatim (files are
-    // immutable). Round-22 (r21 advice): the PREVIOUS per-file counts
-    // come from parquet FOOTER metadata of the prev sidecar's __file=
-    // partitions (sidecar rows are distinct by construction, so footer
-    // rows == tombstone count — the same equivalence the update door's
-    // reconciliation already stands on) instead of a whole-sidecar
-    // Spark aggregation per commit: a long MoR chain no longer pays an
-    // O(all ever-tombstoned rows) job per delete.
-    val conf = spark.sessionState.newHadoopConf()
-    def prevTombstones(file: String): Long = hdrs.get("pdv") match {
-      case Some(pd) =>
-        val p = new Path(s"$dir/$pd/__file=$file")
-        if (!fs.exists(p)) 0L
-        else fs.listStatus(p).toSeq.filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.map(footerRowCount(_, conf)).sum
-      case None => 0L
-    }
-    // a file whose tombstone count equals its footer row count is fully
-    // deleted — record it in _skips so reads never open it. Footer
-    // METADATA on the driver, read through the bounded pool (VERDICT
-    // r21 item 5 — never one serial open per file).
-    val candidates = dataDirs.flatMap { dd =>
-      fs.listStatus(new Path(s"$dir/$dd")).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-          deadCounts.contains(n) && !prevSkipSet.contains(n)
-      }
-    }
-    val newlyDead = mapPar(candidates) { st =>
-      val n = st.getPath.getName
-      if (deadCounts(n) == prevTombstones(n)) None // untouched this commit
-      else if (deadCounts(n) == footerRowCount(st, conf)) Some(n)
-      else None
-    }.flatten
-    val skips = (prevSkipSet ++ newlyDead).toSeq.sorted
-    if (skips.nonEmpty) {
-      val out = fs.create(new Path(s"$dir/$pdvDir/_skips"), true)
-      try out.write(skips.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    val pdvDir = writePdv(spark, fs, dir, v, head, fresh, freshCounts = None)
     commit(fs, dir, v, metadata, prefix = prefix,
-      dataDir = Some(dataDirs.mkString(",")),
+      dataDir = Some(head.dataDirs.mkString(",")),
       pdvHdr = Some(pdvDir),
       schema = hdrs.get("schema"),
       prevTs = prevTsOf(Some((cur, hdrs))),
@@ -2546,15 +2570,8 @@ object GraftTable {
     * (compaction, appends, indexes) that refuse a pdv head. */
   def purgePositionalDv(spark: SparkSession, dir: String,
       metadata: String = "PURGE POSITIONAL DELETION VECTOR",
-      prefix: String = "v"): Int = {
-    val fs = fsOf(spark, dir)
-    val cur = currentVersion(fs, dir).getOrElse(
-      sys.error(s"no committed version under $dir to purge"))
-    require(headersOf(fs, dir, cur).contains("pdv"),
-      s"version $cur of $dir carries no positional deletion vector")
-    commitNextIsolated(spark, dir, readVersion(spark, dir, cur, prefix),
-      metadata, prefix = prefix)
-  }
+      prefix: String = "v"): Int =
+    purgeHead(spark, dir, metadata, prefix, positional = true)
 
   /** POSITIONAL merge-on-read UPDATE (VERDICT r19 item 4): tombstone the
     * matched rows by (file, row position) and stage their replacements
@@ -2586,81 +2603,19 @@ object GraftTable {
       sets: Seq[(String, org.apache.spark.sql.Column)],
       metadata: String = "", prefix: String = "v",
       expectVersion: Option[Int] = None): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, not, split => fsplit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(sets.nonEmpty, "UPDATE needs at least one SET assignment")
     val fs = fsOf(spark, dir)
-    val cur = currentVersion(fs, dir).getOrElse(
-      sys.error(s"no committed version under $dir to update"))
-    // OCC pin BEFORE the layout gates (the commitDeleteVector rule)
-    expectVersion.foreach(ev =>
-      if (ev != cur) throw new java.util.ConcurrentModificationException(
-        s"update resolved its snapshot at version $ev of $dir but the " +
-          s"head is now $cur — re-read and retry"))
-    val hdrs = parseCommit(commitContent(fs, dir, cur))._1
-    require(!hdrs.contains("pmap"),
-      "this table is partition-mapped — update by replacing its " +
-        "partitions through replacePartitionsWithRetry")
-    require(!hdrs.contains("colmap"),
-      "a positional update cannot target a renamed/dropped-column head " +
-        "— rewrite via commitNextIsolated (normalizing the names) first")
-    require(!hdrs.contains("partby"),
-      "a positional update reads explicit files, which cannot rebind a " +
-        "partitionBy layout's dir-name columns — update copy-on-write " +
-        "(SQL UPDATE) instead")
-    require(!hdrs.contains("dv"),
-      "the current version carries KEY tombstones (dv=) — update " +
-        "through commitUpdateImpl, or purgeDeleteVector first: one " +
-        "version cannot merge two deletion-vector regimes")
-    require(hdrs.contains("schema"),
-      s"version $cur of $dir predates schema= headers — re-commit once " +
-        "through any write path to record the schema, then update")
-    if (hdrs.contains("stats") || hdrs.contains("bloom"))
-      throw new IndexRedeclarationRequired(
-        "a positional update cannot carry this table's skipping index " +
-          "(the sidecar invalidates the per-file statistics) — update " +
-          "through the copy-on-write door, or drop the index " +
-          "deliberately via commitNextIsolated first")
-    val dataDirs = dataDirsFrom(hdrs, cur, prefix)
-    val declared = declaredSchemaOf(hdrs)
-    // LIVE rows with physical identity: skip-tier files never open, the
-    // probe drops already-tombstoned positions IN the scan — a dead row
-    // must neither re-match nor resurrect through a fresh replacement
-    val allFiles = dataDirs.flatMap { dd =>
-      fs.listStatus(new Path(s"$dir/$dd"))
-        .filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.map(_.getPath)
-    }
-    val prevSidecar = hdrs.get("pdv")
-    val skips = prevSidecar.map(pd => pdvSkips(fs, s"$dir/$pd"))
-      .getOrElse(Set.empty[String])
-    val liveFiles = allFiles.filterNot(p => skips.contains(p.getName))
-      .map(_.toString)
-    val fileName = element_at(fsplit(col("_metadata.file_path"), "/"), -1)
-    val base =
-      if (liveFiles.isEmpty) {
-        val st = declared.getOrElse(sys.error(
-          s"version $cur of $dir is fully deleted and records no " +
-            "schema= header to type the empty read"))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      } else readParquet(spark, declared, liveFiles)
-    import org.apache.spark.sql.graft.GraftSqlBridge
-    val live = (prevSidecar, liveFiles.isEmpty) match {
-      case (Some(pd), false) =>
-        val qualified = fs.makeQualified(new Path(s"$dir/$pd")).toString
-        base.where(not(GraftSqlBridge.column(graft.expr.PosDvProbe(
-          GraftSqlBridge.expression(fileName),
-          GraftSqlBridge.expression(col("_metadata.row_index")),
-          qualified))))
-      case _ => base
-    }
+    val (cur, hdrs) = gateMor(fs, dir, positionalUpdateDoor, expectVersion)
+    val head = pdvHead(fs, dir, cur, hdrs, prefix)
+    // LIVE rows with physical identity: a dead row must neither re-match
+    // nor resurrect through a fresh replacement
+    val live = pdvLiveRows(spark, fs, dir, cur, head, declaredSchemaOf(hdrs))
     val condT = coalesce(condition, lit(false))
     val matched = live.where(condT)
     // SIMULTANEOUS assignment (the SQL rule): one select, every SET
     // expression reads the PRE-update row
-    val outCols = base.columns.toSeq
+    val outCols = live.columns.toSeq
     val resolver = spark.sessionState.conf.resolver
     sets.foreach { case (c, _) =>
       require(outCols.exists(resolver(_, c)),
@@ -2668,7 +2623,7 @@ object GraftTable {
     // ONE PASS over the matched set (VERDICT r20 "Next round" item 3):
     // a single projection carries the tombstone identity (file, pos)
     // BESIDE the replacement row, persisted so the sidecar write, the
-    // replacement write and the dead-count aggregation all serve from
+    // replacement write and the fresh-count aggregation all serve from
     // the same materialized rows. The old shape ran two predicate-
     // pushed scans of the base files (positions, then replacements)
     // plus a parquet read-back of the written sidecar — three data
@@ -2676,7 +2631,7 @@ object GraftTable {
     // names; the sidecar frame aliases them back to the __file/__pos
     // layout contract.
     val matchedAll = matched.select(
-      fileName.as("__graft_pdv_file") +:
+      pdvFileName.as("__graft_pdv_file") +:
         col("_metadata.row_index").as("__graft_pdv_pos") +:
         outCols.map { c =>
           sets.find { case (sc, _) => resolver(sc, c) } match {
@@ -2728,49 +2683,16 @@ object GraftTable {
             Some(live.where(!condT).select(outCols.map(col): _*))
           else None)
     val v = cur + 1
-    // cumulative sidecar: previous positions union the matched ones
-    // (file identity is the BASENAME — part-file names carry a
-    // write-job UUID, so basenames never collide across data dirs).
-    // NO distinct(): matched rows are LIVE (the probe already dropped
-    // every previously-tombstoned position), so fresh ∩ prev = ∅, and
-    // fresh itself is unique by physical identity (one row index per
-    // row). The union is disjoint by construction — the old distinct()
-    // bought nothing and cost the write its only shuffle (plus the AQE
-    // stage-jobs that came with it). The delete door KEEPS its
-    // distinct(): a raw-file delete may re-match tombstoned rows.
-    val fresh = matchedAll.select(
-      col("__graft_pdv_file").as("__file"),
-      col("__graft_pdv_pos").as("__pos"))
-    // explicit schema: the sidecar layout is fixed (__pos data column,
-    // __file partition dir), so schema inference — a 1-task Spark job
-    // per commit — is pure overhead
-    val sidecarSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__pos",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__file",
-        org.apache.spark.sql.types.StringType)))
-    val full = prevSidecar match {
-      case Some(prevDir) if fs.listStatus(new Path(s"$dir/$prevDir"))
-          .exists(_.getPath.getName.startsWith("__file=")) =>
-        spark.read.schema(sidecarSchema).parquet(s"$dir/$prevDir")
-          .select(col("__file"), col("__pos"))
-          .unionByName(fresh)
-      case _ => fresh
-    }
-    val pdvDir = s"pdv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
-    full.write.partitionBy("__file").mode("errorifexists")
-      .parquet(s"$dir/$pdvDir")
-    // One tiny aggregation over the persisted matched pass yields the
-    // touched set AND the fresh per-file counts (DELTA-restricted skip
-    // reconciliation, round-20 advice + VERDICT r20 item 3: only files
-    // touched by THIS update can change fully-dead status — every
-    // fresh position is NEW, see the disjointness argument above — and
-    // prev _skips carry forward verbatim). Computed BEFORE the
-    // replacement write since round 22: the matched total also SIZES
-    // that write.
-    val freshCounts: Map[String, Long] =
+    // one tiny aggregation over the persisted matched pass: the touched
+    // files with their fresh tombstone counts — and the matched total,
+    // which sizes the replacement write
+    lazy val freshCounts: Map[String, Long] =
       matchedAll.groupBy(col("__graft_pdv_file")).count().collect()
         .map(r => (r.getString(0), r.getLong(1))).toMap
+    val pdvDir = writePdv(spark, fs, dir, v, head,
+      Some(matchedAll.select(col("__graft_pdv_file").as("__file"),
+        col("__graft_pdv_pos").as("__pos"))),
+      Some(() => freshCounts))
     // replacements stage as their OWN dir beside the shared ones —
     // a distributed write sized by the MATCHED ROWS, never the table
     // (commitUpdateImpl's naming convention, so GC/vacuum track it);
@@ -2789,48 +2711,8 @@ object GraftTable {
     val repl = s"$prefix${v}_${java.util.UUID.randomUUID().toString.take(8)}"
     replacements.coalesce(replTasks).write.mode("errorifexists")
       .parquet(s"$dir/$repl")
-    val conf = spark.sessionState.newHadoopConf()
-    def footerRows(sts: Seq[org.apache.hadoop.fs.FileStatus]): Long =
-      sts.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-    def dataFiles(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    def prevTombstones(file: String): Long = prevSidecar match {
-      case Some(pd) => footerRows(dataFiles(new Path(s"$dir/$pd/__file=$file")))
-      case None => 0L
-    }
-    // footer reads through the bounded pool (round-22, VERDICT r21
-    // item 5): a wide UPDATE touching many files no longer serializes
-    // the driver on one ParquetFileReader.open per file
-    val touchedFiles = dataDirs.flatMap { dd =>
-      fs.listStatus(new Path(s"$dir/$dd")).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-          freshCounts.contains(n)
-      }
-    }
-    val newlyDead = mapPar(touchedFiles) { st =>
-      val n = st.getPath.getName
-      if (freshCounts(n) + prevTombstones(n) == footerRows(Seq(st))) Some(n)
-      else None
-    }.flatten
-    val skipNames = (skips ++ newlyDead).toSeq.sorted
-    if (skipNames.nonEmpty) {
-      val out = fs.create(new Path(s"$dir/$pdvDir/_skips"), true)
-      try out.write(skipNames.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
     commit(fs, dir, v, metadata, prefix = prefix,
-      dataDir = Some((dataDirs :+ repl).mkString(",")),
+      dataDir = Some((head.dataDirs :+ repl).mkString(",")),
       pdvHdr = Some(pdvDir),
       schema = hdrs.get("schema"),
       prevTs = prevTsOf(Some((cur, hdrs))),
@@ -3191,44 +3073,7 @@ object GraftTable {
       expectVersion: Option[Int] = None): Int = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val fs = fsOf(spark, dir)
-    val cur = currentVersion(fs, dir).getOrElse(
-      sys.error(s"no committed version under $dir to update"))
-    // OCC pin BEFORE the layout gates (the commitDeleteVector rule): a
-    // caller whose arm decision was made on an older head must see
-    // ConcurrentModificationException — the retryable conflict — not a
-    // layout refusal computed from headers it never read (a racer
-    // attaching an index mid-flight would otherwise surface as
-    // IndexRedeclarationRequired and defeat the SQL door's retry)
-    expectVersion.foreach(ev =>
-      if (ev != cur) throw new java.util.ConcurrentModificationException(
-        s"update resolved its snapshot at version $ev of $dir but the " +
-          s"head is now $cur — re-read and retry"))
-    val hdrs = parseCommit(commitContent(fs, dir, cur))._1
-    require(!hdrs.contains("partby"),
-      s"cannot update a partitionBy layout (${hdrs.getOrElse("partby", "")})" +
-        ": a flat replacement dir beside a partitioned one makes the " +
-        "union unreadable — rewrite via commitWithRetry instead")
-    require(!hdrs.contains("pmap"),
-      "this table is partition-mapped — update by replacing its " +
-        "partitions through replacePartitionsWithRetry (a MoR update " +
-        "would drop the value→dir map)")
-    require(!hdrs.contains("colmap"),
-      "a merge-on-read update cannot target a renamed/dropped-column " +
-        "head — SQL UPDATE rewrites copy-on-write, or rewrite via " +
-        "commitNextIsolated first")
-    require(!hdrs.contains("pdv"),
-      "a merge-on-read update cannot target a positional-deletion-" +
-        "vector head (the update mints key-scoped tombstones, and one " +
-        "version cannot merge two DV regimes) — purgePositionalDv first")
-    // same posture as every other index-dropping path: REFUSE rather
-    // than silently strip the skipping indexes (stats/bloom cannot
-    // coexist with the dv this commit mints — see commit()'s exclusion)
-    if (hdrs.contains("stats") || hdrs.contains("bloom"))
-      throw new IndexRedeclarationRequired(
-        "merge-on-read UPDATE cannot carry the table's skipping index " +
-          "(file statistics/Bloom describe raw files and would serve " +
-          "pre-update rows) — drop the index deliberately via " +
-          "commitNextIsolated, update, then re-index with compactChain")
+    val (cur, hdrs) = gateMor(fs, dir, keyUpdateDoor, expectVersion)
     val dataDirs = dataDirsFrom(hdrs, cur, prefix)
     import spark.implicits._
     val basenamesDf = dataDirs.map(dirBasename).toDF("__dir")
@@ -3247,18 +3092,7 @@ object GraftTable {
     }.reduce(_ unionByName _)
     val outCols = withDir.columns.filterNot(_ == "__gdir").toSeq
     val keyCols = keyColsOpt.getOrElse(outCols)
-    require(keyCols.forall(c => !c.contains(",") && !c.contains(";")),
-      s"key column names must not contain the dv= header delimiters: $keyCols")
-    // a predecessor DV must share this update's key identity (tombstone
-    // sets UNION across versions) — a mismatch would otherwise surface
-    // as a schema error deep inside the union; refuse pointedly instead
-    hdrs.get("dv").foreach { spec =>
-      val prevKeys = spec.split(";", -1)(1).split(",").toSeq
-      require(prevKeys == keyCols,
-        s"the current version's deletion vector is keyed by $prevKeys " +
-          s"but this update keys by $keyCols — purgeDeleteVector first, " +
-          "or update through the door whose keys match the recorded ones")
-    }
+    requireDvKeys(hdrs, keyCols, "update")
     val prevTombs: Option[DataFrame] = hdrs.get("dv").map { spec =>
       val parts = spec.split(";", -1)
       val dvd = readDvSidecar(spark, s"$dir/${parts(0)}",
@@ -3339,8 +3173,22 @@ object GraftTable {
     * accumulated — instead of at every delete. */
   def purgeDeleteVector(spark: SparkSession, dir: String,
       metadata: String = "purge deletion vector", prefix: String = "v"): Int =
-    commitNextIsolated(spark, dir, read(spark, dir, prefix), metadata,
-      prefix = prefix)
+    purgeHead(spark, dir, metadata, prefix, positional = false)
+
+  /** The ONE purge body: resolve the head once, read exactly that
+    * version and commit its survivors pinned to it — a commit landing
+    * in between (a DELETE, say) fails the pin instead of being silently
+    * undone by a rewrite of the older snapshot. */
+  private def purgeHead(spark: SparkSession, dir: String, metadata: String,
+      prefix: String, positional: Boolean): Int = {
+    val fs = fsOf(spark, dir)
+    val cur = currentVersion(fs, dir).getOrElse(
+      sys.error(s"no committed version under $dir to purge"))
+    if (positional) require(headersOf(fs, dir, cur).contains("pdv"),
+      s"version $cur of $dir carries no positional deletion vector")
+    commitNextIsolated(spark, dir, readVersion(spark, dir, cur, prefix),
+      metadata, prefix = prefix, expectVersion = Some(cur))
+  }
 
   /** Bounded serializable-OCC retry shared by EVERY commit door. Runs
     * `body` with the 1-based attempt number; a lost race
@@ -3587,28 +3435,20 @@ object GraftTable {
     val what = door.name
     door.upsertKeys.foreach { keys =>
       require(keys.nonEmpty, "streaming upsert needs upsertKeys")
-      require(keys.forall(c => !c.contains(",") && !c.contains(";")),
-        s"key column names must not contain the dv= header delimiters: $keys")
+      // an upsert folds onto a key DV of its own keys
+      requireDvKeys(cur.fold(Map.empty[String, String])(_._2), keys, what)
       keys.foreach(k => require(schema.fieldNames.contains(k),
         s"upsert key '$k' is not a column of the stream (${
           schema.fieldNames.toSeq})"))
     }
     cur.foreach { case (_, h) =>
       if (door.append) {
-        // an upsert folds onto a key DV of its own keys; every other
-        // append would have the tombstones subtract from its marker
-        // dir's "added" set
-        (door.upsertKeys, h.get("dv")) match {
-          case (Some(keys), Some(spec)) =>
-            val prevKeys = spec.split(";", -1)(1).split(",").toSeq
-            require(prevKeys == keys,
-              s"the current version's deletion vector is keyed by " +
-                s"$prevKeys but this upsert keys by $keys")
-          case (None, Some(_)) => throw new IllegalArgumentException(
+        // every append but the upsert would have the tombstones
+        // subtract from its marker dir's "added" set
+        if (door.upsertKeys.isEmpty && h.contains("dv"))
+          throw new IllegalArgumentException(
             s"$what refused — the current version carries a deletion " +
               "vector; purgeDeleteVector first")
-          case _ => ()
-        }
         require(!h.contains("pdv"),
           s"$what refused — the current version carries a positional " +
             "deletion vector; purgePositionalDv first")
@@ -4165,11 +4005,8 @@ object GraftTable {
     def replayed(): Boolean =
       newestEpochFor(fs, dir, Some(queryId)).exists(epochId <= _)
     if (replayed()) { dropStaged(); return None }
-    val hasData = fs.exists(stagedPath) && fs.listStatus(stagedPath)
-      .exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+    val hasData =
+      fs.exists(stagedPath) && dataFilesIn(fs, stagedPath).nonEmpty
     if (!hasData) { dropStaged(); return None }
     // the task writers' commit messages name every published file —
     // audit them against the dir BEFORE publishing, so a lost partition

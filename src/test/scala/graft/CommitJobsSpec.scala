@@ -106,4 +106,32 @@ class CommitJobsSpec extends SparkSpec {
     assert((dsv2.size, epoch.size, band.size, bloom.size) == ((2, 2, 2, 2)),
       s"job counts moved: dsv2 $dsv2, epoch $epoch, band $band, bloom $bloom")
   }
+
+  test("merge-on-read doors keep their job counts: SQL DELETE and UPDATE " +
+      "on a plain head, a key-DV purge, the positional delete and update") {
+    val dir = freshDir("mor")
+    GraftTable.commitNextIsolated(spark, dir,
+      rows(0, 20000).repartitionByRange(8, col("key")), "base")
+    spark.conf.set("spark.sql.catalog.gcjobs", "graft.sources.GraftCatalog")
+    def jobs(body: => Unit): Int = JobRecorder.record(spark)(body)._1.size
+    val delete = jobs(spark.sql(
+      s"DELETE FROM gcjobs.`$dir` WHERE key % 100 = 3"))
+    val update = jobs(spark.sql(
+      s"UPDATE gcjobs.`$dir` SET amt = amt + 7 WHERE key % 100 = 5"))
+    val purge = jobs(GraftTable.purgeDeleteVector(spark, dir))
+    val pdelete = jobs(GraftTable.commitPositionalDelete(spark, dir,
+      col("key") % 100 === 7, "positional delete"))
+    val pupdate = jobs(GraftTable.commitPositionalUpdate(spark, dir,
+      col("key") % 100 === 9, Seq("amt" -> (col("amt") + 1)),
+      "positional update"))
+    val fs = GraftTable.fsOf(spark, dir)
+    assert(Seq(1, 2).forall(GraftTable.headersOf(fs, dir, _).contains("dv")))
+    assert(Seq(4, 5).forall(GraftTable.headersOf(fs, dir, _).contains("pdv")))
+    assert(GraftTable.read(spark, dir).count() == 19600L)
+    // measured before the merge-on-read doors shared one gate, one
+    // sidecar step and one purge body; the refactor moved none of them
+    assert((delete, update, purge, pdelete, pupdate) == ((2, 9, 3, 4, 4)),
+      s"job counts moved: delete $delete, update $update, purge $purge, " +
+        s"positional delete $pdelete, positional update $pupdate")
+  }
 }

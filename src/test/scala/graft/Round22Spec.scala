@@ -138,6 +138,37 @@ class Round22Spec extends SparkSpec {
     val rows = GraftTable.read(spark, dir).select("k")
       .collect().map(_.getLong(0)).toSet
     assert(rows == (0L until 20L).filter(_ % 2 == 1).toSet)
+    // the chain goes on: a positional update stages a replacement file,
+    // a matched-nothing delete, then a delete of the replacement's only
+    // row. At every version _skips must be exactly the data files with
+    // rows of which every _metadata.row_index is in the sidecar —
+    // computed from the rows themselves
+    GraftTable.commitPositionalUpdate(spark, dir, col("k") === 1L,
+      Seq("par" -> lit(7L)), "update k=1")
+    GraftTable.commitPositionalDelete(spark, dir, col("k") === 999L,
+      "matches nothing")
+    GraftTable.commitPositionalDelete(spark, dir,
+      col("k") === 1L && col("par") === 7L, "kill the replacement")
+    def deadFromRows(v: Int): Set[String] = {
+      val hdrs = GraftTable.headersOf(fs, dir, v)
+      val data = spark.read.parquet(
+        GraftTable.dataDirsOf(fs, dir, v).map(d => s"$dir/$d"): _*)
+        .select(element_at(split(col("_metadata.file_path"), "/"), -1)
+          .as("f"), col("_metadata.row_index").as("p"))
+      val sidecar = spark.read.parquet(s"$dir/${hdrs("pdv")}")
+      val live = data.join(sidecar,
+        data("f") === sidecar("__file") && data("p") === sidecar("__pos"),
+        "left_anti")
+      def files(df: org.apache.spark.sql.DataFrame) =
+        df.select("f").distinct().collect().map(_.getString(0)).toSet
+      files(data) -- files(live)
+    }
+    (1 to 5).foreach(v => assert(skipsOf(v) == deadFromRows(v),
+      s"version $v: _skips ${skipsOf(v)} vs rows ${deadFromRows(v)}"))
+    assert(skipsOf(5).size == 2,
+      "the replacement file's only row died: it joins _skips")
+    assert(GraftTable.read(spark, dir).select("k").collect()
+      .map(_.getLong(0)).toSet == rows - 1L)
   }
 
   test("epoch upsert: cumulative dv stays duplicate-free WITHOUT a " +

@@ -139,4 +139,19 @@ class StagedAppendSpec extends SparkSpec {
       assert(after == before, s"$door onto a $head head left ${after -- before}")
     }
   }
+
+  test("a DSv2 append whose columns do not match the table's fails " +
+      "naming the column") {
+    import spark.implicits._
+    val dir = freshDir("misnamed")
+    GraftTable.commitNextIsolated(spark, dir,
+      Seq((1L, 2L)).toDF("key", "cust"), "base")
+    val e = intercept[Exception] {
+      Seq((3L, 4L)).toDF("key", "c2").write.format("graft").mode("append")
+        .save(dir)
+    }
+    assert(messages(e).exists(m => m.contains("`c2`") &&
+      !m.contains("INVALID_ATTRIBUTE_NAME_SYNTAX")), messages(e))
+    assert(GraftTable.versions(GraftTable.fsOf(spark, dir), dir) == Seq(0))
+  }
 }
