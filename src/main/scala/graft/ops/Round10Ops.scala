@@ -106,19 +106,20 @@ object Round10Ops {
     * of (table version, watermark) — the manifest idiom of a lakehouse
     * transaction log, in miniature. Store layout under `dir`:
     *
-    *   daily_v<N>/           immutable table versions (parquet)
+    *   v<N>/                 immutable table versions (parquet)
     *   manifest/commit_<N>   one file per committed version; its content
     *                         is the watermark that version includes
     *
-    * Readers resolve the CURRENT table exclusively through the manifest
-    * (max committed N → `daily_v<N>`), so a half-staged version is
-    * invisible by construction. A load run stages `daily_v<N+1>` first
-    * and then commits it with one file create+rename — atomic on any
-    * Hadoop filesystem (the commit file either exists with its full
-    * content or not at all). Crash anywhere before the commit: the
-    * manifest still names (N, wm), the retry recomputes the SAME batch
-    * from the SAME watermark and overwrites the orphaned staging dir —
-    * no double count, which is exactly the window the previous
+    * It is an ordinary GraftTable: readers resolve the CURRENT table
+    * exclusively through the manifest (`GraftTable.read`), so a
+    * half-staged version is invisible by construction. A load run
+    * stages `v<N+1>` first and then commits it with one file
+    * create+rename — atomic on any Hadoop filesystem (the commit file
+    * either exists with its full content or not at all). Crash
+    * anywhere before the commit: the manifest still names (N, wm), the
+    * retry recomputes the SAME batch from the SAME watermark and
+    * overwrites the orphaned staging dir — no double count, which is
+    * exactly the window the previous
     * delete-then-rename + trailing-watermark form left open
     * (Round11Spec kills a run between stage and commit and proves the
     * retry converges to the one-shot recompute). Single writer assumed
@@ -144,14 +145,9 @@ object Round10Ops {
       .map { case (v, m) => (v, m.toLong) }
 
   /** The manifest-resolved current daily table — the ONLY sanctioned read
-    * path; never point a reader at a `daily_v*` dir directly. */
-  private[graft] def currentDaily(s: SparkSession, dir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val (v, _) = readManifest(fs, dir)
-      .getOrElse(sys.error(s"no committed daily version under $dir"))
-    s.read.parquet(s"$dir/daily_v$v")
-  }
+    * path; never point a reader at a `v*` dir directly. */
+  private[graft] def currentDaily(s: SparkSession, dir: String): DataFrame =
+    graft.sources.GraftTable.read(s, dir)
 
   private[graft] def currentWatermark(s: SparkSession, dir: String): Long = {
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -191,13 +187,13 @@ object Round10Ops {
       .select(col("day"), col("cnt"), col("sv").cast(DecimalType(30, 2)).as("sv"))
     val merged = prev match {
       case Some((v, _)) =>
-        s.read.parquet(s"$dir/daily_v$v").unionByName(part)
+        graft.sources.GraftTable.readVersion(s, dir, v).unionByName(part)
           .groupBy("day")
           .agg(sum("cnt").as("cnt"), sum("sv").cast(DecimalType(30, 2)).as("sv"))
       case None => part
     }
     val vNew = prev.map(_._1 + 1).getOrElse(0)
-    merged.write.mode("overwrite").parquet(s"$dir/daily_v$vNew")
+    graft.sources.GraftTable.stage(merged, dir, vNew)
     vNew
   }
 
@@ -207,8 +203,7 @@ object Round10Ops {
     * manifest just before this commit). */
   private[graft] def commitDailyVersion(fs: org.apache.hadoop.fs.FileSystem,
       dir: String, v: Int, wm: Long): Unit =
-    graft.sources.GraftTable.commit(fs, dir, v, wm.toString,
-      retain = 1, prefix = "daily_v")
+    graft.sources.GraftTable.commit(fs, dir, v, wm.toString, retain = 1)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The ingest/serving split the LSH design assumes, made literal:

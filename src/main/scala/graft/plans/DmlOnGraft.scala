@@ -152,8 +152,8 @@ object GraftDml {
     * if it ran strictly after the racer, which is exactly serial
     * execution. Bounded attempts: a hot table that keeps losing races
     * eventually surfaces the conflict to the caller. */
-  private[plans] def withOccRetry[A](maxAttempts: Int = 10)(body: => A): A =
-    GraftTable.retryOnConflict(maxAttempts)(_ => body)
+  private[plans] def withOccRetry[A](body: => A): A =
+    GraftTable.retryOnConflict(GraftTable.occAttempts)(_ => body)
 
   /** Layouts the MoR engines refuse but the copy-on-write arm serves
     * (a colmap head additionally NORMALIZES: the rewrite's fresh files
@@ -246,7 +246,7 @@ case class UpdateDeleteGraftRule(spark: SparkSession)
   * assignments rebuild their struct (`GraftDml.assignments`). */
 case class GraftUpdateCommand(update: UpdateTable, dir: String)
     extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = GraftDml.withOccRetry() {
+  override def run(spark: SparkSession): Seq[Row] = GraftDml.withOccRetry {
     val sets = GraftDml.assignments(spark, update.assignments)
     val cond = update.condition.map(GraftDml.portable).getOrElse(lit(true))
     val fs = GraftTable.fsOf(spark, dir)
@@ -303,7 +303,7 @@ case class GraftUpdateCommand(update: UpdateTable, dir: String)
   * read different heads. */
 case class GraftDeleteCommand(delete: DeleteFromTable, dir: String)
     extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = GraftDml.withOccRetry() {
+  override def run(spark: SparkSession): Seq[Row] = GraftDml.withOccRetry {
     val cond = GraftDml.portable(delete.condition)
     val fs = GraftTable.fsOf(spark, dir)
     val cur = GraftTable.currentVersion(fs, dir).getOrElse(

@@ -117,7 +117,7 @@ case class LargeDvReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
           } =>
         val g = r.table.asInstanceOf[GraftSparkTable]
         val child = GraftTable
-          .readVersion(spark, g.dir, g.snapshotVersion, g.prefixV,
+          .readVersion(spark, g.dir, g.snapshotVersion,
             dvBroadcastHint = false)
           .queryExecution.analyzed
         val resolver = spark.sessionState.conf.resolver

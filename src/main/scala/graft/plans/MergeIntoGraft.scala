@@ -432,7 +432,7 @@ object GraftMergeCommand {
       case r: DataSourceV2Relation
           if r.table.isInstanceOf[GraftSparkTable] =>
         val old = r.table.asInstanceOf[GraftSparkTable]
-        val nt = new GraftSparkTable(spark, dir, head, old.prefixV)
+        val nt = new GraftSparkTable(spark, dir, head)
         val was = r.output.map(a => (a.name, a.dataType))
         val fields = nt.schema().fields.toSeq
         val now = fields.map(f => (f.name, f.dataType))

@@ -78,7 +78,7 @@ class GraftCatalog extends TableCatalog
     val fs = GraftTable.fsOf(spark, dir)
     val cur = GraftTable.currentVersion(fs, dir).getOrElse(
       throw new NoSuchTableException(ident))
-    new GraftSparkTable(spark, dir, version.getOrElse(cur), "v")
+    new GraftSparkTable(spark, dir, version.getOrElse(cur))
   }
 
   override def loadTable(ident: Identifier): Table = load(ident, None)

@@ -62,7 +62,6 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
     val spark = SparkSession.active
     val dir = Option(options.get("path")).getOrElse(sys.error(
       "graft reads need a table dir: spark.read.format(\"graft\").load(dir)"))
-    val prefix = Option(options.get("prefix")).getOrElse("v")
     val fs = GraftTable.fsOf(spark, dir)
     val v = (Option(options.get("version")),
         Option(options.get("timestampAsOf"))) match {
@@ -108,7 +107,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
           }
         }
     }
-    new GraftSparkTable(spark, dir, v, prefix, external)
+    new GraftSparkTable(spark, dir, v, external)
   }
 
   // inferSchema and getTable arrive back to back with the same options;
@@ -153,8 +152,7 @@ private[graft] object GraftFilters {
   * scan builder below reuses the parsed headers, the shared file index
   * and the lazily loaded deletion vector. */
 private[graft] class GraftSparkTable(spark: SparkSession, val dir: String,
-    val snapshotVersion: Int, private[graft] val prefixV: String,
-    externalSchema: Option[StructType] = None)
+    val snapshotVersion: Int, externalSchema: Option[StructType] = None)
     extends Table with SupportsRead with SupportsWrite {
 
   /** snapshotVersion == -1 is the EMBRYONIC state: no version exists
@@ -165,8 +163,7 @@ private[graft] class GraftSparkTable(spark: SparkSession, val dir: String,
     if (exists) GraftTable.headersOf(fs, dir, snapshotVersion)
     else Map.empty
   private[graft] val dataDirs: Seq[String] =
-    if (exists)
-      GraftTable.dataDirsOfHeaders(headers, snapshotVersion, prefixV)
+    if (exists) GraftTable.dataDirsFrom(headers, snapshotVersion)
     else Nil
   dataDirs.foreach(d => require(fs.exists(new Path(s"$dir/$d")),
     s"version $snapshotVersion's data dir $d has been garbage-collected (retention)"))
@@ -435,7 +432,7 @@ private[graft] class GraftSparkTable(spark: SparkSession, val dir: String,
         if (probes.isEmpty) None
         else scala.util.Try {
           val perDir =
-            GraftTable.perDirBlooms(fs, dir, snapshotVersion, prefixV)._1
+            GraftTable.perDirBlooms(fs, dir, snapshotVersion)._1
           // IN = union over the probed values; conjuncts (and distinct
           // probed columns) intersect below
           probes.map { case (c, vs) =>
@@ -1530,8 +1527,7 @@ private[graft] class GraftWriteBuilder(spark: SparkSession,
           : org.apache.spark.sql.connector.write.BatchWrite = {
         val fs = GraftTable.fsOf(spark, table.dir)
         val cur = GraftTable.currentVersion(fs, table.dir)
-        val staged = s"v${cur.map(_ + 1).getOrElse(0)}_" +
-          java.util.UUID.randomUUID().toString.take(8)
+        val staged = GraftTable.freshDir("v", cur.map(_ + 1).getOrElse(0))
         val stagingPath = s"${table.dir}/$staged"
         val innerTable = org.apache.spark.sql.execution.datasources.v2.parquet
           .ParquetTable(s"graft-stage:$stagingPath", spark, info.options(),
@@ -1879,7 +1875,7 @@ private[graft] class GraftMicroBatchStream(spark: SparkSession,
           "flat append histories; restart from " +
           s"startingVersion=${v + 1} past the partitioned prefix")
       val dirs =
-        if (v == 0) GraftTable.dataDirsOfHeaders(hdrs, 0, table.prefixV)
+        if (v == 0) GraftTable.dataDirsFrom(hdrs, 0)
         else hdrs.get("append").map(Seq(_)).getOrElse(sys.error(
           s"version $v of ${table.dir} is not an append commit — a " +
             "streaming read serves added files only (the Delta " +

@@ -10,7 +10,9 @@ import scala.jdk.CollectionConverters._
   * no jars in this offline sandbox; this is the testable core of their
   * semantics, built on plain Hadoop FS primitives). Layout under `dir`:
   *
-  *   <prefix><N>/          immutable data versions (parquet)
+  *   v<N>/, v<N>_<id>/     immutable data versions (parquet): the
+  *                         convention dir, or a writer-private one the
+  *                         commit file names
   *   manifest/commit_<N>   one file per committed version; its content
   *                         is the commit's metadata string
   *
@@ -32,11 +34,11 @@ import scala.jdk.CollectionConverters._
   * writers atomically (exactly one wins a version number, the loser
   * throws). The convention-path `stage`/`commit` pair additionally
   * assumes a single writer for DATA, because concurrent stagers share
-  * `$prefix$v`; `commitNextIsolated` removes that assumption with
+  * `v<N>`; `commitNextIsolated` removes that assumption with
   * writer-private data dirs named in the commit file, and `vacuum`
   * reclaims the orphans losers leave. `Round10Ops.incrementalDailyLoad`
-  * is the watermark-specialized instance (prefix "daily_v", metadata =
-  * the event-time frontier, retain = 1).
+  * is the watermark-specialized instance (metadata = the event-time
+  * frontier, retain = 1).
   */
 object GraftTable {
 
@@ -315,8 +317,7 @@ object GraftTable {
     * (head/terminator version match, dense line check) and degrades the
     * reader to per-file resolution, and the underscore name hides it
     * from Spark's file sources so `commitFeed` never sees it. Run it on
-    * demand or wire `checkpointEvery` into the streaming ingest path.
-    * Returns the checkpointed version. */
+    * demand or through `maintain`. Returns the checkpointed version. */
   def checkpoint(fs: FileSystem, dir: String): Int = {
     val cur = currentVersion(fs, dir).getOrElse(
       sys.error(s"nothing to checkpoint: no committed version under $dir"))
@@ -538,10 +539,6 @@ object GraftTable {
     parseCommit(commitContent(fs, dir, v))._1
   }
 
-  /** `dataDirsFrom` against parsed headers, for out-of-object readers. */
-  private[graft] def dataDirsOfHeaders(hdrs: Map[String, String], v: Int,
-      prefix: String = "v"): Seq[String] = dataDirsFrom(hdrs, v, prefix)
-
   /** (headers, metadata) split of a commit file's content: leading
     * reserved `key=value` lines are headers, the remainder is the
     * caller's metadata. `commit` rejects metadata that COULD be read
@@ -563,10 +560,9 @@ object GraftTable {
     * manifest is the source of truth for WHERE a version's data lives,
     * not a path convention (an isolated commit's writer-private dir is
     * recorded in its commit file; convention-path commits default to
-    * `$prefix$v`). */
-  def dataDirOf(fs: FileSystem, dir: String, v: Int,
-      prefix: String = "v"): String = {
-    val dirs = dataDirsOf(fs, dir, v, prefix)
+    * `v<N>`). */
+  def dataDirOf(fs: FileSystem, dir: String, v: Int): String = {
+    val dirs = dataDirsOf(fs, dir, v)
     // an append version references a dir LIST; returning the raw
     // comma-joined header here would hand callers a nonexistent path
     // that fails far from the cause — refuse loudly instead
@@ -580,17 +576,16 @@ object GraftTable {
     * the data= header as a comma-separated list — APPEND commits
     * reference every predecessor dir plus the one they added, so a
     * version stays one self-contained file set — defaulting to the
-    * conventional `$prefix$v`. Dir names never contain a comma (they
-    * are this format's own `$prefix${n}[_uuid]` / `dvN_uuid` /
+    * conventional `v<N>`. Dir names never contain a comma (they
+    * are this format's own `vN[_uuid]` / `dvN_uuid` /
     * `../sibling/...` forms). */
-  private def dataDirsFrom(hdrs: Map[String, String], v: Int,
-      prefix: String): Seq[String] =
-    hdrs.get("data").map(_.split(",").toSeq).getOrElse(Seq(s"$prefix$v"))
+  private[graft] def dataDirsFrom(hdrs: Map[String, String],
+      v: Int): Seq[String] =
+    hdrs.get("data").map(_.split(",").toSeq).getOrElse(Seq(s"v$v"))
 
   /** Public view of `dataDirsFrom` for version `v`. */
-  def dataDirsOf(fs: FileSystem, dir: String, v: Int,
-      prefix: String = "v"): Seq[String] =
-    dataDirsFrom(parseCommit(commitContent(fs, dir, v))._1, v, prefix)
+  def dataDirsOf(fs: FileSystem, dir: String, v: Int): Seq[String] =
+    dataDirsFrom(parseCommit(commitContent(fs, dir, v))._1, v)
 
   // ---- write-time schema compatibility --------------------------------------
 
@@ -1111,17 +1106,19 @@ object GraftTable {
     if (statsCols.isEmpty && bloomCols.isEmpty) (None, None)
     else {
       val files = writtenFiles(spark, dataPath)
+      // the files' columns as a scan reads them: partition columns come
+      // from the dir names
+      val fileSchema = StructType(schema.fields
+        .filterNot(f => partitionBy.contains(f.name))
+        .map(_.copy(nullable = true)))
       val stats =
         if (statsCols.isEmpty) None
         else (if (statsCols.map(_._1) == statsEnc.map(_._1))
             footerStats(files, schema, statsEnc) else None)
-          .orElse(Some(computeStats(spark, dataPath, statsCols)))
+          .orElse(Some(computeStats(spark, dataPath, fileSchema, statsCols)))
       val bloom =
         if (bloomCols.isEmpty) None
-        else Some(bloomHeader(buildBloomSidecar(spark, dataPath,
-          org.apache.spark.sql.types.StructType(schema.fields
-            .filterNot(f => partitionBy.contains(f.name))
-            .map(_.copy(nullable = true))),
+        else Some(bloomHeader(buildBloomSidecar(spark, dataPath, fileSchema,
           bloomCols, files.map(_.uri), files.map(_.rows).maxOption.getOrElse(0L))))
       (stats, bloom)
     }
@@ -1130,11 +1127,12 @@ object GraftTable {
     * data dir — the index step's fallback where footers cannot give
     * the ordinal exactly (`footerStats`). `statsCols` maps column
     * name → long-valued Column (the ordinal encoding above): one
-    * schema-inference job, then one grouped pass over the files. */
+    * grouped pass over the files, read under `schema` (no
+    * schema-inference job). */
   private[graft] def computeStats(spark: SparkSession, dataPath: String,
-      statsCols: StatsCols): TableStats = {
+      schema: StructType, statsCols: StatsCols): TableStats = {
     import org.apache.spark.sql.functions._
-    val df = spark.read.parquet(dataPath)
+    val df = spark.read.schema(schema).parquet(dataPath)
     // the declared ordinal must land as a LONG whatever width the
     // caller's expression returns (an int32 stat column would otherwise
     // surface Integer rows here) — the cast is exact for any integral
@@ -1211,8 +1209,8 @@ object GraftTable {
     * granularity), same as partition pruning. An empty read set yields
     * an empty frame with the version's schema. */
   def readStatsBand(spark: SparkSession, dir: String, v: Int, col: String,
-      lo: Long, hi: Long, prefix: String = "v"): (DataFrame, Seq[String], Int) =
-    readStatsRect(spark, dir, v, Seq((col, lo, hi)), prefix)
+      lo: Long, hi: Long): (DataFrame, Seq[String], Int) =
+    readStatsRect(spark, dir, v, Seq((col, lo, hi)))
 
   /** Version `v`'s parsed commit headers + stats, with guarded
     * failures a SQL user can act on: a clear error for a version that
@@ -1236,10 +1234,10 @@ object GraftTable {
     * `sink_zorder_clustered`'s footer-based proof. One commit-file
     * read resolves stats AND data dir. */
   def readStatsRect(spark: SparkSession, dir: String, v: Int,
-      bands: Seq[(String, Long, Long)], prefix: String = "v")
+      bands: Seq[(String, Long, Long)])
       : (DataFrame, Seq[String], Int) =
     readStatsBands(spark, dir, v,
-      bands.map { case (c, lo, hi) => RangeBand(c, lo, hi) }, prefix)
+      bands.map { case (c, lo, hi) => RangeBand(c, lo, hi) })
 
   /** The general log-skipping read: range bands AND nullability bands
     * (`IS NULL` / `IS NOT NULL` resolved from the recorded per-file
@@ -1252,11 +1250,11 @@ object GraftTable {
     * every file-granularity skip, the caller re-applies the predicate
     * row-level. */
   def readStatsBands(spark: SparkSession, dir: String, v: Int,
-      bands: Seq[Band], prefix: String = "v")
+      bands: Seq[Band])
       : (DataFrame, Seq[String], Int) = {
     val fs = fsOf(spark, dir)
     val (hdrs, st) = headersAndStats(fs, dir, v)
-    val dataDirs = dataDirsFrom(hdrs, v, prefix)
+    val dataDirs = dataDirsFrom(hdrs, v)
     // plain commits key stats by path RELATIVE to their one data dir;
     // append commits key by path relative to the TABLE dir, since one
     // stats line spans files from several data dirs (the marker header
@@ -1273,7 +1271,7 @@ object GraftTable {
       if (hit.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          readVersion(spark, dir, v, prefix).schema)
+          readVersion(spark, dir, v).schema)
       else
         // append chains are FLAT by construction (the gate refuses
         // index-bearing partitionBy predecessors), so no basePath is
@@ -1327,7 +1325,7 @@ object GraftTable {
     val hdrs = parseCommit(commitContent(fs, srcDir, sv))._1
     // every data dir the source's current version references (an append
     // version references its whole chain), each re-pointed through ../
-    val rel = dataDirsFrom(hdrs, sv, "v")
+    val rel = dataDirsFrom(hdrs, sv)
       .map(d => s"../$srcName/$d").mkString(",")
     // a dv-bearing source snapshot clones WITH its deletion vector —
     // the tombstone dir re-referenced through the same ../ indirection
@@ -1378,13 +1376,12 @@ object GraftTable {
     * UNCOMMITTED version: a committed version's data is immutable (it
     * is what snapshot isolation hands to in-flight readers), so staging
     * over it is refused loudly. */
-  def stage(df: DataFrame, dir: String, v: Int,
-      prefix: String = "v"): Unit = {
+  def stage(df: DataFrame, dir: String, v: Int): Unit = {
     val fs = fsOf(df.sparkSession, dir)
     require(!fs.exists(new Path(s"$dir/manifest/commit_$v")),
       s"version $v is already committed under $dir — committed data is " +
         "immutable; stage the NEXT version instead")
-    df.write.mode("overwrite").parquet(s"$dir/$prefix$v")
+    df.write.mode("overwrite").parquet(s"$dir/v$v")
   }
 
   /** Atomically commit staged version `v`: the metadata is written to a
@@ -1414,14 +1411,14 @@ object GraftTable {
     * caller into a futile re-stage loop). Then data dirs of versions
     * older than `v - retain` are garbage-collected — `retain` prior
     * versions stay readable for time travel and as a grace window for
-    * in-flight readers (production would add time-based retention). GC
+    * in-flight readers (time-based retention is `expireVersions`). GC
     * failure leaves garbage, never corruption. */
   def commit(fs: FileSystem, dir: String, v: Int, metadata: String,
-      retain: Int = Int.MaxValue, prefix: String = "v",
+      retain: Int = Int.MaxValue,
       dataDir: Option[String] = None, stats: Option[TableStats] = None,
       dv: Option[String] = None, appendDir: Option[String] = None,
       schema: Option[String] = None, tsMs: Option[Long] = None,
-      retainMs: Long = Long.MaxValue, partBy: Option[String] = None,
+      partBy: Option[String] = None,
       prevTs: Option[Long] = None, bloom: Option[String] = None,
       constraintsHdr: Option[String] = None,
       statenc: Option[String] = None,
@@ -1634,7 +1631,7 @@ object GraftTable {
       // table root — one referenced subdir must protect its whole root
       val keep = versions(fs, dir).filter(_ >= v - retain).flatMap { kv =>
         val hdrs = parseCommit(commitContent(fs, dir, kv))._1
-        (dataDirsFrom(hdrs, kv, prefix) ++
+        (dataDirsFrom(hdrs, kv) ++
           hdrs.get("dv").map(_.split(";", 2)(0)).toList ++
           hdrs.get("pdv").toList)
           .map(_.split('/').head)
@@ -1642,29 +1639,26 @@ object GraftTable {
       fs.listStatus(new Path(dir)).foreach { st =>
         val n = st.getPath.getName
         if (!keep.contains(n) &&
-            (dirVersion(n, prefix).exists(_ < v - retain) ||
+            (dirVersion(n, "v").exists(_ < v - retain) ||
               dirVersion(n, "dv").exists(_ < v - retain) ||
               dirVersion(n, "pdv").exists(_ < v - retain)))
           fs.delete(st.getPath, true)
       }
     }
-    // time-based retention composes with (or replaces) the count-based
-    // window: reclaim the data of versions whose commit instant has
-    // aged out, never the just-committed current version's. The expiry
-    // walk resolves headers through the manifest checkpoint when one
-    // exists — a long-lived table committing with retainMs should also
-    // checkpoint periodically (commitEpoch's checkpointEvery, or
-    // maintain()) or this per-commit walk degrades to O(versions) opens
-    if (retainMs != Long.MaxValue)
-      expireVersions(fs, dir, retainMs, prefix = prefix)
   }
 
-  /** Version encoded in a data-dir name: `$prefix$N` (convention) or
-    * `$prefix${N}_<uuid>` (isolated). None for anything else. */
-  private def dirVersion(name: String, prefix: String): Option[Int] =
-    if (!name.startsWith(prefix)) None
+  /** A fresh writer-private dir name of the given kind for version `v`
+    * — the `<kind>N_<id>` form `dirVersion` parses. */
+  private[graft] def freshDir(kind: String, v: Int): String =
+    s"$kind${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** Version encoded in a dir name of the given kind (`v` data, `dv`
+    * and `pdv` sidecars, `ep` epoch staging): `<kind>N` (convention) or
+    * `<kind>N_<id>` (isolated). None for anything else. */
+  private def dirVersion(name: String, kind: String): Option[Int] =
+    if (!name.startsWith(kind)) None
     else {
-      val tail = name.stripPrefix(prefix)
+      val tail = name.stripPrefix(kind)
       val digits = tail.takeWhile(_.isDigit)
       val rest = tail.drop(digits.length)
       if (digits.nonEmpty && (rest.isEmpty || rest.startsWith("_")))
@@ -1691,8 +1685,7 @@ object GraftTable {
     * schema gate runs BEFORE staging (see `schemaGate`) — a refused
     * write creates neither a version nor an orphan dir. */
   def commitNext(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "", retain: Int = Int.MaxValue,
-      prefix: String = "v", allowEvolution: Boolean = false): Int = {
+      metadata: String = "", allowEvolution: Boolean = false): Int = {
     val fs = fsOf(spark, dir)
     val cur = currentHeaders(fs, dir)
     schemaGate(cur.flatMap(_._2.get("schema")), df.schema, allowEvolution)
@@ -1702,8 +1695,8 @@ object GraftTable {
     val carried = carriedConstraints(cur)
     enforceConstraints(df, carried, "commit")
     val v = cur.map(_._1 + 1).getOrElse(0)
-    stage(df, dir, v, prefix)
-    commit(fs, dir, v, metadata, retain, prefix,
+    stage(df, dir, v)
+    commit(fs, dir, v, metadata,
       schema = Some(schemaEncode(df.schema)), prevTs = prevTsOf(cur),
       constraintsHdr =
         if (carried.isEmpty) None else Some(constraintsEncode(carried)))
@@ -1719,11 +1712,11 @@ object GraftTable {
 
   /** The manifest-resolved CURRENT snapshot — the only sanctioned latest
     * read; never point a reader at a data dir directly. */
-  def read(spark: SparkSession, dir: String, prefix: String = "v"): DataFrame = {
+  def read(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
     val v = currentVersion(fs, dir)
       .getOrElse(sys.error(s"no committed version under $dir"))
-    readVersion(spark, dir, v, prefix)
+    readVersion(spark, dir, v)
   }
 
   /** Tombstone row count of a DV dir from its parquet FOOTERS —
@@ -1811,14 +1804,14 @@ object GraftTable {
     * already decided largeness) skips both the hint and the footer
     * probe. */
   def readVersion(spark: SparkSession, dir: String, v: Int,
-      prefix: String = "v", dvBroadcastHint: Boolean = true): DataFrame = {
+      dvBroadcastHint: Boolean = true): DataFrame = {
     val fs = fsOf(spark, dir)
     require(fs.exists(new Path(s"$dir/manifest/commit_$v")),
       s"version $v was never committed under $dir")
     val hdrs = parseCommit(commitContent(fs, dir, v))._1
     // one dir for plain versions; an append version's full dir list —
     // every dir must still exist for the version to be readable
-    val dataDirs = dataDirsFrom(hdrs, v, prefix)
+    val dataDirs = dataDirsFrom(hdrs, v)
     dataDirs.foreach(data =>
       require(fs.exists(new Path(s"$dir/$data")),
         s"version $v's data has been garbage-collected (retention)"))
@@ -1887,7 +1880,7 @@ object GraftTable {
       // the merge-on-read cost is one sorted-array probe per row, not an
       // anti-join. `conform` is a no-op here: the read binds schema=
       case Some(_) =>
-        pdvLiveRows(spark, fs, dir, v, pdvHead(fs, dir, v, hdrs, prefix),
+        pdvLiveRows(spark, fs, dir, v, pdvHead(fs, dir, v, hdrs),
           declared)
       case None => hdrs.get("dv") match {
       case Some(spec) if spec.endsWith(";scoped") =>
@@ -1959,9 +1952,9 @@ object GraftTable {
     * dir — the multi-writer-safe commit path. The convention-path
     * `stage`/`commit` pair is safe under the documented single-writer
     * assumption, but two CONCURRENT writers staging the same version
-    * number share `$prefix$v`, so the commit winner could publish a dir
+    * number share `v<N>`, so the commit winner could publish a dir
     * the loser half-overwrote. Here each writer stages to
-    * `$prefix${v}_<uuid>` (nobody else ever writes there) and the
+    * `v<N>_<id>` (nobody else ever writes there) and the
     * commit file NAMES the dir — manifest-as-source-of-truth, the way
     * Delta/Iceberg name data files rather than trusting a path
     * convention. The loser's commit throws
@@ -1970,8 +1963,7 @@ object GraftTable {
     * Re-staging on retry is the caller's job: a merge's content depends
     * on the snapshot it lost against. */
   def commitNextIsolated(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "", retain: Int = Int.MaxValue,
-      prefix: String = "v", partitionBy: Seq[String] = Nil,
+      metadata: String = "", partitionBy: Seq[String] = Nil,
       statsCols: StatsCols = Nil, allowEvolution: Boolean = false,
       bloomCol: Option[String] = None, constraints: Seq[String] = Nil,
       dropConstraints: Boolean = false,
@@ -1983,12 +1975,12 @@ object GraftTable {
     val fs = fsOf(spark, dir)
     val cur = currentHeaders(fs, dir)
     // OCC pin for callers whose snapshot/headers were resolved earlier
-    // (the SQL CoW DML and MERGE doors): the commit below targets
-    // exactly expectVersion + 1, so an interleaved commit either fails
-    // this check or loses the atomic publish — a lost update can never
-    // be silent
+    // (the SQL CoW DML and MERGE doors, `commitWithRetry`; -1 pins an
+    // empty table): the commit below targets exactly expectVersion + 1,
+    // so an interleaved commit either fails this check or loses the
+    // atomic publish — a lost update can never be silent
     expectVersion.foreach(ev =>
-      if (!cur.map(_._1).contains(ev))
+      if (cur.map(_._1).getOrElse(-1) != ev)
         throw new java.util.ConcurrentModificationException(
           s"snapshot was resolved at version $ev of $dir but the head " +
             s"is now ${cur.map(_._1).getOrElse(-1)} — re-read and retry"))
@@ -2062,7 +2054,7 @@ object GraftTable {
           .sortWithinPartitions((partitionBy ++ sortWithin).map(col): _*)
       }
     val v = cur.map(_._1 + 1).getOrElse(0)
-    val data = s"$prefix${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val data = freshDir("v", v)
     val w = effDf.write.mode("errorifexists")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(s"$dir/$data")
@@ -2071,7 +2063,7 @@ object GraftTable {
     // files it describes — through clones, retention, and data= renames
     val (st, bl) = indexWrittenDir(spark, s"$dir/$data", effDf.schema,
       partitionBy, effStatsCols, statsEnc, (bloomCol.toSeq ++ bloomCols).distinct)
-    commit(fs, dir, v, metadata, retain, prefix, dataDir = Some(data),
+    commit(fs, dir, v, metadata, dataDir = Some(data),
       stats = st, schema = Some(schemaEncode(df.schema)),
       partBy =
         if (partitionBy.nonEmpty) Some(partitionBy.mkString(",")) else None,
@@ -2148,12 +2140,12 @@ object GraftTable {
     * Refuses when v's data has been retention-reclaimed. Served to SQL
     * as `graft_restore('<dir>', v)`. Returns the new version. */
   def restoreVersion(spark: SparkSession, dir: String, v: Int,
-      metadata: String = "", prefix: String = "v"): Int = {
+      metadata: String = ""): Int = {
     val fs = fsOf(spark, dir)
     val (cur, curHdrs) = currentHeaders(fs, dir).getOrElse(
       sys.error(s"no committed version under $dir to restore"))
     val hdrs = headersOf(fs, dir, v)
-    val dirs = dataDirsFrom(hdrs, v, prefix)
+    val dirs = dataDirsFrom(hdrs, v)
     dirs.foreach(dd => require(fs.exists(new Path(s"$dir/$dd")),
       s"version $v's data dir $dd has been garbage-collected " +
         "(retention) — it can no longer be restored"))
@@ -2168,7 +2160,6 @@ object GraftTable {
     val nv = cur + 1
     commit(fs, dir, nv,
       if (metadata.isEmpty) s"RESTORE VERSION AS OF $v" else metadata,
-      prefix = prefix,
       dataDir = Some(dirs.mkString(",")),
       dv = hdrs.get("dv"),
       pdvHdr = hdrs.get("pdv"),
@@ -2308,7 +2299,7 @@ object GraftTable {
     * to DV-free reads. */
   def commitDeleteVector(spark: SparkSession, dir: String,
       tombstones: DataFrame, keyCols: Seq[String], metadata: String = "",
-      prefix: String = "v", expectVersion: Option[Int] = None): Int = {
+      expectVersion: Option[Int] = None): Int = {
     require(keyCols.nonEmpty, "deletion vector needs at least one key column")
     val fs = fsOf(spark, dir)
     // pinned for callers whose tombstones were computed on a specific
@@ -2319,9 +2310,9 @@ object GraftTable {
     // resolve through the ONE sanctioned multi-dir accessor (not a raw
     // header read): round-trips byte-identically today, and keeps this
     // path correct if the data= encoding ever changes
-    val data = dataDirsFrom(hdrs, cur, prefix).mkString(",")
+    val data = dataDirsFrom(hdrs, cur).mkString(",")
     val v = cur + 1
-    val dvDir = s"dv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val dvDir = freshDir("dv", v)
     import org.apache.spark.sql.functions.col
     val fresh = tombstones.select(keyCols.map(col): _*).distinct()
     val (full, scoped) = hdrs.get("dv") match {
@@ -2330,7 +2321,7 @@ object GraftTable {
         // EVERYWHERE, so the fresh keys expand across every current
         // dir basename and union into the scoped pair set
         import spark.implicits._
-        val basenamesDf = dataDirsFrom(hdrs, cur, prefix)
+        val basenamesDf = dataDirsFrom(hdrs, cur)
           .map(dirBasename).toDF("__dir")
         val prev = readDvSidecar(spark, s"$dir/${spec.split(";", 3)(0)}",
           declaredSchemaOf(hdrs), keyCols, scoped = true)
@@ -2345,7 +2336,7 @@ object GraftTable {
     // the data is untouched, so the predecessor's recorded schema (and
     // layout marker) ride along — without them the NEXT commit would
     // skip the gate / a later append would miss the partition refusal
-    commit(fs, dir, v, metadata, prefix = prefix, dataDir = Some(data),
+    commit(fs, dir, v, metadata, dataDir = Some(data),
       dv = Some(s"$dvDir;${keyCols.mkString(",")}" +
         (if (scoped) ";scoped" else "")),
       schema = hdrs.get("schema"), partBy = hdrs.get("partby"),
@@ -2399,8 +2390,8 @@ object GraftTable {
   }
 
   private def pdvHead(fs: FileSystem, dir: String, v: Int,
-      hdrs: Map[String, String], prefix: String): PdvHead = {
-    val dataDirs = dataDirsFrom(hdrs, v, prefix)
+      hdrs: Map[String, String]): PdvHead = {
+    val dataDirs = dataDirsFrom(hdrs, v)
     val sidecar = hdrs.get("pdv")
     PdvHead(dataDirs, dataDirs.flatMap(d => dataFilesIn(fs, new Path(s"$dir/$d"))),
       sidecar, sidecar.fold(Set.empty[String])(pd => pdvSkips(fs, s"$dir/$pd")))
@@ -2473,7 +2464,7 @@ object GraftTable {
       case (None, None) => sys.error(s"version ${v - 1} of $dir has no " +
         "live file and no sidecar — nothing to delete from")
     }
-    val pdvDir = s"pdv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val pdvDir = freshDir("pdv", v)
     full.write.partitionBy("__file").mode("errorifexists")
       .parquet(s"$dir/$pdvDir")
     val counts = freshCounts.fold(
@@ -2531,11 +2522,11 @@ object GraftTable {
     * sidecar write and `_skips` reconciliation are `writePdv`'s. */
   def commitPositionalDelete(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column, metadata: String = "",
-      prefix: String = "v", expectVersion: Option[Int] = None): Int = {
+      expectVersion: Option[Int] = None): Int = {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, dir)
     val (cur, hdrs) = gateMor(fs, dir, positionalDeleteDoor, expectVersion)
-    val head = pdvHead(fs, dir, cur, hdrs, prefix)
+    val head = pdvHead(fs, dir, cur, hdrs)
     // files the previous sidecar's _skips manifest marks FULLY deleted
     // never enter the predicate scan (round-21): every one of their
     // positions is already in the cumulative sidecar, so re-matching
@@ -2554,7 +2545,7 @@ object GraftTable {
         .select(pdvFileName.as("__file"), col("_metadata.row_index").as("__pos")))
     val v = cur + 1
     val pdvDir = writePdv(spark, fs, dir, v, head, fresh, freshCounts = None)
-    commit(fs, dir, v, metadata, prefix = prefix,
+    commit(fs, dir, v, metadata,
       dataDir = Some(head.dataDirs.mkString(",")),
       pdvHdr = Some(pdvDir),
       schema = hdrs.get("schema"),
@@ -2569,9 +2560,8 @@ object GraftTable {
     * table to probe-free reads and re-opening the rewrite doors
     * (compaction, appends, indexes) that refuse a pdv head. */
   def purgePositionalDv(spark: SparkSession, dir: String,
-      metadata: String = "PURGE POSITIONAL DELETION VECTOR",
-      prefix: String = "v"): Int =
-    purgeHead(spark, dir, metadata, prefix, positional = true)
+      metadata: String = "PURGE POSITIONAL DELETION VECTOR"): Int =
+    purgeHead(spark, dir, metadata, positional = true)
 
   /** POSITIONAL merge-on-read UPDATE (VERDICT r19 item 4): tombstone the
     * matched rows by (file, row position) and stage their replacements
@@ -2601,13 +2591,12 @@ object GraftTable {
   def commitPositionalUpdate(spark: SparkSession, dir: String,
       condition: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
-      metadata: String = "", prefix: String = "v",
-      expectVersion: Option[Int] = None): Int = {
+      metadata: String = "", expectVersion: Option[Int] = None): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(sets.nonEmpty, "UPDATE needs at least one SET assignment")
     val fs = fsOf(spark, dir)
     val (cur, hdrs) = gateMor(fs, dir, positionalUpdateDoor, expectVersion)
-    val head = pdvHead(fs, dir, cur, hdrs, prefix)
+    val head = pdvHead(fs, dir, cur, hdrs)
     // LIVE rows with physical identity: a dead row must neither re-match
     // nor resurrect through a fresh replacement
     val live = pdvLiveRows(spark, fs, dir, cur, head, declaredSchemaOf(hdrs))
@@ -2708,10 +2697,10 @@ object GraftTable {
     val matchedRows = freshCounts.values.sum
     val replTasks = math.max(1L, math.min(Int.MaxValue.toLong,
       (matchedRows + rowsPerTask - 1) / rowsPerTask)).toInt
-    val repl = s"$prefix${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val repl = freshDir("v", v)
     replacements.coalesce(replTasks).write.mode("errorifexists")
       .parquet(s"$dir/$repl")
-    commit(fs, dir, v, metadata, prefix = prefix,
+    commit(fs, dir, v, metadata,
       dataDir = Some((head.dataDirs :+ repl).mkString(",")),
       pdvHdr = Some(pdvDir),
       schema = hdrs.get("schema"),
@@ -2738,8 +2727,7 @@ object GraftTable {
     * Returns the new version. */
   def commitAddColumns(spark: SparkSession, dir: String,
       cols: Seq[(String, String)],
-      metadata: String = "ALTER TABLE ADD COLUMNS",
-      prefix: String = "v"): Int = {
+      metadata: String = "ALTER TABLE ADD COLUMNS"): Int = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
     val fs = fsOf(spark, dir)
     val cur = currentVersion(fs, dir).getOrElse(
@@ -2759,12 +2747,12 @@ object GraftTable {
       org.apache.spark.sql.types.DataType.fromDDL(t)
     }
     val v = cur + 1
-    commit(fs, dir, v, metadata, prefix = prefix,
+    commit(fs, dir, v, metadata,
       // resolve through the ONE sanctioned accessor, not a raw header
       // copy: a convention-path predecessor (commitNext) has no data=
       // header, and copying None would point this version at a
       // nonexistent conventional dir — the commitDeleteVector rule
-      dataDir = Some(dataDirsFrom(hdrs, cur, prefix).mkString(",")),
+      dataDir = Some(dataDirsFrom(hdrs, cur).mkString(",")),
       dv = hdrs.get("dv"),
       pdvHdr = hdrs.get("pdv"),
       // new columns land BEFORE the partition columns: every reader
@@ -2907,8 +2895,7 @@ object GraftTable {
     * values). Returns the new version. */
   def commitRenameColumns(spark: SparkSession, dir: String,
       renames: Seq[(String, String)],
-      metadata: String = "ALTER TABLE RENAME COLUMN",
-      prefix: String = "v"): Int = {
+      metadata: String = "ALTER TABLE RENAME COLUMN"): Int = {
     require(renames.nonEmpty, "RENAME COLUMN needs at least one rename")
     val fs = fsOf(spark, dir)
     val cur = currentVersion(fs, dir).getOrElse(
@@ -2959,8 +2946,8 @@ object GraftTable {
         (newName, prevMap.getOrElse(oldName, oldName))
     }
     val v = cur + 1
-    commit(fs, dir, v, metadata, prefix = prefix,
-      dataDir = Some(dataDirsFrom(hdrs, cur, prefix).mkString(",")),
+    commit(fs, dir, v, metadata,
+      dataDir = Some(dataDirsFrom(hdrs, cur).mkString(",")),
       schema = Some(newSchema.map { case (n, t) =>
         s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(",")),
       partBy = hdrs.get("partby"),
@@ -2977,8 +2964,7 @@ object GraftTable {
     * column-mapping drop. Same refusal envelope as RENAME; partition
     * columns cannot drop. Returns the new version. */
   def commitDropColumns(spark: SparkSession, dir: String,
-      cols: Seq[String], metadata: String = "ALTER TABLE DROP COLUMN",
-      prefix: String = "v"): Int = {
+      cols: Seq[String], metadata: String = "ALTER TABLE DROP COLUMN"): Int = {
     require(cols.nonEmpty, "DROP COLUMN needs at least one column")
     val fs = fsOf(spark, dir)
     val cur = currentVersion(fs, dir).getOrElse(
@@ -3009,8 +2995,8 @@ object GraftTable {
     val newMap = newSchema.map { case (n, _) =>
       (n, prevMap.getOrElse(n, n)) }
     val v = cur + 1
-    commit(fs, dir, v, metadata, prefix = prefix,
-      dataDir = Some(dataDirsFrom(hdrs, cur, prefix).mkString(",")),
+    commit(fs, dir, v, metadata,
+      dataDir = Some(dataDirsFrom(hdrs, cur).mkString(",")),
       schema = Some(newSchema.map { case (n, t) =>
         s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(",")),
       partBy = hdrs.get("partby"),
@@ -3047,13 +3033,13 @@ object GraftTable {
   def commitUpdate(spark: SparkSession, dir: String, keyCols: Seq[String],
       cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
-      metadata: String = "", prefix: String = "v"): Int = {
+      metadata: String = ""): Int = {
     require(keyCols.nonEmpty, "commitUpdate needs at least one key column")
     require(sets.nonEmpty, "commitUpdate needs at least one SET column")
     sets.foreach { case (c, _) => require(!keyCols.contains(c),
       s"cannot SET key column '$c' — keys are the update's identity; " +
         "re-key via a rewrite commit instead") }
-    commitUpdateImpl(spark, dir, Some(keyCols), cond, sets, metadata, prefix)
+    commitUpdateImpl(spark, dir, Some(keyCols), cond, sets, metadata)
   }
 
   /** The MoR-update engine behind both doors. `keyColsOpt = None` is
@@ -3069,12 +3055,11 @@ object GraftTable {
       keyColsOpt: Option[Seq[String]],
       cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
-      metadata: String = "", prefix: String = "v",
-      expectVersion: Option[Int] = None): Int = {
+      metadata: String = "", expectVersion: Option[Int] = None): Int = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val fs = fsOf(spark, dir)
     val (cur, hdrs) = gateMor(fs, dir, keyUpdateDoor, expectVersion)
-    val dataDirs = dataDirsFrom(hdrs, cur, prefix)
+    val dataDirs = dataDirsFrom(hdrs, cur)
     import spark.implicits._
     val basenamesDf = dataDirs.map(dirBasename).toDF("__dir")
 
@@ -3150,12 +3135,12 @@ object GraftTable {
     val fullTombs = prevTombs.fold(newTombs)(p =>
       p.select((keyCols :+ "__dir").map(col): _*)
         .unionByName(newTombs).distinct())
-    val dvDir = s"dv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val dvDir = freshDir("dv", v)
     fullTombs.write.mode("errorifexists").parquet(s"$dir/$dvDir")
-    val upd = s"$prefix${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val upd = freshDir("v", v)
     replacements.write.mode("errorifexists").parquet(s"$dir/$upd")
 
-    commit(fs, dir, v, metadata, prefix = prefix,
+    commit(fs, dir, v, metadata,
       dataDir = Some((dataDirs :+ upd).mkString(",")),
       dv = Some(s"$dvDir;${keyCols.mkString(",")};scoped"),
       updateDir = Some(upd),
@@ -3172,22 +3157,22 @@ object GraftTable {
     * again. The moment to pay the CoW cost — once, when DVs have
     * accumulated — instead of at every delete. */
   def purgeDeleteVector(spark: SparkSession, dir: String,
-      metadata: String = "purge deletion vector", prefix: String = "v"): Int =
-    purgeHead(spark, dir, metadata, prefix, positional = false)
+      metadata: String = "purge deletion vector"): Int =
+    purgeHead(spark, dir, metadata, positional = false)
 
   /** The ONE purge body: resolve the head once, read exactly that
     * version and commit its survivors pinned to it — a commit landing
     * in between (a DELETE, say) fails the pin instead of being silently
     * undone by a rewrite of the older snapshot. */
   private def purgeHead(spark: SparkSession, dir: String, metadata: String,
-      prefix: String, positional: Boolean): Int = {
+      positional: Boolean): Int = {
     val fs = fsOf(spark, dir)
     val cur = currentVersion(fs, dir).getOrElse(
       sys.error(s"no committed version under $dir to purge"))
     if (positional) require(headersOf(fs, dir, cur).contains("pdv"),
       s"version $cur of $dir carries no positional deletion vector")
-    commitNextIsolated(spark, dir, readVersion(spark, dir, cur, prefix),
-      metadata, prefix = prefix, expectVersion = Some(cur))
+    commitNextIsolated(spark, dir, readVersion(spark, dir, cur),
+      metadata, expectVersion = Some(cur))
   }
 
   /** Bounded serializable-OCC retry shared by EVERY commit door. Runs
@@ -3227,11 +3212,15 @@ object GraftTable {
     sys.error("unreachable")
   }
 
+  /** The attempt bound of every retrying door. */
+  private[graft] val occAttempts = 10
+
   /** The OCC commit LOOP the commit doc prescribes: read the current
     * snapshot, apply the caller's `transform` to it (None when the table
-    * has no version yet), stage writer-private, attempt the commit; on
-    * losing the race (ConcurrentModificationException) re-read the NEW
-    * current snapshot, re-apply, re-stage, retry — so two writers with
+    * has no version yet) and commit the result through
+    * `commitNextIsolated` pinned to the version read; on losing the race
+    * (ConcurrentModificationException) re-read the NEW current
+    * snapshot, re-apply, re-stage, retry — so two writers with
     * COMMUTING changes (e.g. merges of disjoint changelogs) BOTH land
     * instead of the loser failing outright. This is Delta's
     * write-conflict retry in its simplest honest form: re-execution of
@@ -3242,29 +3231,16 @@ object GraftTable {
     * Returns the committed version number. */
   def commitWithRetry(spark: SparkSession, dir: String,
       transform: Option[DataFrame] => DataFrame, metadata: String = "",
-      maxAttempts: Int = 10, retain: Int = Int.MaxValue,
-      prefix: String = "v", allowEvolution: Boolean = false): Int =
-    retryOnConflict(maxAttempts) { _ =>
-      val fs = fsOf(spark, dir)
-      val cur = currentHeaders(fs, dir)
-      val out = transform(cur.map { case (v, _) =>
-        readVersion(spark, dir, v, prefix)
-      })
-      // gate against the snapshot this attempt read — before the write,
-      // so a refused schema stages nothing; declared constraints
-      // likewise (re-read per attempt: the race winner may have
-      // declared or dropped them)
-      schemaGate(cur.flatMap(_._2.get("schema")), out.schema, allowEvolution)
-      val carried = carriedConstraints(cur)
-      enforceConstraints(out, carried, "commit")
-      val v = cur.map(_._1 + 1).getOrElse(0)
-      val data = s"$prefix${v}_${java.util.UUID.randomUUID().toString.take(8)}"
-      out.write.mode("errorifexists").parquet(s"$dir/$data")
-      commit(fs, dir, v, metadata, retain, prefix, dataDir = Some(data),
-        schema = Some(schemaEncode(out.schema)), prevTs = prevTsOf(cur),
-        constraintsHdr =
-          if (carried.isEmpty) None else Some(constraintsEncode(carried)))
-      v
+      allowEvolution: Boolean = false): Int =
+    retryOnConflict(occAttempts) { _ =>
+      val cur = currentVersion(fsOf(spark, dir), dir)
+      // the pin makes a commit landing after this read a conflict, and
+      // the retry re-runs the transform against the winner's snapshot;
+      // the gate and the carried constraints re-check per attempt
+      commitNextIsolated(spark, dir,
+        transform(cur.map(v => readVersion(spark, dir, v))), metadata,
+        allowEvolution = allowEvolution,
+        expectVersion = Some(cur.getOrElse(-1)))
     }
 
   /** APPEND-ONLY OCC commit: write `df`'s rows ONCE to a writer-private
@@ -3305,8 +3281,7 @@ object GraftTable {
     * compact-every-100-appends cadence the commit file stays KB-scale
     * while appends stay O(new data). Returns the version. */
   def commitAppendWithRetry(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "", maxAttempts: Int = 10,
-      retain: Int = Int.MaxValue, prefix: String = "v",
+      metadata: String = "", maxAttempts: Int = occAttempts,
       statsCols: StatsCols = Nil, bloomCol: Option[String] = None,
       bloomCols: Seq[String] = Nil,
       statsEnc: Seq[(String, String)] = Nil): Int = {
@@ -3319,16 +3294,15 @@ object GraftTable {
     // rows (the chain's old rows were validated by their own commits).
     val cur0 = currentHeaders(fsOf(spark, dir), dir)
     gateStaged(cur0, df.schema, door)
-    enforceCarried(spark, dir, df, cur0, "append", prefix)
+    enforceCarried(spark, dir, df, cur0, "append")
     // stage ONCE: the dir name carries the version seen at stage time;
     // on a lost race the same dir is re-referenced under the winner's
     // successor number (dirVersion still parses it for vacuum/GC — and
     // the name can never collide with the live chain, which only grows)
-    val added = s"$prefix${cur0.map(_._1 + 1).getOrElse(0)}_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val added = freshDir("v", cur0.map(_._1 + 1).getOrElse(0))
     df.write.mode("errorifexists").parquet(s"$dir/$added")
     publishStaged(spark, dir, added, df.schema, door, metadata, maxAttempts,
-      retain, prefix, pregated = Some(cur0)).get
+      pregated = Some(cur0)).get
   }
 
   /** Merged stats line for an append commit, table-relative keys: the
@@ -3336,8 +3310,7 @@ object GraftTable {
     * re-keyed by ITS dir unless it was an append version (already
     * table-relative). */
   private def mergeAppendStats(ns: TableStats, added: String,
-      cur: Option[(Int, Map[String, String])], prefix: String)
-      : TableStats = {
+      cur: Option[(Int, Map[String, String])]): TableStats = {
     val mine = ns.files.map(f => f.copy(file = s"$added/${f.file}"))
     cur match {
       case Some((c, h)) =>
@@ -3349,7 +3322,7 @@ object GraftTable {
         val prevRel =
           if (h.contains("append") || h.contains("statrel")) prev.files
           else {
-            val pd = dataDirsFrom(h, c, prefix).head
+            val pd = dataDirsFrom(h, c).head
             prev.files.map(f => f.copy(file = s"$pd/${f.file}"))
           }
         TableStats(ns.cols, prevRel ++ mine)
@@ -3361,12 +3334,11 @@ object GraftTable {
     * (a lost race surfaces as ConcurrentModificationException for the
     * caller's own loop). */
   def commitAppend(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "", retain: Int = Int.MaxValue,
-      prefix: String = "v", statsCols: StatsCols = Nil,
+      metadata: String = "", statsCols: StatsCols = Nil,
       bloomCol: Option[String] = None, bloomCols: Seq[String] = Nil,
       statsEnc: Seq[(String, String)] = Nil): Int =
     commitAppendWithRetry(spark, dir, df, metadata, maxAttempts = 1,
-      retain, prefix, statsCols, bloomCol, bloomCols, statsEnc)
+      statsCols, bloomCol, bloomCols, statsEnc)
 
   /** Where a staged write's per-file index comes from. */
   private[graft] sealed trait StagedIndex
@@ -3577,12 +3549,12 @@ object GraftTable {
     * constraints the new version carries. */
   private def enforceCarried(spark: SparkSession, dir: String,
       rows: DataFrame, cur: Option[(Int, Map[String, String])],
-      context: String, prefix: String): Seq[String] = {
+      context: String): Seq[String] = {
     val carried = carriedConstraints(cur)
     enforceConstraints(rows, carried, context,
       existing =
         if (context == "append" && carried.exists(_.startsWith("unique:")))
-          cur.map { case (c, _) => readVersion(spark, dir, c, prefix) }
+          cur.map { case (c, _) => readVersion(spark, dir, c) }
         else None)
     carried
   }
@@ -3591,10 +3563,10 @@ object GraftTable {
     * cleanup of a refused or failed write. A failure AFTER the manifest
     * publish (in retention GC, say) keeps the dir: the version reads
     * it. */
-  private def dropUnpublished(fs: FileSystem, dir: String, staged: String,
-      prefix: String): Unit =
+  private def dropUnpublished(fs: FileSystem, dir: String,
+      staged: String): Unit =
     if (!scala.util.Try(currentHeaders(fs, dir).exists { case (c, h) =>
-        dataDirsFrom(h, c, prefix).contains(staged) }).getOrElse(true))
+        dataDirsFrom(h, c).contains(staged) }).getOrElse(true))
       try fs.delete(new Path(s"$dir/$staged"), true)
       catch { case _: java.io.IOException => () }
 
@@ -3621,8 +3593,8 @@ object GraftTable {
     * refused or exhausted publish drops the staged dir. */
   private def publishStaged(spark: SparkSession, dir: String,
       staged: String, schema: StructType, door: StagedDoor,
-      metadata: String, maxAttempts: Int = 10, retain: Int = Int.MaxValue,
-      prefix: String = "v", partBy: Seq[String] = Nil,
+      metadata: String, maxAttempts: Int = occAttempts,
+      partBy: Seq[String] = Nil,
       pregated: Option[Option[(Int, Map[String, String])]] = None,
       replayed: () => Boolean = () => false,
       beforePublish: () => Unit = () => ()): Option[Int] = {
@@ -3648,7 +3620,7 @@ object GraftTable {
                 validateBucketInvariant(rows, n, keyCol, bCol)
             }
             enforceCarried(spark, dir, rows, cur,
-              if (door.append) "append" else "commit", prefix)
+              if (door.append) "append" else "commit")
           }
         val (statsCols, enc, bloom) = (door.index, cur) match {
           case (DeclaredIndex(s, e, b), _) => (s, e, b)
@@ -3664,10 +3636,10 @@ object GraftTable {
             s"$dir/$staged", schema, partBy, statsCols, enc, bloom))
         val v = cur.map(_._1 + 1).getOrElse(0)
         val prevDirs = if (!door.append) Nil
-          else cur.map { case (c, h) => dataDirsFrom(h, c, prefix) }
+          else cur.map { case (c, h) => dataDirsFrom(h, c) }
             .getOrElse(Nil)
         beforePublish()
-        commit(fs, dir, v, metadata, retain, prefix,
+        commit(fs, dir, v, metadata,
           dataDir = Some((prevDirs :+ staged).mkString(",")),
           appendDir =
             if (door.append && (cur.isDefined || door.markCreate)) Some(staged)
@@ -3678,7 +3650,7 @@ object GraftTable {
           // (it IS the new version)
           stats =
             if (!door.append) newStats
-            else newStats.map(mergeAppendStats(_, staged, cur, prefix)),
+            else newStats.map(mergeAppendStats(_, staged, cur)),
           bloom = newBloom,
           statenc =
             if (enc.isEmpty || newStats.isEmpty) None
@@ -3689,7 +3661,7 @@ object GraftTable {
         Some(v)
     } catch {
       case e: Throwable =>
-        dropUnpublished(fs, dir, staged, prefix)
+        dropUnpublished(fs, dir, staged)
         throw e
     }
   }
@@ -3701,8 +3673,7 @@ object GraftTable {
     * full overwrite. A refusal deletes the staging dir: the failed
     * write is invisible to readers. */
   private[graft] def commitStagedDsv2(spark: SparkSession, dir: String,
-      staged: String, schema: StructType,
-      append: Boolean, maxAttempts: Int = 10): Unit = {
+      staged: String, schema: StructType, append: Boolean): Unit = {
     val fs = fsOf(spark, dir)
     // PARTITION RELAYOUT: a partitionBy target re-stages the flat
     // parquet job's output partitionBy-shaped from the RECORDED columns
@@ -3725,8 +3696,7 @@ object GraftTable {
         shaped
       }
     publishStaged(spark, dir, effStaged, schema, dsv2Door(append),
-      if (append) "dsv2 append" else "dsv2 overwrite", maxAttempts,
-      partBy = partBy)
+      if (append) "dsv2 append" else "dsv2 overwrite", partBy = partBy)
     ()
   }
 
@@ -3775,8 +3745,7 @@ object GraftTable {
     * replacement would be undefined. Returns the committed version. */
   def replacePartitionsWithRetry(spark: SparkSession, dir: String,
       partCol: String, transform: Option[DataFrame] => DataFrame,
-      metadata: String = "", maxAttempts: Int = 10,
-      prefix: String = "v"): Int = {
+      metadata: String = ""): Int = {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, dir)
     val safe = "[A-Za-z0-9_.-]+".r
@@ -3799,7 +3768,7 @@ object GraftTable {
     /** Evaluate + stage once: (written values, staged root, schema). */
     def stageOnce(cur: Option[(Int, Map[String, String])])
         : (Seq[String], String, org.apache.spark.sql.types.StructType) = {
-      val snap = cur.map { case (v, _) => readVersion(spark, dir, v, prefix) }
+      val snap = cur.map { case (v, _) => readVersion(spark, dir, v) }
       val df = transform(snap)
       require(df.columns.contains(partCol),
         s"replacement rows must carry the partition column '$partCol'")
@@ -3824,7 +3793,7 @@ object GraftTable {
         enforceConstraints(df, carried, "replacePartitions", existing)
       }
       val v0 = cur.map(_._1 + 1).getOrElse(0)
-      val root = s"$prefix${v0}_${java.util.UUID.randomUUID().toString.take(8)}"
+      val root = freshDir("v", v0)
       // ONE job whatever the partition count: the duplicate __p column
       // drives the subdir layout and is excluded from the files, so
       // every entry dir reads back with the original schema intact
@@ -3836,7 +3805,7 @@ object GraftTable {
 
     var cur = currentHeaders(fs, dir)
     var (w, root, schema) = stageOnce(cur)
-    retryOnConflict[Int](maxAttempts, onConflict = (_, _) => {
+    retryOnConflict[Int](occAttempts, onConflict = (_, _) => {
       val base = cur.map(_._1).getOrElse(-1)
       val newCur = currentHeaders(fs, dir)
       val carried = carriedConstraints(newCur)
@@ -3874,7 +3843,7 @@ object GraftTable {
       val newMap = (prevMap -- w) ++ w.map(v => v -> s"$root/__p=$v")
       val entries = newMap.toSeq.sortBy(_._1).map(_._2)
       val v = cur.map(_._1 + 1).getOrElse(0)
-      commit(fs, dir, v, metadata, prefix = prefix,
+      commit(fs, dir, v, metadata,
         dataDir = Some(entries.mkString(",")),
         schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur),
         constraintsHdr = cur.flatMap(_._2.get("constraints")),
@@ -3898,9 +3867,7 @@ object GraftTable {
     * O(non-epoch suffix), never a full history scan — and never data.
     * Returns the committed version, or None for a detected replay. */
   def commitEpoch(spark: SparkSession, dir: String, epochId: Long,
-      retain: Int = Int.MaxValue, prefix: String = "v",
-      statsCols: StatsCols = Nil, checkpointEvery: Int = 0)
-      (df: => DataFrame): Option[Int] = {
+      statsCols: StatsCols = Nil)(df: => DataFrame): Option[Int] = {
     val fs = fsOf(spark, dir)
     // Replay detection in O(1) for the common case: walk versions
     // NEWEST-first and compare against the most recent epoch-tagged
@@ -3912,19 +3879,8 @@ object GraftTable {
     // commits (manual maintenance on the same table) are walked past;
     // out-of-order manual epoch use is outside the contract.
     if (newestEpochFor(fs, dir, None).exists(epochId <= _)) None
-    else {
-      val v = commitNextIsolated(spark, dir, df, s"epoch=$epochId", retain,
-        prefix, statsCols = statsCols)
-      // periodic manifest checkpoint (Delta's every-N-commits cadence):
-      // keeps the long-lived streaming table's full-history consumers —
-      // history(), versionAsOf — at O(1 + suffix) commit-file reads.
-      // Best-effort like the _last hint: a failed checkpoint write
-      // degrades readers to per-file resolution, never correctness.
-      if (checkpointEvery > 0 && v > 0 && v % checkpointEvery == 0)
-        try checkpoint(fs, dir)
-        catch { case _: java.io.IOException => () }
-      Some(v)
-    }
+    else Some(commitNextIsolated(spark, dir, df, s"epoch=$epochId",
+      statsCols = statsCols))
   }
 
   /** Stable 8-hex tag of a streaming queryId — embedded in epoch
@@ -4028,7 +3984,7 @@ object GraftTable {
     try publish(() => replayed() && { dropStaged(); true }, () => stillStaged())
     catch {
       case e: Throwable =>
-        dropUnpublished(fs, dir, staged, "v")
+        dropUnpublished(fs, dir, staged)
         throw e
     }
   }
@@ -4047,12 +4003,11 @@ object GraftTable {
     * sink refuses. */
   private[graft] def commitEpochStaged(spark: SparkSession, dir: String,
       epochId: Long, staged: String, schema: StructType,
-      queryId: String, maxAttempts: Int = 10,
-      expectedFiles: Seq[String] = Nil): Option[Int] =
+      queryId: String, expectedFiles: Seq[String] = Nil): Option[Int] =
     publishEpoch(spark, dir, epochId, staged, queryId, expectedFiles) {
       (replayed, stillStaged) =>
         publishStaged(spark, dir, staged, schema, epochDoor,
-          s"epoch=$epochId;query=$queryId", maxAttempts,
+          s"epoch=$epochId;query=$queryId",
           replayed = replayed, beforePublish = stillStaged)
     }
 
@@ -4077,13 +4032,13 @@ object GraftTable {
     * predecessor DV must be keyed by the SAME upsert keys. */
   private[graft] def commitEpochUpsert(spark: SparkSession, dir: String,
       epochId: Long, staged: String, schema: StructType,
-      queryId: String, keyCols: Seq[String], maxAttempts: Int = 10,
+      queryId: String, keyCols: Seq[String],
       expectedFiles: Seq[String] = Nil): Option[Int] = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val fs = fsOf(spark, dir)
     publishEpoch(spark, dir, epochId, staged, queryId, expectedFiles) {
       (replayed, stillStaged) =>
-      retryOnConflict[Option[Int]](maxAttempts, onConflict = (_, _) =>
+      retryOnConflict[Option[Int]](occAttempts, onConflict = (_, _) =>
         if (replayed()) Some(None) else None
       ) { _ =>
         val cur = currentHeaders(fs, dir)
@@ -4097,11 +4052,11 @@ object GraftTable {
             case None =>
               // first epoch IS the table — a plain full version
               commit(fs, dir, v, s"epoch=$epochId;query=$queryId",
-                prefix = "v", dataDir = Some(staged),
+                dataDir = Some(staged),
                 schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur))
             case Some((c, hdrs)) =>
               import spark.implicits._
-              val dataDirs = dataDirsFrom(hdrs, c, "v")
+              val dataDirs = dataDirsFrom(hdrs, c)
               val basenamesDf = dataDirs.map(dirBasename).toDF("__dir")
               val declared = declaredSchemaOf(hdrs)
               val withDir = dataDirs.map { dd =>
@@ -4145,8 +4100,7 @@ object GraftTable {
               val fullTombs = prevTombs.fold(newTombs)(p =>
                 p.select((keyCols :+ "__dir").map(col): _*)
                   .unionByName(newTombs))
-              val dvDir =
-                s"dv${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+              val dvDir = freshDir("dv", v)
               fullTombs.write.mode("errorifexists").parquet(s"$dir/$dvDir")
               val carried = carriedConstraints(cur)
               if (carried.nonEmpty)
@@ -4161,7 +4115,6 @@ object GraftTable {
                         "left_anti").drop("__gdir"))
                     else None)
               commit(fs, dir, v, s"epoch=$epochId;query=$queryId",
-                prefix = "v",
                 dataDir = Some((dataDirs :+ staged).mkString(",")),
                 dv = Some(s"$dvDir;${keyCols.mkString(",")};scoped"),
                 updateDir = Some(staged),
@@ -4189,17 +4142,15 @@ object GraftTable {
     * like every foreachBatch sink; the WRITE inside it is a distributed
     * parquet write plus an O(manifest) commit. */
   def streamingSink(dir: String, checkpointDir: String, stream: DataFrame,
-      retain: Int = Int.MaxValue, prefix: String = "v",
       transform: (Option[DataFrame], DataFrame) => DataFrame = (_, b) => b,
-      statsCols: StatsCols = Nil, checkpointEvery: Int = 0)
+      statsCols: StatsCols = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, epochId) => {
         val s = batch.sparkSession
-        commitEpoch(s, dir, epochId, retain, prefix, statsCols,
-          checkpointEvery) {
+        commitEpoch(s, dir, epochId, statsCols) {
           val fs = fsOf(s, dir)
-          transform(currentVersion(fs, dir).map(_ => read(s, dir, prefix)),
+          transform(currentVersion(fs, dir).map(_ => read(s, dir)),
             batch.toDF())
         }
         ()
@@ -4243,12 +4194,11 @@ object GraftTable {
 
   /** Time travel by timestamp: read the snapshot current at `asOfMs`.
     * Fails loudly when the table did not exist yet at that instant. */
-  def readAsOf(spark: SparkSession, dir: String, asOfMs: Long,
-      prefix: String = "v"): DataFrame = {
+  def readAsOf(spark: SparkSession, dir: String, asOfMs: Long): DataFrame = {
     val fs = fsOf(spark, dir)
     val v = versionAsOf(fs, dir, asOfMs).getOrElse(sys.error(
       s"no version of $dir existed at epoch-ms $asOfMs"))
-    readVersion(spark, dir, v, prefix)
+    readVersion(spark, dir, v)
   }
 
   /** Write-time contract enforcement: evaluate named expectation rules
@@ -4266,8 +4216,7 @@ object GraftTable {
     * merge). */
   def checkedCommit(spark: SparkSession, dir: String, df: DataFrame,
       rules: Seq[(String, org.apache.spark.sql.Column)],
-      metadata: String = "", retain: Int = Int.MaxValue,
-      prefix: String = "v", allowEvolution: Boolean = false): Int = {
+      metadata: String = "", allowEvolution: Boolean = false): Int = {
     require(rules.nonEmpty, "checkedCommit without rules is commitNextIsolated")
     import org.apache.spark.sql.functions.{count, lit, sum, when}
     val aggs = rules.map { case (name, pred) =>
@@ -4279,7 +4228,7 @@ object GraftTable {
     if (bad.nonEmpty)
       throw new IllegalStateException("commit refused — expectation " +
         "violations: " + bad.map { case (n, c) => s"$n=$c" }.mkString(", "))
-    commitNextIsolated(spark, dir, df, metadata, retain, prefix,
+    commitNextIsolated(spark, dir, df, metadata,
       allowEvolution = allowEvolution)
   }
 
@@ -4292,7 +4241,7 @@ object GraftTable {
     * names.
     *
     * `graceMs` is the safety window for a dir carrying the CURRENT
-    * version number: an OCC retry writer stages `$prefix${cur+1}_…`
+    * version number: an OCC retry writer stages `v<cur+1>_…`
     * (never reclaimable here), but a writer racing for version `cur`
     * ITSELF — staged just before the winner published — looks exactly
     * like an orphan the instant it loses. A dir modified within the last
@@ -4302,8 +4251,7 @@ object GraftTable {
     * abandoned (its commit attempt has long since thrown) and is
     * reclaimed by the next vacuum. graceMs = 0 keeps the old eager
     * semantics for tests that construct their orphans synchronously. */
-  def vacuum(fs: FileSystem, dir: String, prefix: String = "v",
-      graceMs: Long = 0L): Seq[String] = {
+  def vacuum(fs: FileSystem, dir: String, graceMs: Long = 0L): Seq[String] = {
     val committed = versions(fs, dir)
     if (committed.isEmpty) return Seq.empty
     val cur = committed.max
@@ -4318,7 +4266,7 @@ object GraftTable {
     val parsed = committed.map(v =>
       (v, parseCommit(commitContent(fs, dir, v))))
     val referenced = parsed.flatMap { case (v, (hdrs, _)) =>
-      (dataDirsFrom(hdrs, v, prefix) ++
+      (dataDirsFrom(hdrs, v) ++
         hdrs.get("dv").map(_.split(";", 2)(0)).toList ++
         hdrs.get("pdv").toList)
         .map(_.split('/').head)
@@ -4340,7 +4288,7 @@ object GraftTable {
       .filter { st =>
         val n = st.getPath.getName
         !referenced.contains(n) &&
-          (dirVersion(n, prefix).exists(_ <= cur) ||
+          (dirVersion(n, "v").exists(_ <= cur) ||
             dirVersion(n, "dv").exists(_ <= cur) ||
             dirVersion(n, "pdv").exists(_ <= cur)) &&
           // the grace age is the NEWEST FILE mtime anywhere under the
@@ -4448,22 +4396,20 @@ object GraftTable {
     * reclaimed (an expired version fully shadowed by live references
     * stays readable and is not reported). */
   def expireVersions(fs: FileSystem, dir: String, retainMs: Long,
-      nowMs: Long = System.currentTimeMillis(),
-      prefix: String = "v"): Seq[Int] =
+      nowMs: Long = System.currentTimeMillis()): Seq[Int] =
     currentVersion(fs, dir) match {
       case None => Seq.empty
       case Some(cur) =>
         val cutoff = nowMs - retainMs
-        // checkpoint-resolved walk: commit(retainMs=) runs this after
-        // EVERY commit, so on a long checkpointed history the headers
-        // must come from one checkpoint read + the suffix, not
+        // checkpoint-resolved walk: on a long checkpointed history the
+        // headers come from one checkpoint read + the suffix, not
         // O(versions) per-file opens
         val all = commitContentsUpTo(fs, dir, cur).map { case (v, c) =>
           val hdrs = parseCommit(c)._1
           (v, hdrs, commitTimeFrom(hdrs, fs, dir, v))
         }
         def refs(v: Int, hdrs: Map[String, String]): Seq[String] =
-          dataDirsFrom(hdrs, v, prefix) ++
+          dataDirsFrom(hdrs, v) ++
             hdrs.get("dv").map(_.split(";", 2)(0)).toList ++
             hdrs.get("pdv").toList
         val expired = all.filter { case (v, _, ts) => v != cur && ts < cutoff }
@@ -4501,8 +4447,7 @@ object GraftTable {
     * path: one hash-partitioned shuffle of the two snapshots. At 10⁵
     * append commits this is what turns a `cdcSubscribe` consumer from
     * O(2 × snapshot) per version into O(files added). */
-  def versionDelta(spark: SparkSession, dir: String, v: Int,
-      prefix: String = "v"): DataFrame = {
+  def versionDelta(spark: SparkSession, dir: String, v: Int): DataFrame = {
     val fs = fsOf(spark, dir)
     require(fs.exists(new Path(s"$dir/manifest/commit_$v")),
       s"version $v was never committed under $dir")
@@ -4513,9 +4458,9 @@ object GraftTable {
           s"version $v's data has been garbage-collected (retention)")
         spark.read.parquet(s"$dir/$added")
       case None =>
-        val cur = readVersion(spark, dir, v, prefix)
+        val cur = readVersion(spark, dir, v)
         if (v == 0) cur
-        else cur.exceptAll(readVersion(spark, dir, v - 1, prefix))
+        else cur.exceptAll(readVersion(spark, dir, v - 1))
     }
   }
 
@@ -4578,7 +4523,7 @@ object GraftTable {
     * table without polling or re-reading history. */
   def cdcSubscribe(spark: SparkSession, dir: String, checkpointDir: String,
       onDelta: (Int, String, DataFrame) => Unit,
-      prefix: String = "v", maxVersionsPerTrigger: Int = 1)
+      maxVersionsPerTrigger: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
@@ -4588,7 +4533,7 @@ object GraftTable {
         batch.collect().sortBy(_.getAs[Int]("version")).foreach { r =>
           val v = r.getAs[Int]("version")
           onDelta(v, r.getAs[String]("metadata"),
-            versionDelta(spark, dir, v, prefix))
+            versionDelta(spark, dir, v))
         }
       }
     commitFeed(spark, dir, maxVersionsPerTrigger).writeStream
@@ -4903,9 +4848,9 @@ object GraftTable {
     * set — the common case probing for an absent key, and the whole
     * point at 10⁵ files — reads NOTHING. */
   def readBloomEq(spark: SparkSession, dir: String, v: Int, col: String,
-      value: Any, prefix: String = "v"): (DataFrame, Seq[String], Int) = {
+      value: Any): (DataFrame, Seq[String], Int) = {
     val fs = fsOf(spark, dir)
-    val (perDir, hdrs) = perDirBlooms(fs, dir, v, prefix)
+    val (perDir, hdrs) = perDirBlooms(fs, dir, v)
     val sections = perDir.map { case (dd, tbs) =>
       (dd, tbs.find(_.col == col).getOrElse(sys.error(
         s"chain dir $dd carries Bloom sections on " +
@@ -4920,7 +4865,7 @@ object GraftTable {
       if (hit.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          readVersion(spark, dir, v, prefix).schema)
+          readVersion(spark, dir, v).schema)
       else
         // one dir: anchor partition discovery to it (partitionBy
         // layouts need the ancestor basePath to keep their partition
@@ -4941,14 +4886,14 @@ object GraftTable {
     * FileNotFoundException would point at a path, not at retention).
     * Shared by the probe (`readBloomEq`) and the audit (`bloomTable`)
     * so their resolution can never diverge. */
-  private[graft] def perDirBlooms(fs: FileSystem, dir: String, v: Int,
-      prefix: String): (Seq[(String, Seq[TableBloom])], Map[String, String]) = {
+  private[graft] def perDirBlooms(fs: FileSystem, dir: String, v: Int)
+      : (Seq[(String, Seq[TableBloom])], Map[String, String]) = {
     require(fs.exists(new Path(s"$dir/manifest/commit_$v")),
       s"version $v was never committed under $dir")
     val hdrs = parseCommit(commitContent(fs, dir, v))._1
     require(hdrs.contains("bloom"),
       s"version $v of $dir carries no Bloom index in its commit")
-    val dataDirs = dataDirsFrom(hdrs, v, prefix)
+    val dataDirs = dataDirsFrom(hdrs, v)
     val perDir = dataDirs.map { dd =>
       require(fs.exists(new Path(s"$dir/$dd")),
         s"version $v's data dir $dd has been garbage-collected (retention)")
@@ -4965,11 +4910,10 @@ object GraftTable {
     * opening everything and the table wants a re-indexing compaction.
     * Resolved from the manifest + sidecars alone — no data file is
     * listed or opened. Served to SQL as `graft_bloom('<dir>', v)`. */
-  def bloomTable(spark: SparkSession, dir: String, v: Int,
-      prefix: String = "v"): DataFrame = {
+  def bloomTable(spark: SparkSession, dir: String, v: Int): DataFrame = {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, dir)
-    val rows = perDirBlooms(fs, dir, v, prefix)._1.flatMap {
+    val rows = perDirBlooms(fs, dir, v)._1.flatMap {
       case (dd, tbs) => tbs.flatMap { tb =>
         tb.files.map { case (f, bits) =>
           val set = bits.map(java.lang.Long.bitCount).sum
@@ -5010,7 +4954,7 @@ object GraftTable {
     * through (the rewrite re-enforces them — one extra pass; a rewrite
     * of already-valid rows always passes). */
   def compactChain(spark: SparkSession, dir: String, targetFiles: Int = 1,
-      metadata: String = "compact", prefix: String = "v",
+      metadata: String = "compact",
       statsCols: StatsCols = Nil, bloomCol: Option[String] = None,
       clusterBy: StatsCols = Nil,
       statsEnc: Seq[(String, String)] = Nil,
@@ -5038,7 +4982,7 @@ object GraftTable {
     // ordering-aware SPJ tier — a compaction that degraded the read
     // plan would betray what OPTIMIZE is for
     val sortW = h.get("sortw").map(_.split(",").toSeq).getOrElse(Nil)
-    val snap = readVersion(spark, dir, c, prefix)
+    val snap = readVersion(spark, dir, c)
     val compacted =
       if (clusterBy.nonEmpty) {
         require(partBy.isEmpty, "clustered compaction applies to flat " +
@@ -5056,7 +5000,7 @@ object GraftTable {
       // one file — without this the rewrite would fan each value across
       // every read task and could WIDEN the layout it claims to compact
       else snap.repartition(partBy.map(org.apache.spark.sql.functions.col): _*)
-    commitNextIsolated(spark, dir, compacted, metadata, prefix = prefix,
+    commitNextIsolated(spark, dir, compacted, metadata,
       partitionBy = partBy, statsCols = statsCols, bloomCol = bloomCol,
       statsEnc = statsEnc, bloomCols = bloomCols,
       // a compaction rewrites the same rows: the bucket declaration
@@ -5157,7 +5101,7 @@ object GraftTable {
     * out, the old tail dirs are reclaimable. Returns the version. */
   def compactChainTail(spark: SparkSession, dir: String,
       targetFiles: Int = 1, metadata: String = "compact tail",
-      prefix: String = "v", statsCols: StatsCols = Nil,
+      statsCols: StatsCols = Nil,
       bloomCol: Option[String] = None, clusterBy: StatsCols = Nil,
       statsEnc: Seq[(String, String)] = Nil,
       bloomCols: Seq[String] = Nil): Int = {
@@ -5180,7 +5124,7 @@ object GraftTable {
       "this table is partition-mapped — its entry dirs ARE the layout " +
         "(folding them would drop the value→dir map); re-cluster a " +
         "partition by replacing it through replacePartitionsWithRetry")
-    val dirs = dataDirsFrom(h, c, prefix)
+    val dirs = dataDirsFrom(h, c)
     require(dirs.size >= 2,
       s"version $c has no tail to fold (${dirs.size} data dir)")
     val (head, tail) = (dirs.head, dirs.tail)
@@ -5222,13 +5166,15 @@ object GraftTable {
     val effStats: StatsCols =
       StatsEnc.validateAndMerge(spark, statsCols, statsEnc)
 
-    val tailDf = spark.read.parquet(tail.map(d => s"$dir/$d"): _*)
+    // under the head's file schema, so no inference job runs (a colmap=
+    // head's files carry physical names, which inference serves)
+    val tailDf = readParquet(spark, filesSchemaOf(h), tail.map(d => s"$dir/$d"))
     val folded =
       if (clusterBy.nonEmpty) clusteredLayout(spark, tailDf, clusterBy,
         targetFiles)
       else tailDf.coalesce(targetFiles)
     val v = c + 1
-    val tDir = s"$prefix${v}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val tDir = freshDir("v", v)
     folded.write.mode("errorifexists").parquet(s"$dir/$tDir")
 
     // spanning stats: the head's entries carry over UNREAD (their files
@@ -5249,7 +5195,7 @@ object GraftTable {
       val headEntries = prev.files.filter(_.file.startsWith(s"$head/"))
       TableStats(fresh.cols, headEntries ++ mine)
     }
-    commit(fs, dir, v, metadata, prefix = prefix,
+    commit(fs, dir, v, metadata,
       dataDir = Some(s"$head,$tDir"), stats = mergedStats,
       schema = h.get("schema"), prevTs = prevTsOf(Some((c, h))),
       bloom = bl, constraintsHdr = h.get("constraints"),
@@ -5306,7 +5252,7 @@ object GraftTable {
       targetFiles: Int = 1, statsCols: StatsCols = Nil,
       bloomCol: Option[String] = None, clusterBy: StatsCols = Nil,
       retainMs: Long = Long.MaxValue, vacuumGraceMs: Long = 3600000L,
-      prefix: String = "v", statsEnc: Seq[(String, String)] = Nil,
+      statsEnc: Seq[(String, String)] = Nil,
       incremental: Boolean = false,
       bloomCols: Seq[String] = Nil): MaintenanceReport = {
     val fs = fsOf(spark, dir)
@@ -5319,7 +5265,7 @@ object GraftTable {
     // threading headers into compactChain — negligible next to the
     // rewrite itself.
     val (compacted, refused) =
-      if (dataDirsFrom(h, c, prefix).size > maxChainDirs ||
+      if (dataDirsFrom(h, c).size > maxChainDirs ||
           (clusterBy.nonEmpty && !incremental))
         try (Some(
           // incremental = the LIQUID tier: fold only the arrival-order
@@ -5327,12 +5273,12 @@ object GraftTable {
           // nightly cadence for a table whose head was fully clustered
           // once; a full re-cluster stays available by leaving
           // incremental off
-          if (incremental && dataDirsFrom(h, c, prefix).size >= 2)
+          if (incremental && dataDirsFrom(h, c).size >= 2)
             compactChainTail(spark, dir, targetFiles,
-              "maintenance compact (tail)", prefix, statsCols, bloomCol,
+              "maintenance compact (tail)", statsCols, bloomCol,
               clusterBy, statsEnc, bloomCols)
           else compactChain(spark, dir, targetFiles,
-            "maintenance compact", prefix, statsCols, bloomCol, clusterBy,
+            "maintenance compact", statsCols, bloomCol, clusterBy,
             statsEnc, bloomCols)),
           None)
         catch {
@@ -5345,9 +5291,8 @@ object GraftTable {
       else (None, None)
     // the checkpoint is best-effort DERIVED data, and the scaladoc sells
     // the steps as independent: one transient IOException on its write
-    // must not abort the retention and vacuum steps of the nightly pass
-    // (commitEpoch wraps its checkpointEvery call the same way). The
-    // failure is carried in the report like compactionRefused;
+    // must not abort the retention and vacuum steps of the nightly pass.
+    // The failure is carried in the report like compactionRefused;
     // checkpointedTo = -1 marks "no coverage claimed this pass".
     val (cpTo, cpFailed) =
       try (checkpoint(fs, dir), Option.empty[String])
@@ -5355,8 +5300,8 @@ object GraftTable {
         (-1, Some(Option(e.getMessage).getOrElse(e.getClass.getName))) }
     val expired =
       if (retainMs == Long.MaxValue) Seq.empty
-      else expireVersions(fs, dir, retainMs, prefix = prefix)
-    val vacuumed = vacuum(fs, dir, prefix, graceMs = vacuumGraceMs)
+      else expireVersions(fs, dir, retainMs)
+    val vacuumed = vacuum(fs, dir, graceMs = vacuumGraceMs)
     MaintenanceReport(compacted, cpTo, expired, vacuumed, refused, cpFailed)
   }
 
@@ -5385,7 +5330,7 @@ object GraftTable {
     * cost but with TYPED output; the append tier costs O(files added),
     * which is why high-churn ingest should append. */
   def changeFeed(spark: SparkSession, dir: String, v: Int,
-      keyCols: Seq[String], prefix: String = "v"): DataFrame = {
+      keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     require(keyCols.nonEmpty, "changeFeed needs at least one key column")
     val fs = fsOf(spark, dir)
@@ -5393,7 +5338,7 @@ object GraftTable {
       s"version $v was never committed under $dir")
     val hdrs = parseCommit(commitContent(fs, dir, v))._1
     if (v == 0 || hdrs.contains("append"))
-      versionDelta(spark, dir, v, prefix)
+      versionDelta(spark, dir, v)
         .withColumn("change_type", lit("insert"))
     else if (hdrs.contains("update")) {
       // MoR-UPDATE fast path: post-images are a plain scan of the
@@ -5413,7 +5358,7 @@ object GraftTable {
       val curTombs = readDvSidecar(spark, s"$dir/${dvParts(0)}",
         declaredSchemaOf(hdrs), keyCols, scoped = dvParts.length == 3)
       val prevHdrs = parseCommit(commitContent(fs, dir, v - 1))._1
-      val prevDirs = dataDirsFrom(prevHdrs, v - 1, prefix)
+      val prevDirs = dataDirsFrom(prevHdrs, v - 1)
       import spark.implicits._
       val prevTombs = prevHdrs.get("dv").map { spec =>
         val parts = spec.split(";", -1)
@@ -5440,8 +5385,8 @@ object GraftTable {
       pre.unionByName(post)
     }
     else {
-      val prev0 = readVersion(spark, dir, v - 1, prefix)
-      val cur = readVersion(spark, dir, v, prefix)
+      val prev0 = readVersion(spark, dir, v - 1)
+      val cur = readVersion(spark, dir, v)
       val cols = cur.columns.toSeq
       // by NAME, order-blind — the same identity the schema gate draws
       // (an undeclared reorder commits fine and must diff fine); the
@@ -5496,14 +5441,14 @@ object GraftTable {
   def cdcSubscribeTyped(spark: SparkSession, dir: String,
       checkpointDir: String, keyCols: Seq[String],
       onChanges: (Int, String, DataFrame) => Unit,
-      prefix: String = "v", maxVersionsPerTrigger: Int = 1)
+      maxVersionsPerTrigger: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         batch.collect().sortBy(_.getAs[Int]("version")).foreach { r =>
           val v = r.getAs[Int]("version")
           onChanges(v, r.getAs[String]("metadata"),
-            changeFeed(spark, dir, v, keyCols, prefix))
+            changeFeed(spark, dir, v, keyCols))
         }
       }
     commitFeed(spark, dir, maxVersionsPerTrigger).writeStream

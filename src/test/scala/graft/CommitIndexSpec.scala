@@ -77,7 +77,7 @@ class CommitIndexSpec extends SparkSpec {
     assert(files.exists(_.footer.getBlocks.size >= 2),
       "the fixture must hold a multi-row-group file")
     val footer = GraftTable.footerStats(files, typed, typedEnc)
-    val scan = GraftTable.computeStats(spark, p,
+    val scan = GraftTable.computeStats(spark, p, typed,
       GraftTable.StatsEnc.validateAndMerge(spark, Nil, typedEnc))
     assert(footer.map(_.encoded) == Some(scan.encoded))
     // the all-null and zero-row files carry the empty-range sentinel
@@ -96,7 +96,7 @@ class CommitIndexSpec extends SparkSpec {
     val files = GraftTable.writtenFiles(spark, p)
     assert(files.size == 6)
     val footer = GraftTable.footerStats(files, schema, Seq("k" -> "id"))
-    val scan = GraftTable.computeStats(spark, p,
+    val scan = GraftTable.computeStats(spark, p, schema,
       Seq("k" -> GraftTable.StatsEnc.ordinal("id")))
     assert(footer.map(_.encoded) == Some(scan.encoded))
     assert(scan.files.map(_.file.takeWhile(_ != '/')).toSet ==
@@ -119,7 +119,7 @@ class CommitIndexSpec extends SparkSpec {
     val fs = GraftTable.fsOf(spark, dir)
     val dataDir = GraftTable.headersOf(fs, dir, 0)("data")
     assert(GraftTable.statsOf(fs, dir, 0).map(_.encoded) ==
-      Some(GraftTable.computeStats(spark, s"$dir/$dataDir",
+      Some(GraftTable.computeStats(spark, s"$dir/$dataDir", typed,
         GraftTable.StatsEnc.validateAndMerge(spark, Nil, typedEnc)).encoded))
   }
 
@@ -155,7 +155,7 @@ class CommitIndexSpec extends SparkSpec {
       val data = s"$dir/${GraftTable.headersOf(fs, dir, 0)("data")}"
       val eff = GraftTable.StatsEnc.validateAndMerge(spark, lambdas, enc)
       assert(GraftTable.statsOf(fs, dir, 0).map(_.encoded) ==
-        Some(GraftTable.computeStats(spark, data, eff).encoded), tag)
+        Some(GraftTable.computeStats(spark, data, schema, eff).encoded), tag)
       if (lambdas.isEmpty)
         assert(GraftTable.footerStats(GraftTable.writtenFiles(spark, data),
           schema, enc).isEmpty, tag)

@@ -36,8 +36,32 @@ class CommitJobsSpec extends SparkSpec {
     val dir = freshDir("controls")
     rows(0, 100).write.parquet(dir)
     assert(counts(spark.read.parquet(dir).schema)._2 == 1)
-    assert(counts(GraftTable.computeStats(spark, dir,
-      Seq("key" -> GraftTable.StatsEnc.ordinal("id"))))._3 == 1)
+    val scan = counts(GraftTable.computeStats(spark, dir, rows(0, 1).schema,
+      Seq("key" -> GraftTable.StatsEnc.ordinal("id"))))
+    assert(scan._2 == 0 && scan._3 == 1, s"stats scan under a schema: $scan")
+  }
+
+  test("a lambda-statsCols commit scans its stats and a tail compaction " +
+      "reads its tail, both under a known schema") {
+    val dir = freshDir("known")
+    val lambda = (c: org.apache.spark.sql.Column) => c * 2
+    val scanned = counts(GraftTable.commitNextIsolated(spark, dir,
+      rows(0, 2000).repartitionByRange(4, col("key")), "base",
+      statsCols = Seq("key" -> lambda)))
+    assert(scanned._2 == 0 && scanned._3 == 1, s"lambda stats: $scanned")
+    val chain = freshDir("tail")
+    GraftTable.commitNextIsolated(spark, chain,
+      rows(0, 2000).repartitionByRange(4, col("key")), "base",
+      statsEnc = idxEnc, bloomCol = Some("cust"))
+    Seq(2000L, 2500L).foreach(from => GraftTable.commitAppend(spark, chain,
+      rows(from, 500), "append", statsEnc = idxEnc, bloomCol = Some("cust")))
+    val before = GraftTable.read(spark, chain).collect().toSet
+    val tail = counts(GraftTable.compactChainTail(spark, chain,
+      statsEnc = idxEnc, bloomCol = Some("cust")))
+    val fs = GraftTable.fsOf(spark, chain)
+    assert(GraftTable.dataDirsOf(fs, chain, 3).size == 2)
+    assert(GraftTable.read(spark, chain).collect().toSet == before)
+    assert(tail._2 == 0 && tail._3 == 0, s"tail compaction: $tail")
   }
 
   test("stats+Bloom commitNextIsolated, commitAppend and SQL UPDATE run " +

@@ -73,6 +73,18 @@ class EntryCountSpec extends AnyFunSuite {
       s"SparkSession.builder() call sites: $builders")
   }
 
+  test("no data-dir prefix knob in src/main: no prefix: String parameter, " +
+      "no \"prefix\" read option") {
+    // a table's data dirs are named by its commit files, v<N>[_<id>]
+    // otherwise; a settable prefix let one door read under a name
+    // another door never wrote
+    val knobs = mainSources.flatMap { case (path, src) =>
+      Seq("prefix: String", "get(\"prefix\")").filter(src.contains)
+        .map(k => s"$path: $k")
+    }
+    assert(knobs.isEmpty, s"data-dir prefix knobs: $knobs")
+  }
+
   test("the append-version encoding is written at exactly one site in src/main") {
     // every door publishing a staged dir onto a chain goes through
     // GraftTable.publishStaged; a new door copying the encoding (the

@@ -152,6 +152,12 @@ class Round10Spec extends SparkSpec {
       .select(col("day"), col("cnt"), T.money(col("sv")).as("sum_val"))
       .orderBy("day").collect().toSeq
     val threeRuns = table()
+    // the daily store is an ordinary GraftTable: the generic manifest
+    // read serves it, and retain = 1 left the last two version dirs
+    assert(sources.GraftTable.read(spark, dir).collect().toSet ==
+      ops.Round10Ops.currentDaily(spark, dir).collect().toSet)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath
+      .getName).filter(_.startsWith("v")).sorted.toSeq == Seq("v1", "v2"))
     val oneShot = T.events(spark, sf)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"),

@@ -42,7 +42,7 @@ class Round13Spec extends SparkSpec {
     // gratuitous opens.
     val fs = GraftTable.fsOf(spark, dir)
     val data = spark.read.parquet(
-      s"$dir/${GraftTable.dataDirOf(fs, dir, 0, "v")}")
+      s"$dir/${GraftTable.dataDirOf(fs, dir, 0)}")
     val tsUs = unix_micros(col("l_shipdate").cast(TimestampType))
     val actual = data
       .groupBy(element_at(split(input_file_name(), "/"), -1).as("f"))
@@ -220,7 +220,7 @@ class Round13Spec extends SparkSpec {
     val fs = GraftTable.fsOf(spark, dir)
     val tsUs = unix_micros(col("l_shipdate").cast(TimestampType))
     val actual = spark.read.parquet(
-        s"$dir/${GraftTable.dataDirOf(fs, dir, 0, "v")}")
+        s"$dir/${GraftTable.dataDirOf(fs, dir, 0)}")
       .groupBy(element_at(split(input_file_name(), "/"), -1).as("f"))
       .agg(min(tsUs).as("xlo"), max(tsUs).as("xhi"),
         min("l_quantity").as("ylo"), max("l_quantity").as("yhi"))
@@ -247,7 +247,7 @@ class Round13Spec extends SparkSpec {
     assert(fromLog == real, s"manifest count $fromLog != data count $real")
     // the proof the key's claim rests on: move the data away — the
     // metadata count still answers, while a data read now fails loudly
-    val data = GraftTable.dataDirOf(fs, dir, 0, "v")
+    val data = GraftTable.dataDirOf(fs, dir, 0)
     fs.rename(new Path(s"$dir/$data"), new Path(s"$dir/.offline_$data"))
     assert(GraftTable.rowCountOf(fs, dir, 0).contains(real),
       "metadata-only count touched the data path")
@@ -389,7 +389,7 @@ class Round13Spec extends SparkSpec {
     // compare DATA-DIR-RELATIVE paths (the FileStats.file contract) —
     // basename truncation would collide under a partitioned layout
     val dataPrefix =
-      s"$dir/${GraftTable.dataDirOf(GraftTable.fsOf(spark, dir), dir, 0, "v")}/"
+      s"$dir/${GraftTable.dataDirOf(GraftTable.fsOf(spark, dir), dir, 0)}/"
     assert(sqlSet == opened.map(_.stripPrefix(dataPrefix)).toSet)
     assert(sqlSet.nonEmpty && sqlSet.size < total)
     // row counts from the stats relation reconcile with the metadata
