@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GetStructField, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, SubqueryAlias, UpdateTable}
@@ -26,11 +26,12 @@ import graft.sources.{GraftSparkTable, GraftTable}
   *    replacement dir for UPDATE), which is exactly the fast path a
   *    lake user expects from a point DML statement at 100 TB.
   *  - INDEX-BEARING (stats=/bloom=) and partitionBy targets route
-  *    through a COPY-ON-WRITE rewrite: the survivors/updated snapshot
-  *    commits as the next version with the index RE-DERIVED from its
-  *    self-described manifest declarations (statenc registry names /
-  *    bloom column set) and the partition layout preserved — the same
-  *    recipe the SQL MERGE door proved out. Indexed tables are
+  *    through a COPY-ON-WRITE rewrite, `GraftTable.rewriteHead`: the
+  *    survivors/updated snapshot commits as the next version with the
+  *    index RE-DERIVED from its self-described manifest declarations
+  *    (statenc registry names / bloom column set) and the partition
+  *    and bucket layout preserved — the one rewrite the SQL MERGE door
+  *    and the purges share. Indexed tables are
   *    precisely the big tables where point DML matters, so refusing
   *    them (the round-16 posture) was the wrong trade; only a stats
   *    line with code-declared lambda ordinals still refuses (SQL text
@@ -175,46 +176,6 @@ object GraftDml {
     hdrs.contains("pdv") ||
       (spark.conf.getOption(modeKey).contains("positional") &&
         GraftTable.morAdmits(hdrs, door))
-
-  /** The COPY-ON-WRITE arm shared by SQL UPDATE and DELETE: read the
-    * pinned snapshot, apply `transform`, commit as the next version
-    * with the partition layout preserved and the skipping index
-    * RE-DERIVED from the manifest's self-described declarations — the
-    * `table_merge_reindex` recipe. The commit is PINNED to the version
-    * the snapshot was read at (`expectVersion`): an interleaved commit
-    * either fails the pin or loses the atomic publish — it can never be
-    * silently erased by a rewrite built from the older snapshot. */
-  private[plans] def cowRewrite(spark: SparkSession, dir: String,
-      cur: Int, hdrs: Map[String, String], metadata: String)(
-      transform: DataFrame => DataFrame): Unit = {
-    require(!hdrs.contains("pmap"),
-      "this table is partition-mapped — update/delete by replacing its " +
-        "partitions through replacePartitionsWithRetry")
-    if (!GraftTable.statencCovers(hdrs))
-      throw new GraftTable.IndexRedeclarationRequired(
-        "SQL UPDATE/DELETE cannot re-derive this table's stats index: " +
-          s"its stat columns are not fully registry-declared (statenc " +
-          s"covers ${hdrs.get("statenc")
-            .map(GraftTable.StatsEnc.decode(_).map(_._1)).getOrElse(Nil)})" +
-          " — rewrite through the API with the original statsCols, or " +
-          "re-commit the chain with statsEnc registry encodings")
-    val statsEncDecl = hdrs.get("statenc")
-      .map(GraftTable.StatsEnc.decode).getOrElse(Nil)
-    GraftTable.commitNextIsolated(spark, dir,
-      transform(GraftTable.readVersion(spark, dir, cur)), metadata,
-      partitionBy =
-        hdrs.get("partby").map(_.split(",").toSeq).getOrElse(Nil),
-      statsEnc = if (hdrs.contains("stats")) statsEncDecl else Nil,
-      bloomCols = hdrs.get("bloom")
-        .map(GraftTable.bloomColsOf).getOrElse(Nil),
-      expectVersion = Some(cur),
-      // a declared bucket layout carries through the rewrite — and
-      // commitNextIsolated RE-VALIDATES the invariant, so an UPDATE
-      // that broke bucketCol = bucket(key) refuses loudly
-      bucketFn = GraftTable.bucketFnOf(hdrs).map { case (n, k, _) =>
-        (n, k) })
-    ()
-  }
 }
 
 /** The analyzer rule: injected via `GraftExtensions`, fires inside the
@@ -255,8 +216,11 @@ case class GraftUpdateCommand(update: UpdateTable, dir: String)
     val hdrs = GraftTable.headersOf(fs, dir, cur)
     if (GraftDml.needsCow(hdrs)) {
       val resolver = spark.sessionState.conf.resolver
-      GraftDml.cowRewrite(spark, dir, cur, hdrs,
-        "UPDATE (SQL, copy-on-write)") { snap =>
+      // copy-on-write, pinned to `cur`: an interleaved commit fails the
+      // pin or loses the publish, never is erased by this rewrite
+      GraftTable.rewriteHead(spark, dir, cur, "UPDATE",
+          "UPDATE (SQL, copy-on-write)") {
+        val snap = GraftTable.readVersion(spark, dir, cur)
         val cols = snap.columns.toSeq
         sets.foreach { case (c, _) =>
           require(cols.exists(resolver(_, c)),
@@ -312,9 +276,9 @@ case class GraftDeleteCommand(delete: DeleteFromTable, dir: String)
     if (GraftDml.needsCow(hdrs))
       // survivors keep rows whose condition is FALSE or NULL — SQL
       // DELETE removes only TRUE matches
-      GraftDml.cowRewrite(spark, dir, cur, hdrs,
-        "DELETE (SQL, copy-on-write)")(
-        _.where(!coalesce(cond, lit(false))))
+      GraftTable.rewriteHead(spark, dir, cur, "DELETE",
+        "DELETE (SQL, copy-on-write)")(GraftTable.readVersion(spark, dir, cur)
+        .where(!coalesce(cond, lit(false))))
     else if (GraftDml.positionalArm(spark, hdrs, "spark.graft.delete.mode",
         GraftTable.positionalDeleteDoor))
       // POSITIONAL arm: continuing a pdv chain (a key-tombstone commit

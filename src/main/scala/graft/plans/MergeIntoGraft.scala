@@ -264,70 +264,22 @@ case class GraftMergeCommand(merge: MergeIntoTable, dir: String)
       d.withColumn(n, org.apache.spark.sql.functions.lit(null).cast(t))
     }
 
-    // layout/index posture: a partitionBy layout is PRESERVED, and an
-    // indexed target RE-INDEXES its merged snapshot on commit — a
-    // statenc-declared stats line and a bloom= line are self-described
-    // by the manifest (registry encoding names / indexed column set),
-    // so SQL text needs no ordinal re-declaration. Only a stats line
-    // with code-declared (lambda) ordinals still refuses: the command
-    // cannot re-derive caller code, and silently dropping the index
-    // would betray the loud-refusal contract.
-    val fs = GraftTable.fsOf(spark, dir)
-    val hdrs = GraftTable.currentVersion(fs, dir)
-      .map(v => GraftTable.headersOf(fs, dir, v)).getOrElse(Map.empty)
-    require(!hdrs.contains("pmap"),
-      "this table is partition-mapped — merge by replacing its " +
-        "partitions through replacePartitionsWithRetry (a MERGE commit " +
-        "would drop the value→dir map)")
-    val statsEncDecl = hdrs.get("statenc")
-      .map(GraftTable.StatsEnc.decode).getOrElse(Nil)
-    if (!GraftTable.statencCovers(hdrs))
-      throw new GraftTable.IndexRedeclarationRequired(
-        "MERGE INTO cannot re-derive this table's stats index: its " +
-          s"stat columns ${hdrs.get("stats")
-            .map(GraftTable.TableStats.decode(_).cols).getOrElse(Nil)} " +
-          s"are not fully registry-declared (statenc covers " +
-          s"${statsEncDecl.map(_._1)}) — merge through the API " +
-          "(commitWithRetry + statsCols), or re-commit the table with " +
-          "statsEnc registry encodings")
       GraftMergeCommand.lastResolve = Some(next.queryExecution)
       // the merge plan READS the version the resolved target relation
       // is pinned to — pin the commit to exactly that lineage, so a
       // commit interleaving anywhere between relation resolution and
       // the publish raises ConcurrentModificationException instead of
-      // being silently erased by a snapshot built from the older head
+      // being silently erased by a snapshot built from the older head.
+      // `rewriteHead` preserves the layout, re-indexes the merged
+      // snapshot from the manifest's self-described declarations, and
+      // runs a declared evolution first as a metadata-only ADD COLUMN
+      // (old versions untouched, readers backfill NULL), so the snapshot
+      // commit passes the ordinary schema gate with no evolution escape
+      // hatch
       val snapV = GraftDml.graftSnapshotVersion(merge.targetTable)
         .getOrElse(sys.error("merge target lost its graft relation"))
-      // declared evolution: widen the schema FIRST via the metadata-only
-      // ADD COLUMN commit (old versions untouched, readers backfill
-      // NULL), so the snapshot commit below passes the ordinary schema
-      // gate with no evolution escape hatch; the alter itself advances
-      // the pin by exactly one
-      val expectV =
-        if (evolveCols.isEmpty) snapV
-        else {
-          val va = GraftTable.commitAddColumns(spark, dir,
-            evolveCols.map(a => (a.name, a.dataType.catalogString)),
-            s"MERGE WITH SCHEMA EVOLUTION adds (${evolveCols.map(_.name)
-              .mkString(", ")})")
-          if (va != snapV + 1)
-            throw new java.util.ConcurrentModificationException(
-              s"a commit interleaved between MERGE's snapshot (v$snapV) " +
-                s"and its schema evolution (landed v$va) — re-run the " +
-                "merge against the new head")
-          va
-        }
-      GraftTable.commitNextIsolated(spark, dir, next, "MERGE INTO (SQL)",
-        partitionBy =
-          hdrs.get("partby").map(_.split(",").toSeq).getOrElse(Nil),
-        statsEnc = if (hdrs.contains("stats")) statsEncDecl else Nil,
-        bloomCols = hdrs.get("bloom")
-          .map(GraftTable.bloomColsOf).getOrElse(Nil),
-        expectVersion = Some(expectV),
-        // bucket layouts carry through; the commit re-validates the
-        // invariant over the merged snapshot
-        bucketFn = GraftTable.bucketFnOf(hdrs).map { case (n, k, _) =>
-          (n, k) })
+      GraftTable.rewriteHead(spark, dir, snapV, "MERGE", "MERGE INTO (SQL)",
+        widen = evolveCols.map(a => (a.name, a.dataType.catalogString)))(next)
     } finally if (doCheck) srcDf.unpersist(blocking = false)
     Seq.empty
   }

@@ -437,13 +437,33 @@ object GraftTable {
   /** Reserved commit-file HEADER keys. A commit file is zero or more
     * leading `key=value` header lines drawn from this set, followed by
     * the caller's metadata (one line — `commit` enforces it). Headers
-    * carry the table format's own record keeping:
+    * carry the table format's own record keeping, listed here in the
+    * ONE order `commit` writes them (`headerKeys`):
     *
     *   data=<dirname>   writer-private data dir (isolated commits)
+    *   append=<dir>     marks an APPEND commit and names the one data
+    *                    dir this version added on top of its
+    *                    predecessor's (whose dirs the data= list
+    *                    repeats) — the marker `versionDelta`'s CDC fast
+    *                    path reads instead of diffing two snapshots
+    *   update=<dir>     marks a MoR UPDATE commit and names the dir
+    *                    carrying the replacement rows — the typed-CDF
+    *                    fast path reads post-images from it and
+    *                    pre-images from the newly-tombstoned rows,
+    *                    never a full-outer diff
     *   ts=<epochMillis> wall-clock commit time, recorded by the WRITER
     *                    at publish — TIMESTAMP AS OF resolves from this,
     *                    not from FS mtime, so time travel survives FS
     *                    migrations and coarse-mtime filesystems
+    *   schema=<cols>    the committed DataFrame's schema (URL-encoded
+    *                    name:type list) — what the write-time schema
+    *                    compatibility gate validates the NEXT commit
+    *                    against (see `schemaGate`)
+    *   partby=<cols>    the version's data dir is a partitionBy layout
+    *                    on these columns — what `commitAppend*` refuses
+    *                    to append onto (a flat appended dir beside a
+    *                    partitioned one makes the union unreadable:
+    *                    Spark rejects conflicting directory structures)
     *   stats=<encoded>  per-file column statistics (see `TableStats`)
     *   dv=<dir>;<keys>  deletion vector: a tombstone-key dir + the
     *                    comma-separated key columns, applied as a
@@ -455,41 +475,9 @@ object GraftTable {
     *                    in that dir — what merge-on-read UPDATE needs,
     *                    where the same key's replacement lives in a
     *                    LATER dir that must survive (`commitUpdate`)
-    *   update=<dir>     marks a MoR UPDATE commit and names the dir
-    *                    carrying the replacement rows — the typed-CDF
-    *                    fast path reads post-images from it and
-    *                    pre-images from the newly-tombstoned rows,
-    *                    never a full-outer diff
-    *   pmap=<col>|<v>:<e>,…  PARTITION-MAPPED table: the snapshot is
-    *                    the union of one entry dir per partition VALUE
-    *                    of <col> (entries are `<stagedRoot>/__p=<v>`
-    *                    subdir paths inside data=). The map is what
-    *                    `replacePartitionsWithRetry` recomputes on a
-    *                    lost race — untouched values keep the winner's
-    *                    entries, replaced ones point at the loser's
-    *                    already-staged dirs
-    *   wset=<v>,…       the partition values THIS commit replaced —
-    *                    the conflict vocabulary: a race loser whose
-    *                    wset is disjoint from every winner's re-commits
-    *                    its staged result WITHOUT re-executing
-    *   statrel=1        the stats= line's file keys are TABLE-relative
-    *                    (the tail-compaction commit shape: multiple
-    *                    data dirs, one spanning stats line, no append
-    *                    marker — `compactChainTail`)
-    *   append=<dir>     marks an APPEND commit and names the one data
-    *                    dir this version added on top of its
-    *                    predecessor's (whose dirs the data= list
-    *                    repeats) — the marker `versionDelta`'s CDC fast
-    *                    path reads instead of diffing two snapshots
-    *   schema=<cols>    the committed DataFrame's schema (URL-encoded
-    *                    name:type list) — what the write-time schema
-    *                    compatibility gate validates the NEXT commit
-    *                    against (see `schemaGate`)
-    *   partby=<cols>    the version's data dir is a partitionBy layout
-    *                    on these columns — what `commitAppend*` refuses
-    *                    to append onto (a flat appended dir beside a
-    *                    partitioned one makes the union unreadable:
-    *                    Spark rejects conflicting directory structures)
+    *   pdv=<dir>        positional deletion vector: a sidecar dir of
+    *                    (file, row position) tombstones plus its
+    *                    `_skips` list (see `writePdv`)
     *   bloom=<col>|m|k  the version's data dir carries a per-file Bloom
     *                    filter sidecar (`_bloom`, invisible to scans —
     *                    Spark ignores underscore-prefixed files) on the
@@ -513,17 +501,83 @@ object GraftTable {
     *                    pruning — can re-encode a query literal
     *                    driver-side and prune files soundly. Only
     *                    registry-declared columns are scan-prunable.
+    *   pmap=<col>|<v>:<e>,…  PARTITION-MAPPED table: the snapshot is
+    *                    the union of one entry dir per partition VALUE
+    *                    of <col> (entries are `<stagedRoot>/__p=<v>`
+    *                    subdir paths inside data=). The map is what
+    *                    `replacePartitionsWithRetry` recomputes on a
+    *                    lost race — untouched values keep the winner's
+    *                    entries, replaced ones point at the loser's
+    *                    already-staged dirs
+    *   wset=<v>,…       the partition values THIS commit replaced —
+    *                    the conflict vocabulary: a race loser whose
+    *                    wset is disjoint from every winner's re-commits
+    *                    its staged result WITHOUT re-executing
+    *   statrel=1        the stats= line's file keys are TABLE-relative
+    *                    (the tail-compaction commit shape: multiple
+    *                    data dirs, one spanning stats line, no append
+    *                    marker — `compactChainTail`)
+    *   colmap=<m>       logical→physical column names of files written
+    *                    before a metadata-only RENAME/DROP COLUMN (see
+    *                    `colmapEncode`)
+    *   bucketfn=<s>     the partby= layout's declared bucket transform
+    *                    (see `bucketFnEncode`)
+    *   sortw=<cols>     the partby= layout's within-file row order (one
+    *                    sorted file per partition dir)
+    *
+    * Who decides a version's headers: `commit` takes them as one map
+    * and writes whatever it is given, after its cross-header refusals.
+    * The headers split in two. TABLE-LEVEL headers (`tableKeys`:
+    * schema, partby, bucketfn, constraints, colmap) describe the table
+    * and persist until an action changes them, the way Delta's
+    * metadata action does; every other header describes the version's
+    * files. A door that keeps the head's files (clone, restore, the
+    * column alters, the merge-on-read doors, tail compaction, the
+    * staged append and the epoch upsert) passes only what it changes
+    * through `inherit`, which supplies the head's table-level headers;
+    * its refusal gate decides what the head may carry. A door that
+    * rewrites the rows (`commitNextIsolated`, `commitNext`, the DSv2
+    * overwrite, `replacePartitionsWithRetry`) states its own layout,
+    * and `rewriteHead` re-applies a head's own declarations to a
+    * rewrite of it. File-level headers are always stated.
     *
     * Keeping headers line-oriented keeps old manifests readable: a
     * round-12 commit file with no ts= line still parses (mtime fallback
     * in `versionAsOf`), and one with no schema= line simply skips the
     * write gate for its successor. */
   private val headerKeys =
-    Seq("data=", "ts=", "stats=", "dv=", "pdv=", "append=", "schema=",
-      "partby=", "bloom=", "constraints=", "statenc=", "update=", "pmap=",
-      "wset=", "statrel=", "colmap=", "bucketfn=", "sortw=")
+    Seq("data", "append", "update", "ts", "schema", "partby", "stats", "dv",
+      "pdv", "bloom", "constraints", "statenc", "pmap", "wset", "statrel",
+      "colmap", "bucketfn", "sortw")
 
-  private def isHeaderLine(l: String): Boolean = headerKeys.exists(l.startsWith)
+  private def isHeaderLine(l: String): Boolean =
+    headerKeys.exists(k => l.startsWith(s"$k="))
+
+  /** The table-level headers `inherit` carries (see `headerKeys`). */
+  private val tableKeys =
+    Set("schema", "partby", "bucketfn", "constraints", "colmap")
+
+  /** The ONE inheritance rule: the headers of a version that keeps
+    * `head`'s files — `head`'s table-level headers, overridden by what
+    * the door `stated`. */
+  private def inherit(head: Map[String, String],
+      stated: Map[String, String]): Map[String, String] =
+    head.filter { case (k, _) => tableKeys(k) } ++ stated
+
+  /** The subset of `h` under `keys` — how a door restates headers it
+    * carries verbatim. */
+  private def pick(h: Map[String, String], keys: String*): Map[String, String] =
+    h.filter { case (k, _) => keys.contains(k) }
+
+  /** The file-level headers a door that re-references `h`'s files
+    * verbatim (restore, ADD COLUMN) carries: the deletion vectors, the
+    * skipping index and the partition map. Append and tail-compaction
+    * stats keys are table-relative; with no append= marker on the new
+    * version, statrel= declares that key shape. */
+  private def keptFileHeaders(h: Map[String, String]): Map[String, String] =
+    pick(h, "dv", "pdv", "stats", "bloom", "statenc", "pmap") ++
+      Option.when(h.contains("stats") &&
+        (h.contains("append") || h.contains("statrel")))("statrel" -> "1")
 
   /** Raw content of version `v`'s commit file. */
   private def commitContent(fs: FileSystem, dir: String, v: Int): String =
@@ -653,8 +707,11 @@ object GraftTable {
   private[graft] def constraintsDecode(s: String): Seq[String] =
     s.split(",").toSeq.filter(_.nonEmpty).map(urlDec)
 
-  private[graft] def constraintsEncode(specs: Seq[String]): String =
-    specs.map(urlEnc).mkString(",")
+  /** The constraints= header of a version declaring `specs` (none when
+    * empty). */
+  private def constraintsHeader(specs: Seq[String]): Map[String, String] =
+    if (specs.isEmpty) Map.empty
+    else Map("constraints" -> specs.map(urlEnc).mkString(","))
 
   /** The predecessor's declared constraints, decoded from
     * already-parsed current headers — what every write path enforces
@@ -1340,32 +1397,25 @@ object GraftTable {
     // re-pointing never changes
     val pdvRel = hdrs.get("pdv").map(pd => s"../$srcName/$pd")
     // stats travel with a single-dir reference (paths stay relative to
-    // that dir). An APPEND source's stats are keyed relative to the
+    // that dir), and the encoding names with the stats line they
+    // describe. An APPEND source's stats are keyed relative to the
     // SOURCE table dir — unrepresentable from the clone without an
     // out-of-table base — so the clone drops them (re-derivable by a
     // stats-bearing rewrite; skipping is an optimization, never truth)
     val st =
-      if (hdrs.contains("append") || hdrs.contains("statrel")) None
-      else hdrs.get("stats").map(TableStats.decode)
-    // the Bloom index travels with EVERY clone flavor: its sidecars are
-    // self-contained per data dir (file names relative to their own
-    // dir, m/k self-described), so the clone's re-pointed dir list
-    // resolves them unchanged — append chains included
-    commit(fs, dstDir, 0, metadata, dataDir = Some(rel),
-      stats = st, dv = dvRel, pdvHdr = pdvRel, schema = hdrs.get("schema"),
-      partBy = hdrs.get("partby"), bloom = hdrs.get("bloom"),
-      // the clone inherits the source's declared constraints — its
-      // future commits enforce them independently
-      constraintsHdr = hdrs.get("constraints"),
-      // the encoding names travel with the stats line they describe
-      // (and are dropped with it when an append source's stats are)
-      statenc = st.flatMap(_ => hdrs.get("statenc")),
-      // a renamed/dropped-column source serves its logical names
-      // through the same mapping in the clone (the re-pointed dirs
-      // carry the same physical names)
-      colmap = hdrs.get("colmap"),
-      // the bucket declaration describes the re-pointed dirs verbatim
-      bucketFnHdr = hdrs.get("bucketfn"))
+      if (hdrs.contains("append") || hdrs.contains("statrel")) Map.empty
+      else pick(hdrs, "stats", "statenc")
+    // the clone inherits the source's table-level headers: its future
+    // commits enforce the declared constraints independently, and a
+    // renamed/dropped-column source's mapping and bucket declaration
+    // describe the re-pointed dirs verbatim. The Bloom index travels
+    // with EVERY clone flavor: its sidecars are self-contained per data
+    // dir (file names relative to their own dir, m/k self-described),
+    // so the clone's re-pointed dir list resolves them unchanged —
+    // append chains included
+    commit(fs, dstDir, 0, metadata, inherit(hdrs, Map("data" -> rel) ++
+      st ++ dvRel.map("dv" -> _) ++ pdvRel.map("pdv" -> _) ++
+      pick(hdrs, "bloom")))
     // the version this clone actually captured — the ONE resolution
     // above, so a concurrent writer on src cannot skew the provenance
     sv
@@ -1384,11 +1434,13 @@ object GraftTable {
     df.write.mode("overwrite").parquet(s"$dir/v$v")
   }
 
-  /** Atomically commit staged version `v`: the metadata is written to a
-    * writer-private temp file and PUBLISHED to `commit_v` in one atomic
-    * create-no-overwrite step, which doubles as OPTIMISTIC CONCURRENCY
-    * CONTROL: of two writers racing to commit the same version number
-    * exactly one's publish succeeds and the loser gets a
+  /** Atomically commit staged version `v`: `headers` (reserved key →
+    * value, ts= excluded — `commit` records it) and the metadata are
+    * written to a writer-private temp file in `headerKeys` order, after
+    * the cross-header refusals below, and PUBLISHED to `commit_v` in
+    * one atomic create-no-overwrite step, which doubles as OPTIMISTIC
+    * CONCURRENCY CONTROL: of two writers racing to commit the same
+    * version number exactly one's publish succeeds and the loser gets a
     * ConcurrentModificationException (re-stage against the new current
     * version and retry — the lakehouse commit-loop protocol; silent
     * last-writer-wins would let the loser's reader see data the
@@ -1414,34 +1466,28 @@ object GraftTable {
     * in-flight readers (time-based retention is `expireVersions`). GC
     * failure leaves garbage, never corruption. */
   def commit(fs: FileSystem, dir: String, v: Int, metadata: String,
-      retain: Int = Int.MaxValue,
-      dataDir: Option[String] = None, stats: Option[TableStats] = None,
-      dv: Option[String] = None, appendDir: Option[String] = None,
-      schema: Option[String] = None, tsMs: Option[Long] = None,
-      partBy: Option[String] = None,
-      prevTs: Option[Long] = None, bloom: Option[String] = None,
-      constraintsHdr: Option[String] = None,
-      statenc: Option[String] = None,
-      updateDir: Option[String] = None,
-      pmap: Option[String] = None, wset: Option[String] = None,
-      statrel: Boolean = false, colmap: Option[String] = None,
-      bucketFnHdr: Option[String] = None,
-      sortw: Option[String] = None,
-      pdvHdr: Option[String] = None): Unit = {
+      headers: Map[String, String] = Map.empty, retain: Int = Int.MaxValue,
+      tsMs: Option[Long] = None, prevTs: Option[Long] = None): Unit = {
+    def has(k: String): Boolean = headers.contains(k)
+    // ts= is `commit`'s own; every other key must be a reserved one, or
+    // the written line would read back as metadata
+    require(headers.keySet.forall(k => k != "ts" && headerKeys.contains(k)),
+      s"unknown commit header keys ${(headers.keySet - "ts" --
+        headerKeys).toSeq.sorted} (ts= is written by commit itself)")
     // a version carries AT MOST ONE deletion-vector regime: key
     // tombstones (dv=) and positional sidecars (pdv=) have different
     // merge semantics, and a reader honoring one would silently ignore
     // the other
-    require(dv.isEmpty || pdvHdr.isEmpty,
+    require(!has("dv") || !has("pdv"),
       "a commit cannot carry both dv= and pdv= — the two deletion-vector " +
         "regimes cannot merge on one read")
     // like dv=: stats/bloom describe RAW files and would serve
     // position-tombstoned rows
-    require(stats.isEmpty || pdvHdr.isEmpty,
+    require(!has("stats") || !has("pdv"),
       "a commit cannot carry both stats= and pdv=: statistics describe " +
         "raw files and would serve deleted rows — purge the positional " +
         "deletion vector before committing statistics")
-    require(bloom.isEmpty || pdvHdr.isEmpty,
+    require(!has("bloom") || !has("pdv"),
       "a commit cannot carry both bloom= and pdv=: the Bloom index " +
         "describes raw files and would serve deleted rows — purge the " +
         "positional deletion vector before committing a Bloom index")
@@ -1450,35 +1496,35 @@ object GraftTable {
     // engine-sorted write path (commitNextIsolated sortWithin) and the
     // data-verbatim doors (restore) may assert it; a declaration
     // without the layout is a planner promise with nothing behind it
-    require(sortw.isEmpty || partBy.nonEmpty,
+    require(!has("sortw") || has("partby"),
       "sortw= declares the partby= layout's within-file sort and " +
         "cannot be committed without one")
     // colmap DESCRIBES the declared schema (logical→physical names) —
     // meaningless without one
-    require(colmap.isEmpty || schema.nonEmpty,
+    require(!has("colmap") || has("schema"),
       "colmap= maps the schema= header's names and cannot be committed " +
         "without one")
     // key tombstones name LOGICAL columns while colmap'd files carry
     // physical names: every dv= door refuses a colmap= head and the
     // rename/drop gate refuses a dv= head, so no version carries both
-    require(dv.isEmpty || colmap.isEmpty,
+    require(!has("dv") || !has("colmap"),
       "a commit cannot carry both dv= and colmap= — key tombstones name " +
         "logical columns the colmap'd files do not carry")
     // bucketfn DESCRIBES the partby dir layout (bucketCol = bucket(n,
     // keyCol)) — a bucket declaration without the layout is a promise
     // the planner would act on with nothing behind it
-    require(bucketFnHdr.isEmpty || partBy.nonEmpty,
+    require(!has("bucketfn") || has("partby"),
       "bucketfn= declares the partby= layout's bucket transform and " +
         "cannot be committed without one")
-    require(!statrel || stats.nonEmpty,
+    require(!has("statrel") || has("stats"),
       "statrel= qualifies the stats= line and cannot be committed alone")
-    require(wset.isEmpty || pmap.nonEmpty,
+    require(!has("wset") || has("pmap"),
       "wset= is the partition-mapped conflict vocabulary and cannot be " +
         "committed without pmap=")
     // statenc DESCRIBES the stats line — one never travels without the
     // other (a dangling encoding header would promise prunability the
     // manifest cannot honor)
-    require(statenc.isEmpty || stats.nonEmpty,
+    require(!has("statenc") || has("stats"),
       "statenc= describes the stats= line and cannot be committed alone")
     // metadata is ONE line that must not masquerade as a header: an
     // embedded newline would split it across feed rows / future header
@@ -1492,26 +1538,26 @@ object GraftTable {
         "with a line break) — encode structured metadata before committing")
     require(!isHeaderLine(metadata),
       s"commit metadata must not start with a reserved header key " +
-        s"(${headerKeys.mkString(", ")}): '${metadata.take(40)}'")
+        s"(${headerKeys.mkString("=, ")}=): '${metadata.take(40)}'")
     // stats describe the RAW files; under a deletion vector every
     // stats-served read (readStatsBand/Rect, rowCountOf) would count
     // tombstoned rows and disagree with readVersion. Refuse the
     // combination rather than serve half-true statistics.
-    require(stats.isEmpty || dv.isEmpty,
+    require(!has("stats") || !has("dv"),
       "a commit cannot carry both stats= and dv=: file statistics " +
         "describe raw files and would serve deleted rows — purge the " +
         "deletion vector before committing statistics")
     // same exclusion for the Bloom index: it describes RAW files, and a
     // bloom-served point lookup under a deletion vector would surface
     // tombstoned rows
-    require(bloom.isEmpty || dv.isEmpty,
+    require(!has("bloom") || !has("dv"),
       "a commit cannot carry both bloom= and dv=: the Bloom index " +
         "describes raw files and would serve deleted rows — purge the " +
         "deletion vector before committing a Bloom index")
     // validate the dv spec at the WRITE boundary (<dir>;<keys>) — a
     // malformed header would otherwise surface as a MatchError in some
     // later readVersion/cloneShallow, far from the faulty writer
-    dv.foreach { spec =>
+    headers.get("dv").foreach { spec =>
       val parts = spec.split(";", -1)
       require((parts.length == 2 ||
           (parts.length == 3 && parts(2) == "scoped")) &&
@@ -1521,26 +1567,27 @@ object GraftTable {
     }
     // an update marker needs its replacement dir in the data list and a
     // SCOPED dv (plain tombstones would kill the replacements too)
-    updateDir.foreach { u =>
-      require(dataDir.exists(_.split(",").contains(u)),
+    val dataDirs = headers.get("data").toSeq.flatMap(_.split(","))
+    headers.get("update").foreach { u =>
+      require(dataDirs.contains(u),
         s"update= dir '$u' is not among the commit's data dirs " +
-          s"(${dataDir.getOrElse("<none>")})")
-      require(dv.exists(_.endsWith(";scoped")),
+          s"(${headers.getOrElse("data", "<none>")})")
+      require(headers.get("dv").exists(_.endsWith(";scoped")),
         "an update commit requires dir-scoped tombstones (dv=…;scoped)")
-      require(appendDir.isEmpty,
+      require(!has("append"),
         "a commit cannot be both an append and an update")
     }
     // an append marker must name one of the version's own data dirs —
     // versionDelta's fast path reads exactly that dir as the delta —
     // and an append version never carries a deletion vector (tombstones
     // would silently subtract rows from the marker dir's "added" set)
-    appendDir.foreach { a =>
-      require(dataDir.exists(_.split(",").contains(a)),
+    headers.get("append").foreach { a =>
+      require(dataDirs.contains(a),
         s"append= dir '$a' is not among the commit's data dirs " +
-          s"(${dataDir.getOrElse("<none>")})")
-      require(dv.isEmpty,
+          s"(${headers.getOrElse("data", "<none>")})")
+      require(!has("dv"),
         "an append commit cannot carry a deletion vector — purge first")
-      require(pdvHdr.isEmpty,
+      require(!has("pdv"),
         "an append commit cannot carry a positional deletion vector — " +
           "purge first")
     }
@@ -1582,25 +1629,10 @@ object GraftTable {
       math.max(System.currentTimeMillis(),
         if (pts == Long.MinValue) Long.MinValue else pts + 1)
     }
-    val content = dataDir.map(n => s"data=$n\n").getOrElse("") +
-      appendDir.map(n => s"append=$n\n").getOrElse("") +
-      updateDir.map(n => s"update=$n\n").getOrElse("") +
-      s"ts=$ts\n" +
-      schema.map(sc => s"schema=$sc\n").getOrElse("") +
-      partBy.map(p => s"partby=$p\n").getOrElse("") +
-      stats.map(st => s"stats=${st.encoded}\n").getOrElse("") +
-      dv.map(d => s"dv=$d\n").getOrElse("") +
-      pdvHdr.map(d => s"pdv=$d\n").getOrElse("") +
-      bloom.map(b => s"bloom=$b\n").getOrElse("") +
-      constraintsHdr.map(c => s"constraints=$c\n").getOrElse("") +
-      statenc.map(e => s"statenc=$e\n").getOrElse("") +
-      pmap.map(p => s"pmap=$p\n").getOrElse("") +
-      wset.map(ws => s"wset=$ws\n").getOrElse("") +
-      (if (statrel) "statrel=1\n" else "") +
-      colmap.map(cm => s"colmap=$cm\n").getOrElse("") +
-      bucketFnHdr.map(bf => s"bucketfn=$bf\n").getOrElse("") +
-      sortw.map(sw => s"sortw=$sw\n").getOrElse("") +
-      metadata
+    // one line per header, in `headerKeys` order, then the metadata
+    val content = headerKeys.flatMap(k =>
+      (if (k == "ts") Some(ts.toString) else headers.get(k))
+        .map(x => s"$k=$x\n")).mkString + metadata
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val dest = new Path(mdir, s"commit_$v")
@@ -1697,9 +1729,8 @@ object GraftTable {
     val v = cur.map(_._1 + 1).getOrElse(0)
     stage(df, dir, v)
     commit(fs, dir, v, metadata,
-      schema = Some(schemaEncode(df.schema)), prevTs = prevTsOf(cur),
-      constraintsHdr =
-        if (carried.isEmpty) None else Some(constraintsEncode(carried)))
+      Map("schema" -> schemaEncode(df.schema)) ++ constraintsHeader(carried),
+      prevTs = prevTsOf(cur))
     v
   }
 
@@ -2063,20 +2094,17 @@ object GraftTable {
     // files it describes — through clones, retention, and data= renames
     val (st, bl) = indexWrittenDir(spark, s"$dir/$data", effDf.schema,
       partitionBy, effStatsCols, statsEnc, (bloomCol.toSeq ++ bloomCols).distinct)
-    commit(fs, dir, v, metadata, dataDir = Some(data),
-      stats = st, schema = Some(schemaEncode(df.schema)),
-      partBy =
-        if (partitionBy.nonEmpty) Some(partitionBy.mkString(",")) else None,
-      prevTs = prevTsOf(cur), bloom = bl,
-      constraintsHdr =
-        if (allConstraints.isEmpty) None
-        else Some(constraintsEncode(allConstraints)),
-      statenc =
-        if (statsEnc.isEmpty) None else Some(StatsEnc.encode(statsEnc)),
-      bucketFnHdr = bucketFn.map { case (n, k) =>
-        bucketFnEncode(n, k, partitionBy.head) },
-      sortw =
-        if (sortWithin.isEmpty) None else Some(sortWithin.mkString(",")))
+    // a rewrite states its whole layout: nothing is inherited
+    commit(fs, dir, v, metadata,
+      Map("data" -> data, "schema" -> schemaEncode(df.schema)) ++
+        st.map("stats" -> _.encoded) ++ bl.map("bloom" -> _) ++
+        Option.when(partitionBy.nonEmpty)("partby" -> partitionBy.mkString(",")) ++
+        constraintsHeader(allConstraints) ++
+        Option.when(statsEnc.nonEmpty)("statenc" -> StatsEnc.encode(statsEnc)) ++
+        bucketFn.map { case (n, k) =>
+          "bucketfn" -> bucketFnEncode(n, k, partitionBy.head) } ++
+        Option.when(sortWithin.nonEmpty)("sortw" -> sortWithin.mkString(",")),
+      prevTs = prevTsOf(cur))
     v
   }
 
@@ -2131,8 +2159,9 @@ object GraftTable {
     * re-references version `v`'s data VERBATIM — a metadata-only
     * commit, no file copied or rewritten; history is preserved for
     * forensics and the restore is itself a commit that can be restored
-    * away. Every one of v's layout/index headers carries (schema,
-    * partby, dv, stats/statenc, bloom, pmap, constraints), so the
+    * away. v's headers carry, not the head's: its table-level ones
+    * through `inherit`, and its deletion vectors, skipping index,
+    * partition map and within-file sort (`keptFileHeaders`), so the
     * restored head serves exactly what `readVersion(v)` serves; the
     * append= marker deliberately does NOT carry — a restore is a
     * rewrite-shaped change, and a streaming reader of the table
@@ -2158,26 +2187,13 @@ object GraftTable {
         s"version $v's positional deletion vector $pd has been " +
           "garbage-collected (retention) — it can no longer be restored"))
     val nv = cur + 1
+    // v's table-level headers, not the head's: the restored files are
+    // v's VERBATIM, so v's within-file sort declaration stays true too
     commit(fs, dir, nv,
       if (metadata.isEmpty) s"RESTORE VERSION AS OF $v" else metadata,
-      dataDir = Some(dirs.mkString(",")),
-      dv = hdrs.get("dv"),
-      pdvHdr = hdrs.get("pdv"),
-      schema = hdrs.get("schema"),
-      partBy = hdrs.get("partby"),
-      prevTs = prevTsOf(Some((cur, curHdrs))),
-      stats = hdrs.get("stats").map(TableStats.decode),
-      statrel = hdrs.contains("stats") &&
-        (hdrs.contains("append") || hdrs.contains("statrel")),
-      bloom = hdrs.get("bloom"),
-      statenc = hdrs.get("statenc"),
-      pmap = hdrs.get("pmap"),
-      constraintsHdr = hdrs.get("constraints"),
-      colmap = hdrs.get("colmap"),
-      bucketFnHdr = hdrs.get("bucketfn"),
-      // the restored data is v's files VERBATIM, so v's within-file
-      // sort declaration stays true
-      sortw = hdrs.get("sortw"))
+      inherit(hdrs, Map("data" -> dirs.mkString(",")) ++ keptFileHeaders(hdrs) ++
+        pick(hdrs, "sortw")),
+      prevTs = prevTsOf(Some((cur, curHdrs))))
     nv
   }
 
@@ -2333,20 +2349,16 @@ object GraftTable {
       case None => (fresh, false)
     }
     full.write.mode("errorifexists").parquet(s"$dir/$dvDir")
-    // the data is untouched, so the predecessor's recorded schema (and
-    // layout marker) ride along — without them the NEXT commit would
-    // skip the gate / a later append would miss the partition refusal
-    commit(fs, dir, v, metadata, dataDir = Some(data),
-      dv = Some(s"$dvDir;${keyCols.mkString(",")}" +
-        (if (scoped) ";scoped" else "")),
-      schema = hdrs.get("schema"), partBy = hdrs.get("partby"),
-      prevTs = prevTsOf(Some((cur, hdrs))),
-      // a delete only SHRINKS the row set, and every declared
-      // constraint is subset-closed — carry, don't re-validate
-      constraintsHdr = hdrs.get("constraints"),
-      // subset-closed too: untouched files keep the bucket invariant
-      // (the SPJ read side already stands down under a dv)
-      bucketFnHdr = hdrs.get("bucketfn"))
+    // the data is untouched, so the table-level headers ride along:
+    // without schema= the NEXT commit would skip the gate, without
+    // partby= a later append would miss the partition refusal. A delete
+    // only SHRINKS the row set, and every declared constraint is
+    // subset-closed — carry, don't re-validate; untouched files keep
+    // the bucket invariant (the SPJ read side stands down under a dv)
+    commit(fs, dir, v, metadata, inherit(hdrs, Map("data" -> data,
+      "dv" -> (s"$dvDir;${keyCols.mkString(",")}" +
+        (if (scoped) ";scoped" else "")))),
+      prevTs = prevTsOf(Some((cur, hdrs))))
     v
   }
 
@@ -2545,13 +2557,10 @@ object GraftTable {
         .select(pdvFileName.as("__file"), col("_metadata.row_index").as("__pos")))
     val v = cur + 1
     val pdvDir = writePdv(spark, fs, dir, v, head, fresh, freshCounts = None)
-    commit(fs, dir, v, metadata,
-      dataDir = Some(head.dataDirs.mkString(",")),
-      pdvHdr = Some(pdvDir),
-      schema = hdrs.get("schema"),
-      prevTs = prevTsOf(Some((cur, hdrs))),
-      // a delete only SHRINKS the row set — constraints carry
-      constraintsHdr = hdrs.get("constraints"))
+    // a delete only SHRINKS the row set — constraints carry
+    commit(fs, dir, v, metadata, inherit(hdrs,
+      Map("data" -> head.dataDirs.mkString(","), "pdv" -> pdvDir)),
+      prevTs = prevTsOf(Some((cur, hdrs))))
     v
   }
 
@@ -2700,12 +2709,9 @@ object GraftTable {
     val repl = freshDir("v", v)
     replacements.coalesce(replTasks).write.mode("errorifexists")
       .parquet(s"$dir/$repl")
-    commit(fs, dir, v, metadata,
-      dataDir = Some((head.dataDirs :+ repl).mkString(",")),
-      pdvHdr = Some(pdvDir),
-      schema = hdrs.get("schema"),
-      prevTs = prevTsOf(Some((cur, hdrs))),
-      constraintsHdr = hdrs.get("constraints"))
+    commit(fs, dir, v, metadata, inherit(hdrs,
+      Map("data" -> (head.dataDirs :+ repl).mkString(","), "pdv" -> pdvDir)),
+      prevTs = prevTsOf(Some((cur, hdrs))))
     v
     } finally {
       matchedAll.unpersist(false)
@@ -2747,52 +2753,35 @@ object GraftTable {
       org.apache.spark.sql.types.DataType.fromDDL(t)
     }
     val v = cur + 1
-    commit(fs, dir, v, metadata,
-      // resolve through the ONE sanctioned accessor, not a raw header
-      // copy: a convention-path predecessor (commitNext) has no data=
-      // header, and copying None would point this version at a
-      // nonexistent conventional dir — the commitDeleteVector rule
-      dataDir = Some(dataDirsFrom(hdrs, cur).mkString(",")),
-      dv = hdrs.get("dv"),
-      pdvHdr = hdrs.get("pdv"),
-      // new columns land BEFORE the partition columns: every reader
-      // serves partition columns LAST (the file-table convention), so a
-      // declared order with data columns after them would make the next
-      // full rewrite's schema gate see a phantom "retype" and refuse
-      schema = Some({
-        val partSet =
-          hdrs.get("partby").map(_.split(",").toSet).getOrElse(Set.empty)
-        val (dataPrev, partPrev) = prev.partition(p => !partSet(p._1))
-        (dataPrev ++ cols ++ partPrev).map { case (n, t) =>
-          s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(",")
-      }),
-      partBy = hdrs.get("partby"),
-      prevTs = prevTsOf(Some((cur, hdrs))),
-      stats = hdrs.get("stats").map(TableStats.decode),
-      // an append predecessor's STATS keys are table-relative; this
-      // commit carries no append= marker, so declare the key shape —
-      // only when a stats line actually rides along (a bare statrel=
-      // is refused by commit())
-      statrel = hdrs.contains("stats") &&
-        (hdrs.contains("append") || hdrs.contains("statrel")),
-      bloom = hdrs.get("bloom"),
-      statenc = hdrs.get("statenc"),
-      pmap = hdrs.get("pmap"),
-      constraintsHdr = hdrs.get("constraints"),
-      // on a colmap head, a just-added column maps to a FRESH physical
-      // name no file can carry: after DROP x / ADD COLUMN x, binding
-      // the physical request to the literal name would RESURRECT the
-      // dropped column's old bytes instead of backfilling NULL — the
-      // absent mapping makes parquet null-fill it by construction
-      colmap = hdrs.get("colmap").map { enc =>
-        val prevMap = colmapDecode(enc)
-        val withNew = prev.map { case (n, _) =>
-          (n, prevMap.getOrElse(n, n)) } ++ cols.map { case (n, _) =>
-          (n, s"__gadd${v}_${urlEnc(n)}") }
-        colmapEncode(withNew)
-      },
-      // adding a column cannot disturb the bucket invariant — carry
-      bucketFnHdr = hdrs.get("bucketfn"))
+    // new columns land BEFORE the partition columns: every reader
+    // serves partition columns LAST (the file-table convention), so a
+    // declared order with data columns after them would make the next
+    // full rewrite's schema gate see a phantom "retype" and refuse
+    val partSet = partByOf(hdrs).toSet
+    val (dataPrev, partPrev) = prev.partition(p => !partSet(p._1))
+    val schema = (dataPrev ++ cols ++ partPrev).map { case (n, t) =>
+      s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(",")
+    // on a colmap head, a just-added column maps to a FRESH physical
+    // name no file can carry: after DROP x / ADD COLUMN x, binding the
+    // physical request to the literal name would RESURRECT the dropped
+    // column's old bytes instead of backfilling NULL — the absent
+    // mapping makes parquet null-fill it by construction
+    val colmap = hdrs.get("colmap").map { enc =>
+      val prevMap = colmapDecode(enc)
+      "colmap" -> colmapEncode(prev.map { case (n, _) =>
+        (n, prevMap.getOrElse(n, n)) } ++ cols.map { case (n, _) =>
+        (n, s"__gadd${v}_${urlEnc(n)}") })
+    }
+    // resolve the data dirs through the ONE sanctioned accessor, not a
+    // raw header copy: a convention-path predecessor (commitNext) has no
+    // data= header, and copying None would point this version at a
+    // nonexistent conventional dir — the commitDeleteVector rule. The
+    // other table-level headers carry: adding a column cannot disturb
+    // the layout, the bucket invariant or a constraint
+    commit(fs, dir, v, metadata, inherit(hdrs,
+      Map("data" -> dataDirsFrom(hdrs, cur).mkString(","), "schema" -> schema) ++
+        colmap ++ keptFileHeaders(hdrs)),
+      prevTs = prevTsOf(Some((cur, hdrs))))
     v
   }
 
@@ -2945,15 +2934,21 @@ object GraftTable {
       case ((oldName, _), (newName, _)) =>
         (newName, prevMap.getOrElse(oldName, oldName))
     }
+    commitAlterNames(fs, dir, cur, hdrs, newSchema, newMap, metadata)
+  }
+
+  /** The commit of a metadata-only RENAME/DROP COLUMN: the head's files
+    * verbatim under a new schema= and colmap=. */
+  private def commitAlterNames(fs: FileSystem, dir: String, cur: Int,
+      hdrs: Map[String, String], schema: Seq[(String, String)],
+      colmap: Seq[(String, String)], metadata: String): Int = {
     val v = cur + 1
-    commit(fs, dir, v, metadata,
-      dataDir = Some(dataDirsFrom(hdrs, cur).mkString(",")),
-      schema = Some(newSchema.map { case (n, t) =>
-        s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(",")),
-      partBy = hdrs.get("partby"),
-      prevTs = prevTsOf(Some((cur, hdrs))),
-      colmap = Some(colmapEncode(newMap)),
-      bucketFnHdr = hdrs.get("bucketfn"))
+    commit(fs, dir, v, metadata, inherit(hdrs, Map(
+      "data" -> dataDirsFrom(hdrs, cur).mkString(","),
+      "schema" -> schema.map { case (n, t) =>
+        s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(","),
+      "colmap" -> colmapEncode(colmap))),
+      prevTs = prevTsOf(Some((cur, hdrs))))
     v
   }
 
@@ -2994,16 +2989,7 @@ object GraftTable {
     val prevMap = hdrs.get("colmap").map(colmapDecode).getOrElse(Map.empty)
     val newMap = newSchema.map { case (n, _) =>
       (n, prevMap.getOrElse(n, n)) }
-    val v = cur + 1
-    commit(fs, dir, v, metadata,
-      dataDir = Some(dataDirsFrom(hdrs, cur).mkString(",")),
-      schema = Some(newSchema.map { case (n, t) =>
-        s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(",")),
-      partBy = hdrs.get("partby"),
-      prevTs = prevTsOf(Some((cur, hdrs))),
-      colmap = Some(colmapEncode(newMap)),
-      bucketFnHdr = hdrs.get("bucketfn"))
-    v
+    commitAlterNames(fs, dir, cur, hdrs, newSchema, newMap, metadata)
   }
 
   /** MERGE-ON-READ UPDATE: one atomic commit = dir-scoped tombstones
@@ -3140,30 +3126,30 @@ object GraftTable {
     val upd = freshDir("v", v)
     replacements.write.mode("errorifexists").parquet(s"$dir/$upd")
 
-    commit(fs, dir, v, metadata,
-      dataDir = Some((dataDirs :+ upd).mkString(",")),
-      dv = Some(s"$dvDir;${keyCols.mkString(",")};scoped"),
-      updateDir = Some(upd),
-      schema = hdrs.get("schema")
-        .orElse(Some(schemaEncode(replacements.schema))),
-      prevTs = prevTsOf(Some((cur, hdrs))),
-      constraintsHdr = hdrs.get("constraints"))
+    commit(fs, dir, v, metadata, inherit(hdrs, Map(
+      "data" -> (dataDirs :+ upd).mkString(","),
+      "dv" -> s"$dvDir;${keyCols.mkString(",")};scoped", "update" -> upd,
+      "schema" -> hdrs.getOrElse("schema", schemaEncode(replacements.schema)))),
+      prevTs = prevTsOf(Some((cur, hdrs))))
     v
   }
 
   /** Materialize the current version's DV into a plain rewrite (Delta's
     * REORG … APPLY (PURGE)): survivors become a fresh isolated data dir,
-    * the new version carries no dv= header, and reads are anti-join-free
-    * again. The moment to pay the CoW cost — once, when DVs have
-    * accumulated — instead of at every delete. */
+    * laid out under the head's own partitionBy and bucket declarations
+    * (`rewriteHead`), the new version carries no dv= header, and reads
+    * are anti-join-free again. The moment to pay the CoW cost — once,
+    * when DVs have accumulated — instead of at every delete. */
   def purgeDeleteVector(spark: SparkSession, dir: String,
       metadata: String = "purge deletion vector"): Int =
     purgeHead(spark, dir, metadata, positional = false)
 
   /** The ONE purge body: resolve the head once, read exactly that
-    * version and commit its survivors pinned to it — a commit landing
-    * in between (a DELETE, say) fails the pin instead of being silently
-    * undone by a rewrite of the older snapshot. */
+    * version and rewrite its survivors through `rewriteHead`, pinned to
+    * it — a commit landing in between (a DELETE, say) fails the pin
+    * instead of being silently undone by a rewrite of the older
+    * snapshot — and re-laid out under the head's own partitionBy and
+    * bucket declarations. */
   private def purgeHead(spark: SparkSession, dir: String, metadata: String,
       positional: Boolean): Int = {
     val fs = fsOf(spark, dir)
@@ -3171,8 +3157,62 @@ object GraftTable {
       sys.error(s"no committed version under $dir to purge"))
     if (positional) require(headersOf(fs, dir, cur).contains("pdv"),
       s"version $cur of $dir carries no positional deletion vector")
-    commitNextIsolated(spark, dir, readVersion(spark, dir, cur),
-      metadata, expectVersion = Some(cur))
+    rewriteHead(spark, dir, cur, "purge", metadata)(readVersion(spark, dir, cur))
+  }
+
+  /** The ONE self-described copy-on-write rewrite — SQL UPDATE/DELETE's
+    * copy-on-write arm, SQL MERGE and both purges: commit `rows`, a
+    * rewrite of version `cur` (-1: the empty table), as the version
+    * after it, PINNED to it, with `cur`'s own declarations re-applied.
+    * Its partitionBy and bucket layout carry (`commitNextIsolated`
+    * re-validates the bucket invariant over the rewritten rows), its
+    * constraints carry and re-enforce, and its skipping index is
+    * re-derived from the self-described statenc=/bloom= headers, so
+    * SQL text needs no ordinal re-declaration. Refused before `rows`
+    * is evaluated: a partition-mapped head (the rewrite would drop the
+    * value→dir map) and a stats line with code-declared (lambda)
+    * ordinals — the rewrite cannot re-derive caller code, and silently
+    * dropping the index would betray the loud-refusal contract.
+    * `widen` (SQL MERGE WITH SCHEMA EVOLUTION) first adds its columns
+    * through the metadata-only `commitAddColumns`, after the refusals,
+    * and the pin then advances by exactly that one version. Returns the
+    * rewrite's version. */
+  private[graft] def rewriteHead(spark: SparkSession, dir: String, cur: Int,
+      door: String, metadata: String, widen: Seq[(String, String)] = Nil)(
+      rows: => DataFrame): Int = {
+    val fs = fsOf(spark, dir)
+    val h = if (cur < 0) Map.empty[String, String] else headersOf(fs, dir, cur)
+    require(!h.contains("pmap"),
+      s"$door refused — this table is partition-mapped; replace its " +
+        "partitions through replacePartitionsWithRetry (a rewrite would " +
+        "drop the value→dir map)")
+    val statsEnc = h.get("statenc").map(StatsEnc.decode).getOrElse(Nil)
+    if (!statencCovers(h))
+      throw new IndexRedeclarationRequired(
+        s"$door cannot re-derive this table's stats index: its stat " +
+          s"columns ${h.get("stats").map(TableStats.decode(_).cols)
+            .getOrElse(Nil)} are not fully registry-declared (statenc " +
+          s"covers ${statsEnc.map(_._1)}) — rewrite through the API with " +
+          "the original statsCols, or re-commit the table with statsEnc " +
+          "registry encodings")
+    val pin =
+      if (widen.isEmpty) cur
+      else {
+        val va = commitAddColumns(spark, dir, widen,
+          s"$door WITH SCHEMA EVOLUTION adds (${widen.map(_._1).mkString(", ")})")
+        if (va != cur + 1)
+          throw new java.util.ConcurrentModificationException(
+            s"a commit interleaved between the $door snapshot (v$cur) and " +
+              s"its schema evolution (landed v$va) — re-run it against the " +
+              "new head")
+        va
+      }
+    commitNextIsolated(spark, dir, rows, metadata,
+      partitionBy = partByOf(h),
+      statsEnc = if (h.contains("stats")) statsEnc else Nil,
+      bloomCols = h.get("bloom").map(bloomColsOf).getOrElse(Nil),
+      expectVersion = Some(pin),
+      bucketFn = bucketFnOf(h).map { case (n, k, _) => (n, k) })
   }
 
   /** Bounded serializable-OCC retry shared by EVERY commit door. Runs
@@ -3638,26 +3678,33 @@ object GraftTable {
         val prevDirs = if (!door.append) Nil
           else cur.map { case (c, h) => dataDirsFrom(h, c) }
             .getOrElse(Nil)
-        beforePublish()
-        commit(fs, dir, v, metadata,
-          dataDir = Some((prevDirs :+ staged).mkString(",")),
-          appendDir =
-            if (door.append && (cur.isDefined || door.markCreate)) Some(staged)
-            else None,
-          schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur),
-          partBy = if (partBy.isEmpty) None else Some(partBy.mkString(",")),
+        // the staged rows' own schema either way (an append matches the
+        // head's by name, in its own column order)
+        val files = Map("data" -> (prevDirs :+ staged).mkString(","),
+          "schema" -> schemaEncode(schema)) ++
+          Option.when(door.append && (cur.isDefined || door.markCreate))(
+            "append" -> staged) ++
           // an overwrite's stats are the staged dir's own, dir-relative
           // (it IS the new version)
-          stats =
-            if (!door.append) newStats
-            else newStats.map(mergeAppendStats(_, staged, cur)),
-          bloom = newBloom,
-          statenc =
-            if (enc.isEmpty || newStats.isEmpty) None
-            else Some(StatsEnc.encode(enc)),
-          constraintsHdr =
-            if (carried.isEmpty) None else Some(constraintsEncode(carried)),
-          bucketFnHdr = cur.flatMap(_._2.get("bucketfn")))
+          (if (!door.append) newStats
+            else newStats.map(mergeAppendStats(_, staged, cur)))
+            .map("stats" -> _.encoded) ++
+          newBloom.map("bloom" -> _) ++
+          Option.when(enc.nonEmpty && newStats.nonEmpty)(
+            "statenc" -> StatsEnc.encode(enc))
+        // an append keeps the chain's files: the head's layout,
+        // constraints and bucket declaration carry. An overwrite states
+        // them: the layout it re-laid its rows out to, the enforced
+        // constraints, the bucket transform it validated — and no
+        // colmap=, since its fresh files carry the logical names
+        val head = cur.fold(Map.empty[String, String])(_._2)
+        val hdrs =
+          if (door.append) inherit(head, files)
+          else files ++ constraintsHeader(carried) ++
+            Option.when(partBy.nonEmpty)("partby" -> partBy.mkString(",")) ++
+            pick(head, "bucketfn")
+        beforePublish()
+        commit(fs, dir, v, metadata, hdrs, prevTs = prevTsOf(cur))
         Some(v)
     } catch {
       case e: Throwable =>
@@ -3844,11 +3891,11 @@ object GraftTable {
       val entries = newMap.toSeq.sortBy(_._1).map(_._2)
       val v = cur.map(_._1 + 1).getOrElse(0)
       commit(fs, dir, v, metadata,
-        dataDir = Some(entries.mkString(",")),
-        schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur),
-        constraintsHdr = cur.flatMap(_._2.get("constraints")),
-        pmap = Some(pmapEncode(partCol, newMap)),
-        wset = Some(w.map(urlEnc).mkString(",")))
+        Map("data" -> entries.mkString(","), "schema" -> schemaEncode(schema),
+          "pmap" -> pmapEncode(partCol, newMap),
+          "wset" -> w.map(urlEnc).mkString(",")) ++
+          cur.flatMap(_._2.get("constraints")).map("constraints" -> _),
+        prevTs = prevTsOf(cur))
       v
     }
   }
@@ -4052,8 +4099,8 @@ object GraftTable {
             case None =>
               // first epoch IS the table — a plain full version
               commit(fs, dir, v, s"epoch=$epochId;query=$queryId",
-                dataDir = Some(staged),
-                schema = Some(schemaEncode(schema)), prevTs = prevTsOf(cur))
+                Map("data" -> staged, "schema" -> schemaEncode(schema)),
+                prevTs = prevTsOf(cur))
             case Some((c, hdrs)) =>
               import spark.implicits._
               val dataDirs = dataDirsFrom(hdrs, c)
@@ -4115,13 +4162,11 @@ object GraftTable {
                         "left_anti").drop("__gdir"))
                     else None)
               commit(fs, dir, v, s"epoch=$epochId;query=$queryId",
-                dataDir = Some((dataDirs :+ staged).mkString(",")),
-                dv = Some(s"$dvDir;${keyCols.mkString(",")};scoped"),
-                updateDir = Some(staged),
-                schema = hdrs.get("schema")
-                  .orElse(Some(schemaEncode(schema))),
-                prevTs = prevTsOf(cur),
-                constraintsHdr = hdrs.get("constraints"))
+                inherit(hdrs, Map("data" -> (dataDirs :+ staged).mkString(","),
+                  "dv" -> s"$dvDir;${keyCols.mkString(",")};scoped",
+                  "update" -> staged,
+                  "schema" -> hdrs.getOrElse("schema", schemaEncode(schema)))),
+                prevTs = prevTsOf(cur))
           }
         Some(v)
       }
@@ -4510,7 +4555,7 @@ object GraftTable {
         // hardcoded list here once lagged it (the dv= header leaked
         // into subscribers' metadata when deletion vectors landed)
         trim(regexp_replace(col("value"),
-          s"(?s)^((?:${headerKeys.map(_.stripSuffix("=")).mkString("|")})" +
+          s"(?s)^((?:${headerKeys.mkString("|")})" +
             "=[^\\n]*\\n)*", "")).as("metadata"))
   }
 
@@ -5094,9 +5139,12 @@ object GraftTable {
     * stats-serving readers. Index redeclaration contracts match
     * `compactChain` (stats/Bloom must be re-declared, not silently
     * dropped); the head keeps serving its own sidecar, the folded tail
-    * gets a fresh one. Declared constraints carry WITHOUT re-running:
-    * the fold is row-preserving, and notnull/check/unique are all
-    * invariant under a row-preserving rewrite. Predecessor versions
+    * gets a fresh one. The table-level headers carry (`inherit`):
+    * declared constraints WITHOUT re-running — the fold is
+    * row-preserving, and notnull/check/unique are all invariant under a
+    * row-preserving rewrite — and a renamed/dropped-column head's
+    * colmap=, since the folded files keep the physical names the tail
+    * files carried, like the untouched head dir. Predecessor versions
     * keep serving (their dirs are untouched); once retention ages them
     * out, the old tail dirs are reclaimable. Returns the version. */
   def compactChainTail(spark: SparkSession, dir: String,
@@ -5195,13 +5243,14 @@ object GraftTable {
       val headEntries = prev.files.filter(_.file.startsWith(s"$head/"))
       TableStats(fresh.cols, headEntries ++ mine)
     }
-    commit(fs, dir, v, metadata,
-      dataDir = Some(s"$head,$tDir"), stats = mergedStats,
-      schema = h.get("schema"), prevTs = prevTsOf(Some((c, h))),
-      bloom = bl, constraintsHdr = h.get("constraints"),
-      statenc =
-        if (statsEnc.isEmpty) None else Some(StatsEnc.encode(statsEnc)),
-      statrel = mergedStats.nonEmpty)
+    // the head dir and the folded tail keep the chain's table-level
+    // headers: a colmap= head's folded files carry the same physical
+    // names as the untouched head dir
+    commit(fs, dir, v, metadata, inherit(h, Map("data" -> s"$head,$tDir") ++
+      mergedStats.map("stats" -> _.encoded) ++ bl.map("bloom" -> _) ++
+      Option.when(statsEnc.nonEmpty)("statenc" -> StatsEnc.encode(statsEnc)) ++
+      Option.when(mergedStats.nonEmpty)("statrel" -> "1")),
+      prevTs = prevTsOf(Some((c, h))))
     v
   }
 

@@ -94,12 +94,53 @@ class EntryCountSpec extends AnyFunSuite {
         needle), -1).length - 1)(path)
     }
     val table = "graft/sources/GraftTable.scala"
-    assert(sites("appendDir =") == Seq(table),
-      s"appendDir = sites: ${sites("appendDir =")}")
+    assert(sites("\"append\" ->") == Seq(table),
+      s"append= header sites: ${sites("\"append\" ->")}")
     assert(sites("mergeAppendStats(") == Seq(table, table) &&
       sites("def mergeAppendStats(") == Seq(table),
       s"mergeAppendStats( sites (the definition and one call): " +
         s"${sites("mergeAppendStats(")}")
+  }
+
+  test("commit takes its headers as one map: no per-header parameter") {
+    // each door used to pass its headers as 17 separate Option
+    // parameters and hand-copy the head's table-level ones
+    val src = mainSources.toMap.apply("graft/sources/GraftTable.scala")
+    val sig = src.substring(src.indexOf("  def commit(fs: FileSystem"))
+    val params = sig.substring(sig.indexOf('(') + 1, sig.indexOf("): Unit"))
+    val names = "(?:^|,)\\s*(\\w+)\\s*:".r.findAllMatchIn(params)
+      .map(_.group(1)).toSeq
+    assert(names == Seq("fs", "dir", "v", "metadata", "headers",
+      "retain", "tsMs", "prevTs"), s"commit parameters: $names")
+    assert(!params.contains("Option[String]") &&
+      !params.contains("Option[TableStats]"), params)
+  }
+
+  test("the commit header key list is spelled once in src/main") {
+    // one ordered list serves the writer and the parser; a header line
+    // interpolated by hand (s"<key>=$…") would be a second order
+    val keyList = "(?s)Seq\\(\\s*\"data=?\",[^)]*\\)".r
+    val lists = mainSources.flatMap { case (path, src) =>
+      keyList.findAllIn(src).map(path -> _) }
+    assert(lists.map(_._1) == Seq("graft/sources/GraftTable.scala"),
+      s"header key lists: $lists")
+    val keys = "\"([a-z]+)\"".r.findAllMatchIn(lists.head._2)
+      .map(_.group(1)).toSeq
+    assert(keys.size == 18 && keys.distinct == keys && keys.contains("ts"),
+      s"header keys: $keys")
+    val written = ("s\"(" + keys.mkString("|") + ")=\\$").r
+    val handWritten = mainSources.flatMap { case (path, src) =>
+      written.findAllIn(src).map(m => s"$path: $m") }
+    assert(handWritten.isEmpty, s"hand-written header lines: $handWritten")
+  }
+
+  test("src/main/scala/graft/plans makes no commitNextIsolated call") {
+    // SQL UPDATE/DELETE copy-on-write and MERGE rewrite through
+    // GraftTable.rewriteHead, which re-derives layout and index itself
+    val calls = mainSources.collect { case (path, src)
+        if path.startsWith("graft/plans/") &&
+          src.contains("commitNextIsolated") => path }
+    assert(calls.isEmpty, s"commitNextIsolated in plans/: $calls")
   }
 
   test("every oracle key has a query implementation") {

@@ -157,4 +157,31 @@ class MergeOnReadSpec extends SparkSpec {
     assert(!GraftTable.headersOf(fs, dir, 3).contains("dv"))
     assert(GraftTable.read(spark, dir).count() == 18L)
   }
+
+  test("a purge re-lays its survivors out under the head's partitionBy " +
+      "and bucket declarations") {
+    import spark.implicits._
+    val dir = freshDir("purge_layout")
+    val bucketed = (0L until 40L).map(k => (k, (k % 4).toInt, k * 10))
+      .toDF("key", "b", "amt")
+    GraftTable.commitNextIsolated(spark, dir, bucketed, "bucketed",
+      partitionBy = Seq("b"), bucketFn = Some((4, "key")))
+    GraftTable.commitDeleteVector(spark, dir,
+      Seq(3L, 7L, 8L, 20L, 33L).toDF("key"), Seq("key"), "dv delete")
+    val before = GraftTable.read(spark, dir)
+    val v = GraftTable.purgeDeleteVector(spark, dir)
+    val fs = GraftTable.fsOf(spark, dir)
+    val hdrs = GraftTable.headersOf(fs, dir, v)
+    assert(hdrs.keySet == Set("bucketfn", "data", "partby", "schema", "ts"),
+      hdrs.keySet.toSeq.sorted)
+    assert(hdrs("partby") == "b" &&
+      GraftTable.bucketFnOf(hdrs).contains((4, "key", "b")))
+    // the partition dirs are the layout the declarations describe
+    val parts = fs.listStatus(new Path(s"$dir/${hdrs("data")}"))
+      .map(_.getPath.getName).filter(_.startsWith("b=")).toSet
+    assert(parts == (0 until 4).map(b => s"b=$b").toSet, parts)
+    val after = GraftTable.read(spark, dir)
+    assert(after.count() == 35L)
+    assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty)
+  }
 }

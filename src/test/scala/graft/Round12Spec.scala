@@ -68,7 +68,7 @@ class Round12Spec extends SparkSpec {
           try {
             spark.range(0, n).toDF("k").write.mode("overwrite")
               .parquet(s"$dir/$data")
-            GraftTable.commit(fs, dir, 1, tag, dataDir = Some(data))
+            GraftTable.commit(fs, dir, 1, tag, Map("data" -> data))
             outcome.add(s"win:$tag:$n")
           } catch {
             case _: java.util.ConcurrentModificationException =>
@@ -235,7 +235,7 @@ class Round12Spec extends SparkSpec {
       val v = GraftTable.readManifest(fs, dir).map(_._1 + 1).getOrElse(0)
       val data = s"v${v}_gc-test"
       fourth.write.parquet(s"$dir/$data")
-      GraftTable.commit(fs, dir, v, "v3", retain = 1, dataDir = Some(data))
+      GraftTable.commit(fs, dir, v, "v3", Map("data" -> data), retain = 1)
       v
     }
     assert(v3 == 3)

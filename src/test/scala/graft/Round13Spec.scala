@@ -676,9 +676,8 @@ class Round13Spec extends SparkSpec {
       "shallow clone dropped the source's deletion vector")
     // stats describing raw files under a dv would lie — refused loudly
     intercept[IllegalArgumentException] {
-      GraftTable.commit(fs, src, 99, "bad",
-        dataDir = Some("v0"), dv = Some("dvX;k"),
-        stats = Some(GraftTable.TableStats(Seq("k"), Nil)))
+      GraftTable.commit(fs, src, 99, "bad", Map("data" -> "v0",
+        "dv" -> "dvX;k", "stats" -> GraftTable.TableStats(Seq("k"), Nil).encoded))
     }
     // a partitioned layout CAN carry stats: relative-path keying keeps
     // one stats row per physical file and readStatsBand reads through

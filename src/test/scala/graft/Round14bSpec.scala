@@ -266,16 +266,16 @@ class Round14bSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("List(k), not 's'"), e2.getMessage)
     val e3 = intercept[IllegalArgumentException] {
-      GraftTable.commit(fs, dir, 1, "both", dataDir = Some("v0"),
-        dv = Some("dvdir;k"), bloom = Some("k|1024|4"))
+      GraftTable.commit(fs, dir, 1, "both", Map("data" -> "v0",
+        "dv" -> "dvdir;k", "bloom" -> "k|1024|4"))
     }
     assert(e3.getMessage.contains("bloom"), e3.getMessage)
     // key tombstones name logical columns, colmap'd files physical ones:
     // no door mints the pair, and commit() refuses it outright
     val e3b = intercept[IllegalArgumentException] {
-      GraftTable.commit(fs, dir, 1, "dv+colmap", dataDir = Some("v0"),
-        schema = Some("k2:bigint,s:string"), colmap = Some("k2:k"),
-        dv = Some("dvdir;k2"))
+      GraftTable.commit(fs, dir, 1, "dv+colmap", Map("data" -> "v0",
+        "schema" -> "k2:bigint,s:string", "colmap" -> "k2:k",
+        "dv" -> "dvdir;k2"))
     }
     assert(e3b.getMessage.contains("dv= and colmap="), e3b.getMessage)
     // round trip: a file whose indexed column is all null gets an

@@ -558,6 +558,30 @@ class Round15Spec extends SparkSpec {
     val (_, hit4, _) =
       GraftTable.readStatsBand(spark, dir, 4, "o_orderdate", loUs, hiUs)
     assert(hit4.toSet == hitAfter.toSet)
+
+    // a RENAMED column folds through both tail doors: the folded files
+    // keep their physical names, like the untouched head dir, so the
+    // new version must keep the colmap= that maps the logical name onto
+    // them — every renamed value reads back as before the fold
+    Seq("compactChainTail", "maintain").foreach { door =>
+      val rdir = freshDir(s"tailcomp_renamed_$door")
+      val rows = o.select(col("o_orderkey"), col("price"))
+      GraftTable.commitNextIsolated(spark, rdir,
+        rows.where(col("o_orderkey") % 3 === 0), "head")
+      (1 to 2).foreach(i => GraftTable.commitAppend(spark, rdir,
+        rows.where(col("o_orderkey") % 3 === i), s"tail $i"))
+      GraftTable.commitRenameColumns(spark, rdir, Seq("price" -> "amount"))
+      val pre = GraftTable.read(spark, rdir)
+      assert(pre.where(col("amount").isNull).isEmpty, door)
+      val folded =
+        if (door == "compactChainTail") GraftTable.compactChainTail(spark, rdir)
+        else GraftTable.maintain(spark, rdir, maxChainDirs = 2,
+          incremental = true).compacted.get
+      assert(GraftTable.dataDirsOf(fs, rdir, folded).size == 2, door)
+      val post = GraftTable.read(spark, rdir)
+      assert(post.exceptAll(pre).isEmpty && pre.exceptAll(post).isEmpty,
+        s"$door: the fold changed the rows of a renamed chain")
+    }
   }
 
   test("bloom: executor-built multi-column sidecar serves both keys") {
