@@ -266,33 +266,9 @@ object Graft {
   // runs at EXECUTION time (`GraftActionPlan` + its strategy): EXPLAIN
   // or any analysis-only pass over the statement performs no mutation.
   // The returned rows are a LOCAL report, never data. Index posture
-  // matches the DSv2 write door: a
-  // statenc-declared stats line and the bloom= column set re-derive
-  // from the manifest automatically, so SQL OPTIMIZE keeps the skipping
-  // index live; a lambda-ordinal stats line refuses loudly through
-  // compactChain's own gate.
-
-  /** Self-described index re-declaration from the current version's
-    * headers — (statsEnc, first bloom col, remaining bloom cols). */
-  private def sqlIdxDecl(spark: SparkSession, dir: String)
-      : (Seq[(String, String)], Option[String], Seq[String]) = {
-    val fs = sources.GraftTable.fsOf(spark, dir)
-    sources.GraftTable.currentVersion(fs, dir)
-      .map(v => sources.GraftTable.headersOf(fs, dir, v)) match {
-      case Some(h) =>
-        val enc = h.get("statenc")
-          .map(sources.GraftTable.StatsEnc.decode).getOrElse(Nil)
-        // pass statsEnc only when it FULLY covers the stats line (the
-        // shared statencCovers predicate) — a partial decl would mint a
-        // narrower index silently; the bare Nil lets compactChain's
-        // redeclaration gate refuse loudly
-        val blooms = h.get("bloom")
-          .map(sources.GraftTable.bloomColsOf).getOrElse(Nil)
-        (if (sources.GraftTable.statencCovers(h)) enc else Nil,
-          blooms.headOption, blooms.drop(1))
-      case None => (Nil, None, Nil)
-    }
-  }
+  // matches the DSv2 write door: the statenc= encodings and the bloom=
+  // column set re-derive from the manifest (`GraftTable.currentIndex`),
+  // so SQL OPTIMIZE keeps the skipping index live.
 
   private def litArgs(name: String, usage: String,
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
@@ -320,10 +296,9 @@ object Graft {
         // the index re-declaration resolves at EXECUTION time too — the
         // headers current when the compaction actually runs, not when
         // the statement was planned
-        val (enc, b1, bs) = sqlIdxDecl(spark, dir)
+        val (enc, blooms) = sources.GraftTable.currentIndex(spark, dir)
         val v = sources.GraftTable.compactChain(spark, dir, target,
-          metadata = "OPTIMIZE (SQL)", statsEnc = enc, bloomCol = b1,
-          bloomCols = bs)
+          metadata = "OPTIMIZE (SQL)", statsEnc = enc, bloomCols = blooms)
         val fs = sources.GraftTable.fsOf(spark, dir)
         val dirs = sources.GraftTable.dataDirsOf(fs, dir, v)
         // recursive walk: a preserved partitionBy layout nests its files
@@ -401,10 +376,10 @@ object Graft {
         "n_vacuumed" -> LongType, "compaction_refused" -> StringType,
         "checkpoint_failed" -> StringType),
       () => {
-        val (enc, b1, bs) = sqlIdxDecl(spark, dir)
+        val (enc, blooms) = sources.GraftTable.currentIndex(spark, dir)
         val rep = sources.GraftTable.maintain(spark, dir,
           maxChainDirs = maxDirs, targetFiles = target, statsEnc = enc,
-          bloomCol = b1, bloomCols = bs)
+          bloomCols = blooms)
         Seq(org.apache.spark.sql.Row(
           rep.compacted.map(Int.box).orNull, rep.checkpointedTo,
           rep.expired.size.toLong, rep.vacuumed.size.toLong,

@@ -192,10 +192,9 @@ object Round13Ops {
       .sortWithinPartitions("l_shipdate")
     GraftTable.commitNextIsolated(s, dir, li, "clustered on l_shipdate",
       // parquet serves the column as TIMESTAMP_NTZ; session TZ is UTC so
-      // the TimestampType cast is value-identical, and unix_micros gives
-      // the ordinal-long encoding the stats contract wants
-      statsCols = Seq("l_shipdate" ->
-        ((c: Column) => unix_micros(c.cast(TimestampType)))))
+      // the `us` encoding's TimestampType cast is value-identical, and
+      // epoch micros is the ordinal-long encoding the stats contract wants
+      statsEnc = Seq("l_shipdate" -> "us"))
     dir
   }
 
@@ -234,9 +233,7 @@ object Round13Ops {
       .delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
     GraftTable.commitNextIsolated(s, dir, zorderFrame(s, d),
       "z-ordered on (l_shipdate, l_quantity)",
-      statsCols = Seq(
-        "l_shipdate" -> ((c: Column) => unix_micros(c.cast(TimestampType))),
-        "l_quantity" -> ((c: Column) => c)))
+      statsEnc = Seq("l_shipdate" -> "us", "l_quantity" -> "id"))
     dir
   }
 
@@ -485,7 +482,7 @@ object Round13Ops {
       val n = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
       GraftTable.commitNext(s, dir, n.filter(col("n_nationkey") < 10), "v0 load")
       GraftTable.commitNextIsolated(s, dir, n, "full load",
-        statsCols = Seq("n_nationkey" -> ((c: Column) => c)))
+        statsEnc = Seq("n_nationkey" -> "id"))
       // a MoR delete on a stats-bearing head refuses since round 17 —
       // the deliberate index drop is itself a commit flavor the history
       // must surface

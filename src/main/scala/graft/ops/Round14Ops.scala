@@ -100,11 +100,12 @@ object Round14Ops {
           money(dec(col("o_totalprice")))).as("late_price"))
       .repartitionByRange(8, col("o_orderdate"), col("o_orderkey"))
     GraftTable.commitNextIsolated(s, dir, clustered, "null-clustered",
-      statsCols = Seq(
+      statsEnc = Seq(
         // parquet serves o_orderdate as TIMESTAMP_NTZ; session TZ is
-        // UTC so the TimestampType cast is value-identical
-        "o_orderdate" -> ((c: Column) => unix_micros(c.cast(TimestampType))),
-        "late_price" -> ((c: Column) => c)))
+        // UTC so the `us` encoding's TimestampType cast is value-identical
+        "o_orderdate" -> "us",
+        // a decimal: `id` records its LONG cast (the scan fallback)
+        "late_price" -> "id"))
     dir
   }
 
@@ -117,17 +118,16 @@ object Round14Ops {
     val dir = freshDir(s, d, "appendstats")
     val o = t(s, d, "orders").select(col("o_orderkey"), col("o_orderdate"),
       money(dec(col("o_totalprice"))).as("price"))
-    val statsCols: GraftTable.StatsCols =
-      // TIMESTAMP_NTZ parquet column; UTC session makes the cast exact
-      Seq("o_orderdate" -> ((c: Column) => unix_micros(c.cast(TimestampType))))
+    // TIMESTAMP_NTZ parquet column; UTC session makes the `us` cast exact
+    val statsEnc = Seq("o_orderdate" -> "us")
     GraftTable.commitNextIsolated(s, dir,
       o.filter(col("o_orderdate") < to_timestamp(lit("1996-01-01")))
         .repartitionByRange(4, col("o_orderdate"), col("o_orderkey")),
-      "base: pre-1996", statsCols = statsCols)
+      "base: pre-1996", statsEnc = statsEnc)
     GraftTable.commitAppend(s, dir,
       o.filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")))
         .repartitionByRange(4, col("o_orderdate"), col("o_orderkey")),
-      "append: 1996+", statsCols = statsCols)
+      "append: 1996+", statsEnc = statsEnc)
     dir
   }
 
@@ -656,12 +656,13 @@ object Round14Ops {
         .select(col("l_orderkey"), col("l_shipdate"),
           col("l_quantity").cast(LongType).as("l_quantity"),
           money(dec(col("l_extendedprice"))).as("price"))
-      val dims: GraftTable.StatsCols = Seq(
+      val dims: GraftTable.ClusterCols = Seq(
         "l_shipdate" -> ((c: Column) => unix_micros(c.cast(TimestampType))),
         "l_quantity" -> ((c: Column) => c))
+      val enc = Seq("l_shipdate" -> "us", "l_quantity" -> "id")
       GraftTable.commitNextIsolated(s, dir,
         li.repartition(8, col("l_orderkey")), "arrival order",
-        statsCols = dims)
+        statsEnc = enc)
       val bands = Seq(
         GraftTable.RangeBand("l_shipdate",
           graft.T.epochUs("1995-06-01"), graft.T.epochUs("1995-09-01") - 1L),
@@ -669,7 +670,7 @@ object Round14Ops {
       val (_, hit0, total0) = GraftTable.readStatsBands(s, dir, 0, bands)
       val cv = GraftTable.compactChain(s, dir, targetFiles = 16,
         "optimize zorder (l_shipdate, l_quantity)",
-        statsCols = dims, clusterBy = dims)
+        statsEnc = enc, clusterBy = dims)
       val (bandDf, hit1, total1) = GraftTable.readStatsBands(s, dir, cv, bands)
       bandDf
         .filter(col("l_shipdate") >= to_timestamp(lit("1995-06-01")) &&

@@ -18,25 +18,26 @@ import graft.sources.{GraftSparkTable, GraftTable}
   * runnable command before Spark's row-level-operation machinery would
   * refuse the non-SupportsRowLevelOperations table.
   *
-  * TWO execution arms, chosen by the target's recorded layout:
+  * THREE execution arms, chosen by the target's head alone:
   *
   *  - PLAIN flat tables route through the MERGE-ON-READ engines
   *    (`commitUpdateImpl` / `commitDeleteVector`) — no base file is
   *    rewritten; the commit mints dir-scoped tombstones (plus a
   *    replacement dir for UPDATE), which is exactly the fast path a
   *    lake user expects from a point DML statement at 100 TB.
-  *  - INDEX-BEARING (stats=/bloom=) and partitionBy targets route
-  *    through a COPY-ON-WRITE rewrite, `GraftTable.rewriteHead`: the
-  *    survivors/updated snapshot commits as the next version with the
-  *    index RE-DERIVED from its self-described manifest declarations
-  *    (statenc registry names / bloom column set) and the partition
-  *    and bucket layout preserved — the one rewrite the SQL MERGE door
-  *    and the purges share. Indexed tables are
-  *    precisely the big tables where point DML matters, so refusing
-  *    them (the round-16 posture) was the wrong trade; only a stats
-  *    line with code-declared lambda ordinals still refuses (SQL text
-  *    cannot re-derive caller code, and silently dropping the index
-  *    would betray the loud-refusal contract).
+  *  - POSITIONAL heads (pdv=) continue their chain through
+  *    `commitPositionalDelete` / `commitPositionalUpdate` — a
+  *    key-tombstone commit there refuses, since one version cannot
+  *    merge two deletion-vector regimes.
+  *  - INDEX-BEARING (stats=/bloom=), partitionBy and colmap targets
+  *    route through a COPY-ON-WRITE rewrite, `GraftTable.rewriteHead`:
+  *    the survivors/updated snapshot commits as the next version with
+  *    the index RE-DERIVED from its self-described manifest
+  *    declarations (statenc registry names / bloom column set) and the
+  *    partition and bucket layout preserved — the one rewrite the SQL
+  *    MERGE door and the purges share. Indexed tables are precisely the
+  *    big tables where point DML matters, so refusing them (the
+  *    round-16 posture) was the wrong trade.
   *
   * Identity (MoR arm): SQL statements carry no key declaration, so both
   * commands use FULL-ROW identity — the tombstone keys every column,
@@ -162,20 +163,6 @@ object GraftDml {
   private[plans] def needsCow(hdrs: Map[String, String]): Boolean =
     hdrs.contains("stats") || hdrs.contains("bloom") ||
       hdrs.contains("partby") || hdrs.contains("colmap")
-
-  /** Whether a SQL UPDATE/DELETE takes the POSITIONAL arm: always on a
-    * pdv head (a key-tombstone commit there refuses — one version cannot
-    * merge two DV regimes), and on any other head when `modeKey` opts
-    * the session in AND the positional door's gate admits the head — a
-    * session-wide opt-in must keep routing dv=, pmap and pre-schema
-    * heads to the arm that works instead of turning their working
-    * statements into errors. */
-  private[plans] def positionalArm(spark: SparkSession,
-      hdrs: Map[String, String], modeKey: String,
-      door: GraftTable.MorDoor): Boolean =
-    hdrs.contains("pdv") ||
-      (spark.conf.getOption(modeKey).contains("positional") &&
-        GraftTable.morAdmits(hdrs, door))
 }
 
 /** The analyzer rule: injected via `GraftExtensions`, fires inside the
@@ -201,9 +188,8 @@ case class UpdateDeleteGraftRule(spark: SparkSession)
   * commit: merge-on-read for plain flat tables (dir-scoped full-row
   * tombstones + a replacement dir), POSITIONAL merge-on-read for pdv
   * heads (new cumulative sidecar + staged replacement rows — untouched
-  * files never rewrite; also opt-in via
-  * spark.graft.update.mode=positional), copy-on-write with index
-  * re-derivation for stats=/bloom=/partitionBy targets. Nested-field
+  * files never rewrite), copy-on-write with index re-derivation for
+  * stats=/bloom=/partitionBy targets. Nested-field
   * assignments rebuild their struct (`GraftDml.assignments`). */
 case class GraftUpdateCommand(update: UpdateTable, dir: String)
     extends LeafRunnableCommand {
@@ -237,15 +223,12 @@ case class GraftUpdateCommand(update: UpdateTable, dir: String)
           }
         }: _*)
       }
-    } else if (GraftDml.positionalArm(spark, hdrs, "spark.graft.update.mode",
-        GraftTable.positionalUpdateDoor))
+    } else if (hdrs.contains("pdv"))
       // POSITIONAL arm (VERDICT r19 item 4): continuing a pdv chain —
       // tombstone matched positions, stage replacement rows, keep every
       // untouched file unrewritten (a key-tombstone update on a pdv
       // head refuses: one version cannot merge two DV regimes; the old
-      // CoW routing rewrote the WHOLE snapshot per UPDATE). Also
-      // opt-in on plain heads via spark.graft.update.mode=positional,
-      // mirroring the delete door's mode conf.
+      // CoW routing rewrote the WHOLE snapshot per UPDATE)
       GraftTable.commitPositionalUpdate(spark, dir, cond, sets,
         "UPDATE (SQL, positional)", expectVersion = Some(cur))
     else
@@ -260,8 +243,9 @@ case class GraftUpdateCommand(update: UpdateTable, dir: String)
 }
 
 /** `DELETE FROM gt.t [WHERE cond]` → one commit: merge-on-read
-  * tombstones for plain flat tables, copy-on-write survivor rewrite
-  * (index re-derived, layout preserved) for indexed/partitioned ones.
+  * tombstones for plain flat tables, positional tombstones for pdv
+  * heads, copy-on-write survivor rewrite (index re-derived, layout
+  * preserved) for indexed/partitioned ones.
   * Version resolution happens ONCE and pins the commit (`expectVersion`
   * on the MoR arm): the gate, the snapshot and the commit can never
   * read different heads. */
@@ -279,14 +263,12 @@ case class GraftDeleteCommand(delete: DeleteFromTable, dir: String)
       GraftTable.rewriteHead(spark, dir, cur, "DELETE",
         "DELETE (SQL, copy-on-write)")(GraftTable.readVersion(spark, dir, cur)
         .where(!coalesce(cond, lit(false))))
-    else if (GraftDml.positionalArm(spark, hdrs, "spark.graft.delete.mode",
-        GraftTable.positionalDeleteDoor))
+    else if (hdrs.contains("pdv"))
       // POSITIONAL arm: continuing a pdv chain (a key-tombstone commit
       // on a pdv head refuses — one version cannot merge two DV
-      // regimes), or opted in via spark.graft.delete.mode=positional.
-      // The predicate evaluates over the RAW files (a row already
-      // position-tombstoned re-tombstones idempotently); NULL-condition
-      // rows are not matches, like both other arms.
+      // regimes). The predicate evaluates over the RAW files (a row
+      // already position-tombstoned re-tombstones idempotently);
+      // NULL-condition rows are not matches, like both other arms.
       GraftTable.commitPositionalDelete(spark, dir, cond,
         "DELETE (SQL, positional)", expectVersion = Some(cur))
     else {

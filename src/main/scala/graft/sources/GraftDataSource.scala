@@ -1494,10 +1494,8 @@ private[graft] class GraftFileIndex(spark: SparkSession, roots: Seq[Path],
   * staging dir and mints nothing, so the failed job is invisible to
   * readers. Both halves gate through `GraftTable.gateStaged` and publish
   * through `GraftTable.publishStaged`, the steps every staged append
-  * shares: a registry-declared (statenc=) or Bloom index re-derives on
-  * the staged dir, while a lambda-ordinal stats line refuses (the DSv2
-  * door cannot re-declare code — extend those chains through
-  * `commitAppend` with statsCols). */
+  * shares: the table's registry-declared (statenc=) and Bloom index
+  * re-derives on the staged dir. */
 private[graft] class GraftWriteBuilder(spark: SparkSession,
     table: GraftSparkTable,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)

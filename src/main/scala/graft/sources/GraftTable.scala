@@ -45,22 +45,22 @@ object GraftTable {
   def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Declared stat columns: name → long-valued ordinal expression (see
-    * `computeStats`); one alias so the four write-path signatures that
-    * accept it cannot drift. */
-  type StatsCols =
+  /** Clustering dimensions of a z-ordered compaction (`clusterBy`):
+    * name → long-valued ordinal expression (see `clusteredLayout`). */
+  type ClusterCols =
     Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)]
 
   /** REGISTERED stat-column ordinal encodings — the statenc= header's
-    * vocabulary. A plain `statsCols` lambda is opaque code: only the
-    * writer that declared it can build sound band bounds, so the
-    * manifest's skipping index is invisible to a generic reader. A
-    * column declared through this registry instead records its encoding
-    * NAME in the commit (`statenc=`), and any reader — the DSv2 scan's
-    * pushed-filter pruning in particular — can re-encode a query
-    * literal driver-side with `literalOrdinal` and prune files against
-    * the recorded [min,max] bands soundly. Both sides of each encoding
-    * are defined HERE, together, so they can never drift:
+    * vocabulary and the ONLY way to declare a skipping index: every
+    * stats= line is fully described by its statenc= line (`commit`
+    * refuses anything else). A column declared through this registry
+    * records its encoding NAME in the commit (`statenc=`), so any
+    * reader — the DSv2 scan's pushed-filter pruning in particular — can
+    * re-encode a query literal driver-side with `literalOrdinal` and
+    * prune files against the recorded [min,max] bands soundly, and any
+    * rewrite can re-derive the index from the manifest alone. Both
+    * sides of each encoding are defined HERE, together, so they can
+    * never drift:
     *
     *   id   — integral column, ordinal = the value itself
     *   us   — timestamp/date column, ordinal = epoch MICROS (UTC
@@ -154,40 +154,28 @@ object GraftTable {
       }
     }
 
-    /** The temporal encodings bind the writer's session zone through
-      * the ntz/date → timestamp cast, while `literalOrdinal` re-encodes
-      * at UTC — the registry's whole promise is that the two sides can
+    /** The one statsEnc declaration gate every committer shares:
+      * registered names only, and a UTC session for the temporal
+      * encodings. Those bind the writer's session zone through the
+      * ntz/date → timestamp cast, while `literalOrdinal` re-encodes at
+      * UTC — the registry's whole promise is that the two sides can
       * never disagree, so a non-UTC writer session is REFUSED at
       * declaration time rather than silently recording bands a generic
       * reader would mis-prune against. */
-    private[graft] def requireUtcSession(spark: SparkSession,
-        statsEnc: Seq[(String, String)]): Unit =
+    private[graft] def validate(spark: SparkSession,
+        statsEnc: Seq[(String, String)]): Unit = {
+      statsEnc.foreach { case (c, e) =>
+        require(names.contains(e),
+          s"unknown stats encoding '$e' for column '$c' " +
+            s"(registered: $names)")
+      }
       if (statsEnc.exists(e => e._2 == "us" || e._2 == "days")) {
         val tz = spark.sessionState.conf.sessionLocalTimeZone
         require(tz == "UTC" || tz == "Etc/UTC" || tz == "Z",
           s"statsEnc temporal encodings are defined at UTC, but the " +
             s"writer session zone is '$tz' — set " +
-            "spark.sql.session.timeZone=UTC (the suite-wide canon) or " +
-            "declare a lambda statsCols ordinal instead")
+            "spark.sql.session.timeZone=UTC (the suite-wide canon)")
       }
-
-    /** The one statsEnc declaration gate every committer shares:
-      * registered names only, no statsCols overlap, UTC session for
-      * temporal encodings — returning the effective StatsCols (caller
-      * lambdas plus registry ordinals). */
-    private[graft] def validateAndMerge(spark: SparkSession,
-        statsCols: StatsCols,
-        statsEnc: Seq[(String, String)]): StatsCols = {
-      statsEnc.foreach { case (c, e) =>
-        require(names.contains(e),
-          s"unknown stats encoding '$e' for column '$c' " +
-            s"(registered: $names)")
-        require(!statsCols.exists(_._1 == c),
-          s"column '$c' is declared in both statsCols and statsEnc — " +
-            "pick one declaration")
-      }
-      requireUtcSession(spark, statsEnc)
-      statsCols ++ statsEnc.map { case (c, e) => (c, ordinal(e)) }
     }
 
     private[graft] def encode(specs: Seq[(String, String)]): String =
@@ -493,14 +481,13 @@ object GraftTable {
     *                    `enforceConstraints`)
     *   statenc=<s>      comma-separated `<urlEnc col>:<encName>` pairs
     *                    naming the REGISTERED ordinal encoding
-    *                    (`StatsEnc`) the stats line used for each listed
-    *                    column. A lambda-declared `statsCols` ordinal is
-    *                    code the manifest cannot describe; a statenc
-    *                    column's ordinal comes from the registry, so a
-    *                    GENERIC reader — the DSv2 scan's filter-pushdown
-    *                    pruning — can re-encode a query literal
-    *                    driver-side and prune files soundly. Only
-    *                    registry-declared columns are scan-prunable.
+    *                    (`StatsEnc`) the stats line used for each of its
+    *                    columns, in the stats line's order — a stats=
+    *                    line never travels without one. The ordinal comes
+    *                    from the registry, so a GENERIC reader — the DSv2
+    *                    scan's filter-pushdown pruning — can re-encode a
+    *                    query literal driver-side and prune files
+    *                    soundly.
     *   pmap=<col>|<v>:<e>,…  PARTITION-MAPPED table: the snapshot is
     *                    the union of one entry dir per partition VALUE
     *                    of <col> (entries are `<stagedRoot>/__p=<v>`
@@ -891,10 +878,11 @@ object GraftTable {
     * 10⁴–10⁶ files per table, pruning from parquet FOOTERS still pays a
     * full listing plus one open per file; pruning from the manifest pays
     * O(stats-line) and never touches a skipped file. Stat values are
-    * ORDINAL LONGS: the committer declares each stat column as a
-    * long-valued expression (timestamps via unix_micros, numerics via
-    * cast) so range overlap is a plain integer comparison — the testable
-    * core of the typed min/max JSON the production formats store.
+    * ORDINAL LONGS: the committer declares each stat column under a
+    * registry encoding (`StatsEnc`: timestamps as epoch micros,
+    * integrals as themselves) so range overlap is a plain integer
+    * comparison — the testable core of the typed min/max JSON the
+    * production formats store.
     * `mins(i)`/`maxs(i)` align with `cols(i)`; `file` is the data-file
     * path RELATIVE to the version's data dir — a bare name for a flat
     * layout, `p=a/part-….parquet` under partitionBy (basenames collide
@@ -1148,19 +1136,17 @@ object GraftTable {
   /** The INDEX STEP every index-bearing commit door runs on the data
     * dir it just wrote, before publishing: one listing with footers
     * (`writtenFiles`), then the stats entries — from the footers where
-    * every declared column is a registry encoding with an exact footer
-    * map (`footerStats`), else the `computeStats` scan for the whole
-    * commit (lambda `statsCols` always scan) — then the Bloom sidecar,
-    * its `m` sized from the footer row counts and its rows read under
-    * `schema`, the schema the commit wrote. `statsCols` is the
-    * EFFECTIVE set (`StatsEnc.validateAndMerge`'s result) and
-    * `partitionBy` the layout's partition columns. Returns (stats,
-    * bloom= header value). */
+    * every declared encoding has an exact footer map (`footerStats`),
+    * else the `computeStats` scan for the whole commit — then the Bloom
+    * sidecar, its `m` sized from the footer row counts and its rows
+    * read under `schema`, the schema the commit wrote. `statsEnc` is a
+    * validated declaration (`StatsEnc.validate`) and `partitionBy` the
+    * layout's partition columns. Returns (stats, bloom= header value). */
   private def indexWrittenDir(spark: SparkSession, dataPath: String,
       schema: org.apache.spark.sql.types.StructType, partitionBy: Seq[String],
-      statsCols: StatsCols, statsEnc: Seq[(String, String)],
+      statsEnc: Seq[(String, String)],
       bloomCols: Seq[String]): (Option[TableStats], Option[String]) =
-    if (statsCols.isEmpty && bloomCols.isEmpty) (None, None)
+    if (statsEnc.isEmpty && bloomCols.isEmpty) (None, None)
     else {
       val files = writtenFiles(spark, dataPath)
       // the files' columns as a scan reads them: partition columns come
@@ -1169,10 +1155,9 @@ object GraftTable {
         .filterNot(f => partitionBy.contains(f.name))
         .map(_.copy(nullable = true)))
       val stats =
-        if (statsCols.isEmpty) None
-        else (if (statsCols.map(_._1) == statsEnc.map(_._1))
-            footerStats(files, schema, statsEnc) else None)
-          .orElse(Some(computeStats(spark, dataPath, fileSchema, statsCols)))
+        if (statsEnc.isEmpty) None
+        else footerStats(files, schema, statsEnc)
+          .orElse(Some(computeStats(spark, dataPath, fileSchema, statsEnc)))
       val bloom =
         if (bloomCols.isEmpty) None
         else Some(bloomHeader(buildBloomSidecar(spark, dataPath, fileSchema,
@@ -1182,19 +1167,19 @@ object GraftTable {
 
   /** Per-file (rows, min/max, nulls) stats by SCANNING a just-written
     * data dir — the index step's fallback where footers cannot give
-    * the ordinal exactly (`footerStats`). `statsCols` maps column
-    * name → long-valued Column (the ordinal encoding above): one
-    * grouped pass over the files, read under `schema` (no
-    * schema-inference job). */
+    * the ordinal exactly (`footerStats`). `statsEnc` maps column
+    * name → registry encoding (`StatsEnc.ordinal`): one grouped pass
+    * over the files, read under `schema` (no schema-inference job). */
   private[graft] def computeStats(spark: SparkSession, dataPath: String,
-      schema: StructType, statsCols: StatsCols): TableStats = {
+      schema: StructType, statsEnc: Seq[(String, String)]): TableStats = {
     import org.apache.spark.sql.functions._
     val df = spark.read.schema(schema).parquet(dataPath)
     // the declared ordinal must land as a LONG whatever width the
-    // caller's expression returns (an int32 stat column would otherwise
-    // surface Integer rows here) — the cast is exact for any integral
-    val aggs = statsCols.flatMap { case (name, ord) =>
-      val l = ord(col(name)).cast(org.apache.spark.sql.types.LongType)
+    // encoding's expression returns (`days` yields an int) — the cast
+    // is exact for any integral
+    val aggs = statsEnc.flatMap { case (name, enc) =>
+      val l = StatsEnc.ordinal(enc)(col(name))
+        .cast(org.apache.spark.sql.types.LongType)
       // null count = rows − non-null count OF THE ORDINAL — the value
       // the band predicates actually test (an ordinal expression maps
       // null to null, so this matches the column for every declared
@@ -1231,9 +1216,9 @@ object GraftTable {
         }
         val rows = r.getAs[Long]("__rows")
         FileStats(uriDecode(r.getAs[String]("__file")), rows,
-          statsCols.map(c => longOr(s"__min_${c._1}", Long.MaxValue)),
-          statsCols.map(c => longOr(s"__max_${c._1}", Long.MinValue)),
-          statsCols.map(c => rows - r.getAs[Long](s"__cnt_${c._1}")))
+          statsEnc.map(c => longOr(s"__min_${c._1}", Long.MaxValue)),
+          statsEnc.map(c => longOr(s"__max_${c._1}", Long.MinValue)),
+          statsEnc.map(c => rows - r.getAs[Long](s"__cnt_${c._1}")))
       }
     // a ZERO-row file never surfaces through the groupBy (no rows, no
     // group) but it IS part of the version — record it with the empty
@@ -1250,10 +1235,10 @@ object GraftTable {
       .map(u => uriDecode(rel.replaceFirstIn(u, "")))
       .filterNot(seen)
       .map(f => FileStats(f, 0L,
-        statsCols.map(_ => Long.MaxValue),
-        statsCols.map(_ => Long.MinValue),
-        statsCols.map(_ => 0L)))
-    TableStats(statsCols.map(_._1), (covered ++ empties).sortBy(_.file))
+        statsEnc.map(_ => Long.MaxValue),
+        statsEnc.map(_ => Long.MinValue),
+        statsEnc.map(_ => 0L)))
+    TableStats(statsEnc.map(_._1), (covered ++ empties).sortBy(_.file))
   }
 
   /** The log-skipping read: resolve version `v`'s data files whose
@@ -1523,9 +1508,20 @@ object GraftTable {
         "committed without pmap=")
     // statenc DESCRIBES the stats line — one never travels without the
     // other (a dangling encoding header would promise prunability the
-    // manifest cannot honor)
+    // manifest cannot honor; a stats line without one would be an index
+    // no reader or rewrite could re-derive), and it names exactly the
+    // stats line's columns in the stats line's order
     require(!has("statenc") || has("stats"),
       "statenc= describes the stats= line and cannot be committed alone")
+    headers.get("stats").foreach { st =>
+      val cols = st.takeWhile(_ != ';').split(",").toSeq.map(urlDec)
+      val enc = headers.get("statenc").map(StatsEnc.decode(_).map(_._1))
+      require(enc.contains(cols),
+        s"a stats= line must be described by a statenc= line naming the " +
+          s"same columns in the same order (stats columns $cols, statenc " +
+          s"${enc.getOrElse("absent")}) — declare stat columns through " +
+          "statsEnc registry encodings")
+    }
     // metadata is ONE line that must not masquerade as a header: an
     // embedded newline would split it across feed rows / future header
     // parses, and a leading reserved key=` prefix would be read back as
@@ -1995,7 +1991,7 @@ object GraftTable {
     * on the snapshot it lost against. */
   def commitNextIsolated(spark: SparkSession, dir: String, df: DataFrame,
       metadata: String = "", partitionBy: Seq[String] = Nil,
-      statsCols: StatsCols = Nil, allowEvolution: Boolean = false,
+      allowEvolution: Boolean = false,
       bloomCol: Option[String] = None, constraints: Seq[String] = Nil,
       dropConstraints: Boolean = false,
       statsEnc: Seq[(String, String)] = Nil,
@@ -2016,10 +2012,9 @@ object GraftTable {
           s"snapshot was resolved at version $ev of $dir but the head " +
             s"is now ${cur.map(_._1).getOrElse(-1)} — re-read and retry"))
     // registry-declared stat columns: the ordinal comes FROM the
-    // registry (never a caller lambda), so the recorded statenc= name
-    // and the computed bands can never disagree
-    val effStatsCols: StatsCols =
-      StatsEnc.validateAndMerge(spark, statsCols, statsEnc)
+    // registry, so the recorded statenc= name and the computed bands
+    // can never disagree
+    StatsEnc.validate(spark, statsEnc)
     // gate BEFORE the write: a refused schema creates no version and no
     // orphan staging dir
     schemaGate(cur.flatMap(_._2.get("schema")), df.schema, allowEvolution)
@@ -2093,7 +2088,7 @@ object GraftTable {
     // keeps it invisible to every parquet scan) so it travels with the
     // files it describes — through clones, retention, and data= renames
     val (st, bl) = indexWrittenDir(spark, s"$dir/$data", effDf.schema,
-      partitionBy, effStatsCols, statsEnc, (bloomCol.toSeq ++ bloomCols).distinct)
+      partitionBy, statsEnc, (bloomCol.toSeq ++ bloomCols).distinct)
     // a rewrite states its whole layout: nothing is inherited
     commit(fs, dir, v, metadata,
       Map("data" -> data, "schema" -> schemaEncode(df.schema)) ++
@@ -2204,15 +2199,15 @@ object GraftTable {
     * else key dv= tombstones), and whether it admits a partitionBy head
     * — only the key delete does: its tombstones name columns, not files,
     * and it stages no flat dir beside the partitioned one. */
-  private[graft] final case class MorDoor(name: String, positional: Boolean,
+  private final case class MorDoor(name: String, positional: Boolean,
       partBy: Boolean = false)
 
   private val keyDeleteDoor =
     MorDoor("merge-on-read delete", positional = false, partBy = true)
   private val keyUpdateDoor = MorDoor("merge-on-read update", positional = false)
-  private[graft] val positionalDeleteDoor =
+  private val positionalDeleteDoor =
     MorDoor("positional delete", positional = true)
-  private[graft] val positionalUpdateDoor =
+  private val positionalUpdateDoor =
     MorDoor("positional update", positional = true)
 
   /** Why `door` cannot extend head `h`, or None when it can — one list
@@ -2253,11 +2248,6 @@ object GraftTable {
           "index deliberately via commitNextIsolated first"))
     else None
   }
-
-  /** Whether `door` may extend head `h`: the SQL DML doors ask before
-    * routing a head to the positional arm. */
-  private[graft] def morAdmits(h: Map[String, String], door: MorDoor): Boolean =
-    morRefusal(h, door).isEmpty
 
   /** The ONE head gate of the merge-on-read doors: resolve the head, run
     * the caller's `expectVersion` pin, then refuse what `morRefusal`
@@ -3167,16 +3157,13 @@ object GraftTable {
     * Its partitionBy and bucket layout carry (`commitNextIsolated`
     * re-validates the bucket invariant over the rewritten rows), its
     * constraints carry and re-enforce, and its skipping index is
-    * re-derived from the self-described statenc=/bloom= headers, so
-    * SQL text needs no ordinal re-declaration. Refused before `rows`
-    * is evaluated: a partition-mapped head (the rewrite would drop the
-    * value→dir map) and a stats line with code-declared (lambda)
-    * ordinals — the rewrite cannot re-derive caller code, and silently
-    * dropping the index would betray the loud-refusal contract.
-    * `widen` (SQL MERGE WITH SCHEMA EVOLUTION) first adds its columns
-    * through the metadata-only `commitAddColumns`, after the refusals,
-    * and the pin then advances by exactly that one version. Returns the
-    * rewrite's version. */
+    * re-derived from the self-described statenc=/bloom= headers
+    * (`headIndex`), so SQL text needs no ordinal re-declaration.
+    * Refused before `rows` is evaluated: a partition-mapped head (the
+    * rewrite would drop the value→dir map). `widen` (SQL MERGE WITH
+    * SCHEMA EVOLUTION) first adds its columns through the metadata-only
+    * `commitAddColumns`, after the refusal, and the pin then advances
+    * by exactly that one version. Returns the rewrite's version. */
   private[graft] def rewriteHead(spark: SparkSession, dir: String, cur: Int,
       door: String, metadata: String, widen: Seq[(String, String)] = Nil)(
       rows: => DataFrame): Int = {
@@ -3186,15 +3173,7 @@ object GraftTable {
       s"$door refused — this table is partition-mapped; replace its " +
         "partitions through replacePartitionsWithRetry (a rewrite would " +
         "drop the value→dir map)")
-    val statsEnc = h.get("statenc").map(StatsEnc.decode).getOrElse(Nil)
-    if (!statencCovers(h))
-      throw new IndexRedeclarationRequired(
-        s"$door cannot re-derive this table's stats index: its stat " +
-          s"columns ${h.get("stats").map(TableStats.decode(_).cols)
-            .getOrElse(Nil)} are not fully registry-declared (statenc " +
-          s"covers ${statsEnc.map(_._1)}) — rewrite through the API with " +
-          "the original statsCols, or re-commit the table with statsEnc " +
-          "registry encodings")
+    val (statsEnc, bloomCols) = headIndex(h)
     val pin =
       if (widen.isEmpty) cur
       else {
@@ -3208,9 +3187,7 @@ object GraftTable {
         va
       }
     commitNextIsolated(spark, dir, rows, metadata,
-      partitionBy = partByOf(h),
-      statsEnc = if (h.contains("stats")) statsEnc else Nil,
-      bloomCols = h.get("bloom").map(bloomColsOf).getOrElse(Nil),
+      partitionBy = partByOf(h), statsEnc = statsEnc, bloomCols = bloomCols,
       expectVersion = Some(pin),
       bucketFn = bucketFnOf(h).map { case (n, k, _) => (n, k) })
   }
@@ -3300,7 +3277,7 @@ object GraftTable {
     * append context, re-checked per attempt against the fresh winner);
     * the current version must not carry a deletion vector (tombstones
     * would subtract from the marker dir's "added" set — purge first);
-    * `statsCols` extends the table's skipping index incrementally —
+    * `statsEnc` extends the table's skipping index incrementally —
     * stats are computed over the NEW files only (they are the hot ones)
     * and merged with the predecessor's line, re-keyed table-relative,
     * which requires the predecessor to carry stats on the same columns.
@@ -3315,19 +3292,19 @@ object GraftTable {
     * commit's size grows with the chain (O(dirs) + O(files) stats),
     * exactly like an Iceberg snapshot's manifest list — so long append
     * chains are expected to be COMPACTED periodically into one statted
-    * dir (`commitNextIsolated(read(dir), statsCols = …)`, the
+    * dir (`commitNextIsolated(read(dir), statsEnc = …)`, the
     * table_compact_version OPTIMIZE pattern), which resets the chain
     * and the commit-file size in one atomic version. At a
     * compact-every-100-appends cadence the commit file stays KB-scale
     * while appends stay O(new data). Returns the version. */
   def commitAppendWithRetry(spark: SparkSession, dir: String, df: DataFrame,
       metadata: String = "", maxAttempts: Int = occAttempts,
-      statsCols: StatsCols = Nil, bloomCol: Option[String] = None,
+      bloomCol: Option[String] = None,
       bloomCols: Seq[String] = Nil,
       statsEnc: Seq[(String, String)] = Nil): Int = {
+    StatsEnc.validate(spark, statsEnc)
     val door = StagedDoor("append", markCreate = true,
-      index = DeclaredIndex(StatsEnc.validateAndMerge(spark, statsCols,
-        statsEnc), statsEnc, (bloomCol.toSeq ++ bloomCols).distinct))
+      index = DeclaredIndex(statsEnc, (bloomCol.toSeq ++ bloomCols).distinct))
     // pre-flight gate and constraints against the CURRENT version so a
     // refused append writes NOTHING; the publish step re-runs both on
     // every attempt after a lost race. Constraints enforce on the NEW
@@ -3355,9 +3332,9 @@ object GraftTable {
     cur match {
       case Some((c, h)) =>
         val prev = TableStats.decode(h.getOrElse("stats", sys.error(
-          "append statsCols require predecessor stats")))
+          "append statsEnc requires predecessor stats")))
         require(prev.cols == ns.cols,
-          s"append statsCols ${ns.cols} must match the table's " +
+          s"append statsEnc ${ns.cols} must match the table's " +
             s"recorded stat columns ${prev.cols}")
         val prevRel =
           if (h.contains("append") || h.contains("statrel")) prev.files
@@ -3374,27 +3351,24 @@ object GraftTable {
     * (a lost race surfaces as ConcurrentModificationException for the
     * caller's own loop). */
   def commitAppend(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "", statsCols: StatsCols = Nil,
+      metadata: String = "",
       bloomCol: Option[String] = None, bloomCols: Seq[String] = Nil,
       statsEnc: Seq[(String, String)] = Nil): Int =
     commitAppendWithRetry(spark, dir, df, metadata, maxAttempts = 1,
-      statsCols, bloomCol, bloomCols, statsEnc)
+      bloomCol, bloomCols, statsEnc)
 
   /** Where a staged write's per-file index comes from. */
   private[graft] sealed trait StagedIndex
-  /** The caller declares it (the API append: statsCols may be lambdas,
-    * code the manifest cannot carry); the gate checks the declaration
-    * continues the chain's index exactly, and the staged dir is indexed
-    * once. */
-  private[graft] final case class DeclaredIndex(stats: StatsCols,
-      enc: Seq[(String, String)], bloom: Seq[String]) extends StagedIndex
-  /** The head SELF-DESCRIBES it (registry statenc= names, bloom=
-    * col|m|k sections) and each attempt re-derives it from the headers
-    * that attempt's gate passed — so an OCC winner that attached or
-    * dropped the chain's index mid-race is reflected (the DSv2 and
-    * streaming doors: a DataFrame writer declares no index). A stats
-    * line not fully registry-declared refuses: its lambda ordinals are
-    * code, and a mixed line would mis-prune band reads. */
+  /** The caller declares it (the API append); the gate checks the
+    * declaration continues the chain's index exactly, and the staged
+    * dir is indexed once. */
+  private[graft] final case class DeclaredIndex(enc: Seq[(String, String)],
+      bloom: Seq[String]) extends StagedIndex
+  /** The head SELF-DESCRIBES it (`headIndex`: registry statenc= names,
+    * bloom= col|m|k sections) and each attempt re-derives it from the
+    * headers that attempt's gate passed — so an OCC winner that
+    * attached or dropped the chain's index mid-race is reflected (the
+    * DSv2 and streaming doors: a DataFrame writer declares no index). */
   private[graft] case object HeaderIndex extends StagedIndex
   /** No per-file index may ride the write: the streaming upsert's
     * merge-on-read tombstones invalidate per-file statistics. */
@@ -3423,16 +3397,21 @@ object GraftTable {
   private def partByOf(h: Map[String, String]): Seq[String] =
     h.get("partby").map(_.split(",").toSeq).getOrElse(Nil)
 
-  /** Whether a version's stats= line is FULLY described by its statenc=
-    * registry declaration (same columns, same order) — the shared
-    * predicate of every self-described re-indexing door (DSv2 and
-    * streaming appends, SQL MERGE re-index, SQL OPTIMIZE/maintain). One
-    * implementation so the doors can never diverge on what "covered"
-    * means: a lambda-ordinal stats line refuses everywhere, a
-    * registry-declared one re-derives everywhere. */
-  private[graft] def statencCovers(h: Map[String, String]): Boolean =
-    h.get("stats").forall(st => TableStats.decode(st).cols ==
-      h.get("statenc").map(StatsEnc.decode(_).map(_._1)).getOrElse(Nil))
+  /** The skipping index head `h` self-describes — its statenc=
+    * registry encodings (which `commit` guarantees describe the whole
+    * stats= line) and its bloom= column set — the declaration every
+    * self-described re-indexing door re-derives (DSv2 and streaming
+    * writes, the SQL copy-on-write rewrites, SQL OPTIMIZE/maintain). */
+  private[graft] def headIndex(h: Map[String, String])
+      : (Seq[(String, String)], Seq[String]) =
+    (h.get("statenc").map(StatsEnc.decode).getOrElse(Nil),
+      h.get("bloom").map(bloomColsOf).getOrElse(Nil))
+
+  /** `headIndex` of `dir`'s current head (none for an empty table). */
+  private[graft] def currentIndex(spark: SparkSession, dir: String)
+      : (Seq[(String, String)], Seq[String]) =
+    currentHeaders(fsOf(spark, dir), dir).fold(
+      (Seq.empty[(String, String)], Seq.empty[String]))(c => headIndex(c._2))
 
   /** The ONE refusal gate of every staged-write door — the API append,
     * the DSv2 batch append and overwrite, the streaming append and
@@ -3499,18 +3478,9 @@ object GraftTable {
             "partition columns across chain dirs); OPTIMIZE the chain " +
             "to one dir first")
       door.index match {
-        case DeclaredIndex(stats, enc, bloom) =>
-          declaredIndexGate(h, stats.map(_._1), enc, bloom)
-        case HeaderIndex =>
-          if (!statencCovers(h))
-            throw new IndexRedeclarationRequired(
-              s"a $what cannot re-derive this table's stats index: its " +
-                s"stat columns ${h.get("stats").map(TableStats.decode(_)
-                  .cols).getOrElse(Nil)} are not fully registry-declared " +
-                s"(statenc covers ${h.get("statenc")
-                  .map(StatsEnc.decode(_).map(_._1)).getOrElse(Nil)}) — " +
-                "write through the API with the original statsCols, or " +
-                "re-commit the chain with statsEnc registry encodings")
+        case DeclaredIndex(enc, bloom) => declaredIndexGate(h, enc, bloom)
+        // re-derived from the head's own declaration: nothing to refuse
+        case HeaderIndex => ()
         case NoIndex =>
           if (h.contains("stats") || h.contains("bloom"))
             throw new IndexRedeclarationRequired(
@@ -3533,12 +3503,12 @@ object GraftTable {
   }
 
   /** A caller-declared index must continue the chain's: the same stat
-    * columns, the same encodings, the same Bloom column set — a chain's
-    * one stats line stays one ordinal domain, and a chain is probed dir
-    * by dir, so every dir must carry sidecar sections on the same
-    * columns. */
-  private def declaredIndexGate(h: Map[String, String], mine: Seq[String],
-      mineEnc: Seq[(String, String)], bloom: Seq[String]): Unit = {
+    * columns under the same encodings, in the same order, and the same
+    * Bloom column set — a chain's one stats line stays one ordinal
+    * domain, and a chain is probed dir by dir, so every dir must carry
+    * sidecar sections on the same columns. */
+  private def declaredIndexGate(h: Map[String, String],
+      enc: Seq[(String, String)], bloom: Seq[String]): Unit = {
     // the same three refusals for both indexes: declaring one onto an
     // unindexed chain (partial indexes under-serve every pruned read),
     // silently dropping the chain's, or naming other columns
@@ -3558,25 +3528,12 @@ object GraftTable {
         s"append $param $mine must match the table's recorded $cols $t")
       case _ => ()
     }
-    val theirStats = h.get("stats")
-      .map(_.split(";", 2)(0).split(",").toSeq.map(urlDec))
-    continues("statsCols", "stats (its skipping index)", "stat columns",
-      theirStats, mine, theirStats.contains(mine))
-    // a registry-declared (statenc) column must be re-declared with the
-    // SAME encoding, and a column the predecessor recorded WITHOUT an
-    // encoding name cannot gain one (its existing entries' encoding is
-    // unverifiable; a mixed line would mis-prune DSv2 band reads)
-    val prevEnc = h.get("statenc").map(StatsEnc.decode(_).toMap)
-      .getOrElse(Map.empty[String, String])
-    val encMap = mineEnc.toMap
-    if (h.contains("stats"))
-      (prevEnc.keySet ++ encMap.keySet).foreach { c =>
-        require(prevEnc.get(c) == encMap.get(c),
-          s"append stats encoding for '$c' must match the chain's " +
-            s"recorded statenc (${prevEnc.get(c)} vs " +
-            s"${encMap.get(c)}) — one stats line, one ordinal " +
-            "domain; rewrite via compactChain to re-encode")
-      }
+    def named(e: Seq[(String, String)]): Seq[String] =
+      e.map { case (c, n) => s"$c:$n" }
+    val theirStats = h.get("statenc").map(t => named(StatsEnc.decode(t)))
+    continues("statsEnc", "stats (its skipping index)",
+      "stat columns and encodings", theirStats, named(enc),
+      theirStats.contains(named(enc)))
     val theirBloom = h.get("bloom").map(bloomColsOf)
     continues("bloomCol", "a Bloom index", "indexed columns", theirBloom,
       bloom, theirBloom.exists(_.toSet == bloom.toSet))
@@ -3644,8 +3601,8 @@ object GraftTable {
     // sidecar self-describes m/k per section, so chain dirs may differ);
     // it depends only on those files and the declared columns, so it is
     // kept across attempts while the declaration holds
-    val indexed = collection.mutable.Map[(Seq[String], Seq[(String, String)],
-      Seq[String]), (Option[TableStats], Option[String])]()
+    val indexed = collection.mutable.Map[(Seq[(String, String)], Seq[String]),
+      (Option[TableStats], Option[String])]()
     try retryOnConflict[Option[Int]](maxAttempts,
         onConflict = (_, _) => if (replayed()) Some(None) else None) {
       attempt =>
@@ -3662,18 +3619,16 @@ object GraftTable {
             enforceCarried(spark, dir, rows, cur,
               if (door.append) "append" else "commit")
           }
-        val (statsCols, enc, bloom) = (door.index, cur) match {
-          case (DeclaredIndex(s, e, b), _) => (s, e, b)
+        val (enc, bloom) = (door.index, cur) match {
+          case (DeclaredIndex(e, b), _) => (e, b)
           case (_, Some((_, h))) =>
-            val e = if (h.contains("stats"))
-              h.get("statenc").map(StatsEnc.decode).getOrElse(Nil) else Nil
-            (StatsEnc.validateAndMerge(spark, Nil, e), e,
-              h.get("bloom").map(bloomColsOf).getOrElse(Nil))
-          case _ => (Nil, Nil, Nil)
+            val (e, b) = headIndex(h)
+            StatsEnc.validate(spark, e)
+            (e, b)
+          case _ => (Nil, Nil)
         }
-        val (newStats, newBloom) = indexed.getOrElseUpdate(
-          (statsCols.map(_._1), enc, bloom), indexWrittenDir(spark,
-            s"$dir/$staged", schema, partBy, statsCols, enc, bloom))
+        val (newStats, newBloom) = indexed.getOrElseUpdate((enc, bloom),
+          indexWrittenDir(spark, s"$dir/$staged", schema, partBy, enc, bloom))
         val v = cur.map(_._1 + 1).getOrElse(0)
         val prevDirs = if (!door.append) Nil
           else cur.map { case (c, h) => dataDirsFrom(h, c) }
@@ -3914,20 +3869,20 @@ object GraftTable {
     * O(non-epoch suffix), never a full history scan — and never data.
     * Returns the committed version, or None for a detected replay. */
   def commitEpoch(spark: SparkSession, dir: String, epochId: Long,
-      statsCols: StatsCols = Nil)(df: => DataFrame): Option[Int] = {
+      statsEnc: Seq[(String, String)] = Nil)(df: => DataFrame): Option[Int] = {
     val fs = fsOf(spark, dir)
     // Replay detection in O(1) for the common case: walk versions
     // NEWEST-first and compare against the most recent epoch-tagged
     // commit. Structured Streaming delivers batch ids monotonically, so
     // epochId <= the newest committed epoch ⇔ replay — without reading
     // every historical commit file per micro-batch (each carries its
-    // full stats= line when statsCols is set; a forward scan would be
+    // full stats= line when statsEnc is set; a forward scan would be
     // O(versions × stats-bytes) per batch). Interleaved NON-epoch
     // commits (manual maintenance on the same table) are walked past;
     // out-of-order manual epoch use is outside the contract.
     if (newestEpochFor(fs, dir, None).exists(epochId <= _)) None
     else Some(commitNextIsolated(spark, dir, df, s"epoch=$epochId",
-      statsCols = statsCols))
+      statsEnc = statsEnc))
   }
 
   /** Stable 8-hex tag of a streaming queryId — embedded in epoch
@@ -4188,12 +4143,12 @@ object GraftTable {
     * parquet write plus an O(manifest) commit. */
   def streamingSink(dir: String, checkpointDir: String, stream: DataFrame,
       transform: (Option[DataFrame], DataFrame) => DataFrame = (_, b) => b,
-      statsCols: StatsCols = Nil)
+      statsEnc: Seq[(String, String)] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, epochId) => {
         val s = batch.sparkSession
-        commitEpoch(s, dir, epochId, statsCols) {
+        commitEpoch(s, dir, epochId, statsEnc) {
           val fs = fsOf(s, dir)
           transform(currentVersion(fs, dir).map(_ => read(s, dir)),
             batch.toDF())
@@ -4485,7 +4440,8 @@ object GraftTable {
     * APPEND fast path: a version committed through `commitAppend*`
     * carries an append= marker naming the one dir it added, and its
     * delta is exactly that dir's contents — a plain scan of the NEW
-    * files, no exchange, no read of the previous snapshot (the multiset
+    * files under the version's declared schema, no schema-inference
+    * job, no exchange, no read of the previous snapshot (the multiset
     * identity is structural: v's file set = v-1's ⊎ the marker dir, and
     * append versions never carry a dv, so cur.exceptAll(prev) ≡ the
     * marker dir row-for-row). Every other version pays the general
@@ -4501,7 +4457,14 @@ object GraftTable {
       case Some(added) =>
         require(fs.exists(new Path(s"$dir/$added")),
           s"version $v's data has been garbage-collected (retention)")
-        spark.read.parquet(s"$dir/$added")
+        // under the version's declared schema, so no inference job runs:
+        // an append never lands on a colmap= head and its schema= is the
+        // staged rows' own, so the dir carries exactly those columns. A
+        // partby= dir keeps inference, which surfaces its partition
+        // columns the way `readVersion` serves them
+        readParquet(spark,
+          if (hdrs.contains("partby")) None else filesSchemaOf(hdrs),
+          Seq(s"$dir/$added"))
       case None =>
         val cur = readVersion(spark, dir, v)
         if (v == 0) cur
@@ -4988,9 +4951,9 @@ object GraftTable {
     * the rewrite — compaction doubles as the purge, and the compacted
     * commit carries no dv. The skipping indexes are NOT silently
     * dropped: compacting a stats-bearing (or Bloom-indexed) version
-    * requires re-declaring `statsCols` (`bloomCol`) — same contract as
-    * the append gate — because index ordinals are code, not headers,
-    * and a fresh layout needs freshly computed file ranges anyway.
+    * requires re-declaring `statsEnc` (`bloomCol`) — same contract as
+    * the append gate — and a fresh layout needs freshly computed file
+    * ranges anyway.
     * A partitionBy layout compacts to ONE file per partition value —
     * the snapshot is hash-repartitioned on the partition columns so
     * each value's rows land in a single task (the per-partition
@@ -5000,17 +4963,17 @@ object GraftTable {
     * of already-valid rows always passes). */
   def compactChain(spark: SparkSession, dir: String, targetFiles: Int = 1,
       metadata: String = "compact",
-      statsCols: StatsCols = Nil, bloomCol: Option[String] = None,
-      clusterBy: StatsCols = Nil,
+      bloomCol: Option[String] = None,
+      clusterBy: ClusterCols = Nil,
       statsEnc: Seq[(String, String)] = Nil,
       bloomCols: Seq[String] = Nil): Int = {
     require(targetFiles >= 1, s"targetFiles must be >= 1 (got $targetFiles)")
     val fs = fsOf(spark, dir)
     val (c, h) = currentHeaders(fs, dir).getOrElse(sys.error(
       s"nothing to compact: no version committed under $dir"))
-    if (h.contains("stats") && statsCols.isEmpty && statsEnc.isEmpty)
+    if (h.contains("stats") && statsEnc.isEmpty)
       throw new IndexRedeclarationRequired(
-        "compacting a stats-bearing table without statsCols would " +
+        "compacting a stats-bearing table without statsEnc would " +
           "silently drop the skipping index for the rewritten layout — " +
           "re-declare the stat columns (or rewrite via " +
           "commitNextIsolated to drop stats deliberately)")
@@ -5046,7 +5009,7 @@ object GraftTable {
       // every read task and could WIDEN the layout it claims to compact
       else snap.repartition(partBy.map(org.apache.spark.sql.functions.col): _*)
     commitNextIsolated(spark, dir, compacted, metadata,
-      partitionBy = partBy, statsCols = statsCols, bloomCol = bloomCol,
+      partitionBy = partBy, bloomCol = bloomCol,
       statsEnc = statsEnc, bloomCols = bloomCols,
       // a compaction rewrites the same rows: the bucket declaration
       // carries through and commitNextIsolated re-validates it
@@ -5056,9 +5019,9 @@ object GraftTable {
 
   /** OPTIMIZE ZORDER BY — the clustering rewrite `compactChain` applies
     * when `clusterBy` names 1 or 2 long-ordinal dimensions (the same
-    * `StatsCols` encoding the skipping index declares, so the clustered
-    * dimensions and the statted ones compose naturally). Each ordinal
-    * is range-normalized to 16 bits from its OBSERVED min/max (one
+    * long ordinals the skipping index's encodings produce, so the
+    * clustered dimensions and the statted ones compose naturally). Each
+    * ordinal is range-normalized to 16 bits from its OBSERVED min/max (one
     * 1-row aggregate — production z-order's range normalization, which
     * keeps a wide dimension from monopolizing the interleave's high
     * bits); two dimensions Morton-interleave bit by bit. The rewrite
@@ -5069,7 +5032,7 @@ object GraftTable {
     * stats tight again. Nulls order first (ordinal 0). The bucket-width
     * division (never a multiply) cannot overflow epoch-micro ordinals. */
   private def clusteredLayout(spark: SparkSession, snap: DataFrame,
-      clusterBy: StatsCols, targetFiles: Int): DataFrame = {
+      clusterBy: ClusterCols, targetFiles: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     require(clusterBy.size <= 2,
       s"clusterBy supports 1 or 2 dimensions (got ${clusterBy.size}) — " +
@@ -5149,8 +5112,7 @@ object GraftTable {
     * out, the old tail dirs are reclaimable. Returns the version. */
   def compactChainTail(spark: SparkSession, dir: String,
       targetFiles: Int = 1, metadata: String = "compact tail",
-      statsCols: StatsCols = Nil,
-      bloomCol: Option[String] = None, clusterBy: StatsCols = Nil,
+      bloomCol: Option[String] = None, clusterBy: ClusterCols = Nil,
       statsEnc: Seq[(String, String)] = Nil,
       bloomCols: Seq[String] = Nil): Int = {
     require(targetFiles >= 1, s"targetFiles must be >= 1 (got $targetFiles)")
@@ -5176,11 +5138,11 @@ object GraftTable {
     require(dirs.size >= 2,
       s"version $c has no tail to fold (${dirs.size} data dir)")
     val (head, tail) = (dirs.head, dirs.tail)
-    if (h.contains("stats") && statsCols.isEmpty && statsEnc.isEmpty)
+    if (h.contains("stats") && statsEnc.isEmpty)
       throw new IndexRedeclarationRequired(
-        "tail-compacting a stats-bearing table without statsCols/" +
-          "statsEnc would silently drop the folded files' skipping " +
-          "index — re-declare the stat columns")
+        "tail-compacting a stats-bearing table without statsEnc would " +
+          "silently drop the folded files' skipping index — re-declare " +
+          "the stat columns")
     val effBloom = (bloomCol.toSeq ++ bloomCols).distinct
     if (h.contains("bloom") && effBloom.isEmpty)
       throw new IndexRedeclarationRequired(
@@ -5199,20 +5161,15 @@ object GraftTable {
           s"the chain's indexed set $theirs — every chain dir is " +
           "probed on every section")
     }
-    // ENCODING continuity for the carried head entries: they were
-    // computed under the predecessor's statenc — the declaration here
-    // must be IDENTICAL for the spanning line to stay one ordinal
-    // domain (and a lambda-statted chain cannot gain a statenc claim:
-    // its head entries' encoding is unverifiable — re-encode through
-    // compactChain, which recomputes every file)
-    val prevEnc = h.get("statenc").map(StatsEnc.decode(_).toMap)
-      .getOrElse(Map.empty[String, String])
-    require(prevEnc == statsEnc.toMap,
-      s"tail compaction statsEnc ${statsEnc.toMap} must match the " +
-        s"chain's recorded statenc $prevEnc — the head's carried " +
-        "entries keep their ordinal domain; re-encode via compactChain")
-    val effStats: StatsCols =
-      StatsEnc.validateAndMerge(spark, statsCols, statsEnc)
+    // the carried head entries were computed under the predecessor's
+    // statenc — the declaration here must be IDENTICAL for the spanning
+    // line to stay one ordinal domain
+    val prevEnc = headIndex(h)._1
+    require(prevEnc == statsEnc,
+      s"tail compaction statsEnc $statsEnc must match the chain's " +
+        s"recorded statenc $prevEnc — the head's carried entries keep " +
+        "their ordinal domain; re-encode via compactChain")
+    StatsEnc.validate(spark, statsEnc)
 
     // under the head's file schema, so no inference job runs (a colmap=
     // head's files carry physical names, which inference serves)
@@ -5229,15 +5186,11 @@ object GraftTable {
     // are untouched — that is the whole point); the folded dir's are
     // computed fresh and re-keyed table-relative
     val (freshStats, bl) = indexWrittenDir(spark, s"$dir/$tDir",
-      folded.schema, Nil, effStats, statsEnc, effBloom)
+      folded.schema, Nil, statsEnc, effBloom)
     val mergedStats = freshStats.map { fresh =>
       val mine = fresh.files.map(f => f.copy(file = s"$tDir/${f.file}"))
-      val prev = TableStats.decode(h.getOrElse("stats", sys.error(
-        "tail compaction with statsCols requires predecessor stats — " +
-          "the head's entries carry over unread")))
-      require(prev.cols == fresh.cols,
-        s"statsCols ${fresh.cols} must match the table's recorded " +
-          s"stat columns ${prev.cols}")
+      // statsEnc equals the head's statenc, which describes its stats line
+      val prev = TableStats.decode(h("stats"))
       // predecessor keys are table-relative (append chains and statrel
       // commits both are — the only shapes with a tail to fold)
       val headEntries = prev.files.filter(_.file.startsWith(s"$head/"))
@@ -5255,7 +5208,7 @@ object GraftTable {
   }
 
   /** `compactChain`'s refusal when a declared skipping index would be
-    * silently dropped (statsCols/bloomCol not re-declared). A SUBTYPE
+    * silently dropped (statsEnc/bloomCol not re-declared). A SUBTYPE
     * of IllegalArgumentException so callers matching the general type
     * keep working — and so `maintain` can swallow exactly this refusal
     * (an operator-fixable misdeclaration) while genuine programmer
@@ -5279,7 +5232,7 @@ object GraftTable {
     * lakehouse schedules, composed from the audited primitives in the
     * order an operator wants them: (1) fold the append chain back to
     * one dir when it exceeds `maxChainDirs` (re-declaring the skipping
-    * indexes via `statsCols`/`bloomCol`, optionally re-clustering via
+    * indexes via `statsEnc`/`bloomCol`, optionally re-clustering via
     * `clusterBy`); (2) checkpoint the manifest so every full-history
     * read stays O(1 + suffix); (3) expire data older than `retainMs`
     * (compaction FIRST means the just-unreferenced chain dirs age out
@@ -5291,15 +5244,15 @@ object GraftTable {
     * unreferenced dirs.
     *
     * A compaction REFUSED by the index-redeclaration gates (a stats- or
-    * Bloom-bearing table whose caller forgot `statsCols`/`bloomCol`)
+    * Bloom-bearing table whose caller forgot `statsEnc`/`bloomCol`)
     * does NOT abort the pass: checkpoint, retention and vacuum are
     * independent steps a nightly job must keep running, so the refusal
     * is carried in the report (`compactionRefused`) for the operator
     * instead of silently stopping retention fleet-wide the night the
     * chain first trips the threshold. */
   def maintain(spark: SparkSession, dir: String, maxChainDirs: Int = 4,
-      targetFiles: Int = 1, statsCols: StatsCols = Nil,
-      bloomCol: Option[String] = None, clusterBy: StatsCols = Nil,
+      targetFiles: Int = 1,
+      bloomCol: Option[String] = None, clusterBy: ClusterCols = Nil,
       retainMs: Long = Long.MaxValue, vacuumGraceMs: Long = 3600000L,
       statsEnc: Seq[(String, String)] = Nil,
       incremental: Boolean = false,
@@ -5324,11 +5277,11 @@ object GraftTable {
           // incremental off
           if (incremental && dataDirsFrom(h, c).size >= 2)
             compactChainTail(spark, dir, targetFiles,
-              "maintenance compact (tail)", statsCols, bloomCol,
-              clusterBy, statsEnc, bloomCols)
+              "maintenance compact (tail)", bloomCol, clusterBy, statsEnc,
+              bloomCols)
           else compactChain(spark, dir, targetFiles,
-            "maintenance compact", statsCols, bloomCol, clusterBy,
-            statsEnc, bloomCols)),
+            "maintenance compact", bloomCol, clusterBy, statsEnc,
+            bloomCols)),
           None)
         catch {
           // ONLY an index-redeclaration refusal is survivable config

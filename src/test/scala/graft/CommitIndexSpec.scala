@@ -2,7 +2,7 @@ package graft
 
 import graft.sources.GraftTable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -77,8 +77,7 @@ class CommitIndexSpec extends SparkSpec {
     assert(files.exists(_.footer.getBlocks.size >= 2),
       "the fixture must hold a multi-row-group file")
     val footer = GraftTable.footerStats(files, typed, typedEnc)
-    val scan = GraftTable.computeStats(spark, p, typed,
-      GraftTable.StatsEnc.validateAndMerge(spark, Nil, typedEnc))
+    val scan = GraftTable.computeStats(spark, p, typed, typedEnc)
     assert(footer.map(_.encoded) == Some(scan.encoded))
     // the all-null and zero-row files carry the empty-range sentinel
     assert(scan.files.count(f => f.mins.forall(_ == Long.MaxValue)) == 2)
@@ -96,8 +95,7 @@ class CommitIndexSpec extends SparkSpec {
     val files = GraftTable.writtenFiles(spark, p)
     assert(files.size == 6)
     val footer = GraftTable.footerStats(files, schema, Seq("k" -> "id"))
-    val scan = GraftTable.computeStats(spark, p, schema,
-      Seq("k" -> GraftTable.StatsEnc.ordinal("id")))
+    val scan = GraftTable.computeStats(spark, p, schema, Seq("k" -> "id"))
     assert(footer.map(_.encoded) == Some(scan.encoded))
     assert(scan.files.map(_.file.takeWhile(_ != '/')).toSet ==
       Set("p=a b", "p=c+d", "p=e%25f"))
@@ -120,11 +118,11 @@ class CommitIndexSpec extends SparkSpec {
     val dataDir = GraftTable.headersOf(fs, dir, 0)("data")
     assert(GraftTable.statsOf(fs, dir, 0).map(_.encoded) ==
       Some(GraftTable.computeStats(spark, s"$dir/$dataDir", typed,
-        GraftTable.StatsEnc.validateAndMerge(spark, Nil, typedEnc)).encoded))
+        typedEnc).encoded))
   }
 
-  test("the scan fallback serves INT96 timestamps, a date under us, a " +
-      "decimal under id and lambda statsCols, with equal output") {
+  test("the scan fallback serves INT96 timestamps, a date under us and " +
+      "a decimal under id, with equal output") {
     val schema = StructType(Seq(StructField("t", TimestampType),
       StructField("d", DateType), StructField("m", DecimalType(9, 2)),
       StructField("l", LongType)))
@@ -134,31 +132,25 @@ class CommitIndexSpec extends SparkSpec {
       java.math.BigDecimal.valueOf(n * 1234 - 20000, 2),
       if (n % 5 == 0) null else n * n))
     val df = filesOf(schema, rows.take(25), rows.drop(25))
-    val lambda: Column => Column = c => c * 2
-    val cases: Seq[(String, GraftTable.StatsCols, Seq[(String, String)])] = Seq(
-      ("int96", Nil, Seq("t" -> "us")),
-      ("dateus", Nil, Seq("d" -> "us")),
-      ("decid", Nil, Seq("m" -> "id")),
-      ("lambda", Seq("l" -> lambda), Nil),
-      ("mixed", Seq("l" -> lambda), Seq("d" -> "days")))
-    cases.foreach { case (tag, lambdas, enc) =>
+    val cases: Seq[(String, Seq[(String, String)])] = Seq(
+      ("int96", Seq("t" -> "us")),
+      ("dateus", Seq("d" -> "us")),
+      ("decid", Seq("m" -> "id")))
+    cases.foreach { case (tag, enc) =>
       val dir = freshDir(s"fb_$tag")
       // INT96 is Spark's default timestamp output type; pinned here so
       // a session-wide setting cannot turn the case into a footer one
       val n = statsScans(withConf(
           "spark.sql.parquet.outputTimestampType" -> "INT96") {
-        GraftTable.commitNextIsolated(spark, dir, df, tag,
-          statsCols = lambdas, statsEnc = enc)
+        GraftTable.commitNextIsolated(spark, dir, df, tag, statsEnc = enc)
       })
       assert(n == 1, s"$tag: expected the scan fallback, saw $n stats scans")
       val fs = GraftTable.fsOf(spark, dir)
       val data = s"$dir/${GraftTable.headersOf(fs, dir, 0)("data")}"
-      val eff = GraftTable.StatsEnc.validateAndMerge(spark, lambdas, enc)
       assert(GraftTable.statsOf(fs, dir, 0).map(_.encoded) ==
-        Some(GraftTable.computeStats(spark, data, schema, eff).encoded), tag)
-      if (lambdas.isEmpty)
-        assert(GraftTable.footerStats(GraftTable.writtenFiles(spark, data),
-          schema, enc).isEmpty, tag)
+        Some(GraftTable.computeStats(spark, data, schema, enc).encoded), tag)
+      assert(GraftTable.footerStats(GraftTable.writtenFiles(spark, data),
+        schema, enc).isEmpty, tag)
     }
   }
 

@@ -37,18 +37,11 @@ class CommitJobsSpec extends SparkSpec {
     rows(0, 100).write.parquet(dir)
     assert(counts(spark.read.parquet(dir).schema)._2 == 1)
     val scan = counts(GraftTable.computeStats(spark, dir, rows(0, 1).schema,
-      Seq("key" -> GraftTable.StatsEnc.ordinal("id"))))
+      idxEnc))
     assert(scan._2 == 0 && scan._3 == 1, s"stats scan under a schema: $scan")
   }
 
-  test("a lambda-statsCols commit scans its stats and a tail compaction " +
-      "reads its tail, both under a known schema") {
-    val dir = freshDir("known")
-    val lambda = (c: org.apache.spark.sql.Column) => c * 2
-    val scanned = counts(GraftTable.commitNextIsolated(spark, dir,
-      rows(0, 2000).repartitionByRange(4, col("key")), "base",
-      statsCols = Seq("key" -> lambda)))
-    assert(scanned._2 == 0 && scanned._3 == 1, s"lambda stats: $scanned")
+  test("a tail compaction reads its tail under a known schema") {
     val chain = freshDir("tail")
     GraftTable.commitNextIsolated(spark, chain,
       rows(0, 2000).repartitionByRange(4, col("key")), "base",
@@ -157,5 +150,21 @@ class CommitJobsSpec extends SparkSpec {
     assert((delete, update, purge, pdelete, pupdate) == ((2, 9, 3, 4, 4)),
       s"job counts moved: delete $delete, update $update, purge $purge, " +
         s"positional delete $pdelete, positional update $pupdate")
+  }
+
+  test("the change feed's append fast path builds its delta with no job") {
+    val dir = freshDir("delta")
+    GraftTable.commitNextIsolated(spark, dir, rows(0, 1000), "base")
+    GraftTable.commitAppend(spark, dir, rows(1000, 200), "append")
+    // the append= dir is read under the version's declared schema, so
+    // no schema-inference job runs before an action
+    val (jobs, _) = JobRecorder.record(spark) {
+      GraftTable.versionDelta(spark, dir, 1)
+      ()
+    }
+    assert(jobs.isEmpty, s"building the append delta ran jobs: $jobs")
+    val delta = GraftTable.versionDelta(spark, dir, 1)
+    assert(delta.columns.toSeq == Seq("key", "cust", "amt", "day"))
+    assert(delta.collect().toSet == rows(1000, 200).collect().toSet)
   }
 }

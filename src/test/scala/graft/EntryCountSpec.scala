@@ -143,6 +143,28 @@ class EntryCountSpec extends AnyFunSuite {
     assert(calls.isEmpty, s"commitNextIsolated in plans/: $calls")
   }
 
+  test("stats are declared one way: no statsCols identifier in src/main") {
+    // every skipping index is declared through StatsEnc registry names
+    // and recorded as statenc=; a caller lambda ordinal is code no
+    // reader or rewrite could re-derive from the manifest
+    val sites = mainSources.collect { case (path, src)
+        if "\\bstatsCols\\b".r.findFirstIn(src).isDefined => path }
+    assert(sites.isEmpty, s"statsCols in src/main: $sites")
+  }
+
+  test("src/main reads exactly four spark.graft.* conf keys") {
+    // a session option that picks between two code paths doubles what
+    // a reader must reason about; a new key has to be named here on
+    // purpose
+    val keys = mainSources.flatMap { case (_, src) =>
+      "\"spark\\.graft\\.([A-Za-z.]+)".r.findAllMatchIn(src)
+        .map(_.group(1))
+    }.distinct.sorted
+    assert(keys == Seq("dv.broadcastMaxKeys", "merge.allowMultipleMatches",
+      "topk.maxKeysPerPartition", "update.replacementRowsPerTask"),
+      s"spark.graft.* keys in src/main: $keys")
+  }
+
   test("every oracle key has a query implementation") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without implementations: $orphans")

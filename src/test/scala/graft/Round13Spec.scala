@@ -78,13 +78,13 @@ class Round13Spec extends SparkSpec {
       UpEv(3L, ts("2024-01-01 11:02:00"), 103L, "signup", 3.0),
       UpEv(2L, ts("2024-01-01 09:00:00"), 104L, "click", 7.0)) // older: loses
     val mem = MemoryStream[UpEv]
-    // statsCols on the sink: every streamed version carries the
+    // statsEnc on the sink: every streamed version carries the
     // skipping index, so the ingest half of the lakehouse loop feeds
     // log-skippable reads directly (asserted at the end)
     def start() = GraftTable.streamingSink(dir, ckpt, mem.toDF(),
       transform = (cur, b) => StreamingOps.latestPerUser(
         cur.map(_.unionByName(b)).getOrElse(b)),
-      statsCols = Seq("user_id" -> ((c: org.apache.spark.sql.Column) => c)))
+      statsEnc = Seq("user_id" -> "id"))
     val q1 = start()
     mem.addData(b1: _*); q1.processAllAvailable()
     mem.addData(b2: _*); q1.processAllAvailable(); q1.stop()
@@ -266,7 +266,7 @@ class Round13Spec extends SparkSpec {
     fs.delete(new Path(dst), true)
     GraftTable.commitNextIsolated(spark, src,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"), "src v0",
-      statsCols = Seq("k" -> ((c: org.apache.spark.sql.Column) => c)))
+      statsEnc = Seq("k" -> "id"))
     GraftTable.cloneShallow(spark, src, dst)
     // metadata-only clone: the clone dir holds ONLY its manifest
     assert(fs.listStatus(new Path(dst)).map(_.getPath.getName).toSeq ==
@@ -344,7 +344,7 @@ class Round13Spec extends SparkSpec {
     fs.delete(new Path(dir), true)
     GraftTable.commitNext(spark, dir, Seq(1L, 2L).toDF("k"), "v0")
     GraftTable.commitNextIsolated(spark, dir, Seq(1L, 2L, 3L).toDF("k"), "v1",
-      statsCols = Seq("k" -> ((c: org.apache.spark.sql.Column) => c)))
+      statsEnc = Seq("k" -> "id"))
     // a MoR delete on the stats-bearing head now refuses (the index
     // would be silently dropped) — drop the index DELIBERATELY first,
     // which is itself a commit flavor history must surface
@@ -634,7 +634,7 @@ class Round13Spec extends SparkSpec {
     // v2: isolated with stats headers too
     GraftTable.commitNextIsolated(spark, dir, Seq(1L, 2L, 3L, 4L).toDF("k"),
       "iso v2",
-      statsCols = Seq("k" -> ((c: org.apache.spark.sql.Column) => c)))
+      statsEnc = Seq("k" -> "id"))
     q.processAllAvailable()
     // v3: drop the index deliberately (a MoR delete on a stats head now
     // refuses), then v4: a deletion-vector commit — its dv= header must
@@ -677,7 +677,8 @@ class Round13Spec extends SparkSpec {
     // stats describing raw files under a dv would lie — refused loudly
     intercept[IllegalArgumentException] {
       GraftTable.commit(fs, src, 99, "bad", Map("data" -> "v0",
-        "dv" -> "dvX;k", "stats" -> GraftTable.TableStats(Seq("k"), Nil).encoded))
+        "dv" -> "dvX;k", "stats" -> GraftTable.TableStats(Seq("k"), Nil).encoded,
+        "statenc" -> "k:id"))
     }
     // a partitioned layout CAN carry stats: relative-path keying keeps
     // one stats row per physical file and readStatsBand reads through
@@ -687,7 +688,7 @@ class Round13Spec extends SparkSpec {
     GraftTable.commitNextIsolated(spark, pdir,
       Seq((1L, "a"), (2L, "a"), (5L, "b"), (9L, "b")).toDF("k", "p"),
       "partitioned+stats", partitionBy = Seq("p"),
-      statsCols = Seq("k" -> ((c: org.apache.spark.sql.Column) => c)))
+      statsEnc = Seq("k" -> "id"))
     val st = GraftTable.statsOf(fs, pdir, 0).get
     assert(st.files.forall(_.file.contains("p=")),
       s"stats must key by relative path: ${st.files.map(_.file)}")

@@ -291,7 +291,7 @@ class Round14Spec extends SparkSpec {
     val (dirS, fsS) = fresh("g14_appendstatsgate")
     GraftTable.commitNextIsolated(spark, dirS,
       Seq((1L, 5L)).toDF("k", "m"), "statted base",
-      statsCols = Seq("k" -> identity))
+      statsEnc = Seq("k" -> "id"))
     val beforeS = fsS.listStatus(new Path(dirS)).map(_.getPath.getName).toSet
     val eS1 = intercept[IllegalArgumentException] {
       GraftTable.commitAppend(spark, dirS, Seq((2L, 6L)).toDF("k", "m"),
@@ -300,14 +300,14 @@ class Round14Spec extends SparkSpec {
     assert(eS1.getMessage.contains("skipping index"), eS1.getMessage)
     val eS2 = intercept[IllegalArgumentException] {
       GraftTable.commitAppend(spark, dirS, Seq((2L, 6L)).toDF("k", "m"),
-        "wrong stat col", statsCols = Seq("m" -> identity))
+        "wrong stat col", statsEnc = Seq("m" -> "id"))
     }
     assert(eS2.getMessage.contains("stat columns"), eS2.getMessage)
     assert(fsS.listStatus(new Path(dirS)).map(_.getPath.getName).toSet
       == beforeS, "stats refusals must stage nothing")
     // the aligned append still works
     GraftTable.commitAppend(spark, dirS, Seq((2L, 6L)).toDF("k", "m"),
-      "aligned", statsCols = Seq("k" -> identity))
+      "aligned", statsEnc = Seq("k" -> "id"))
     assert(GraftTable.rowCountOf(fsS, dirS, 1).contains(2L))
     // and dataDirOf refuses the multi-dir version instead of handing
     // back a nonexistent comma-joined path

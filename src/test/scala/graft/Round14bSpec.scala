@@ -106,11 +106,11 @@ class Round14bSpec extends SparkSpec {
     import spark.implicits._
     val df = (0L until 100L).map(i => (i, i % 7)).toDF("k", "m")
       .repartitionByRange(4, col("k"))
-    val statsCols: GraftTable.StatsCols = Seq("k" -> (c => c))
+    val statsEnc = Seq("k" -> "id")
     GraftTable.commitNextIsolated(spark, dir, df, "statted",
-      statsCols = statsCols, bloomCol = Some("m"))
+      statsEnc = statsEnc, bloomCol = Some("m"))
     val e1 = intercept[IllegalArgumentException] {
-      GraftTable.compactChain(spark, dir, 2, statsCols = statsCols) // no bloom
+      GraftTable.compactChain(spark, dir, 2, statsEnc = statsEnc) // no bloom
     }
     assert(e1.getMessage.contains("Bloom"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
@@ -120,7 +120,7 @@ class Round14bSpec extends SparkSpec {
     assert(GraftTable.versions(fs, dir) == Seq(0),
       "refused compactions create no version")
     val cv = GraftTable.compactChain(spark, dir, 2,
-      statsCols = statsCols, bloomCol = Some("m"))
+      statsEnc = statsEnc, bloomCol = Some("m"))
     val st = GraftTable.statsOf(fs, dir, cv).get
     val snap = GraftTable.readVersion(spark, dir, cv)
     assert(st.files.map(_.rows).sum == 100 &&
@@ -130,6 +130,28 @@ class Round14bSpec extends SparkSpec {
     assert(total == st.files.size && hit.nonEmpty &&
       probeDf.filter(col("m") === 3L).count() == 14, // i%7==3, i<100
       "the rebuilt Bloom index serves the compacted layout")
+  }
+
+  test("commit refuses a stats= line that no statenc= line describes") {
+    val (dir, fs) = fresh("g14b_statenc")
+    import spark.implicits._
+    GraftTable.commitNextIsolated(spark, dir, Seq((1L, 2L)).toDF("k", "m"),
+      "statted", statsEnc = Seq("k" -> "id", "m" -> "id"))
+    val h = GraftTable.headersOf(fs, dir, 0) - "ts"
+    val bare = h - "statenc"
+    val e = intercept[IllegalArgumentException] {
+      GraftTable.commit(fs, dir, 1, "stats without statenc", bare)
+    }
+    assert(e.getMessage.contains("statenc"), e.getMessage)
+    // the same columns in another order do not describe the line either
+    intercept[IllegalArgumentException] {
+      GraftTable.commit(fs, dir, 1, "reordered statenc",
+        bare + ("statenc" -> "m:id,k:id"))
+    }
+    assert(GraftTable.versions(fs, dir) == Seq(0),
+      "refused commits create no version")
+    GraftTable.commit(fs, dir, 1, "described", h)
+    assert(GraftTable.versions(fs, dir) == Seq(0, 1))
   }
 
   test("compactChain preserves a partitionBy layout") {
@@ -154,15 +176,16 @@ class Round14bSpec extends SparkSpec {
     // 1024 rows over a 32×32 grid, hash-scattered at commit: every
     // file's (x, y) rectangle is full-width
     val df = (0L until 1024L).map(i => (i, i % 32L, i / 32L)).toDF("k", "x", "y")
-    val dims: GraftTable.StatsCols = Seq("x" -> (c => c), "y" -> (c => c))
+    val dims: GraftTable.ClusterCols = Seq("x" -> (c => c), "y" -> (c => c))
+    val enc = Seq("x" -> "id", "y" -> "id")
     GraftTable.commitNextIsolated(spark, dir,
-      df.repartition(8, col("k")), "arrival", statsCols = dims)
+      df.repartition(8, col("k")), "arrival", statsEnc = enc)
     val bands = Seq(GraftTable.RangeBand("x", 4L, 11L),
       GraftTable.RangeBand("y", 4L, 11L)) // an 8×8 of the 32×32 grid
     val (_, hit0, total0) = GraftTable.readStatsBands(spark, dir, 0, bands)
     assert(hit0.size == total0, "arrival-order rectangles skip nothing")
     val cv = GraftTable.compactChain(spark, dir, targetFiles = 16,
-      "optimize", statsCols = dims, clusterBy = dims)
+      "optimize", statsEnc = enc, clusterBy = dims)
     val (bdf, hit1, total1) = GraftTable.readStatsBands(spark, dir, cv, bands)
     assert(total1 == 16 && hit1.size * 2 <= total1,
       s"z-ordered 2-D band must prune at least half (${hit1.size}/$total1)")
@@ -186,9 +209,9 @@ class Round14bSpec extends SparkSpec {
     val (dir1, _) = fresh("g14b_optz1d")
     GraftTable.commitNextIsolated(spark, dir1,
       df.repartition(8, col("k")), "arrival",
-      statsCols = Seq("k" -> (c => c)))
+      statsEnc = Seq("k" -> "id"))
     val c1 = GraftTable.compactChain(spark, dir1, targetFiles = 8,
-      "sort by k", statsCols = Seq("k" -> (c => c)),
+      "sort by k", statsEnc = Seq("k" -> "id"),
       clusterBy = Seq("k" -> (c => c)))
     val (_, h1d, t1d) = GraftTable.readStatsBands(spark, dir1, c1,
       Seq(GraftTable.RangeBand("k", 0L, 127L)))
@@ -197,7 +220,7 @@ class Round14bSpec extends SparkSpec {
     // misuse refuses before anything stages
     intercept[IllegalArgumentException] {
       GraftTable.compactChain(spark, dir1, 4,
-        statsCols = Seq("k" -> (c => c)),
+        statsEnc = Seq("k" -> "id"),
         clusterBy = Seq("k" -> (c => c), "x" -> (c => c), "y" -> (c => c)))
     }
     val (dirP, _) = fresh("g14b_optzpart")
@@ -377,15 +400,15 @@ class Round14bSpec extends SparkSpec {
     val (parent, _) = fresh("g14b_clonestats")
     val src = s"$parent/src"
     val dst = s"$parent/dst"
-    val statsCols: GraftTable.StatsCols = Seq("k" -> (c => c))
+    val statsEnc = Seq("k" -> "id")
     GraftTable.commitNextIsolated(spark, src,
       (0L until 80L).map(i => (i, i % 4L)).toDF("k", "c")
         .repartitionByRange(4, col("k")),
-      "statted base", statsCols = statsCols)
+      "statted base", statsEnc = statsEnc)
     GraftTable.cloneShallow(spark, src, dst)
     GraftTable.commitAppend(spark, dst,
       (80L until 100L).map(i => (i, 9L)).toDF("k", "c").coalesce(1),
-      "append onto the clone", statsCols = statsCols)
+      "append onto the clone", statsEnc = statsEnc)
     val (bdf, hit, total) = GraftTable.readStatsBands(spark, dst, 1,
       Seq(GraftTable.RangeBand("k", 85L, 99L)))
     assert(total == 5 && hit.size == 1 &&

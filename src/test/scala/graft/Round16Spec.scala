@@ -485,20 +485,6 @@ class Round16Spec extends SparkSpec {
       .count() == expected.count())
   }
 
-  test("dsv2: a lambda-ordinal stats chain still refuses the append") {
-    val dir = freshDir("idxrefuse")
-    val o = T.t(spark, sf, "nation").select(col("n_nationkey"), col("n_name"))
-    GraftTable.commitNextIsolated(spark, dir, o, "lambda stats",
-      statsCols = Seq("n_nationkey" -> ((c: org.apache.spark.sql.Column) => c)))
-    val e = intercept[Exception] {
-      o.limit(1).write.format("graft").mode("append")
-        .save(new java.io.File(dir).getAbsolutePath)
-    }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("registry-declared")), msgs(e).toString)
-  }
-
   test("stream write: epochs onto an indexed sink chain extend the index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -821,7 +807,7 @@ class Round16Spec extends SparkSpec {
       Seq((2L, 20L)))
   }
 
-  test("sql: DELETE on a registry-indexed target takes the copy-on-write arm — index re-derived and live; lambda ordinals still refuse") {
+  test("sql: DELETE on a registry-indexed target takes the copy-on-write arm — index re-derived and live") {
     val dir = freshDir("delidx16")
     val n = T.t(spark, sf, "nation").select(col("n_nationkey"), col("n_name"))
     GraftTable.commitNextIsolated(spark, dir, n, "indexed",
@@ -839,16 +825,6 @@ class Round16Spec extends SparkSpec {
       GraftTable.readStatsBand(spark, dir, 1, "n_nationkey", 0L, 3L)
     assert(band.where(col("n_nationkey").between(0, 3))
       .collect().map(_.getInt(0)).toSet == Set(0, 2, 3))
-    // a LAMBDA-ordinal stats line still refuses: SQL text cannot
-    // re-derive caller code, and silent index stripping stays banned
-    val dir2 = freshDir("delidx16l")
-    GraftTable.commitNextIsolated(spark, dir2, n, "lambda-indexed",
-      statsCols = Seq("n_nationkey" -> ((c: org.apache.spark.sql.Column) => c)))
-    val e = intercept[Exception] {
-      spark.sql(s"DELETE FROM gt16.`${new java.io.File(dir2).getAbsolutePath}`" +
-        " WHERE n_nationkey = 1")
-    }
-    assert(e.getMessage.contains("registry-declared"), e.getMessage)
   }
 
   test("sql: DML composes with ALTER — tombstones key the backfilled column") {
@@ -905,18 +881,6 @@ class Round16Spec extends SparkSpec {
     val (pdf, hit, _) = GraftTable.readBloomEq(spark, dir, 1, "o_custkey", k)
     assert(hit.nonEmpty && pdf.where(col("o_custkey") === k).count() ==
       replacement.where(col("o_custkey") === k).count())
-    // a lambda-indexed chain refuses the overwrite instead
-    val dir2 = freshDir("idxoverwrite2")
-    val n = T.t(spark, sf, "nation").select(col("n_nationkey"), col("n_name"))
-    GraftTable.commitNextIsolated(spark, dir2, n, "lambda stats",
-      statsCols = Seq("n_nationkey" -> ((c: org.apache.spark.sql.Column) => c)))
-    val e = intercept[Exception] {
-      n.limit(1).write.format("graft").mode("overwrite")
-        .save(new java.io.File(dir2).getAbsolutePath)
-    }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("registry-declared")), msgs(e).toString)
   }
 
   // ---- SQL surface completion: RESTORE / CLONE / CTAS --------------------

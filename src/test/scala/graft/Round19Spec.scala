@@ -230,8 +230,7 @@ class Round19Spec extends SparkSpec {
 
   test("SQL DML on a pdv head: DELETE continues the positional chain, " +
       "UPDATE continues POSITIONALLY (new sidecar + staged replacement " +
-      "rows, untouched files unrewritten); delete.mode=positional " +
-      "mints pdv from SQL alone") {
+      "rows, untouched files unrewritten)") {
     val dir = pdvBase("pdv_dml")
     GraftTable.commitPositionalDelete(spark, dir, col("k") === 2L, "api mor")
     spark.conf.set("spark.sql.catalog.gt19d",
@@ -275,20 +274,6 @@ class Round19Spec extends SparkSpec {
     assert(GraftTable.readVersion(spark, dir, 5)
       .where(col("k") === 5L).select("v").collect()
       .map(_.getLong(0)).toSeq == Seq(151L))
-    // opt-in: DELETE mode=positional mints a pdv version on a plain head
-    val dir2 = pdvBase("pdv_dml2")
-    val abs2 = new java.io.File(dir2).getAbsolutePath
-    try {
-      spark.conf.set("spark.graft.delete.mode", "positional")
-      spark.sql(s"DELETE FROM gt19d.`$abs2` WHERE k <= 4")
-    } finally spark.conf.unset("spark.graft.delete.mode")
-    val fs2 = GraftTable.fsOf(spark, dir2)
-    assert(GraftTable.headersOf(fs2, dir2, 2).contains("pdv"))
-    val v2 = GraftTable.readVersion(spark, dir2, 2)
-    assert(v2.inputFiles.length == 1,
-      "the fully-deleted lo file must be skipped")
-    assert(v2.select("k").collect().map(_.getLong(0)).sorted.toSeq ==
-      (5L to 12L))
   }
 
   test("positional DV travels shallow clone and compaction applies it") {

@@ -200,13 +200,8 @@ class Round20Spec extends SparkSpec {
   test("a positional UPDATE matching NOTHING commits an empty sidecar " +
       "version and the table reads unchanged") {
     val dir = updBase("pdvupdnone")
-    try {
-      spark.conf.set("spark.graft.update.mode", "positional")
-      spark.conf.set("spark.sql.catalog.gt20n",
-        classOf[graft.sources.GraftCatalog].getName)
-      val abs = new java.io.File(dir).getAbsolutePath
-      spark.sql(s"UPDATE gt20n.`$abs` SET v = 0 WHERE k > 999")
-    } finally spark.conf.unset("spark.graft.update.mode")
+    GraftTable.commitPositionalUpdate(spark, dir, col("k") > 999L,
+      Seq("v" -> lit(0L)), "matches nothing")
     val fs = GraftTable.fsOf(spark, dir)
     assert(GraftTable.headersOf(fs, dir, 2).contains("pdv"))
     assert(GraftTable.read(spark, dir).orderBy("k").collect()
@@ -447,8 +442,7 @@ class Round20Spec extends SparkSpec {
       "a refused update must create no version")
   }
 
-  test("positional UPDATE refuses a key-tombstone (dv=) head and the " +
-      "opt-in mode conf mints a pdv chain from a plain head") {
+  test("positional UPDATE refuses a key-tombstone (dv=) head") {
     import spark.implicits._
     val dir = fresh("pdvupdguards")
     GraftTable.commitNextIsolated(spark, dir,
@@ -460,23 +454,6 @@ class Round20Spec extends SparkSpec {
         Seq("v" -> lit(0L)), "two regimes")
     }
     assert(e.getMessage.contains("dv="))
-    // SQL door opt-in on a PLAIN head routes positionally
-    val dir2 = fresh("pdvupdoptin")
-    GraftTable.commitNextIsolated(spark, dir2,
-      (1L to 6L).map(k => (k, k * 10L)).toDF("k", "v"), "base")
-    spark.conf.set("spark.sql.catalog.gt20u",
-      classOf[graft.sources.GraftCatalog].getName)
-    val abs2 = new java.io.File(dir2).getAbsolutePath
-    try {
-      spark.conf.set("spark.graft.update.mode", "positional")
-      spark.sql(s"UPDATE gt20u.`$abs2` SET v = v + 1 WHERE k <= 2")
-    } finally spark.conf.unset("spark.graft.update.mode")
-    val fs2 = GraftTable.fsOf(spark, dir2)
-    assert(GraftTable.headersOf(fs2, dir2, 1).contains("pdv"),
-      "the opt-in UPDATE must mint a positional sidecar, not CoW")
-    assert(GraftTable.read(spark, dir2).orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      (1L to 6L).map(k => (k, if (k <= 2) k * 10L + 1 else k * 10L)))
   }
 
   // ---- round-21 one-pass positional UPDATE fold ----------------------------
