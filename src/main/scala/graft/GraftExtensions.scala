@@ -44,6 +44,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // doors instead of silently shuffling on the path one
     ext.injectResolutionRule(session =>
       graft.plans.PathBucketCatalogRule(session))
+    // a global sort whose runtime input AQE would read as one partition
+    // shuffles to a single partition: no range-sampling job
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortSinglePartition)
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),

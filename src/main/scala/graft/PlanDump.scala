@@ -115,7 +115,10 @@ object PlanDump {
       // delete→update chain still has NO join node (the replacement
       // dir's files flow beside the shared base files; the probe
       // filters tombstoned positions inside the scan stage)
-      "table_dv_update_positional")
+      "table_dv_update_positional",
+      // the one-pass funnel: one events scan, one user_id hash exchange,
+      // no join (the three-join form scanned events five times)
+      "report_funnel")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (headline queries, ")
       .append(sfDir).append(")\n\n")

@@ -53,23 +53,29 @@ object MoreOps {
 
     // Ordered funnel (view → click → purchase): each stage is the user's
     // earliest qualifying event STRICTLY AFTER the previous stage — the
-    // event-analytics conversion idiom. Three grouped aggregates chained
-    // by equi-joins on user_id (key-partitioned; no window over the whole
-    // event stream, no self-join explosion), then three 1-row counts.
+    // event-analytics conversion idiom. One scan and one user_id
+    // aggregate: t1 = the first view, the click and purchase times as
+    // lists, t2 = the first click after t1, t3 = the first purchase after
+    // t2; one global count finishes (no joins, one hash exchange). As in
+    // the three-join form (the oracle), a null user_id group counts as
+    // viewed but never converts, and null timestamps never qualify.
     "report_funnel" -> ((s, d) => {
-      val ev = T.events(s, d)
-        .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min(col("us")).as("t1"))
-      val c = ev.filter(col("event_type") === "click")
-        .join(v, "user_id").filter(col("us") > col("t1"))
-        .groupBy("user_id").agg(min(col("us")).as("t2"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .join(c, "user_id").filter(col("us") > col("t2"))
-        .groupBy("user_id").agg(min(col("us")).as("t3"))
-      v.agg(count(lit(1)).as("viewed"))
-        .crossJoin(c.agg(count(lit(1)).as("clicked_after")))
-        .crossJoin(p.agg(count(lit(1)).as("purchased_after")))
+      val us = unix_micros(col("ts"))
+      def at(kind: String) = when(col("event_type") === kind, us)
+      T.events(s, d)
+        .filter(col("event_type").isin("view", "click", "purchase"))
+        .groupBy("user_id")
+        .agg(bool_or(col("event_type") === "view").as("has_view"),
+          min(at("view")).as("t1"),
+          collect_list(at("click")).as("clicks"),
+          collect_list(at("purchase")).as("buys"))
+        .withColumn("t2", array_min(filter(col("clicks"), _ > col("t1"))))
+        .withColumn("t3", array_min(filter(col("buys"), _ > col("t2"))))
+        .agg(count_if(col("has_view")).as("viewed"),
+          count_if(col("user_id").isNotNull && col("t2").isNotNull)
+            .as("clicked_after"),
+          count_if(col("user_id").isNotNull && col("t3").isNotNull)
+            .as("purchased_after"))
     }),
 
     // Skew-mitigated join through Graft.saltedJoin: event_type has only 5

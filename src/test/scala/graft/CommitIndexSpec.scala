@@ -19,16 +19,6 @@ class CommitIndexSpec extends SparkSpec {
     dir
   }
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** A frame whose partitions ARE the given row groups, in order — so
     * each group becomes exactly one written file (an empty first group
     * still writes its zero-row file). */

@@ -18,13 +18,6 @@ class DvLoadSpec extends SparkSpec {
     dir
   }
 
-  private def withConf[A](k: String, v: String)(body: => A): A = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body
-    finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
   test("SQL reads of a scoped-DV head load the DV once per DV dir; the " +
       "anti-join tier neither reads nor fills the loaded sets") {
     val dir = freshDir("scoped")
@@ -70,7 +63,7 @@ class DvLoadSpec extends SparkSpec {
     assert(range(0, 40) == live(_ == 11)(0, 40))
     assert(counters._1 == c1 + 1)
 
-    withConf("spark.graft.dv.broadcastMaxKeys", "10") {
+    withConf("spark.graft.dv.broadcastMaxKeys" -> "10") {
       // a loaded DV is not read by the anti-join tier…
       val before = counters
       assert(range(0, 40) == live(_ == 11)(0, 40))

@@ -346,4 +346,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(windows <= 2, s"expected one logical window (<=2 mentions), got $windows:\n" +
       p.take(2000))
   }
+
+  test("report_funnel: one events scan, one hash exchange, no nested-loop join") {
+    val p = plan("report_funnel")
+    val scans = "FileScan parquet".r.findAllIn(p).size
+    assert(scans == 1, s"expected one scan, got $scans:\n" + p.take(3000))
+    val ex = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(ex == 1, s"expected one hash exchange, got $ex:\n" + p.take(3000))
+    assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
+  }
 }

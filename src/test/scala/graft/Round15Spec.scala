@@ -962,13 +962,4 @@ class Round15Spec extends SparkSpec {
       _.scan.asInstanceOf[graft.sources.GraftScan].runtimePruned),
       "the scan's manifest verdict must have fired at runtime")
   }
-
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

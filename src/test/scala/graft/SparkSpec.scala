@@ -8,6 +8,18 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the given session confs set, then restores each
+    * to its previous value (or unsets it). */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

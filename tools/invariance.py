@@ -4,10 +4,13 @@ shuffle-partition counts and assert every query's output is identical
 (PERF.md's "bit-identical at local[4] vs local[32]" claim, automated).
 
 Usage: python3 tools/invariance.py <sfDir> [cpusA] [cpusB]
-Runs sbt twice (slow); compares row-sets per query via DuckDB.
+Runs sbt twice (slow); compares each query's rows, in order, with
+dumpdiff.py (the union of both runs' keys: a key that failed on one side
+only fails).
 """
 import os, subprocess, sys
-import duckdb
+
+import dumpdiff
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 ca = sys.argv[2] if len(sys.argv) > 2 else "4"
@@ -19,38 +22,5 @@ for cpus, out in ((ca, outa), (cb, outb)):
     subprocess.run(["sbt", "-batch", f"runMain graft.Verify {sfdir} {out}"],
                    env=env, check=True, capture_output=True)
 
-con = duckdb.connect()
-fails = 0
-# UNION of both runs' keys: enumerating run A alone would silently drop a
-# query that errored (no output dir) in A but succeeded in B — the
-# asymmetric-failure case an invariance check exists to surface. A key
-# present on only one side FAILS below (the read of the missing side
-# raises).
-def dirs(out):
-    # skip underscore-prefixed non-key artifacts (the _forensics dump
-    # Verify writes beside the Bloom keys), mirroring the hidden-file
-    # convention the driver and Spark's file sources share
-    return {k for k in os.listdir(out)
-            if os.path.isdir(os.path.join(out, k))
-            and not k.startswith("_")}
-ka, kb = dirs(outa), dirs(outb)
-for k in sorted(ka ^ kb):
-    side = f"only in {outa if k in ka else outb}"
-    print(f"FAIL {k}: asymmetric — {side}")
-keys = sorted(ka | kb)
-fails += len(ka ^ kb)
-for k in sorted(ka & kb):
-    try:
-        ra = con.execute(f"SELECT * FROM read_parquet('{outa}/{k}/*.parquet')").fetchall()
-        rb = con.execute(f"SELECT * FROM read_parquet('{outb}/{k}/*.parquet')").fetchall()
-    except Exception as e:
-        print(f"FAIL {k}: {e}")
-        fails += 1
-        continue
-    if ra != rb:
-        print(f"FAIL {k}: {len(ra)} vs {len(rb)} rows, or value drift")
-        fails += 1
-    else:
-        print(f"ok   {k}: {len(ra)} rows identical at {ca} and {cb} threads")
-print("RESULT:", "FAIL" if fails else "PASS", f"({fails} failing of {len(keys)})")
-sys.exit(1 if fails else 0)
+print(f"comparing {outa} ({ca} threads) with {outb} ({cb} threads)")
+sys.exit(dumpdiff.main(outa, outb))
