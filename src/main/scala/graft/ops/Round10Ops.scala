@@ -106,25 +106,26 @@ object Round10Ops {
     * of (table version, watermark) — the manifest idiom of a lakehouse
     * transaction log, in miniature. Store layout under `dir`:
     *
-    *   v<N>/                 immutable table versions (parquet)
-    *   manifest/commit_<N>   one file per committed version; its content
-    *                         is the watermark that version includes
+    *   v<N>_<id>/            immutable table versions (parquet)
+    *   manifest/commit_<N>   one file per committed version: the data
+    *                         dir it names, its schema, and the
+    *                         watermark it includes as metadata
     *
     * It is an ordinary GraftTable: readers resolve the CURRENT table
     * exclusively through the manifest (`GraftTable.read`), so a
     * half-staged version is invisible by construction. A load run
-    * stages `v<N+1>` first and then commits it with one file
-    * create+rename — atomic on any Hadoop filesystem (the commit file
-    * either exists with its full content or not at all). Crash
-    * anywhere before the commit: the manifest still names (N, wm), the
-    * retry recomputes the SAME batch from the SAME watermark and
-    * overwrites the orphaned staging dir — no double count, which is
-    * exactly the window the previous
+    * stages version N+1 to a fresh dir first and then commits it,
+    * naming that dir, with one file create+rename — atomic on any
+    * Hadoop filesystem (the commit file either exists with its full
+    * content or not at all). Crash anywhere before the commit: the
+    * manifest still names (N, wm), the retry recomputes the SAME batch
+    * from the SAME watermark into another fresh dir, and the crashed
+    * run's dir stays unreferenced until `vacuum` reclaims it — no
+    * double count, which is exactly the window the previous
     * delete-then-rename + trailing-watermark form left open
     * (Round11Spec kills a run between stage and commit and proves the
-    * retry converges to the one-shot recompute). Single writer assumed
-    * (an orchestrator-scheduled daily load); the manifest serializes
-    * readers against the writer, not writers against each other.
+    * retry converges to the one-shot recompute). Two concurrent loads
+    * cannot both land: one loses the commit of N+1 and throws.
     *
     * Partials are associative at a pinned DECIMAL(30,2) store width, so
     * any run partitioning reaches the same table as one full recompute. */
@@ -132,8 +133,8 @@ object Round10Ops {
       dir: String, cut: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val v = stageDailyVersion(s, d, dir, cut)
-    commitDailyVersion(fs, dir, v, cut)
+    val (v, headers) = stageDailyVersion(s, d, dir, cut)
+    commitDailyVersion(fs, dir, v, headers, cut)
   }
 
   /** Latest committed (version, watermark) from the manifest, if any.
@@ -155,12 +156,13 @@ object Round10Ops {
     readManifest(fs, dir).map(_._2).getOrElse(Long.MinValue)
   }
 
-  /** First (crash-prone, side-effect-idempotent) half of a load run:
-    * compute the (watermark, cut] batch, fold it into the current
-    * committed table, and write the result as the NEXT version dir —
-    * WITHOUT committing. Returns the staged version number. */
+  /** First (crash-prone) half of a load run: compute the (watermark,
+    * cut] batch, fold it into the current committed table, and stage
+    * the result as the NEXT version's dir — WITHOUT committing. Returns
+    * the staged version number and the headers its commit names (the
+    * staged dir and its schema). */
   private[graft] def stageDailyVersion(s: SparkSession, d: String,
-      dir: String, cut: Long): Int = {
+      dir: String, cut: Long): (Int, Map[String, String]) = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val prev = readManifest(fs, dir)
@@ -193,17 +195,18 @@ object Round10Ops {
       case None => part
     }
     val vNew = prev.map(_._1 + 1).getOrElse(0)
-    graft.sources.GraftTable.stage(merged, dir, vNew)
-    vNew
+    (vNew, Map("data" -> graft.sources.GraftTable.stage(merged, dir, vNew),
+      "schema" -> graft.sources.GraftTable.schemaEncode(merged.schema)))
   }
 
-  /** Second half: the atomic commit — GraftTable.commit with the
-    * watermark as the version's metadata and retain=1 (one prior
-    * version kept as a grace window for readers that resolved the
+  /** Second half: the atomic commit of the staged version — its
+    * headers, the watermark as the version's metadata and retain=1 (one
+    * prior version kept as a grace window for readers that resolved the
     * manifest just before this commit). */
   private[graft] def commitDailyVersion(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, v: Int, wm: Long): Unit =
-    graft.sources.GraftTable.commit(fs, dir, v, wm.toString, retain = 1)
+      dir: String, v: Int, headers: Map[String, String], wm: Long): Unit =
+    graft.sources.GraftTable.commit(fs, dir, v, wm.toString, headers,
+      retain = 1)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The ingest/serving split the LSH design assumes, made literal:

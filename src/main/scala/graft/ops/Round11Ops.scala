@@ -217,10 +217,10 @@ object Round11Ops {
       val o = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderdate"),
           dec(col("o_totalprice")).as("price"))
-      graft.sources.GraftTable.commitNext(s, dir,
+      graft.sources.GraftTable.commitNextIsolated(s, dir,
         o.filter(col("o_orderdate") < to_timestamp(lit("1997-01-01"))),
         "pre-1997")
-      graft.sources.GraftTable.commitNext(s, dir, o, "full")
+      graft.sources.GraftTable.commitNextIsolated(s, dir, o, "full")
       def snap(v: Int): DataFrame =
         graft.sources.GraftTable.readVersion(s, dir, v)
           .agg(count(lit(1)).as("n_rows"), money(sum(col("price"))).as("sum_price"))
@@ -256,7 +256,7 @@ object Round11Ops {
             graft.sources.GraftTable.read(s, dir).unionByName(chunkSigs)
           case None => chunkSigs
         }
-        graft.sources.GraftTable.commitNext(s, dir, merged, s"chunk$i")
+        graft.sources.GraftTable.commitNextIsolated(s, dir, merged, s"chunk$i")
       }
       MinHashDedup.dedupAssignFromSigs(graft.sources.GraftTable.read(s, dir))
         .select(col("doc_id"), col("rep"),

@@ -48,7 +48,7 @@ object Round12Ops {
     // MERGE INTO — the single most common lakehouse write pattern:
     // current snapshot FULL OUTER changelog on the key, per-column
     // coalesce, committed atomically as version N+1 (cdc_merge_upsert's
-    // SCD1 semantics composed with GraftTable.commitNext). The changelog
+    // SCD1 semantics composed with GraftTable.commitNextIsolated). The changelog
     // is orders pre-aggregated to one row per key BEFORE the merge join,
     // so the shuffle carries |keys| rows, not |orders|; keys ≡ 0 (mod
     // 10) are shifted past the base key space to exercise the
@@ -104,8 +104,8 @@ object Round12Ops {
         .delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
       val o = t(s, d, "orders").select(col("o_orderkey"), col("o_orderstatus"),
         dec(col("o_totalprice")).as("price"))
-      GraftTable.commitNext(s, dir, o.repartition(64), "raw 64-shard layout")
-      GraftTable.commitNext(s, dir, GraftTable.read(s, dir).coalesce(4),
+      GraftTable.commitNextIsolated(s, dir, o.repartition(64), "raw 64-shard layout")
+      GraftTable.commitNextIsolated(s, dir, GraftTable.read(s, dir).coalesce(4),
         "optimize: compacted to 4 files")
       def snap(v: Int): DataFrame =
         GraftTable.readVersion(s, dir, v)
@@ -131,11 +131,11 @@ object Round12Ops {
         .delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
       val o = t(s, d, "orders").select(col("o_orderkey"), col("o_orderdate"),
         dec(col("o_totalprice")).as("price"))
-      GraftTable.commitNext(s, dir,
+      GraftTable.commitNextIsolated(s, dir,
         o.filter(col("o_orderdate") < to_timestamp(lit("1996-01-01"))), "pre-1996")
-      GraftTable.commitNext(s, dir,
+      GraftTable.commitNextIsolated(s, dir,
         o.filter(col("o_orderdate") < to_timestamp(lit("1997-01-01"))), "pre-1997")
-      GraftTable.commitNext(s, dir, o, "full")
+      GraftTable.commitNextIsolated(s, dir, o, "full")
       def delta(v: Int): DataFrame =
         GraftTable.versionDelta(s, dir, v)
           .agg(count(lit(1)).as("n_rows"), money(sum(col("price"))).as("sum_price"))
@@ -158,7 +158,7 @@ object Round12Ops {
         .delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
       val o = t(s, d, "orders").select(col("o_orderkey"), col("o_orderstatus"),
         dec(col("o_totalprice")).as("price"))
-      GraftTable.commitNext(s, dir, o, "full")
+      GraftTable.commitNextIsolated(s, dir, o, "full")
       GraftTable.commitNextIsolated(s, dir,
         GraftTable.read(s, dir).filter(col("o_orderstatus") =!= "F"),
         "delete where o_orderstatus = 'F'")
@@ -191,11 +191,11 @@ object Round12Ops {
       fs.delete(new org.apache.hadoop.fs.Path(mv), true)
       val o = t(s, d, "orders").select(col("o_orderdate"),
         dec(col("o_totalprice")).as("price"))
-      GraftTable.commitNext(s, src,
+      GraftTable.commitNextIsolated(s, src,
         o.filter(col("o_orderdate") < to_timestamp(lit("1996-01-01"))), "pre-1996")
-      GraftTable.commitNext(s, src,
+      GraftTable.commitNextIsolated(s, src,
         o.filter(col("o_orderdate") < to_timestamp(lit("1997-01-01"))), "pre-1997")
-      GraftTable.commitNext(s, src, o, "full")
+      GraftTable.commitNextIsolated(s, src, o, "full")
       (0 to 2).foreach { v =>
         val part = GraftTable.versionDelta(s, src, v)
           .groupBy(date_trunc("month", col("o_orderdate")).cast(DateType).as("ym"))
@@ -227,7 +227,7 @@ object Round12Ops {
       GraftTable.fsOf(s, dir)
         .delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
       val o = t(s, d, "orders")
-      GraftTable.commitNext(s, dir,
+      GraftTable.commitNextIsolated(s, dir,
         o.select(col("o_orderkey"), dec(col("o_totalprice")).as("price")),
         "initial 2-column schema")
       // ADD COLUMN is exactly the change the round-14 write gate exists
@@ -271,7 +271,7 @@ object Round12Ops {
         o.filter(pred).groupBy(col("o_custkey").as("key"))
           .agg(sum(dec(col("o_totalprice"))).as("bal"))
       // v0 — load: pre-1996 per-customer balances
-      GraftTable.commitNext(s, dir,
+      GraftTable.commitNextIsolated(s, dir,
         band(col("o_orderdate") < to_timestamp(lit("1996-01-01"))), "load pre-1996")
       // v1 — merge: 1996's changelog upserted (update + insert arms)
       val chg = band(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
@@ -387,7 +387,7 @@ object Round12Ops {
         .delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
       val o = t(s, d, "orders").select(col("o_orderkey"),
         dec(col("o_totalprice")).as("price"), col("o_orderdate"))
-      GraftTable.commitNext(s, dir,
+      GraftTable.commitNextIsolated(s, dir,
         o.filter(col("o_orderdate") < to_timestamp(lit("1997-01-01")))
           .drop("o_orderdate"), "good load")
       GraftTable.commitNextIsolated(s, dir,

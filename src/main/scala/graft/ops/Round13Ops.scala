@@ -417,11 +417,11 @@ object Round13Ops {
       val fs = GraftTable.fsOf(s, dir)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
       val n = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
-      GraftTable.commitNext(s, dir, n.filter(col("n_nationkey") < 10), "v0")
+      GraftTable.commitNextIsolated(s, dir, n.filter(col("n_nationkey") < 10), "v0")
       Thread.sleep(2)
-      GraftTable.commitNext(s, dir, n.filter(col("n_nationkey") < 20), "v1")
+      GraftTable.commitNextIsolated(s, dir, n.filter(col("n_nationkey") < 20), "v1")
       Thread.sleep(2)
-      GraftTable.commitNext(s, dir, n, "v2")
+      GraftTable.commitNextIsolated(s, dir, n, "v2")
       val asOf = GraftTable.versionAsOf(fs, dir,
         GraftTable.commitTimeMs(fs, dir, 1)).get
       GraftTable.readVersion(s, dir, asOf)
@@ -468,7 +468,7 @@ object Round13Ops {
     // DESCRIBE HISTORY from plain SQL: graft_history('<dir>') — the
     // audit TVF over the manifest (O(versions) commit-file reads, no
     // data) — driven across every commit flavor this format has:
-    // convention (no headers beyond ts=), isolated+stats (n_rows
+    // plain rewrite (no index), rewrite+stats (n_rows
     // surfaces from the stats line), deletion-vector (has_dv), purge.
     // The nation fixture is SF-independent, so the history is a pure
     // literal the oracle states outright. commit_ms is wall clock and
@@ -480,7 +480,7 @@ object Round13Ops {
       GraftTable.fsOf(s, dir)
         .delete(new org.apache.hadoop.fs.Path(dir), true) // pure-function reset
       val n = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
-      GraftTable.commitNext(s, dir, n.filter(col("n_nationkey") < 10), "v0 load")
+      GraftTable.commitNextIsolated(s, dir, n.filter(col("n_nationkey") < 10), "v0 load")
       GraftTable.commitNextIsolated(s, dir, n, "full load",
         statsEnc = Seq("n_nationkey" -> "id"))
       // a MoR delete on a stats-bearing head refuses since round 17 —
@@ -571,7 +571,7 @@ object Round13Ops {
       val o = t(s, d, "orders")
         .select(col("o_orderkey"), dec(col("o_totalprice")).as("price"),
           date_format(col("o_orderdate"), "yyyy-MM").as("ym"))
-      GraftTable.commitNext(s, dir, o, "unpartitioned load")
+      GraftTable.commitNextIsolated(s, dir, o, "unpartitioned load")
       GraftTable.commitNextIsolated(s, dir,
         GraftTable.read(s, dir).repartition(col("ym")),
         "relayout: partitioned by ym", partitionBy = Seq("ym"))

@@ -34,7 +34,7 @@ import graft.sources.GraftTable
   *    declared with allowEvolution = true commits fine.
   *
   *  - `table_append_occ` — blind appends under OCC contention: two
-  *    racing `commitAppendWithRetry` writers stage ONCE each; the race
+  *    racing `commitAppend` writers stage ONCE each; the race
   *    loser re-commits its already-staged dir under the next version
   *    number without re-executing or re-writing anything (an append
   *    reads no snapshot, so there is nothing to re-derive — Delta's
@@ -249,7 +249,7 @@ object Round14Ops {
     }),
 
     // Blind appends under OCC contention: two latched writers append
-    // disjoint slices through commitAppendWithRetry. Exactly one wins
+    // disjoint slices through commitAppend. Exactly one wins
     // version 1; the loser's CME re-commits its ALREADY-STAGED dir as
     // version 2 — no second write, no transform re-execution (an
     // append reads no snapshot; Round14Spec counts both), no orphan
@@ -267,7 +267,7 @@ object Round14Ops {
       val threads = Seq(1, 2).map { slice =>
         new Thread(() => {
           latch.await()
-          try GraftTable.commitAppendWithRetry(s, dir,
+          try GraftTable.commitAppend(s, dir,
             o.filter(pmod(col("o_orderkey"), lit(3)) === slice),
             s"append slice $slice")
           catch { case e: Throwable => errs.add(e) }
@@ -295,10 +295,9 @@ object Round14Ops {
       val dir = freshDir(s, d, "retain")
       val fs = GraftTable.fsOf(s, dir)
       val n = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
-      def commitAt(v: Int, df: DataFrame, ts: Long): Unit = {
-        GraftTable.stage(df, dir, v)
-        GraftTable.commit(fs, dir, v, s"load v$v", tsMs = Some(ts))
-      }
+      def commitAt(v: Int, df: DataFrame, ts: Long): Unit =
+        GraftTable.commit(fs, dir, v, s"load v$v",
+          Map("data" -> GraftTable.stage(df, dir, v)), tsMs = Some(ts))
       commitAt(0, n.filter(col("n_nationkey") < 10), 1000000L)
       commitAt(1, n.filter(col("n_nationkey") < 20), 2000000L)
       commitAt(2, n, 3000000000000L)
@@ -326,11 +325,11 @@ object Round14Ops {
       val fs = GraftTable.fsOf(s, dir)
       val n = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
       (0 until 10).foreach(i =>
-        GraftTable.commitNext(s, dir,
+        GraftTable.commitNextIsolated(s, dir,
           n.filter(col("n_nationkey") < (i + 1) * 2), s"load $i"))
       GraftTable.checkpoint(fs, dir)
       (10 until 12).foreach(i =>
-        GraftTable.commitNext(s, dir,
+        GraftTable.commitNextIsolated(s, dir,
           n.filter(col("n_nationkey") < (i + 1) * 2), s"load $i"))
       val asof = GraftTable.versionAsOf(fs, dir,
         GraftTable.commitTimeMs(fs, dir, 5)).get

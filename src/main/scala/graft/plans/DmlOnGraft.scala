@@ -155,7 +155,7 @@ object GraftDml {
     * execution. Bounded attempts: a hot table that keeps losing races
     * eventually surfaces the conflict to the caller. */
   private[plans] def withOccRetry[A](body: => A): A =
-    GraftTable.retryOnConflict(GraftTable.occAttempts)(_ => body)
+    GraftTable.retryOnConflict()(_ => body)
 
   /** Layouts the MoR engines refuse but the copy-on-write arm serves
     * (a colmap head additionally NORMALIZES: the rewrite's fresh files

@@ -83,7 +83,7 @@ case class GraftMergeCommand(merge: MergeIntoTable, dir: String)
     // columns an ADDITIVE racer appended (rebase null-fills them in the
     // committed snapshot — see rebase's metadata-only-ADD-COLUMN proof)
     var widen: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil
-    GraftTable.retryOnConflict[Seq[Row]](10, onConflict = (_, e) => {
+    GraftTable.retryOnConflict[Seq[Row]](onConflict = (_, e) => {
       val (m2, extras) = GraftMergeCommand.rebase(spark, m, dir, e)
       m = m2
       widen = widen ++ extras

@@ -163,7 +163,7 @@ private[graft] class GraftSparkTable(spark: SparkSession, val dir: String,
     if (exists) GraftTable.headersOf(fs, dir, snapshotVersion)
     else Map.empty
   private[graft] val dataDirs: Seq[String] =
-    if (exists) GraftTable.dataDirsFrom(headers, snapshotVersion)
+    if (exists) GraftTable.dataDirsFrom(headers)
     else Nil
   dataDirs.foreach(d => require(fs.exists(new Path(s"$dir/$d")),
     s"version $snapshotVersion's data dir $d has been garbage-collected (retention)"))
@@ -1873,7 +1873,7 @@ private[graft] class GraftMicroBatchStream(spark: SparkSession,
           "flat append histories; restart from " +
           s"startingVersion=${v + 1} past the partitioned prefix")
       val dirs =
-        if (v == 0) GraftTable.dataDirsFrom(hdrs, 0)
+        if (v == 0) GraftTable.dataDirsFrom(hdrs)
         else hdrs.get("append").map(Seq(_)).getOrElse(sys.error(
           s"version $v of ${table.dir} is not an append commit — a " +
             "streaming read serves added files only (the Delta " +

@@ -10,9 +10,9 @@ import scala.jdk.CollectionConverters._
   * no jars in this offline sandbox; this is the testable core of their
   * semantics, built on plain Hadoop FS primitives). Layout under `dir`:
   *
-  *   v<N>/, v<N>_<id>/     immutable data versions (parquet): the
-  *                         convention dir, or a writer-private one the
-  *                         commit file names
+  *   v<N>_<id>/            immutable data dirs (parquet), each
+  *                         writer-private; every commit file names its
+  *                         version's dirs (data=)
   *   manifest/commit_<N>   one file per committed version; its content
   *                         is the commit's metadata string
   *
@@ -25,20 +25,19 @@ import scala.jdk.CollectionConverters._
   *    while N+1 commits (retention permitting — see `retain`).
   *  - **Time travel**: any retained committed version is readable by
   *    number; its metadata string rides along.
-  *  - **Crash safety**: staging is side-effect-idempotent (overwrite of
-  *    an orphaned dir); a crash between stage and commit leaves the
-  *    previous version current and the retry converges (Round11Spec
-  *    proves this for the watermark loader built on these primitives).
+  *  - **Crash safety**: a crash between stage and commit leaves the
+  *    previous version current and an unreferenced staged dir that
+  *    `vacuum` reclaims; the retry stages afresh and converges
+  *    (Round11Spec proves this for the watermark loader built on these
+  *    primitives).
   *
   * Writer concurrency, precisely: the COMMIT point arbitrates racing
   * writers atomically (exactly one wins a version number, the loser
-  * throws). The convention-path `stage`/`commit` pair additionally
-  * assumes a single writer for DATA, because concurrent stagers share
-  * `v<N>`; `commitNextIsolated` removes that assumption with
-  * writer-private data dirs named in the commit file, and `vacuum`
-  * reclaims the orphans losers leave. `Round10Ops.incrementalDailyLoad`
-  * is the watermark-specialized instance (metadata = the event-time
-  * frontier, retain = 1).
+  * throws). Data needs no such arbitration: `stage` mints a fresh
+  * writer-private dir per call, so concurrent stagers never share one,
+  * and a loser's dir is an orphan `vacuum` reclaims.
+  * `Round10Ops.incrementalDailyLoad` is the watermark-specialized
+  * instance (metadata = the event-time frontier, retain = 1).
   */
 object GraftTable {
 
@@ -599,9 +598,8 @@ object GraftTable {
 
   /** Name of the data dir version `v`'s commit references — the
     * manifest is the source of truth for WHERE a version's data lives,
-    * not a path convention (an isolated commit's writer-private dir is
-    * recorded in its commit file; convention-path commits default to
-    * `v<N>`). */
+    * not a path convention (every commit's data= header names its
+    * writer-private dirs). */
   def dataDirOf(fs: FileSystem, dir: String, v: Int): String = {
     val dirs = dataDirsOf(fs, dir, v)
     // an append version references a dir LIST; returning the raw
@@ -613,20 +611,26 @@ object GraftTable {
     dirs.head
   }
 
-  /** Data dirs (≥1) version `v`'s commit references, in commit order:
-    * the data= header as a comma-separated list — APPEND commits
-    * reference every predecessor dir plus the one they added, so a
-    * version stays one self-contained file set — defaulting to the
-    * conventional `v<N>`. Dir names never contain a comma (they
-    * are this format's own `vN[_uuid]` / `dvN_uuid` /
-    * `../sibling/...` forms). */
-  private[graft] def dataDirsFrom(hdrs: Map[String, String],
-      v: Int): Seq[String] =
-    hdrs.get("data").map(_.split(",").toSeq).getOrElse(Seq(s"v$v"))
+  /** Data dirs (≥1) a commit's headers reference, in commit order:
+    * the data= header (which `commit` requires) as a comma-separated
+    * list — APPEND commits reference every predecessor dir plus the one
+    * they added, so a version stays one self-contained file set. Dir
+    * names never contain a comma (they are this format's own
+    * `vN_uuid` / `../sibling/...` forms). */
+  private[graft] def dataDirsFrom(hdrs: Map[String, String]): Seq[String] =
+    hdrs("data").split(",").toSeq
 
   /** Public view of `dataDirsFrom` for version `v`. */
   def dataDirsOf(fs: FileSystem, dir: String, v: Int): Seq[String] =
-    dataDirsFrom(parseCommit(commitContent(fs, dir, v))._1, v)
+    dataDirsFrom(parseCommit(commitContent(fs, dir, v))._1)
+
+  /** Every dir a commit's headers reference — its data dirs and its
+    * `dv=` / `pdv=` sidecar — as written (a partition-mapped entry is
+    * `<root>/__p=<v>`): what retention and vacuum must keep while the
+    * version is live. */
+  private def referencedDirs(hdrs: Map[String, String]): Seq[String] =
+    dataDirsFrom(hdrs) ++ hdrs.get("dv").map(_.split(";", 2)(0)) ++
+      hdrs.get("pdv")
 
   // ---- write-time schema compatibility --------------------------------------
 
@@ -1296,7 +1300,7 @@ object GraftTable {
       : (DataFrame, Seq[String], Int) = {
     val fs = fsOf(spark, dir)
     val (hdrs, st) = headersAndStats(fs, dir, v)
-    val dataDirs = dataDirsFrom(hdrs, v)
+    val dataDirs = dataDirsFrom(hdrs)
     // plain commits key stats by path RELATIVE to their one data dir;
     // append commits key by path relative to the TABLE dir, since one
     // stats line spans files from several data dirs (the marker header
@@ -1367,7 +1371,7 @@ object GraftTable {
     val hdrs = parseCommit(commitContent(fs, srcDir, sv))._1
     // every data dir the source's current version references (an append
     // version references its whole chain), each re-pointed through ../
-    val rel = dataDirsFrom(hdrs, sv)
+    val rel = dataDirsFrom(hdrs)
       .map(d => s"../$srcName/$d").mkString(",")
     // a dv-bearing source snapshot clones WITH its deletion vector —
     // the tombstone dir re-referenced through the same ../ indirection
@@ -1406,27 +1410,30 @@ object GraftTable {
     sv
   }
 
-  /** Stage `df` as the data of version `v` WITHOUT committing. Overwrite
-    * semantics make a retry after a crash idempotent — but only for an
-    * UNCOMMITTED version: a committed version's data is immutable (it
-    * is what snapshot isolation hands to in-flight readers), so staging
-    * over it is refused loudly. */
-  def stage(df: DataFrame, dir: String, v: Int): Unit = {
-    val fs = fsOf(df.sparkSession, dir)
-    require(!fs.exists(new Path(s"$dir/manifest/commit_$v")),
-      s"version $v is already committed under $dir — committed data is " +
-        "immutable; stage the NEXT version instead")
-    df.write.mode("overwrite").parquet(s"$dir/v$v")
+  /** Stage `df` as data of version `v` WITHOUT committing: the rows go
+    * to a fresh writer-private dir `v<N>_<id>` (laid out by
+    * `partitionBy` when given), whose name is returned for the commit's
+    * data= header. The ONE place a data dir is written: a fresh name
+    * never collides with committed data or with a racing stager, and a
+    * dir no commit ever names — a crashed or race-losing writer's — is
+    * an orphan `vacuum` reclaims. */
+  def stage(df: DataFrame, dir: String, v: Int,
+      partitionBy: Seq[String] = Nil): String = {
+    val data = freshDir("v", v)
+    val w = df.write.mode("errorifexists")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(s"$dir/$data")
+    data
   }
 
   /** Atomically commit staged version `v`: `headers` (reserved key →
-    * value, ts= excluded — `commit` records it) and the metadata are
-    * written to a writer-private temp file in `headerKeys` order, after
-    * the cross-header refusals below, and PUBLISHED to `commit_v` in
-    * one atomic create-no-overwrite step, which doubles as OPTIMISTIC
-    * CONCURRENCY CONTROL: of two writers racing to commit the same
-    * version number exactly one's publish succeeds and the loser gets a
-    * ConcurrentModificationException (re-stage against the new current
+    * value, data= required, ts= excluded — `commit` records it) and the
+    * metadata are written to a writer-private temp file in `headerKeys`
+    * order, after the cross-header refusals below, and PUBLISHED to
+    * `commit_v` in one atomic create-no-overwrite step, which doubles as
+    * OPTIMISTIC CONCURRENCY CONTROL: of two writers racing to commit the
+    * same version number exactly one's publish succeeds and the loser
+    * gets a ConcurrentModificationException (re-stage against the new current
     * version and retry — the lakehouse commit-loop protocol; silent
     * last-writer-wins would let the loser's reader see data the
     * manifest never named). The publish primitive per filesystem:
@@ -1451,9 +1458,14 @@ object GraftTable {
     * in-flight readers (time-based retention is `expireVersions`). GC
     * failure leaves garbage, never corruption. */
   def commit(fs: FileSystem, dir: String, v: Int, metadata: String,
-      headers: Map[String, String] = Map.empty, retain: Int = Int.MaxValue,
+      headers: Map[String, String], retain: Int = Int.MaxValue,
       tsMs: Option[Long] = None, prevTs: Option[Long] = None): Unit = {
     def has(k: String): Boolean = headers.contains(k)
+    // the manifest, not a path convention, says where a version's data
+    // lives: a version that names no data dir has none to read
+    require(has("data"),
+      s"commit of version $v under $dir names no data dir: the headers " +
+        "must carry data= (stage returns the dir to name)")
     // ts= is `commit`'s own; every other key must be a reserved one, or
     // the written line would read back as metadata
     require(headers.keySet.forall(k => k != "ts" && headerKeys.contains(k)),
@@ -1525,8 +1537,7 @@ object GraftTable {
     // metadata is ONE line that must not masquerade as a header: an
     // embedded newline would split it across feed rows / future header
     // parses, and a leading reserved key=` prefix would be read back as
-    // a header (a convention-path commit whose metadata started with
-    // `data=` used to break readVersion for that version). Reject both
+    // a header. Reject both
     // loudly at the write boundary — the manifest is the table's source
     // of truth and never gets to hold ambiguous bytes.
     require(!metadata.contains('\n') && !metadata.contains('\r'),
@@ -1563,7 +1574,7 @@ object GraftTable {
     }
     // an update marker needs its replacement dir in the data list and a
     // SCOPED dv (plain tombstones would kill the replacements too)
-    val dataDirs = headers.get("data").toSeq.flatMap(_.split(","))
+    val dataDirs = dataDirsFrom(headers)
     headers.get("update").foreach { u =>
       require(dataDirs.contains(u),
         s"update= dir '$u' is not among the commit's data dirs " +
@@ -1658,10 +1669,7 @@ object GraftTable {
       // entries are `<root>/__p=<v>` subdir paths, and GC walks the
       // table root — one referenced subdir must protect its whole root
       val keep = versions(fs, dir).filter(_ >= v - retain).flatMap { kv =>
-        val hdrs = parseCommit(commitContent(fs, dir, kv))._1
-        (dataDirsFrom(hdrs, kv) ++
-          hdrs.get("dv").map(_.split(";", 2)(0)).toList ++
-          hdrs.get("pdv").toList)
+        referencedDirs(parseCommit(commitContent(fs, dir, kv))._1)
           .map(_.split('/').head)
       }.toSet
       fs.listStatus(new Path(dir)).foreach { st =>
@@ -1681,15 +1689,14 @@ object GraftTable {
     s"$kind${v}_${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Version encoded in a dir name of the given kind (`v` data, `dv`
-    * and `pdv` sidecars, `ep` epoch staging): `<kind>N` (convention) or
-    * `<kind>N_<id>` (isolated). None for anything else. */
+    * and `pdv` sidecars, `ep` epoch staging): the `<kind>N_<id>` form
+    * `freshDir` mints. None for anything else. */
   private def dirVersion(name: String, kind: String): Option[Int] =
     if (!name.startsWith(kind)) None
     else {
       val tail = name.stripPrefix(kind)
       val digits = tail.takeWhile(_.isDigit)
-      val rest = tail.drop(digits.length)
-      if (digits.nonEmpty && (rest.isEmpty || rest.startsWith("_")))
+      if (digits.nonEmpty && tail.drop(digits.length).startsWith("_"))
         digits.toIntOption
       else None
     }
@@ -1708,27 +1715,6 @@ object GraftTable {
         org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
           .rename(src, dest, org.apache.hadoop.fs.Options.Rename.NONE)
     }
-
-  /** Stage + commit `df` as the next version; returns its number. The
-    * schema gate runs BEFORE staging (see `schemaGate`) — a refused
-    * write creates neither a version nor an orphan dir. */
-  def commitNext(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "", allowEvolution: Boolean = false): Int = {
-    val fs = fsOf(spark, dir)
-    val cur = currentHeaders(fs, dir)
-    schemaGate(cur.flatMap(_._2.get("schema")), df.schema, allowEvolution)
-    // carried constraints enforce on EVERY write path, convention-dir
-    // commits included — a path that skipped them would both let
-    // violations through and strip the header for all future writers
-    val carried = carriedConstraints(cur)
-    enforceConstraints(df, carried, "commit")
-    val v = cur.map(_._1 + 1).getOrElse(0)
-    stage(df, dir, v)
-    commit(fs, dir, v, metadata,
-      Map("schema" -> schemaEncode(df.schema)) ++ constraintsHeader(carried),
-      prevTs = prevTsOf(cur))
-    v
-  }
 
   /** The predecessor's ts= from ALREADY-PARSED current headers — what
     * the write paths hand to `commit`'s clamp so it never re-opens the
@@ -1838,7 +1824,7 @@ object GraftTable {
     val hdrs = parseCommit(commitContent(fs, dir, v))._1
     // one dir for plain versions; an append version's full dir list —
     // every dir must still exist for the version to be readable
-    val dataDirs = dataDirsFrom(hdrs, v)
+    val dataDirs = dataDirsFrom(hdrs)
     dataDirs.foreach(data =>
       require(fs.exists(new Path(s"$dir/$data")),
         s"version $v's data has been garbage-collected (retention)"))
@@ -1907,7 +1893,7 @@ object GraftTable {
       // the merge-on-read cost is one sorted-array probe per row, not an
       // anti-join. `conform` is a no-op here: the read binds schema=
       case Some(_) =>
-        pdvLiveRows(spark, fs, dir, v, pdvHead(fs, dir, v, hdrs),
+        pdvLiveRows(spark, fs, dir, v, pdvHead(fs, dir, hdrs),
           declared)
       case None => hdrs.get("dv") match {
       case Some(spec) if spec.endsWith(";scoped") =>
@@ -1975,20 +1961,18 @@ object GraftTable {
   private def dirBasename(entry: String): String =
     entry.substring(entry.lastIndexOf('/') + 1)
 
-  /** Stage + commit `df` as the next version with a WRITER-PRIVATE data
-    * dir — the multi-writer-safe commit path. The convention-path
-    * `stage`/`commit` pair is safe under the documented single-writer
-    * assumption, but two CONCURRENT writers staging the same version
-    * number share `v<N>`, so the commit winner could publish a dir
-    * the loser half-overwrote. Here each writer stages to
-    * `v<N>_<id>` (nobody else ever writes there) and the
-    * commit file NAMES the dir — manifest-as-source-of-truth, the way
-    * Delta/Iceberg name data files rather than trusting a path
-    * convention. The loser's commit throws
-    * ConcurrentModificationException; its private dir becomes an orphan
-    * (never readable — no commit references it) that `vacuum` reclaims.
-    * Re-staging on retry is the caller's job: a merge's content depends
-    * on the snapshot it lost against. */
+  /** Stage + commit `df` as the next version, a full rewrite. Each
+    * writer stages to its own `v<N>_<id>` (`stage`; nobody else ever
+    * writes there) and the commit file NAMES the dir —
+    * manifest-as-source-of-truth, the way Delta/Iceberg name data files
+    * rather than trusting a path convention. The loser of a race for
+    * the version number gets a ConcurrentModificationException; its
+    * private dir becomes an orphan (never readable — no commit
+    * references it) that `vacuum` reclaims. Re-staging on retry is the
+    * caller's job: a merge's content depends on the snapshot it lost
+    * against. The schema gate and the constraints run BEFORE staging —
+    * a refused write creates neither a version nor an orphan dir.
+    * Returns the version. */
   def commitNextIsolated(spark: SparkSession, dir: String, df: DataFrame,
       metadata: String = "", partitionBy: Seq[String] = Nil,
       allowEvolution: Boolean = false,
@@ -2080,10 +2064,7 @@ object GraftTable {
           .sortWithinPartitions((partitionBy ++ sortWithin).map(col): _*)
       }
     val v = cur.map(_._1 + 1).getOrElse(0)
-    val data = freshDir("v", v)
-    val w = effDf.write.mode("errorifexists")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(s"$dir/$data")
+    val data = stage(effDf, dir, v, partitionBy)
     // the Bloom sidecar is written INTO the data dir (underscore prefix
     // keeps it invisible to every parquet scan) so it travels with the
     // files it describes — through clones, retention, and data= renames
@@ -2169,7 +2150,7 @@ object GraftTable {
     val (cur, curHdrs) = currentHeaders(fs, dir).getOrElse(
       sys.error(s"no committed version under $dir to restore"))
     val hdrs = headersOf(fs, dir, v)
-    val dirs = dataDirsFrom(hdrs, v)
+    val dirs = dataDirsFrom(hdrs)
     dirs.foreach(dd => require(fs.exists(new Path(s"$dir/$dd")),
       s"version $v's data dir $dd has been garbage-collected " +
         "(retention) — it can no longer be restored"))
@@ -2313,10 +2294,7 @@ object GraftTable {
     // apply to a newer head
     val (cur, hdrs) = gateMor(fs, dir, keyDeleteDoor, expectVersion)
     requireDvKeys(hdrs, keyCols, "delete")
-    // resolve through the ONE sanctioned multi-dir accessor (not a raw
-    // header read): round-trips byte-identically today, and keeps this
-    // path correct if the data= encoding ever changes
-    val data = dataDirsFrom(hdrs, cur).mkString(",")
+    val data = hdrs("data")
     val v = cur + 1
     val dvDir = freshDir("dv", v)
     import org.apache.spark.sql.functions.col
@@ -2327,7 +2305,7 @@ object GraftTable {
         // EVERYWHERE, so the fresh keys expand across every current
         // dir basename and union into the scoped pair set
         import spark.implicits._
-        val basenamesDf = dataDirsFrom(hdrs, cur)
+        val basenamesDf = dataDirsFrom(hdrs)
           .map(dirBasename).toDF("__dir")
         val prev = readDvSidecar(spark, s"$dir/${spec.split(";", 3)(0)}",
           declaredSchemaOf(hdrs), keyCols, scoped = true)
@@ -2391,9 +2369,9 @@ object GraftTable {
     def live: Seq[Path] = files.map(_.getPath).filterNot(p => skips(p.getName))
   }
 
-  private def pdvHead(fs: FileSystem, dir: String, v: Int,
+  private def pdvHead(fs: FileSystem, dir: String,
       hdrs: Map[String, String]): PdvHead = {
-    val dataDirs = dataDirsFrom(hdrs, v)
+    val dataDirs = dataDirsFrom(hdrs)
     val sidecar = hdrs.get("pdv")
     PdvHead(dataDirs, dataDirs.flatMap(d => dataFilesIn(fs, new Path(s"$dir/$d"))),
       sidecar, sidecar.fold(Set.empty[String])(pd => pdvSkips(fs, s"$dir/$pd")))
@@ -2528,7 +2506,7 @@ object GraftTable {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, dir)
     val (cur, hdrs) = gateMor(fs, dir, positionalDeleteDoor, expectVersion)
-    val head = pdvHead(fs, dir, cur, hdrs)
+    val head = pdvHead(fs, dir, hdrs)
     // files the previous sidecar's _skips manifest marks FULLY deleted
     // never enter the predicate scan (round-21): every one of their
     // positions is already in the cumulative sidecar, so re-matching
@@ -2595,7 +2573,7 @@ object GraftTable {
     require(sets.nonEmpty, "UPDATE needs at least one SET assignment")
     val fs = fsOf(spark, dir)
     val (cur, hdrs) = gateMor(fs, dir, positionalUpdateDoor, expectVersion)
-    val head = pdvHead(fs, dir, cur, hdrs)
+    val head = pdvHead(fs, dir, hdrs)
     // LIVE rows with physical identity: a dead row must neither re-match
     // nor resurrect through a fresh replacement
     val live = pdvLiveRows(spark, fs, dir, cur, head, declaredSchemaOf(hdrs))
@@ -2683,7 +2661,7 @@ object GraftTable {
       Some(() => freshCounts))
     // replacements stage as their OWN dir beside the shared ones —
     // a distributed write sized by the MATCHED ROWS, never the table
-    // (commitUpdateImpl's naming convention, so GC/vacuum track it);
+    // (through `stage`, so GC/vacuum track it);
     // served from the persisted pass, not a re-scan. Round-22 (VERDICT
     // r21 item 8): coalesce to ceil(matched / rowsPerTask) tasks — a
     // point update previously ran one (mostly empty) write task per
@@ -2696,9 +2674,7 @@ object GraftTable {
     val matchedRows = freshCounts.values.sum
     val replTasks = math.max(1L, math.min(Int.MaxValue.toLong,
       (matchedRows + rowsPerTask - 1) / rowsPerTask)).toInt
-    val repl = freshDir("v", v)
-    replacements.coalesce(replTasks).write.mode("errorifexists")
-      .parquet(s"$dir/$repl")
+    val repl = stage(replacements.coalesce(replTasks), dir, v)
     commit(fs, dir, v, metadata, inherit(hdrs,
       Map("data" -> (head.dataDirs :+ repl).mkString(","), "pdv" -> pdvDir)),
       prevTs = prevTsOf(Some((cur, hdrs))))
@@ -2762,14 +2738,10 @@ object GraftTable {
         (n, prevMap.getOrElse(n, n)) } ++ cols.map { case (n, _) =>
         (n, s"__gadd${v}_${urlEnc(n)}") })
     }
-    // resolve the data dirs through the ONE sanctioned accessor, not a
-    // raw header copy: a convention-path predecessor (commitNext) has no
-    // data= header, and copying None would point this version at a
-    // nonexistent conventional dir — the commitDeleteVector rule. The
-    // other table-level headers carry: adding a column cannot disturb
-    // the layout, the bucket invariant or a constraint
+    // the data dirs and the table-level headers carry: adding a column
+    // cannot disturb the layout, the bucket invariant or a constraint
     commit(fs, dir, v, metadata, inherit(hdrs,
-      Map("data" -> dataDirsFrom(hdrs, cur).mkString(","), "schema" -> schema) ++
+      Map("data" -> hdrs("data"), "schema" -> schema) ++
         colmap ++ keptFileHeaders(hdrs)),
       prevTs = prevTsOf(Some((cur, hdrs))))
     v
@@ -2934,7 +2906,7 @@ object GraftTable {
       colmap: Seq[(String, String)], metadata: String): Int = {
     val v = cur + 1
     commit(fs, dir, v, metadata, inherit(hdrs, Map(
-      "data" -> dataDirsFrom(hdrs, cur).mkString(","),
+      "data" -> hdrs("data"),
       "schema" -> schema.map { case (n, t) =>
         s"${urlEnc(n)}:${urlEnc(t)}" }.mkString(","),
       "colmap" -> colmapEncode(colmap))),
@@ -3035,7 +3007,7 @@ object GraftTable {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val fs = fsOf(spark, dir)
     val (cur, hdrs) = gateMor(fs, dir, keyUpdateDoor, expectVersion)
-    val dataDirs = dataDirsFrom(hdrs, cur)
+    val dataDirs = dataDirsFrom(hdrs)
     import spark.implicits._
     val basenamesDf = dataDirs.map(dirBasename).toDF("__dir")
 
@@ -3113,8 +3085,7 @@ object GraftTable {
         .unionByName(newTombs).distinct())
     val dvDir = freshDir("dv", v)
     fullTombs.write.mode("errorifexists").parquet(s"$dir/$dvDir")
-    val upd = freshDir("v", v)
-    replacements.write.mode("errorifexists").parquet(s"$dir/$upd")
+    val upd = stage(replacements, dir, v)
 
     commit(fs, dir, v, metadata, inherit(hdrs, Map(
       "data" -> (dataDirs :+ upd).mkString(","),
@@ -3196,7 +3167,7 @@ object GraftTable {
     * `body` with the 1-based attempt number; a lost race
     * (ConcurrentModificationException — the ONLY retryable failure;
     * anything else, disk failure included, propagates immediately)
-    * re-runs it up to `maxAttempts` times, then rethrows. Conflict
+    * re-runs it up to `occAttempts` times, then rethrows. Conflict
     * SAFETY lives in the body, not here: each attempt must re-read the
     * head and re-derive everything that depends on it (gate,
     * constraints, index derivation, version number) — the helper
@@ -3208,7 +3179,7 @@ object GraftTable {
     * detect their own restarted twin (replay ⇒ drop the staged dir,
     * report no-op), the partition-replace door to re-stage when the
     * winner's write set didn't commute with its own. */
-  private[graft] def retryOnConflict[A](maxAttempts: Int,
+  private[graft] def retryOnConflict[A](
       onConflict: (Int, java.util.ConcurrentModificationException)
         => Option[A] = (_: Int,
           _: java.util.ConcurrentModificationException) => None)
@@ -3219,7 +3190,7 @@ object GraftTable {
       try return body(attempt)
       catch {
         case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
+          if (attempt >= occAttempts) throw e
           onConflict(attempt, e) match {
             case Some(a) => return a
             case None => ()
@@ -3230,7 +3201,7 @@ object GraftTable {
   }
 
   /** The attempt bound of every retrying door. */
-  private[graft] val occAttempts = 10
+  private val occAttempts = 10
 
   /** The OCC commit LOOP the commit doc prescribes: read the current
     * snapshot, apply the caller's `transform` to it (None when the table
@@ -3249,7 +3220,7 @@ object GraftTable {
   def commitWithRetry(spark: SparkSession, dir: String,
       transform: Option[DataFrame] => DataFrame, metadata: String = "",
       allowEvolution: Boolean = false): Int =
-    retryOnConflict(occAttempts) { _ =>
+    retryOnConflict() { _ =>
       val cur = currentVersion(fsOf(spark, dir), dir)
       // the pin makes a commit landing after this read a conflict, and
       // the retry re-runs the transform against the winner's snapshot;
@@ -3260,12 +3231,13 @@ object GraftTable {
         expectVersion = Some(cur.getOrElse(-1)))
     }
 
-  /** APPEND-ONLY OCC commit: write `df`'s rows ONCE to a writer-private
-    * dir, then commit a version whose data= list is the current
-    * version's dirs PLUS the new one, retrying ONLY the (cheap,
-    * O(manifest)) commit step on a lost race — an append reads no
-    * snapshot, so unlike `commitWithRetry` there is nothing to
-    * re-execute and the already-staged files are re-referenced verbatim
+  /** APPEND-ONLY OCC commit, the one append door: write `df`'s rows
+    * ONCE to a writer-private dir, then commit a version whose data=
+    * list is the current version's dirs PLUS the new one, retrying ONLY
+    * the (cheap, O(manifest)) commit step on a lost race, up to
+    * `occAttempts` times — an append reads no snapshot, so unlike
+    * `commitWithRetry` there is nothing to re-execute and the
+    * already-staged files are re-referenced verbatim
     * under the next version number (Delta's conflict checker lets blind
     * appends land for the same reason; here the loser pays one more
     * commit-file publish, never a second write of the data). The
@@ -3297,10 +3269,9 @@ object GraftTable {
     * and the commit-file size in one atomic version. At a
     * compact-every-100-appends cadence the commit file stays KB-scale
     * while appends stay O(new data). Returns the version. */
-  def commitAppendWithRetry(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "", maxAttempts: Int = occAttempts,
-      bloomCol: Option[String] = None,
-      bloomCols: Seq[String] = Nil,
+  def commitAppend(spark: SparkSession, dir: String, df: DataFrame,
+      metadata: String = "",
+      bloomCol: Option[String] = None, bloomCols: Seq[String] = Nil,
       statsEnc: Seq[(String, String)] = Nil): Int = {
     StatsEnc.validate(spark, statsEnc)
     val door = StagedDoor("append", markCreate = true,
@@ -3316,9 +3287,8 @@ object GraftTable {
     // on a lost race the same dir is re-referenced under the winner's
     // successor number (dirVersion still parses it for vacuum/GC — and
     // the name can never collide with the live chain, which only grows)
-    val added = freshDir("v", cur0.map(_._1 + 1).getOrElse(0))
-    df.write.mode("errorifexists").parquet(s"$dir/$added")
-    publishStaged(spark, dir, added, df.schema, door, metadata, maxAttempts,
+    val added = stage(df, dir, cur0.map(_._1 + 1).getOrElse(0))
+    publishStaged(spark, dir, added, df.schema, door, metadata,
       pregated = Some(cur0)).get
   }
 
@@ -3339,23 +3309,13 @@ object GraftTable {
         val prevRel =
           if (h.contains("append") || h.contains("statrel")) prev.files
           else {
-            val pd = dataDirsFrom(h, c).head
+            val pd = dataDirsFrom(h).head
             prev.files.map(f => f.copy(file = s"$pd/${f.file}"))
           }
         TableStats(ns.cols, prevRel ++ mine)
       case None => TableStats(ns.cols, mine)
     }
   }
-
-  /** Single-attempt `commitAppendWithRetry` — the plain append commit
-    * (a lost race surfaces as ConcurrentModificationException for the
-    * caller's own loop). */
-  def commitAppend(spark: SparkSession, dir: String, df: DataFrame,
-      metadata: String = "",
-      bloomCol: Option[String] = None, bloomCols: Seq[String] = Nil,
-      statsEnc: Seq[(String, String)] = Nil): Int =
-    commitAppendWithRetry(spark, dir, df, metadata, maxAttempts = 1,
-      bloomCol, bloomCols, statsEnc)
 
   /** Where a staged write's per-file index comes from. */
   private[graft] sealed trait StagedIndex
@@ -3562,13 +3522,13 @@ object GraftTable {
     * it. */
   private def dropUnpublished(fs: FileSystem, dir: String,
       staged: String): Unit =
-    if (!scala.util.Try(currentHeaders(fs, dir).exists { case (c, h) =>
-        dataDirsFrom(h, c).contains(staged) }).getOrElse(true))
+    if (!scala.util.Try(currentHeaders(fs, dir).exists { case (_, h) =>
+        dataDirsFrom(h).contains(staged) }).getOrElse(true))
       try fs.delete(new Path(s"$dir/$staged"), true)
       catch { case _: java.io.IOException => () }
 
   /** The ONE publish step of every door whose rows are already staged
-    * in `$dir/$staged`: the API append (`commitAppendWithRetry`), the
+    * in `$dir/$staged`: the API append (`commitAppend`), the
     * DSv2 batch write (`commitStagedDsv2`) and the streaming append
     * (`commitEpochStaged`). It owns how such a version is encoded:
     * data= is the predecessor's dirs plus the staged one (an overwrite:
@@ -3590,8 +3550,7 @@ object GraftTable {
     * refused or exhausted publish drops the staged dir. */
   private def publishStaged(spark: SparkSession, dir: String,
       staged: String, schema: StructType, door: StagedDoor,
-      metadata: String, maxAttempts: Int = occAttempts,
-      partBy: Seq[String] = Nil,
+      metadata: String, partBy: Seq[String] = Nil,
       pregated: Option[Option[(Int, Map[String, String])]] = None,
       replayed: () => Boolean = () => false,
       beforePublish: () => Unit = () => ()): Option[Int] = {
@@ -3603,7 +3562,7 @@ object GraftTable {
     // kept across attempts while the declaration holds
     val indexed = collection.mutable.Map[(Seq[(String, String)], Seq[String]),
       (Option[TableStats], Option[String])]()
-    try retryOnConflict[Option[Int]](maxAttempts,
+    try retryOnConflict[Option[Int]](
         onConflict = (_, _) => if (replayed()) Some(None) else None) {
       attempt =>
         val cur = pregated.filter(_ => attempt == 1)
@@ -3631,8 +3590,7 @@ object GraftTable {
           indexWrittenDir(spark, s"$dir/$staged", schema, partBy, enc, bloom))
         val v = cur.map(_._1 + 1).getOrElse(0)
         val prevDirs = if (!door.append) Nil
-          else cur.map { case (c, h) => dataDirsFrom(h, c) }
-            .getOrElse(Nil)
+          else cur.map { case (_, h) => dataDirsFrom(h) }.getOrElse(Nil)
         // the staged rows' own schema either way (an append matches the
         // head's by name, in its own column order)
         val files = Map("data" -> (prevDirs :+ staged).mkString(","),
@@ -3732,7 +3690,7 @@ object GraftTable {
     * winner's. All-disjoint → the loser's already-staged result is
     * re-mapped over the winner's pmap and re-committed under the next
     * version WITHOUT re-executing the transform (generalizing
-    * `commitAppendWithRetry`'s no-re-execution posture from "blind
+    * `commitAppend`'s no-re-execution posture from "blind
     * appends commute" to "disjoint partition rewrites commute"); any
     * overlap — or any interleaved non-pmap commit, whose effect the
     * loser cannot reason about — re-executes against the fresh
@@ -3795,19 +3753,17 @@ object GraftTable {
         enforceConstraints(df, carried, "replacePartitions", existing)
       }
       val v0 = cur.map(_._1 + 1).getOrElse(0)
-      val root = freshDir("v", v0)
       // ONE job whatever the partition count: the duplicate __p column
       // drives the subdir layout and is excluded from the files, so
       // every entry dir reads back with the original schema intact
-      df.withColumn("__p", col(partCol).cast("string"))
-        .write.partitionBy("__p").mode("errorifexists")
-        .parquet(s"$dir/$root")
+      val root = stage(df.withColumn("__p", col(partCol).cast("string")),
+        dir, v0, Seq("__p"))
       (w, root, df.schema)
     }
 
     var cur = currentHeaders(fs, dir)
     var (w, root, schema) = stageOnce(cur)
-    retryOnConflict[Int](occAttempts, onConflict = (_, _) => {
+    retryOnConflict[Int](onConflict = (_, _) => {
       val base = cur.map(_._1).getOrElse(-1)
       val newCur = currentHeaders(fs, dir)
       val carried = carriedConstraints(newCur)
@@ -4040,7 +3996,7 @@ object GraftTable {
     val fs = fsOf(spark, dir)
     publishEpoch(spark, dir, epochId, staged, queryId, expectedFiles) {
       (replayed, stillStaged) =>
-      retryOnConflict[Option[Int]](occAttempts, onConflict = (_, _) =>
+      retryOnConflict[Option[Int]](onConflict = (_, _) =>
         if (replayed()) Some(None) else None
       ) { _ =>
         val cur = currentHeaders(fs, dir)
@@ -4058,7 +4014,7 @@ object GraftTable {
                 prevTs = prevTsOf(cur))
             case Some((c, hdrs)) =>
               import spark.implicits._
-              val dataDirs = dataDirsFrom(hdrs, c)
+              val dataDirs = dataDirsFrom(hdrs)
               val basenamesDf = dataDirs.map(dirBasename).toDF("__dir")
               val declared = declaredSchemaOf(hdrs)
               val withDir = dataDirs.map { dd =>
@@ -4265,11 +4221,8 @@ object GraftTable {
     // must protect its root from the whole-dir delete below
     val parsed = committed.map(v =>
       (v, parseCommit(commitContent(fs, dir, v))))
-    val referenced = parsed.flatMap { case (v, (hdrs, _)) =>
-      (dataDirsFrom(hdrs, v) ++
-        hdrs.get("dv").map(_.split(";", 2)(0)).toList ++
-        hdrs.get("pdv").toList)
-        .map(_.split('/').head)
+    val referenced = parsed.flatMap { case (_, (hdrs, _)) =>
+      referencedDirs(hdrs).map(_.split('/').head)
     }.toSet
     // per-query newest committed streaming epoch, keyed by the query
     // tag the staging names carry — the in-flight test below
@@ -4408,25 +4361,21 @@ object GraftTable {
           val hdrs = parseCommit(c)._1
           (v, hdrs, commitTimeFrom(hdrs, fs, dir, v))
         }
-        def refs(v: Int, hdrs: Map[String, String]): Seq[String] =
-          dataDirsFrom(hdrs, v) ++
-            hdrs.get("dv").map(_.split(";", 2)(0)).toList ++
-            hdrs.get("pdv").toList
         val expired = all.filter { case (v, _, ts) => v != cur && ts < cutoff }
         val expiredSet = expired.map(_._1).toSet
         val keep = all.collect {
-          case (v, h, _) if !expiredSet.contains(v) => refs(v, h)
+          case (v, h, _) if !expiredSet.contains(v) => referencedDirs(h)
         }.flatten.toSet
         // only dirs still PRESENT count — a re-run over an already
         // expired history is a no-op, not a re-report (idempotent
         // maintenance, like vacuum)
-        val doomed = expired.flatMap { case (v, h, _) => refs(v, h) }
+        val doomed = expired.flatMap { case (_, h, _) => referencedDirs(h) }
           .distinct.filterNot(keep)
           .filter(d => fs.exists(new Path(s"$dir/$d")))
         doomed.foreach(d => fs.delete(new Path(s"$dir/$d"), true))
         val doomedSet = doomed.toSet
         expired.collect {
-          case (v, h, _) if refs(v, h).exists(doomedSet) => v
+          case (v, h, _) if referencedDirs(h).exists(doomedSet) => v
         }
     }
 
@@ -4532,6 +4481,16 @@ object GraftTable {
   def cdcSubscribe(spark: SparkSession, dir: String, checkpointDir: String,
       onDelta: (Int, String, DataFrame) => Unit,
       maxVersionsPerTrigger: Int = 1)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    subscribe(spark, dir, checkpointDir, maxVersionsPerTrigger, onDelta)(
+      versionDelta(spark, dir, _))
+
+  /** The ONE subscribe loop: a started `commitFeed` query whose
+    * foreachBatch hands each newly committed version, in version order,
+    * to `onRows` with the rows `rowsOf` derives for it. */
+  private def subscribe(spark: SparkSession, dir: String,
+      checkpointDir: String, maxVersionsPerTrigger: Int,
+      onRows: (Int, String, DataFrame) => Unit)(rowsOf: Int => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
@@ -4540,8 +4499,7 @@ object GraftTable {
         // VERSION NUMBERS, never data
         batch.collect().sortBy(_.getAs[Int]("version")).foreach { r =>
           val v = r.getAs[Int]("version")
-          onDelta(v, r.getAs[String]("metadata"),
-            versionDelta(spark, dir, v))
+          onRows(v, r.getAs[String]("metadata"), rowsOf(v))
         }
       }
     commitFeed(spark, dir, maxVersionsPerTrigger).writeStream
@@ -4901,7 +4859,7 @@ object GraftTable {
     val hdrs = parseCommit(commitContent(fs, dir, v))._1
     require(hdrs.contains("bloom"),
       s"version $v of $dir carries no Bloom index in its commit")
-    val dataDirs = dataDirsFrom(hdrs, v)
+    val dataDirs = dataDirsFrom(hdrs)
     val perDir = dataDirs.map { dd =>
       require(fs.exists(new Path(s"$dir/$dd")),
         s"version $v's data dir $dd has been garbage-collected (retention)")
@@ -5134,7 +5092,7 @@ object GraftTable {
       "this table is partition-mapped — its entry dirs ARE the layout " +
         "(folding them would drop the value→dir map); re-cluster a " +
         "partition by replacing it through replacePartitionsWithRetry")
-    val dirs = dataDirsFrom(h, c)
+    val dirs = dataDirsFrom(h)
     require(dirs.size >= 2,
       s"version $c has no tail to fold (${dirs.size} data dir)")
     val (head, tail) = (dirs.head, dirs.tail)
@@ -5179,8 +5137,7 @@ object GraftTable {
         targetFiles)
       else tailDf.coalesce(targetFiles)
     val v = c + 1
-    val tDir = freshDir("v", v)
-    folded.write.mode("errorifexists").parquet(s"$dir/$tDir")
+    val tDir = stage(folded, dir, v)
 
     // spanning stats: the head's entries carry over UNREAD (their files
     // are untouched — that is the whole point); the folded dir's are
@@ -5267,7 +5224,7 @@ object GraftTable {
     // threading headers into compactChain — negligible next to the
     // rewrite itself.
     val (compacted, refused) =
-      if (dataDirsFrom(h, c).size > maxChainDirs ||
+      if (dataDirsFrom(h).size > maxChainDirs ||
           (clusterBy.nonEmpty && !incremental))
         try (Some(
           // incremental = the LIQUID tier: fold only the arrival-order
@@ -5275,7 +5232,7 @@ object GraftTable {
           // nightly cadence for a table whose head was fully clustered
           // once; a full re-cluster stays available by leaving
           // incremental off
-          if (incremental && dataDirsFrom(h, c).size >= 2)
+          if (incremental && dataDirsFrom(h).size >= 2)
             compactChainTail(spark, dir, targetFiles,
               "maintenance compact (tail)", bloomCol, clusterBy, statsEnc,
               bloomCols)
@@ -5360,7 +5317,7 @@ object GraftTable {
       val curTombs = readDvSidecar(spark, s"$dir/${dvParts(0)}",
         declaredSchemaOf(hdrs), keyCols, scoped = dvParts.length == 3)
       val prevHdrs = parseCommit(commitContent(fs, dir, v - 1))._1
-      val prevDirs = dataDirsFrom(prevHdrs, v - 1)
+      val prevDirs = dataDirsFrom(prevHdrs)
       import spark.implicits._
       val prevTombs = prevHdrs.get("dv").map { spec =>
         val parts = spec.split(";", -1)
@@ -5444,18 +5401,7 @@ object GraftTable {
       checkpointDir: String, keyCols: Seq[String],
       onChanges: (Int, String, DataFrame) => Unit,
       maxVersionsPerTrigger: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        batch.collect().sortBy(_.getAs[Int]("version")).foreach { r =>
-          val v = r.getAs[Int]("version")
-          onChanges(v, r.getAs[String]("metadata"),
-            changeFeed(spark, dir, v, keyCols))
-        }
-      }
-    commitFeed(spark, dir, maxVersionsPerTrigger).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    subscribe(spark, dir, checkpointDir, maxVersionsPerTrigger, onChanges)(
+      changeFeed(spark, dir, _, keyCols))
 }

@@ -75,14 +75,40 @@ class EntryCountSpec extends AnyFunSuite {
 
   test("no data-dir prefix knob in src/main: no prefix: String parameter, " +
       "no \"prefix\" read option") {
-    // a table's data dirs are named by its commit files, v<N>[_<id>]
-    // otherwise; a settable prefix let one door read under a name
-    // another door never wrote
+    // a table's data dirs are named by its commit files; a settable
+    // prefix let one door read under a name another door never wrote
     val knobs = mainSources.flatMap { case (path, src) =>
       Seq("prefix: String", "get(\"prefix\")").filter(src.contains)
         .map(k => s"$path: $k")
     }
     assert(knobs.isEmpty, s"data-dir prefix knobs: $knobs")
+  }
+
+  test("one data-dir regime in src/main: no commitNext, no " +
+      "commitAppendWithRetry, no maxAttempts") {
+    // every version names its data dirs in data=; a door staging a bare
+    // v<N> dir, a second append door or a per-call attempt bound would
+    // each be a second way to do one thing
+    val found = mainSources.flatMap { case (path, src) =>
+      Seq("def commitNext(", "def commitAppendWithRetry(", "maxAttempts")
+        .filter(src.contains).map(k => s"$path: $k")
+    }
+    assert(found.isEmpty, s"retired names in src/main: $found")
+  }
+
+  test("data dirs are minted in one place: freshDir(\"v\" only in " +
+      "GraftTable.stage and the DSv2 write builder") {
+    val needle = "freshDir(\"v\""
+    val sites = mainSources.flatMap { case (path, src) =>
+      Seq.fill(src.split(java.util.regex.Pattern.quote(needle), -1)
+        .length - 1)(path)
+    }.sorted
+    assert(sites == Seq("graft/sources/GraftDataSource.scala",
+      "graft/sources/GraftTable.scala"), s"$needle sites: $sites")
+    val table = mainSources.toMap.apply("graft/sources/GraftTable.scala")
+    val stage = table.substring(table.indexOf("  def stage("),
+      table.indexOf("  def commit(fs: FileSystem"))
+    assert(stage.contains(needle), "GraftTable's mint is not in stage")
   }
 
   test("the append-version encoding is written at exactly one site in src/main") {

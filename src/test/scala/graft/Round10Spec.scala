@@ -157,7 +157,8 @@ class Round10Spec extends SparkSpec {
     assert(sources.GraftTable.read(spark, dir).collect().toSet ==
       ops.Round10Ops.currentDaily(spark, dir).collect().toSet)
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath
-      .getName).filter(_.startsWith("v")).sorted.toSeq == Seq("v1", "v2"))
+      .getName).filter(_.startsWith("v")).sorted.toSeq ==
+      Seq(1, 2).map(sources.GraftTable.dataDirOf(fs, dir, _)))
     val oneShot = T.events(spark, sf)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"),

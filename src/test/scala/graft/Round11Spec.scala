@@ -22,7 +22,8 @@ class Round11Spec extends SparkSpec {
     // run 2 "crashes": the next version is fully staged on disk but the
     // manifest commit never happens — the exact window the old
     // swap-then-write-watermark sequence double-counted in
-    ops.Round10Ops.stageDailyVersion(spark, sf, dir, Long.MaxValue)
+    val (_, crashed) =
+      ops.Round10Ops.stageDailyVersion(spark, sf, dir, Long.MaxValue)
 
     // a reader AFTER the crash still resolves run 1's table and
     // watermark — the orphaned staging dir is invisible
@@ -41,6 +42,15 @@ class Round11Spec extends SparkSpec {
     assert(table() === oneShot,
       "retry after stage-crash double-counted the last batch")
     assert(ops.Round10Ops.currentWatermark(spark, dir) === Long.MaxValue)
+    // the crashed run's dir was never named by a commit: vacuum reclaims
+    // exactly it, and every dir the retained versions name survives
+    val live = sources.GraftTable.versions(fs, dir)
+      .flatMap(v => sources.GraftTable.dataDirsOf(fs, dir, v))
+    assert(!live.contains(crashed("data")))
+    assert(sources.GraftTable.vacuum(fs, dir) === Seq(crashed("data")))
+    live.foreach(d =>
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$d")), d))
+    assert(table() === oneShot)
   }
 
   test("vec_ivf_index_serve: store-served result equals the from-scratch funnel; store is cid-partitioned") {
@@ -205,15 +215,15 @@ class Round11Spec extends SparkSpec {
 
     val v0rows = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     val v1rows = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s")
-    assert(GraftTable.commitNext(spark, dir, v0rows, "first") === 0)
+    assert(GraftTable.commitNextIsolated(spark, dir, v0rows, "first") === 0)
 
     // stage v1 WITHOUT commit: latest read must still be v0
-    GraftTable.stage(v1rows, dir, 1)
+    val staged1 = GraftTable.stage(v1rows, dir, 1)
     assert(GraftTable.read(spark, dir).count() === 2)
     assert(GraftTable.versions(fs, dir) === Seq(0))
 
     // commit v1; v0 stays readable by number with its metadata (time travel)
-    GraftTable.commit(fs, dir, 1, "second")
+    GraftTable.commit(fs, dir, 1, "second", Map("data" -> staged1))
     assert(GraftTable.read(spark, dir).count() === 3)
     assert(GraftTable.readVersion(spark, dir, 0).orderBy("k")
       .as[(Long, String)].collect().toSeq === Seq((1L, "a"), (2L, "b")))
@@ -223,13 +233,13 @@ class Round11Spec extends SparkSpec {
     // a reader that resolved v1 BEFORE the next commit keeps its
     // snapshot (immutable data dirs)
     val snapshot = GraftTable.read(spark, dir)
-    assert(GraftTable.commitNext(spark, dir, v0rows, "third") === 2)
+    assert(GraftTable.commitNextIsolated(spark, dir, v0rows, "third") === 2)
     assert(snapshot.count() === 3)
 
     // retention: commit v3 with retain=1 → v0/v1 data gone, commit
     // history intact, readVersion fails loudly for the GC'd version
-    GraftTable.stage(v1rows, dir, 3)
-    GraftTable.commit(fs, dir, 3, "fourth", retain = 1)
+    GraftTable.commit(fs, dir, 3, "fourth",
+      Map("data" -> GraftTable.stage(v1rows, dir, 3)), retain = 1)
     assert(GraftTable.versions(fs, dir) === Seq(0, 1, 2, 3))
     assert(GraftTable.readVersion(spark, dir, 2).count() === 2)
     intercept[IllegalArgumentException] {
@@ -240,23 +250,21 @@ class Round11Spec extends SparkSpec {
       GraftTable.readVersion(spark, dir, 9)
     }
 
-    // committed data is immutable: staging over a committed version is
-    // refused before any write happens
-    intercept[IllegalArgumentException] {
-      GraftTable.stage(v0rows, dir, 3)
-    }
-    // optimistic concurrency: two writers race version 4 — both stage
-    // (uncommitted overwrite is the idempotent-retry path), exactly one
-    // commit wins, the loser throws instead of silently last-writer-
-    // winning, and the winner's metadata survives the attempt
-    GraftTable.stage(v0rows, dir, 4)
-    GraftTable.stage(v0rows, dir, 4)
-    GraftTable.commit(fs, dir, 4, "winner")
+    // optimistic concurrency: two writers race version 4 — each stages
+    // to its own dir, exactly one commit wins, the loser throws instead
+    // of silently last-writer-winning, and the winner's metadata and
+    // rows survive the attempt
+    val winner = GraftTable.stage(v0rows, dir, 4)
+    val loser = GraftTable.stage(v1rows, dir, 4)
+    assert(winner != loser)
+    GraftTable.commit(fs, dir, 4, "winner", Map("data" -> winner))
     intercept[java.util.ConcurrentModificationException] {
-      GraftTable.commit(fs, dir, 4, "loser")
+      GraftTable.commit(fs, dir, 4, "loser", Map("data" -> loser))
     }
     assert(GraftTable.meta(fs, dir, 4) === "winner")
+    assert(GraftTable.dataDirOf(fs, dir, 4) === winner)
     assert(GraftTable.read(spark, dir).count() === 2)
+    assert(GraftTable.vacuum(fs, dir) === Seq(loser))
   }
 
   test("T.events ns-long branch: a synthetic nanos-encoded events table yields the same contract") {

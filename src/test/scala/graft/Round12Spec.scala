@@ -30,7 +30,11 @@ class Round12Spec extends SparkSpec {
       val threads = (0 until 2).map { tid =>
         new Thread(() => {
           latch.await()
-          try { GraftTable.commit(fs, dir, 0, s"writer$tid"); results.add(s"win$tid") }
+          try {
+            GraftTable.commit(fs, dir, 0, s"writer$tid",
+              Map("data" -> s"v0_writer$tid"))
+            results.add(s"win$tid")
+          }
           catch {
             case _: java.util.ConcurrentModificationException =>
               results.add(s"lose$tid")
@@ -58,8 +62,8 @@ class Round12Spec extends SparkSpec {
       val latch = new java.util.concurrent.CountDownLatch(1)
       val outcome = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       // both writers stage DIVERGENT content for the SAME next version in
-      // writer-private dirs (the convention-path hazard this API removes:
-      // a shared v1 dir would let the winner publish the loser's bytes),
+      // writer-private dirs (a shared v1 dir would let the winner
+      // publish the loser's bytes),
       // then race the commit point
       val threads = Seq(("a", 10L), ("b", 20L)).map { case (tag, n) =>
         new Thread(() => {
@@ -116,8 +120,10 @@ class Round12Spec extends SparkSpec {
   test("table_compact_version: file count drops across the OPTIMIZE commit; both versions stay readable") {
     SparkEntry.queries("table_compact_version")(spark, sf).collect()
     val dir = s"target/tmp/gcompact_${new java.io.File(sf).getName}"
-    def files(v: Int): Int = new java.io.File(s"$dir/v$v")
-      .listFiles().count(_.getName.startsWith("part-"))
+    val fs = GraftTable.fsOf(spark, dir)
+    def files(v: Int): Int =
+      new java.io.File(s"$dir/${GraftTable.dataDirOf(fs, dir, v)}")
+        .listFiles().count(_.getName.startsWith("part-"))
     assert(files(0) == 64, s"fragmented layout expected 64 shards, got ${files(0)}")
     assert(files(1) <= 4, s"compacted layout expected <=4 files, got ${files(1)}")
     assert(GraftTable.readVersion(spark, dir, 0).count() ==
@@ -275,7 +281,7 @@ class Round12Spec extends SparkSpec {
     val dir = "target/tmp/gtvf"
     val fs = GraftTable.fsOf(spark, dir)
     fs.delete(new Path(dir), true)
-    GraftTable.commitNext(spark, dir, spark.range(0, 5).toDF("k"), "v0")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 5).toDF("k"), "v0")
     GraftTable.commitNextIsolated(spark, dir, spark.range(0, 8).toDF("k"), "v1")
     Graft.registerFunctions(spark)
     assert(spark.sql(s"SELECT * FROM graft_version('$dir', 0)").count() == 5)
@@ -295,8 +301,8 @@ class Round12Spec extends SparkSpec {
     val dir = "target/tmp/gtvf_ext"
     val fs = GraftTable.fsOf(spark, dir)
     fs.delete(new Path(dir), true)
-    GraftTable.commitNext(spark, dir, spark.range(0, 4).toDF("k"), "v0")
-    GraftTable.commitNext(spark, dir, spark.range(0, 6).toDF("k"), "v1")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 4).toDF("k"), "v0")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 6).toDF("k"), "v1")
     // fresh session built WITH the extensions (RangeJoinRuleSpec's
     // pattern) — no Graft.registerFunctions call anywhere
     val prevDefault = org.apache.spark.sql.SparkSession.getDefaultSession
@@ -353,7 +359,7 @@ class Round12Spec extends SparkSpec {
     val dir = "target/tmp/gasof"
     val fs = GraftTable.fsOf(spark, dir)
     fs.delete(new Path(dir), true)
-    GraftTable.commitNext(spark, dir, spark.range(0, 3).toDF("k"), "v0")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 3).toDF("k"), "v0")
     // commit instants come from the ts= header the WRITER recorded (ms
     // wall clock inside the commit file) — NOT from FS mtime, whose
     // granularity is filesystem-dependent (the round-12 advisory). The
@@ -414,13 +420,13 @@ class Round12Spec extends SparkSpec {
       }
       GraftTable.commitNextIsolated(spark, mv, merged)
     }
-    GraftTable.commitNext(spark, src, spark.range(0, 5).toDF("k"), "v0")
+    GraftTable.commitNextIsolated(spark, src, spark.range(0, 5).toDF("k"), "v0")
     val q = GraftTable.cdcSubscribe(spark, src, ckpt,
       (_, _, delta) => fold(delta))
     q.processAllAvailable()
-    GraftTable.commitNext(spark, src, spark.range(0, 9).toDF("k"), "v1")
+    GraftTable.commitNextIsolated(spark, src, spark.range(0, 9).toDF("k"), "v1")
     q.processAllAvailable()
-    GraftTable.commitNext(spark, src, spark.range(0, 12).toDF("k"), "v2")
+    GraftTable.commitNextIsolated(spark, src, spark.range(0, 12).toDF("k"), "v2")
     q.processAllAvailable()
     q.stop()
     val got = GraftTable.read(spark, mv).orderBy("b")
@@ -449,12 +455,12 @@ class Round12Spec extends SparkSpec {
       received.synchronized { received += ((v, m, keys)) }
     }
     // v0 exists before subscribing (and is itself a delta to deliver)
-    GraftTable.commitNext(spark, dir, spark.range(0, 5).toDF("k"), "v0")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 5).toDF("k"), "v0")
     val q = GraftTable.cdcSubscribe(spark, dir, ckpt, onDelta)
     q.processAllAvailable()
-    GraftTable.commitNext(spark, dir, spark.range(0, 8).toDF("k"), "v1")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 8).toDF("k"), "v1")
     q.processAllAvailable()
-    GraftTable.commitNext(spark, dir, spark.range(0, 10).toDF("k"), "v2")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 10).toDF("k"), "v2")
     q.processAllAvailable()
     q.stop()
     assert(received.toList == List(
@@ -466,7 +472,7 @@ class Round12Spec extends SparkSpec {
     q2.processAllAvailable()
     assert(received.size == 3, s"restart replayed commits: ${received.toList}")
     // …and a post-restart commit arrives exactly once.
-    GraftTable.commitNext(spark, dir, spark.range(0, 12).toDF("k"), "v3")
+    GraftTable.commitNextIsolated(spark, dir, spark.range(0, 12).toDF("k"), "v3")
     q2.processAllAvailable()
     q2.stop()
     assert(received.toList.last == ((3, "v3", Seq(10L, 11L))), received.toList)

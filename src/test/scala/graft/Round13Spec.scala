@@ -128,7 +128,7 @@ class Round13Spec extends SparkSpec {
     val dir = "target/tmp/gocc_forced"
     val fs = GraftTable.fsOf(spark, dir)
     fs.delete(new Path(dir), true)
-    GraftTable.commitNext(spark, dir,
+    GraftTable.commitNextIsolated(spark, dir,
       Seq((0L, 10L), (1L, 10L), (2L, 10L)).toDF("k", "v"), "base")
     val aRead = new java.util.concurrent.CountDownLatch(1)
     val bDone = new java.util.concurrent.CountDownLatch(1)
@@ -342,7 +342,7 @@ class Round13Spec extends SparkSpec {
     val dir = "target/tmp/ghist_spec"
     val fs = GraftTable.fsOf(spark, dir)
     fs.delete(new Path(dir), true)
-    GraftTable.commitNext(spark, dir, Seq(1L, 2L).toDF("k"), "v0")
+    GraftTable.commitNextIsolated(spark, dir, Seq(1L, 2L).toDF("k"), "v0")
     GraftTable.commitNextIsolated(spark, dir, Seq(1L, 2L, 3L).toDF("k"), "v1",
       statsEnc = Seq("k" -> "id"))
     // a MoR delete on the stats-bearing head now refuses (the index
@@ -411,18 +411,19 @@ class Round13Spec extends SparkSpec {
     val o = t(spark, sf, "orders")
       .select(col("o_orderkey"), dec(col("o_totalprice")).as("price"),
         date_format(col("o_orderdate"), "yyyy-MM").as("ym"))
-    GraftTable.commitNext(spark, dir, o, "unpartitioned load")
+    GraftTable.commitNextIsolated(spark, dir, o, "unpartitioned load")
     def fileState(p: Path): Map[String, (Long, Long)] =
       fs.listStatus(p).filter(_.isFile).map(st =>
         st.getPath.getName ->
           ((st.getLen, st.getModificationTime))).toMap
-    val v0Before = fileState(new Path(s"$dir/v0"))
+    val v0Dir = new Path(s"$dir/${GraftTable.dataDirOf(fs, dir, 0)}")
+    val v0Before = fileState(v0Dir)
     assert(v0Before.nonEmpty)
     GraftTable.commitNextIsolated(spark, dir,
       GraftTable.read(spark, dir).repartition(col("ym")),
       "relayout: partitioned by ym", partitionBy = Seq("ym"))
     // v0 byte-untouched: same names, lengths, modification times
-    assert(fileState(new Path(s"$dir/v0")) == v0Before,
+    assert(fileState(v0Dir) == v0Before,
       "the re-layout commit touched version 0's files")
     // v1 is a real partitioned tree, and a month read prunes to one dir
     val month = GraftTable.readVersion(spark, dir, 1)
@@ -496,7 +497,7 @@ class Round13Spec extends SparkSpec {
       try o.write(s.getBytes("UTF-8")) finally o.close()
     }
     (0 to 2).foreach(i =>
-      GraftTable.commitNext(spark, dir, Seq(i.toLong).toDF("k"), s"v$i"))
+      GraftTable.commitNextIsolated(spark, dir, Seq(i.toLong).toDF("k"), s"v$i"))
     // hint tracks the publishes and resolution agrees with the listing
     assert(fs.exists(hintPath))
     assert(GraftTable.currentVersion(fs, dir).contains(2))
@@ -514,7 +515,7 @@ class Round13Spec extends SparkSpec {
     writeHint("not-a-number")
     assert(GraftTable.readManifest(fs, dir).map(_._1).contains(2))
     // and the next commit repairs the hint
-    GraftTable.commitNext(spark, dir, Seq(9L).toDF("k"), "v3")
+    GraftTable.commitNextIsolated(spark, dir, Seq(9L).toDF("k"), "v3")
     assert(GraftTable.currentVersion(fs, dir).contains(3))
     // the underscore name keeps the hint invisible to the streaming
     // feed — pinned end-to-end by the cdcSubscribe specs, which commit
@@ -546,9 +547,9 @@ class Round13Spec extends SparkSpec {
       model = Vector(base)
       (1 to 12).foreach { i =>
         rnd.nextInt(4) match {
-          case 0 => // full-snapshot commit (convention path)
+          case 0 => // full-snapshot commit of fresh keys
             val ks = freshKeys()
-            GraftTable.commitNext(spark, dir, df(ks), s"load $i")
+            GraftTable.commitNextIsolated(spark, dir, df(ks), s"load $i")
             model :+= ks
           case 1 => // isolated commit of a transformed snapshot
             val ks = cur.map(_ + 100L)
@@ -591,7 +592,7 @@ class Round13Spec extends SparkSpec {
     val dir = "target/tmp/gvacuum_grace"
     val fs = GraftTable.fsOf(spark, dir)
     fs.delete(new Path(dir), true)
-    GraftTable.commitNext(spark, dir, Seq(1L, 2L).toDF("k"), "v0")
+    GraftTable.commitNextIsolated(spark, dir, Seq(1L, 2L).toDF("k"), "v0")
     // a slow writer stages for v1 …
     Seq(3L).toDF("k").write.parquet(s"$dir/v1_slowwriter")
     // … while a faster writer takes v1
@@ -623,9 +624,9 @@ class Round13Spec extends SparkSpec {
       val n = delta.count()
       received.synchronized { received += ((v, m, n)) }
     }
-    // v0: convention commit with EMPTY metadata (zero-byte before the
+    // v0: a commit with EMPTY metadata (zero-byte before the
     // ts= header existed — the silently-dropped case of the advisory)
-    GraftTable.commitNext(spark, dir, Seq(1L, 2L).toDF("k"))
+    GraftTable.commitNextIsolated(spark, dir, Seq(1L, 2L).toDF("k"))
     // v1: ISOLATED commit — its file carries data= and ts= headers (the
     // double-emit case of the advisory)
     GraftTable.commitNextIsolated(spark, dir, Seq(1L, 2L, 3L).toDF("k"), "iso v1")

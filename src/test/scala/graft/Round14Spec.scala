@@ -64,7 +64,7 @@ class Round14Spec extends SparkSpec {
 
   test("checkpoint: history + versionAsOf resolve in O(1 + suffix) FS calls at 55 commits — and degrade to per-file reads on a corrupt checkpoint") {
     val (dir, fs) = fresh("g14_cp")
-    (0 until 55).foreach(i => GraftTable.commitNext(spark, dir, tinyDf(i),
+    (0 until 55).foreach(i => GraftTable.commitNextIsolated(spark, dir, tinyDf(i),
       s"load $i"))
     assert(GraftTable.checkpoint(fs, dir) == 49 + 5,
       "checkpoint covers the full 55-commit history") // 54 = current
@@ -72,10 +72,10 @@ class Round14Spec extends SparkSpec {
     // table state as checkpoint-at-49 + commits 50..54 by checkpointing
     // BEFORE the last five commits instead
     val (dir2, fs2) = fresh("g14_cp2")
-    (0 until 50).foreach(i => GraftTable.commitNext(spark, dir2, tinyDf(i),
+    (0 until 50).foreach(i => GraftTable.commitNextIsolated(spark, dir2, tinyDf(i),
       s"load $i"))
     assert(GraftTable.checkpoint(fs2, dir2) == 49)
-    (50 until 55).foreach(i => GraftTable.commitNext(spark, dir2, tinyDf(i),
+    (50 until 55).foreach(i => GraftTable.commitNextIsolated(spark, dir2, tinyDf(i),
       s"load $i"))
     val counting = new CountingFs(fs2)
     val hist = GraftTable.historyRows(counting, dir2)
@@ -148,7 +148,7 @@ class Round14Spec extends SparkSpec {
 
   // ---- append-only OCC ------------------------------------------------------
 
-  test("commitAppendWithRetry under a FORCED conflict: the loser lands without re-evaluating or re-staging — no orphans, both appends served") {
+  test("commitAppend under a FORCED conflict: the loser lands without re-evaluating or re-staging — no orphans, both appends served") {
     import spark.implicits._
     val (dir, fs) = fresh("g14_appendocc")
     GraftTable.commitNextIsolated(spark, dir,
@@ -169,7 +169,7 @@ class Round14Spec extends SparkSpec {
       .repartition(1).withColumn("k", gateUdf(col("k")))
     var aVersion = -1
     val tA = new Thread(() => {
-      aVersion = GraftTable.commitAppendWithRetry(spark, dir, dfA, "A append")
+      aVersion = GraftTable.commitAppend(spark, dir, dfA, "A append")
     })
     tA.start()
     R14Gate.staging.await() // A is mid-write against snapshot v0
@@ -220,7 +220,7 @@ class Round14Spec extends SparkSpec {
       "refusal happens BEFORE staging — no orphan dir")
     // retype without declaration: refused (double -> string)
     intercept[IllegalArgumentException] {
-      GraftTable.commitNext(spark, dir,
+      GraftTable.commitNextIsolated(spark, dir,
         Seq((1L, "x")).toDF("k", "price"), "retype")
     }
     // commitWithRetry is gated too, before its write
@@ -319,10 +319,10 @@ class Round14Spec extends SparkSpec {
 
   test("re-checkpointing is O(suffix) and leaves no tmp/crc litter in the manifest dir") {
     val (dir, fs) = fresh("g14_cp_incr")
-    (0 until 20).foreach(i => GraftTable.commitNext(spark, dir, tinyDf(i),
+    (0 until 20).foreach(i => GraftTable.commitNextIsolated(spark, dir, tinyDf(i),
       s"load $i"))
     GraftTable.checkpoint(fs, dir)
-    (20 until 25).foreach(i => GraftTable.commitNext(spark, dir, tinyDf(i),
+    (20 until 25).foreach(i => GraftTable.commitNextIsolated(spark, dir, tinyDf(i),
       s"load $i"))
     val counting = new CountingFs(fs)
     GraftTable.checkpoint(counting, dir)
@@ -348,10 +348,10 @@ class Round14Spec extends SparkSpec {
     import spark.implicits._
     // plain history: independent dirs per version
     val (dir, fs) = fresh("g14_retain")
-    def commitAt(v: Int, ts: Long): Unit = {
-      GraftTable.stage(Seq((v.toLong, s"v$v")).toDF("k", "s"), dir, v)
-      GraftTable.commit(fs, dir, v, s"load $v", tsMs = Some(ts))
-    }
+    def commitAt(v: Int, ts: Long): Unit =
+      GraftTable.commit(fs, dir, v, s"load $v", Map("data" ->
+        GraftTable.stage(Seq((v.toLong, s"v$v")).toDF("k", "s"), dir, v)),
+        tsMs = Some(ts))
     commitAt(0, 1000L); commitAt(1, 2000L); commitAt(2, 5000L)
     val reclaimed = GraftTable.expireVersions(fs, dir,
       retainMs = 1000L, nowMs = 4000L) // cutoff 3000: v0, v1 expire
@@ -384,10 +384,11 @@ class Round14Spec extends SparkSpec {
     import spark.implicits._
     val (dir, fs) = fresh("g14_clamp")
     val future = System.currentTimeMillis() + 3600000L // 1h ahead
-    GraftTable.stage(Seq((0L, "a")).toDF("k", "s"), dir, 0)
-    GraftTable.commit(fs, dir, 0, "future-dated", tsMs = Some(future))
+    GraftTable.commit(fs, dir, 0, "future-dated",
+      Map("data" -> GraftTable.stage(Seq((0L, "a")).toDF("k", "s"), dir, 0)),
+      tsMs = Some(future))
     // clock path: now << ts(v0), so the clamp must land at ts(v0)+1
-    GraftTable.commitNext(spark, dir, Seq((1L, "b")).toDF("k", "s"), "clamped")
+    GraftTable.commitNextIsolated(spark, dir, Seq((1L, "b")).toDF("k", "s"), "clamped")
     assert(GraftTable.commitTimeMs(fs, dir, 1) == future + 1,
       "ts(v1) must clamp to ts(v0)+1 under clock skew")
     assert(GraftTable.versionAsOf(fs, dir, future).contains(0) &&
@@ -401,7 +402,7 @@ class Round14Spec extends SparkSpec {
     import spark.implicits._
     val (dir, fs) = fresh("g14_hint")
     (0 until 3).foreach(i =>
-      GraftTable.commitNext(spark, dir, Seq((i.toLong, "x")).toDF("k", "s"),
+      GraftTable.commitNextIsolated(spark, dir, Seq((i.toLong, "x")).toDF("k", "s"),
         s"v$i"))
     def hintContent(): String = {
       val in = fs.open(new Path(s"$dir/manifest/_last"))

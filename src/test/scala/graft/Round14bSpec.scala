@@ -154,6 +154,28 @@ class Round14bSpec extends SparkSpec {
     assert(GraftTable.versions(fs, dir) == Seq(0, 1))
   }
 
+  test("commit refuses a header map without data=, before writing anything") {
+    val (dir, fs) = fresh("g14b_nodata")
+    import spark.implicits._
+    // an empty table: the refusal leaves not even a manifest dir
+    val e0 = intercept[IllegalArgumentException] {
+      GraftTable.commit(fs, dir, 0, "no data dir", Map.empty)
+    }
+    assert(e0.getMessage.contains("names no data dir"), e0.getMessage)
+    assert(!fs.exists(new Path(s"$dir/manifest")))
+    GraftTable.commitNextIsolated(spark, dir, Seq(1L).toDF("k"), "base")
+    val h = GraftTable.headersOf(fs, dir, 0) - "ts"
+    val e1 = intercept[IllegalArgumentException] {
+      GraftTable.commit(fs, dir, 1, "no data dir", h - "data")
+    }
+    assert(e1.getMessage.contains("names no data dir"), e1.getMessage)
+    assert(!fs.exists(new Path(s"$dir/manifest/commit_1")))
+    assert(GraftTable.versions(fs, dir) == Seq(0),
+      "a refused commit publishes no version")
+    GraftTable.commit(fs, dir, 1, "names its dir", h)
+    assert(GraftTable.versions(fs, dir) == Seq(0, 1))
+  }
+
   test("compactChain preserves a partitionBy layout") {
     val (dir, fs) = fresh("g14b_compactpart")
     import spark.implicits._
@@ -711,10 +733,10 @@ class Round14bSpec extends SparkSpec {
     GraftTable.commitNextIsolated(spark, dir,
       Seq((1L, 10L)).toDF("k", "x"), "declared",
       constraints = Seq("check:x > 0"))
-    // convention-path commit: violation refused, no version minted
+    // plain rewrite commit: violation refused, no version minted
     intercept[IllegalStateException] {
-      GraftTable.commitNext(spark, dir,
-        Seq((2L, -5L)).toDF("k", "x"), "bad via commitNext")
+      GraftTable.commitNextIsolated(spark, dir,
+        Seq((2L, -5L)).toDF("k", "x"), "bad via commitNextIsolated")
     }
     // OCC transform commit: violation refused BEFORE staging
     intercept[IllegalStateException] {

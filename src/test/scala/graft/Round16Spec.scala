@@ -743,10 +743,9 @@ class Round16Spec extends SparkSpec {
 
   test("sql: ALTER works on convention-path and unindexed append chains") {
     import spark.implicits._
-    // convention-path predecessor: commitNext writes no data= header —
-    // the alter must resolve dirs through dataDirsFrom, not copy None
+    // a plain rewrite head: the alter re-references its data= dir
     val dir = freshDir("alterconv")
-    GraftTable.commitNext(spark, dir, Seq((1L, "x")).toDF("k", "t"), "v0")
+    GraftTable.commitNextIsolated(spark, dir, Seq((1L, "x")).toDF("k", "t"), "v0")
     withCatalog("gt16")
     spark.sql(s"ALTER TABLE gt16.`${new java.io.File(dir).getAbsolutePath}` " +
       "ADD COLUMNS (extra INT)")
