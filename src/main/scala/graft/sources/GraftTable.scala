@@ -522,15 +522,16 @@ object GraftTable {
     * staged append and the epoch upsert) passes only what it changes
     * through `inherit`, which supplies the head's table-level headers;
     * its refusal gate decides what the head may carry. A door that
-    * rewrites the rows (`commitNextIsolated`, `commitNext`, the DSv2
-    * overwrite, `replacePartitionsWithRetry`) states its own layout,
+    * rewrites the rows (`commitNextIsolated`, the DSv2 overwrite,
+    * `replacePartitionsWithRetry`) states its own layout,
     * and `rewriteHead` re-applies a head's own declarations to a
     * rewrite of it. File-level headers are always stated.
     *
     * Keeping headers line-oriented keeps old manifests readable: a
     * round-12 commit file with no ts= line still parses (mtime fallback
     * in `versionAsOf`), and one with no schema= line simply skips the
-    * write gate for its successor. */
+    * write gate for its successor. One with no data= line names no data
+    * to read: its version's history still lists, its rows do not. */
   private val headerKeys =
     Seq("data", "append", "update", "ts", "schema", "partby", "stats", "dv",
       "pdv", "bloom", "constraints", "statenc", "pmap", "wset", "statrel",

@@ -727,7 +727,7 @@ class Round14bSpec extends SparkSpec {
       "clone: {2,3} after the delete, +7 appended")
   }
 
-  test("constraints enforce and carry on EVERY write path: commitNext and commitWithRetry included") {
+  test("constraints enforce and carry on EVERY write path: commitNextIsolated and commitWithRetry included") {
     val (dir, fs) = fresh("g14b_callpaths")
     import spark.implicits._
     GraftTable.commitNextIsolated(spark, dir,
